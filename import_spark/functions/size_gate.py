@@ -1,5 +1,4 @@
-"""Shared sampled-width BYTE gate for driver-collect and broadcast
-fast paths.
+"""Shared BYTE gates for driver-collect and broadcast fast paths.
 
 Row-count gates alone mislead: 5M rows of 20-byte locals is 100 MB
 (fine to collect/broadcast), 5M rows of 10 KB literals is 50 GB (OOM).
@@ -8,11 +7,16 @@ The reference's analogues are capacity-bounded caches
 every fast path here gates on estimated BYTES = sampled average row
 width x row count, alongside the existing row cap.
 
-The width sample reads a bounded ``limit()`` head — one tiny job. The
-head is not a uniform sample, but width skew across a table's scan
-order is far smaller than the 100x-1000x row-width spread the gate
-exists to catch, and over-estimating safety margins belong in the
-budget constant, not the sampler.
+Two shapes:
+- ``exact_size`` / ``collect_within``: one exact count+bytes aggregate,
+  then (when both fit) one Arrow collect — the shape for any frame the
+  caller is about to pull to the driver anyway.
+- ``fits_bytes``: sampled width x a row count the caller already holds.
+  The width sample reads a bounded ``limit()`` head — one tiny job. The
+  head is not a uniform sample, but width skew across a table's scan
+  order is far smaller than the 100x-1000x row-width spread the gate
+  exists to catch, and over-estimating safety margins belong in the
+  budget constant, not the sampler.
 """
 
 from __future__ import annotations
@@ -46,21 +50,60 @@ def _width_expr(field: T.StructField):
     return F.coalesce(w, F.lit(0)) + F.lit(_CELL_OVERHEAD)
 
 
+def row_bytes(schema: T.StructType):
+    """Per-row byte width of ``schema`` as a column expression."""
+    total = None
+    for f in schema.fields:
+        e = _width_expr(f)
+        total = e if total is None else total + e
+    return total
+
+
 def estimate_row_bytes(df: DataFrame, sample_rows: int = 2000) -> float:
     """Average row width in bytes from a bounded head sample.
 
     Returns 0.0 for an empty frame."""
-    total = None
-    for f in df.schema.fields:
-        e = _width_expr(f)
-        total = e if total is None else total + e
     row = (
         df.limit(sample_rows)
-        .select(total.alias("w"))
+        .select(row_bytes(df.schema).alias("w"))
         .agg(F.avg("w").alias("avg_w"))
         .collect()[0]
     )
     return float(row["avg_w"] or 0.0)
+
+
+def exact_size(df: DataFrame) -> tuple[int, int]:
+    """(rows, bytes) of ``df`` from one exact aggregate."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(row_bytes(df.schema)).alias("b")
+    ).collect()[0]
+    return int(row["n"]), int(row["b"] or 0)
+
+
+def collect_within(
+    df: DataFrame,
+    budget_bytes: int,
+    max_rows: int | None = None,
+    size: tuple[int, int] | None = None,
+):
+    """Arrow-collect ``df`` as pandas when its exact size fits both the
+    byte budget and the optional row cap; None otherwise (the caller
+    takes its distributed path). ``size`` reuses an ``exact_size``
+    result the caller already holds."""
+    rows, nbytes = size if size is not None else exact_size(df)
+    if nbytes > budget_bytes or (max_rows is not None and rows > max_rows):
+        return None
+    return df.toPandas()
+
+
+def pandas_bytes(pdf) -> int:
+    """Byte width of a driver pandas frame of string columns, by the
+    same per-cell rule as ``row_bytes`` — sizes a driver-built map for
+    a broadcast gate without a probe job."""
+    return int(
+        sum(pdf[c].str.len().fillna(0).sum() for c in pdf.columns)
+        + _CELL_OVERHEAD * pdf.size
+    )
 
 
 def fits_bytes(

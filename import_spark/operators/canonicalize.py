@@ -234,12 +234,38 @@ def canonicalize_triples(
 DRIVER_CC_MAX_EDGES = 2_000_000
 
 
+def union_find_components(edges_pdf):
+    """Driver union-find over a pandas edge frame (src, dst) → pandas
+    (node, canon), canon = min id in the component — the same contract
+    as ``connected_components``: self-loops and singletons are omitted.
+    The one driver CC kernel: ``connected_components_fast`` and the
+    pipeline's narrow driver step both call it."""
+    import pandas as pd
+
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a0, b0 in edges_pdf[["src", "dst"]].itertuples(index=False, name=None):
+        a, b = find(a0), find(b0)
+        if a != b:
+            lo, hi = (a, b) if a < b else (b, a)
+            parent[hi] = lo
+    mapping = [(nd, find(nd)) for nd in list(parent)]
+    return pd.DataFrame(
+        [(nd, c) for nd, c in mapping if nd != c], columns=["node", "canon"]
+    )
+
+
 def connected_components_fast(
     edges: DataFrame, approx_edges: int | None = None
 ) -> DataFrame | None:
     """Driver union-find; None when too big (caller uses the loop)."""
-    import pandas as pd
-
     if approx_edges is None:
         # materialize ONCE before probing: the row probe, the byte
         # probe and the Arrow collect each re-execute the edge DAG
@@ -258,27 +284,7 @@ def connected_components_fast(
         return None
     # Arrow collect (toPandas) — Row-object collect is ~5x slower and
     # this is driver-serial time on the pipeline's critical path
-    pdf = edges.select("src", "dst").toPandas()
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a0, b0 in pdf.itertuples(index=False, name=None):
-        a, b = find(a0), find(b0)
-        if a != b:
-            lo, hi = (a, b) if a < b else (b, a)
-            parent[hi] = lo
-    mapping = [(nd, find(nd)) for nd in list(parent)]
-    mapping = [(nd, c) for nd, c in mapping if nd != c]
-    spark = edges.sparkSession
-    schema = "node string, canon string"
-    if not mapping:
-        return spark.createDataFrame([], schema)
+    mapping = union_find_components(edges.select("src", "dst").toPandas())
     # parquet handoff (see resolve._driver_parquet_handoff): the map is
     # consumed by a count and a broadcast join; the file IS the
     # materialization, so the caller pays no localCheckpoint job and
@@ -286,6 +292,4 @@ def connected_components_fast(
     # on the pipeline's critical path
     from import_spark.operators.resolve import _driver_parquet_handoff
 
-    return _driver_parquet_handoff(
-        spark, pd.DataFrame(mapping, columns=["node", "canon"]), schema
-    )
+    return _driver_parquet_handoff(edges.sparkSession, mapping, "node string, canon string")

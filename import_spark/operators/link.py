@@ -43,25 +43,41 @@ class DictionaryOverBudget(RuntimeError):
         self.budget_bytes = budget_bytes
 
 
-def _collect_dictionary_rows(pairs: DataFrame, budget_bytes: int | None) -> list:
+def _collect_dictionary_rows(pairs: DataFrame, budget_bytes: int | None):
     """Gated driver collect for the (prop/ext-id → dcid) builders:
-    materialize once, count, byte-gate on sampled width, THEN collect —
-    the same localCheckpoint → fits_bytes shape as the checker's
-    collision fold (mcf_checker.py) and the CC driver fast path
-    (canonicalize.py). Raises :class:`DictionaryOverBudget` instead of
-    collecting when over budget."""
-    from import_spark.functions.size_gate import (
-        DRIVER_COLLECT_BUDGET_BYTES,
-        fits_bytes,
-    )
+    materialize once, then one exact count+bytes aggregate and one
+    Arrow collect (``size_gate.collect_within``) as a pandas frame.
+    Raises :class:`DictionaryOverBudget` instead of collecting when
+    over budget."""
+    from import_spark.functions import size_gate
 
     if budget_bytes is None:
-        budget_bytes = DRIVER_COLLECT_BUDGET_BYTES
+        budget_bytes = size_gate.DRIVER_COLLECT_BUDGET_BYTES
+    # the builders' frames are joins/aggregates over the node table:
+    # checkpoint so the size aggregate and the collect both read the
+    # materialized pairs instead of re-running that plan
     pairs = pairs.localCheckpoint()
-    n = pairs.count()
-    if not fits_bytes(pairs, n, budget_bytes):
-        raise DictionaryOverBudget(n, budget_bytes)
-    return pairs.collect()
+    size = size_gate.exact_size(pairs)
+    pdf = size_gate.collect_within(pairs, budget_bytes, size=size)
+    if pdf is None:
+        raise DictionaryOverBudget(size[0], budget_bytes)
+    return pdf
+
+
+def _pairs_dict(pdf) -> dict:
+    return dict(zip(zip(pdf["prop"], pdf["ext_id"]), pdf["dcid"]))
+
+
+def dictionary_map(pdf) -> dict:
+    """Driver dict of a collected (prop, ext_id, dcid) frame, first-wins
+    on the minimum dcid per (prop, ext_id) — ``prepare_dictionary``'s
+    rule, applied on the driver so the collect needs no shuffle. Null
+    dcids sort last, so a key maps to None only when every candidate
+    is null (Spark's ``min`` ignores nulls the same way)."""
+    first = pdf.sort_values("dcid", na_position="last", kind="stable").drop_duplicates(
+        ["prop", "ext_id"], keep="first"
+    )
+    return _pairs_dict(first)
 
 
 def prepare_dictionary(dcid_dict: DataFrame) -> DataFrame:
@@ -185,8 +201,9 @@ def local_graph_dictionary(nodes: DataFrame, budget_bytes: int | None = None) ->
     :class:`DictionaryOverBudget` when the seed set exceeds the driver
     budget — callers use :func:`local_graph_dictionary_df` + the join
     path instead."""
-    pairs = _collect_dictionary_rows(local_graph_dictionary_df(nodes), budget_bytes)
-    return {(r["prop"], r["ext_id"]): r["dcid"] for r in pairs}
+    return _pairs_dict(
+        _collect_dictionary_rows(local_graph_dictionary_df(nodes), budget_bytes)
+    )
 
 
 def derive_transcript_dictionary(
@@ -272,10 +289,9 @@ def derive_node_dictionary(
     exceed the driver budget — callers use
     :func:`derive_node_dictionary_df` + :func:`preassign_place_dcids`
     instead."""
-    hits = _collect_dictionary_rows(
-        derive_node_dictionary_df(nodes, recon_table), budget_bytes
+    return _pairs_dict(
+        _collect_dictionary_rows(derive_node_dictionary_df(nodes, recon_table), budget_bytes)
     )
-    return {(r["prop"], r["ext_id"]): r["dcid"] for r in hits}
 
 
 def dcid_map_from_df(dcid_dict: DataFrame, budget_bytes: int | None = None) -> dict:
@@ -284,11 +300,15 @@ def dcid_map_from_df(dcid_dict: DataFrame, budget_bytes: int | None = None) -> d
     per (prop, ext_id) like prepare_dictionary. Raises
     :class:`DictionaryOverBudget` when the dictionary exceeds the
     driver budget — callers fall back to :func:`link_statements`'s
-    broadcast/salted join strategies."""
-    return {
-        (r["prop"], r["ext_id"]): r["dcid"]
-        for r in _collect_dictionary_rows(prepare_dictionary(dcid_dict), budget_bytes)
-    }
+    broadcast/salted join strategies.
+
+    The raw (prop, ext_id, dcid) rows are collected and deduped on the
+    driver (:func:`dictionary_map`), so the byte gate counts duplicate
+    candidates too — never less conservative than gating the deduped
+    map."""
+    return dictionary_map(
+        _collect_dictionary_rows(dcid_dict.select("prop", "ext_id", "dcid"), budget_bytes)
+    )
 
 
 def quantize_coord_key(lat_col, lng_col):

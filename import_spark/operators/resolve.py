@@ -26,6 +26,12 @@ Scale design:
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+import threading
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -37,21 +43,41 @@ BROADCAST_MAP_MAX_ROWS = 5_000_000
 _SMALL_PARTS = 8
 
 
-def _driver_parquet_handoff(spark, pdf, schema: str) -> DataFrame:
-    """Driver pandas frame → scannable DataFrame via one pyarrow
-    parquet write into a session-scoped temp dir (removed at interpreter
-    exit). ~9x faster than createDataFrame().localCheckpoint() for
-    100k+-row maps and the resulting scan re-broadcasts from the file,
-    not from driver-serial conversion."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+_HANDOFF_ROOT: str | None = None
+_HANDOFF_LOCK = threading.Lock()
 
-    d = tempfile.mkdtemp(prefix="resolve_maps_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    path = os.path.join(d, "map.parquet")
-    pdf.to_parquet(path, index=False)
+
+def _handoff_root() -> str:
+    """One temp dir per interpreter for driver-written handoff files,
+    created on first use and removed at exit by a single handler."""
+    global _HANDOFF_ROOT
+    with _HANDOFF_LOCK:
+        if _HANDOFF_ROOT is None:
+            _HANDOFF_ROOT = tempfile.mkdtemp(prefix="resolve_maps_")
+            atexit.register(shutil.rmtree, _HANDOFF_ROOT, ignore_errors=True)
+        return _HANDOFF_ROOT
+
+
+def _driver_parquet_handoff(spark, pdf, schema) -> DataFrame:
+    """Driver pandas frame → scannable DataFrame via one pyarrow
+    parquet write (a unique file under the session-scoped handoff
+    root). ~9x faster than createDataFrame().localCheckpoint() for
+    100k+-row maps and the resulting scan re-broadcasts from the file,
+    not from driver-serial conversion. ``schema`` (DDL string or
+    StructType) also types the file, so empty and all-null columns
+    round-trip."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    path = os.path.join(_handoff_root(), f"{uuid.uuid4().hex}.parquet")
+    table = pa.Table.from_pandas(
+        pdf[schema.fieldNames()], schema=to_arrow_schema(schema), preserve_index=False
+    )
+    pq.write_table(table, path)
     return spark.read.schema(schema).parquet(path)
 
 
@@ -360,10 +386,6 @@ def resolve_defs_fast(
     res_pdf, div_pdf, unres_pdf = _resolve_defs_vectorized(defs_pdf, assume_unique=True)
 
     def _df(pdf: "pd.DataFrame", cols: list[str], schema: str) -> DataFrame:
-        if not len(pdf):
-            return spark.createDataFrame([], schema)
-        pdf = pdf.copy()
-        pdf.columns = cols
         # Hand the map back through a driver-written parquet file, not
         # createDataFrame().localCheckpoint(): both make the map
         # re-broadcastable without re-running the pandas->arrow
@@ -374,7 +396,7 @@ def resolve_defs_fast(
         # 0.4s and the scan parallelizes. On a real cluster this file
         # is the stage-table pattern (shared storage); in local mode a
         # session-temp dir serves.
-        return _driver_parquet_handoff(spark, pdf, schema)
+        return _driver_parquet_handoff(spark, pdf.set_axis(cols, axis=1), schema)
 
     return ResolvedMaps(
         rmap=F.broadcast(_df(res_pdf, ["conv_id", "obj", "dcid"], "conv_id string, obj string, dcid string")),
@@ -382,37 +404,3 @@ def resolve_defs_fast(
         unresolved=F.broadcast(_df(unres_pdf, ["conv_id", "obj"], "conv_id string, obj string")),
     )
 
-
-def resolve_locals_fast(
-    linked: DataFrame, approx_defs: int | None = None
-) -> ResolveResult | None:
-    """Driver fast path; returns None when the def table is too big
-    (caller falls back to the distributed loop)."""
-    maps = resolve_defs_fast(linked, approx_defs=approx_defs)
-    if maps is None:
-        return None
-    rmap, div_df, unres_df = maps.rmap, maps.divergent, maps.unresolved
-
-    triples = linked.filter(F.col("kind") == "TRIPLE")
-    is_local = F.col("obj_type") == "UNRESOLVED_REF"
-    locals_used = triples.filter(is_local)
-    others = triples.filter(~is_local)
-    joined = locals_used.join(rmap, ["conv_id", "obj"], "left")
-    ok = (
-        joined.filter(F.col("dcid").isNotNull())
-        .withColumn("obj", F.col("dcid"))
-        .withColumn("obj_type", F.lit("RESOLVED_REF"))
-        .drop("dcid")
-    )
-    failed = (
-        joined.filter(F.col("dcid").isNull())
-        .drop("dcid")
-        .join(div_df.withColumn("err", F.lit("Resolution_DivergingDcids")), ["conv_id", "obj"], "left")
-        .join(unres_df.withColumn("err2", F.lit("Resolution_IrreplaceableLocalRef")), ["conv_id", "obj"], "left")
-        .withColumn(
-            "error",
-            F.coalesce(F.col("err"), F.col("err2"), F.lit("Resolution_OrphanLocalReference")),
-        )
-        .drop("err", "err2")
-    )
-    return ResolveResult(resolved=others.unionByName(ok), failed=failed, rounds=0)

@@ -24,8 +24,22 @@ hold at all. With a checkpoint_dir the extract+link output IS
 materialized once, as a class-partitioned zstd-parquet snapshot (the
 in-sandbox stand-in for an Iceberg stage table) for cross-process
 resumability; narrow passes then read only their tiny partitions.
-Either way the big table is shuffled exactly once (dedupe) and the
-final row count comes from parquet metadata, not a recount.
+
+The narrow side is decided and resolved in two driver round-trips:
+ONE aggregate over the narrow classes returns the per-class counts,
+the exact bytes of the DEF/local/sameAs rows and the ERROR counters;
+the gates (defs, sameAs edges, driver byte budget) read those counts,
+with no probe job. When all three fit, ONE Arrow collect of those rows
+feeds ``narrow_driver_step`` — def fixpoint, local-ref lookup, sameAs
+union-find and the failed quarantine with its error counts — and the
+resolution map, component map and failed table come back as parquet
+handoffs that the big pass broadcast-joins. When any gate declines,
+the whole narrow side takes the distributed branch (iterative
+resolver loop, then connected components). The dictionary gets the
+same shape: one count+bytes aggregate, then one collect
+(``size_gate.collect_within``). Either way the big table is shuffled
+exactly once (dedupe), and the final row count is the count the big
+pass already returned (parquet metadata when written).
 
 Every stage records counters into a metrics list
 (``(run_id, stage, counter, value)`` — the LogWrapper counter model,
@@ -42,15 +56,18 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from import_spark.operators.canonicalize import (
     BROADCAST_CC_MAX_ROWS,
     canonicalize_triples,
     connected_components,
     connected_components_fast,
+    union_find_components,
 )
 from import_spark.operators.extract import FUSED_SCHEMA, extract_and_link, extract_statements
 from import_spark.operators.link import dcid_map_from_df, link_statements
@@ -59,8 +76,11 @@ from import_spark.operators.merge import (
     dedupe_triples,
     drop_generic_types,
 )
-from import_spark.operators.resolve import resolve_defs_fast, resolve_locals
+from import_spark.operators.resolve import _resolve_defs_vectorized, resolve_locals
 from import_spark.plans.lineage import write_stage_lineage
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 FINAL_COLS = ["subj", "pred", "obj_type", "obj", "conv_id", "turn_idx"]
 
@@ -80,8 +100,6 @@ FINAL_COLS = ["subj", "pred", "obj_type", "obj", "conv_id", "turn_idx"]
 # of 48.6M at 1M conversations), so the narrow passes drop from full
 # scans to ~5% scans; only the final merge pass reads cls<=2 in full.
 CLS_TRIPLE, CLS_LOCAL, CLS_SAMEAS, CLS_DEF, CLS_ERROR = 0, 1, 2, 3, 4
-_CLS_KIND = {CLS_TRIPLE: "TRIPLE", CLS_LOCAL: "TRIPLE", CLS_SAMEAS: "TRIPLE",
-             CLS_DEF: "DEF", CLS_ERROR: "ERROR"}
 
 
 def _with_cls(df: DataFrame) -> DataFrame:
@@ -152,37 +170,49 @@ class _Metrics:
 # operators/skew.py), which is the only shape a multi-GB Recon map can
 # take at 10^12-turn scale.
 FUSED_DICT_MAX_ROWS = 10_000
+_DICT_COLS = ("prop", "ext_id", "dcid")
 
 
-def _resolve_link_strategy(dcid_dict: DataFrame, requested: str) -> str:
-    if requested in ("fused", "broadcast", "salted"):
-        return requested
-    if requested != "auto":
-        raise ValueError(f"unknown link_strategy {requested!r}")
-    from import_spark.functions.size_gate import (
-        BROADCAST_BUDGET_BYTES,
-        DRIVER_COLLECT_BUDGET_BYTES,
-        fits_bytes,
-    )
+def _join_strategy(size: tuple[int, int]) -> str:
+    """broadcast vs salted for a dictionary that cannot be a driver
+    closure, from its ``size_gate.exact_size``: broadcast while it fits
+    the executor broadcast budget, hot-key salted shuffle beyond."""
+    from import_spark.functions import size_gate
 
-    n = dcid_dict.count()
-    if n <= FUSED_DICT_MAX_ROWS and fits_bytes(
-        dcid_dict, n, DRIVER_COLLECT_BUDGET_BYTES
-    ):
-        return "fused"
-    if fits_bytes(dcid_dict, n, BROADCAST_BUDGET_BYTES):
-        return "broadcast"
-    return "salted"
+    return "broadcast" if size[1] <= size_gate.BROADCAST_BUDGET_BYTES else "salted"
 
 
 def _join_strategy_for(dcid_dict: DataFrame) -> str:
-    """broadcast vs salted for a dictionary that cannot be a driver
-    closure: broadcast while it fits the executor broadcast budget,
-    hot-key salted shuffle beyond."""
-    from import_spark.functions.size_gate import BROADCAST_BUDGET_BYTES, fits_bytes
+    from import_spark.functions.size_gate import exact_size
 
-    n = dcid_dict.count()
-    return "broadcast" if fits_bytes(dcid_dict, n, BROADCAST_BUDGET_BYTES) else "salted"
+    return _join_strategy(exact_size(dcid_dict.select(*_DICT_COLS)))
+
+
+def _link_dictionary(dcid_dict: DataFrame, requested: str) -> tuple[str, dict | None]:
+    """Resolve the link strategy and, for ``fused``, its driver
+    dictionary: one exact count+bytes aggregate, then at most one Arrow
+    collect (``size_gate.collect_within``). ``auto`` picks fused while
+    the dictionary fits both the entry cap and the driver budget; an
+    explicit ``fused`` request over the driver budget degrades to the
+    join path here, so the recorded strategy is the one that runs."""
+    if requested in ("broadcast", "salted"):
+        return requested, None
+    if requested not in ("auto", "fused"):
+        raise ValueError(f"unknown link_strategy {requested!r}")
+    from import_spark.functions import size_gate
+    from import_spark.operators.link import dictionary_map
+
+    pairs = dcid_dict.select(*_DICT_COLS)
+    size = size_gate.exact_size(pairs)
+    pdf = size_gate.collect_within(
+        pairs,
+        size_gate.DRIVER_COLLECT_BUDGET_BYTES,
+        max_rows=FUSED_DICT_MAX_ROWS if requested == "auto" else None,
+        size=size,
+    )
+    if pdf is None:
+        return _join_strategy(size), None
+    return "fused", dictionary_map(pdf)
 
 
 def _link_plan(
@@ -207,7 +237,7 @@ def _link_plan(
                 # explicit "fused" with an over-budget dictionary:
                 # degrade to the join path rather than OOM the driver
                 # (auto mode never picks fused in this regime —
-                # _resolve_link_strategy's size gate)
+                # _link_dictionary's size gate)
                 strategy = _join_strategy_for(dcid_dict)
         if dmap is not None:
             return extract_and_link(transcripts, dmap, narrow_only=narrow_only)
@@ -215,6 +245,107 @@ def _link_plan(
     return link_statements(
         extract_statements(transcripts), dcid_dict, strategy=strategy
     ).select(*cols)
+
+
+# Failed-quarantine layout: the local-ref statement columns led by the
+# (conv_id, obj) lookup key, then the error category — the column order
+# of the distributed resolver's join output, kept on both branches.
+_FAILED_LEAD = ("conv_id", "obj")
+
+
+def _failed_schema(narrow_schema: T.StructType) -> T.StructType:
+    rest = [f for f in narrow_schema.fields if f.name not in _FAILED_LEAD and f.name != "_cls"]
+    return T.StructType(
+        [narrow_schema[c] for c in _FAILED_LEAD]
+        + rest
+        + [T.StructField("error", T.StringType(), True)]
+    )
+
+
+@dataclass
+class NarrowMaps:
+    """The driver step's outputs, as pandas frames.
+
+    ``rmap``: (conv_id, obj, dcid) — local name → resolved dcid.
+    ``components``: (node, canon) — sameAs component map, canon = min.
+    ``failed``: unresolvable local-ref statements plus ``error``."""
+
+    rmap: pd.DataFrame
+    components: pd.DataFrame
+    failed: pd.DataFrame
+
+
+def narrow_driver_step(pdf: pd.DataFrame) -> NarrowMaps:
+    """Resolve → canonicalize → quarantine over the collected narrow
+    classes (DEF/local/sameAs rows with their ``_cls``), all on the
+    driver: the vectorized def fixpoint, the local-ref lookup of every
+    local and sameAs row, the sameAs union-find, and the failed table.
+    Equality with the spec (``_resolve_defs_driver`` +
+    ``connected_components``) is asserted in test_pipeline_e2e."""
+    import numpy as np
+    import pandas as pd
+
+    cls = pdf["_cls"]
+    resolved, divergent, unresolved = _resolve_defs_vectorized(
+        pdf.loc[cls == CLS_DEF, ["conv_id", "subj", "obj_type", "obj"]]
+    )
+    rmap = resolved.rename(columns={"key": "obj"})
+    refs = pdf[cls.isin([CLS_LOCAL, CLS_SAMEAS])]
+    key = list(_FAILED_LEAD)
+    is_local = (refs["obj_type"] == "UNRESOLVED_REF").to_numpy()
+    # rmap holds one row per key, so the left merge keeps refs' rows
+    # and order; only local refs may match (the Spark `_lk` rule)
+    dcid = refs[key].merge(rmap, on=key, how="left")["dcid"].to_numpy()
+    dcid = np.where(is_local, dcid, None)
+    lost = is_local & pd.isna(dcid)
+
+    bad = refs[lost]
+
+    def _in(keys: pd.DataFrame) -> np.ndarray:
+        k = keys.set_axis(key, axis=1).drop_duplicates().assign(_hit=True)
+        return bad[key].merge(k, on=key, how="left")["_hit"].notna().to_numpy()
+
+    error = np.where(
+        _in(divergent),
+        "Resolution_DivergingDcids",
+        np.where(_in(unresolved), "Resolution_IrreplaceableLocalRef", "Resolution_OrphanLocalReference"),
+    )
+    rest = [c for c in pdf.columns if c not in _FAILED_LEAD and c != "_cls"]
+    failed = bad[key + rest].assign(error=error).reset_index(drop=True)
+
+    edge = ((refs["_cls"] == CLS_SAMEAS).to_numpy()) & ~lost
+    obj = refs["obj"].to_numpy()
+    edges = pd.DataFrame(
+        {
+            "src": refs["subj"].to_numpy()[edge],
+            "dst": np.where(pd.isna(dcid), obj, dcid)[edge],
+        }
+    )
+    return NarrowMaps(rmap=rmap, components=union_find_components(edges), failed=failed)
+
+
+def _narrow_sizes(narrow: DataFrame) -> tuple[dict, int, dict]:
+    """ONE aggregate over the narrow classes → (rows per ``_cls``, exact
+    bytes of the DEF/local/sameAs rows the driver step would collect,
+    ERROR rows per pred)."""
+    from import_spark.functions.size_gate import row_bytes
+
+    cls = F.col("_cls")
+    rows = (
+        narrow.groupBy("_cls", F.when(cls == CLS_ERROR, F.col("pred")).alias("_epred"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum(row_bytes(narrow.schema)).alias("b"))
+        .collect()
+    )
+    counts: dict[int, int] = {}
+    errors: dict[str, int] = {}
+    nbytes = 0
+    for r in rows:
+        counts[r["_cls"]] = counts.get(r["_cls"], 0) + r["n"]
+        if r["_cls"] == CLS_ERROR:
+            errors[r["_epred"]] = r["n"]
+        else:
+            nbytes += r["b"] or 0
+    return counts, nbytes, errors
 
 
 def run_pipeline(
@@ -231,19 +362,12 @@ def run_pipeline(
     keep_snapshot: bool | None = None,
     link_strategy: str = "auto",
 ) -> PipelineResult:
-    m = _Metrics(run_id)
-    link_strategy = _resolve_link_strategy(dcid_dict, link_strategy)
-    # resolve the fused driver dict UP FRONT so the recorded strategy is
-    # the one that actually runs: an explicit "fused" request over the
-    # driver budget degrades to the join path here, not mid-plan
-    dmap = None
-    if link_strategy == "fused":
-        from import_spark.operators.link import DictionaryOverBudget
+    from import_spark.functions import size_gate
+    from import_spark.operators import canonicalize as cz
+    from import_spark.operators import resolve as rz
 
-        try:
-            dmap = dcid_map_from_df(dcid_dict)
-        except DictionaryOverBudget:
-            link_strategy = _join_strategy_for(dcid_dict)
+    m = _Metrics(run_id)
+    link_strategy, dmap = _link_dictionary(dcid_dict, link_strategy)
     m.add("link", f"strategy_{link_strategy}", 1)
     # per-partition lineage lands next to the checkpoint (or, without
     # one, the output) — one (run_id, stage)-partitioned parquet table
@@ -310,6 +434,9 @@ def run_pipeline(
                 write_stage_lineage(spark, snap, lin_dir, run_id, "link", part_col="_cls")
                 m.add("link", "lineage_written", 1)
         linked = spark.read.parquet(snap)
+        fat_src = linked
+        # partition pruning: the narrow passes read only their files
+        narrow = linked.filter(F.col("_cls") >= CLS_LOCAL)
     else:
         # In-memory mode: persist ONLY the narrow classes (~5% of rows —
         # DEF/ERROR/sameAs/local; measured 2.6M of 48.6M at 1M convs).
@@ -324,8 +451,8 @@ def run_pipeline(
         # cores on a box (and at 100 TB the fat intermediate could
         # never be cached at all; persisting small side-outputs and
         # recomputing narrow lineage is the only design that survives).
-        full = _with_cls(_link_plan(transcripts, dcid_dict, link_strategy, dmap=dmap))
         linked = None
+        fat_src = _with_cls(_link_plan(transcripts, dcid_dict, link_strategy, dmap=dmap))
         narrow = (
             _with_cls(
                 _link_plan(
@@ -336,102 +463,69 @@ def run_pipeline(
             .persist()
         )
 
-    # counters. Snapshot mode: per-class totals read ONLY the `_cls`
-    # partition column. In-memory mode: the narrow cache holds classes
-    # 1-4; the fat-triple total is collected for free during the big
-    # pass via an Observation on the recomputed stream (no extra job).
-    obs = None
-    if linked is not None:
-        cls_counts = {r["_cls"]: r["count"] for r in linked.groupBy("_cls").count().collect()}
-        narrow_src = linked
-    else:
-        cls_counts = {r["_cls"]: r["count"] for r in narrow.groupBy("_cls").count().collect()}
-        narrow_src = narrow
-    kind_counts: dict[str, int] = {}
-    for c, n in cls_counts.items():
-        k = _CLS_KIND[c]
-        kind_counts[k] = kind_counts.get(k, 0) + n
-    for k in sorted(kind_counts):
-        if k == "TRIPLE" and linked is None:
-            continue  # deferred to the Observation on the big pass
-        m.add("extract", f"rows_{k.lower()}", kind_counts[k])
-    for r in narrow_src.filter(F.col("_cls") == CLS_ERROR).groupBy("pred").count().collect():
-        m.add("extract", r["pred"], r["count"])
+    # counters + gate inputs: ONE aggregate over the narrow classes.
+    # The plain-triple total (classes 0-2) is collected for free during
+    # the big pass via an Observation on its stream (no extra job).
+    cls_counts, narrow_bytes, error_counts = _narrow_sizes(narrow)
+    n_defs = cls_counts.get(CLS_DEF, 0)
+    n_same = cls_counts.get(CLS_SAMEAS, 0)
+    for k, c in (("def", CLS_DEF), ("error", CLS_ERROR)):
+        if c in cls_counts:
+            m.add("extract", f"rows_{k}", cls_counts[c])
+    for pred in sorted(error_counts):
+        m.add("extract", pred, error_counts[pred])
 
     # 4-6. resolve → canonicalize → merge.
     #
-    # Fast path (defs fit the driver gate — the common shape: locals are
-    # bounded per conversation): the def fixpoint runs driver-side and
-    # every downstream consumer is a broadcast join. With the `_cls`
-    # clustering, the ONLY pass that touches the fat plain-triple rows
-    # is the final fused resolve+canonicalize+dedupe+write; the
-    # def-collect, sameAs-edge and failed-quarantine passes all prune
-    # to their ~5% classes. The distributed fallback (defs above the
-    # gate) keeps the iterative resolver loop.
-    n_defs = kind_counts.get("DEF", 0)
-    fat_src = linked if linked is not None else full
+    # Driver branch (the narrow side fits — the common shape: locals
+    # and aliases are bounded per conversation): the gate reads the
+    # aggregate above, ONE Arrow collect of the DEF/local/sameAs rows
+    # feeds narrow_driver_step, and its maps come back as parquet
+    # handoffs that every downstream consumer broadcast-joins. The
+    # ONLY pass that touches the fat plain-triple rows is the final
+    # fused resolve+canonicalize+dedupe+write. The distributed branch
+    # (a gate declines) keeps the iterative resolver loop.
+    driver = (
+        n_defs <= rz.DRIVER_RESOLVE_MAX_DEFS
+        and n_same <= cz.DRIVER_CC_MAX_EDGES
+        and narrow_bytes <= size_gate.DRIVER_COLLECT_BUDGET_BYTES
+    )
+    m.add("extract", "narrow_bytes", narrow_bytes)
+    m.add("resolve", f"branch_{'driver' if driver else 'distributed'}", 1)
     triples = fat_src.filter(F.col("_cls") <= CLS_SAMEAS).drop("_cls")
-    if linked is None:
+    obs = None
+    if driver:
         from pyspark.sql import Observation
 
         obs = Observation("extract")
         triples = triples.observe(obs, F.count(F.lit(1)).alias("rows_triple"))
-    same_src = narrow_src.filter(F.col("_cls") == CLS_SAMEAS).drop("_cls")
-    loc_src = narrow_src.filter(F.col("_cls").isin(CLS_LOCAL, CLS_SAMEAS)).drop("_cls")
-    is_local = F.col("obj_type") == "UNRESOLVED_REF"
-    maps = resolve_defs_fast(
-        narrow_src.filter(F.col("_cls") == CLS_DEF).drop("_cls"), approx_defs=n_defs
-    )
-    if maps is not None:
+        pdf = narrow.filter(F.col("_cls") != CLS_ERROR).toPandas()
+        step = narrow_driver_step(pdf)
         m.add("resolve", "rounds", 0)
-        # The sameAs edge set must exist BEFORE the big pass (CC feeds
-        # canonicalize), so it gets its own (class-pruned) scan; the
-        # failed quarantine is only consumed by sinks/counters and is
-        # LAZY here — it materializes in the concurrent tail below,
-        # hidden under the big triple write instead of adding a serial
-        # scan up front.
-        edges = (
-            same_src
-            .withColumn("_lk", F.when(is_local, F.col("obj")))
-            .join(
-                maps.rmap.select(
-                    "conv_id", F.col("obj").alias("_lk"), F.col("dcid").alias("_dc")
-                ),
-                ["conv_id", "_lk"],
-                "left",
-            )
-            .filter(~(is_local & F.col("_dc").isNull()))
-            .select(
-                F.col("subj").alias("src"),
-                F.coalesce(F.col("_dc"), F.col("obj")).alias("dst"),
+        rmap = F.broadcast(
+            rz._driver_parquet_handoff(
+                spark,
+                step.rmap.set_axis(["conv_id", "_lk", "_dc"], axis=1),
+                "conv_id string, _lk string, _dc string",
             )
         )
-        failed = (
-            loc_src.filter(is_local)
-            .join(maps.rmap.withColumnRenamed("dcid", "_dc"), ["conv_id", "obj"], "left")
-            .filter(F.col("_dc").isNull())
-            .drop("_dc")
-            .join(maps.divergent.withColumn("err", F.lit("Resolution_DivergingDcids")), ["conv_id", "obj"], "left")
-            .join(maps.unresolved.withColumn("err2", F.lit("Resolution_IrreplaceableLocalRef")), ["conv_id", "obj"], "left")
-            .withColumn(
-                "error",
-                F.coalesce(F.col("err"), F.col("err2"), F.lit("Resolution_OrphanLocalReference")),
-            )
-            .drop("err", "err2")
+        components = rz._driver_parquet_handoff(
+            spark, step.components, "node string, canon string"
+        )
+        failed = rz._driver_parquet_handoff(spark, step.failed, _failed_schema(narrow.schema))
+        failed_counts = list(step.failed["error"].value_counts().items())
+        n_components = len(step.components)
+        broadcast_cc = n_components <= BROADCAST_CC_MAX_ROWS and (
+            size_gate.pandas_bytes(step.components) <= size_gate.BROADCAST_BUDGET_BYTES
         )
         # the fused final pass: resolve locals inline (dropping failed
         # rows — they are quarantined above), then canonicalize
         # join on a nulled key so only local-ref rows can match the map
         # (null join keys never match — non-local rows pass through)
+        is_local = F.col("obj_type") == "UNRESOLVED_REF"
         resolved = (
             triples.withColumn("_lk", F.when(is_local, F.col("obj")))
-            .join(
-                maps.rmap.select(
-                    "conv_id", F.col("obj").alias("_lk"), F.col("dcid").alias("_dc")
-                ),
-                ["conv_id", "_lk"],
-                "left",
-            )
+            .join(rmap, ["conv_id", "_lk"], "left")
             .filter(~(is_local & F.col("_dc").isNull()))
             .withColumn("obj", F.coalesce(F.col("_dc"), F.col("obj")))
             .withColumn(
@@ -441,68 +535,58 @@ def run_pipeline(
             .drop("_dc", "_lk")
         )
     else:
-        # distributed fallback (defs above the driver gate): the
-        # iterative resolver consumes the full statement set several
-        # times — materialize it for this path only
-        if linked is None:
-            fallback_src = full.persist()
-        else:
-            fallback_src = linked
+        # distributed fallback (a gate declined): the iterative
+        # resolver consumes the full statement set several times —
+        # materialize it for this path only
+        fallback_src = fat_src.persist() if linked is None else linked
         res = resolve_locals(
             fallback_src.drop("_cls"), num_partitions=num_partitions, approx_defs=n_defs
         )
-        if obs is not None:
-            # the observed recompute stream is not consumed on this
-            # path; count the (now materialized) statements directly
-            obs = None
-            m.add(
-                "extract",
-                "rows_triple",
-                fallback_src.filter(F.col("_cls") <= CLS_SAMEAS).count(),
-            )
+        m.add(
+            "extract",
+            "rows_triple",
+            fallback_src.filter(F.col("_cls") <= CLS_SAMEAS).count(),
+        )
         resolved = res.resolved
         failed = res.failed.localCheckpoint()
+        failed_counts = None
         m.add("resolve", "rounds", res.rounds)
         edges = resolved.filter(F.col("pred") == "sameAs").select(
             F.col("subj").alias("src"), F.col("obj").alias("dst")
         )
-
-    # 5. canonicalize (sameAs connected components). The fast path
-    # returns a parquet-backed map (already materialized — count() is
-    # metadata-only); only the distributed loop's result needs a
-    # lineage-cutting checkpoint here.
-    fast_cc = connected_components_fast(edges)
-    components = fast_cc if fast_cc is not None else connected_components(edges).localCheckpoint()
-    n_components = components.count()
+        # 5. canonicalize (sameAs connected components): the driver
+        # union-find while the edge set fits, else the distributed loop
+        fast_cc = connected_components_fast(edges)
+        components = (
+            fast_cc if fast_cc is not None else connected_components(edges).localCheckpoint()
+        )
+        n_components = components.count()
+        broadcast_cc = n_components <= BROADCAST_CC_MAX_ROWS and size_gate.fits_bytes(
+            components, n_components, size_gate.BROADCAST_BUDGET_BYTES
+        )
+    if linked is None:
+        # the narrow cache has served the aggregate and the collect
+        narrow.unpersist()
     m.add("canonicalize", "nodes_rewritten", n_components)
-    # reuse the counter for the broadcast row gate; the byte gate
-    # samples the (checkpointed, small) component map — one tiny job
-    from import_spark.functions.size_gate import BROADCAST_BUDGET_BYTES, fits_bytes
+    canon = canonicalize_triples(resolved, components, broadcast_map=broadcast_cc)
 
-    canon = canonicalize_triples(
-        resolved,
-        components,
-        broadcast_map=n_components <= BROADCAST_CC_MAX_ROWS
-        and fits_bytes(components, n_components, BROADCAST_BUDGET_BYTES),
-    )
-
-    # 6. merge + materialize. The failed-quarantine materialization,
-    # its sink write and its error counters are independent of the big
-    # triple write (S11's write barrier is between stages, not between
-    # sibling sinks) — they run as concurrent actions and hide under
-    # the big write's task tail instead of adding serial full-table
-    # scans; Spark schedulers interleave concurrent jobs fairly.
+    # 6. merge + materialize. The failed-quarantine sink write and its
+    # error counters are independent of the big triple write (S11's
+    # write barrier is between stages, not between sibling sinks) —
+    # they run as concurrent actions and hide under the big write's
+    # task tail instead of adding serial scans; Spark schedulers
+    # interleave concurrent jobs fairly. On the driver branch the
+    # counters are already on the driver.
     if check_generic_types:
         canon = drop_generic_types(canon)
     from concurrent.futures import ThreadPoolExecutor
 
-    already_mat = maps is None  # distributed path checkpointed `failed`
-
     def _failed_tail():
-        fm = failed if already_mat else failed.localCheckpoint()
         if out_dir:
-            fm.write.mode("overwrite").parquet(os.path.join(out_dir, "failed"))
-        return fm, fm.groupBy("error").count().collect()
+            failed.write.mode("overwrite").parquet(os.path.join(out_dir, "failed"))
+        if failed_counts is not None:
+            return failed_counts
+        return [(r["error"], r["count"]) for r in failed.groupBy("error").count().collect()]
 
     if out_dir:
         tri_path = os.path.join(out_dir, "triples")
@@ -517,7 +601,7 @@ def run_pipeline(
             fut_failed = pool.submit(_failed_tail)
             fut_tri.result()
             m.add("merge", "triples_written", 1)
-            failed, failed_counts = fut_failed.result()
+            error_rows = fut_failed.result()
             m.add("merge", "failed_written", 1)
         if lin_dir:
             write_stage_lineage(
@@ -528,6 +612,8 @@ def run_pipeline(
                 write_stage_lineage(spark, failed_path, lin_dir, run_id, "resolve")
             m.add("merge", "lineage_written", 1)
         final = spark.read.parquet(tri_path)
+        # parquet metadata count (no recompute)
+        n_final = final.count()
     else:
         final = dedupe_triples(
             canon.select(*FINAL_COLS), num_partitions=num_partitions
@@ -535,15 +621,14 @@ def run_pipeline(
         with ThreadPoolExecutor(max_workers=2) as pool:
             fut_cnt = pool.submit(final.count)
             fut_failed = pool.submit(_failed_tail)
-            fut_cnt.result()
-            failed, failed_counts = fut_failed.result()
-    for r in failed_counts:
-        m.add("resolve", r["error"], r["count"])
+            n_final = fut_cnt.result()
+            error_rows = fut_failed.result()
+    for err, n in error_rows:
+        m.add("resolve", err, n)
     if obs is not None:
         # collected during the big pass — no extra job
         m.add("extract", "rows_triple", obs.get["rows_triple"])
-    # parquet metadata count (no recompute) when materialized
-    m.add("merge", "triples_final", final.count())
+    m.add("merge", "triples_final", n_final)
 
     # invariant: input text unchanged under stable ordering
     dout = text_digest(transcripts) if verify_text_invariant else 0
@@ -567,10 +652,9 @@ def run_pipeline(
             os.path.join(out_dir, "metrics")
         )
     if snap is None:
-        # final is materialized (counted above); release the caches so
-        # repeated in-process runs don't accumulate executor storage
-        narrow.unpersist()
-        if maps is None:
+        # final is materialized (counted above); release the fallback
+        # cache so repeated in-process runs don't accumulate storage
+        if not driver:
             fallback_src.unpersist()
     elif not keep and os.path.exists(snap):
         shutil.rmtree(snap, ignore_errors=True)

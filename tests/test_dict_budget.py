@@ -17,7 +17,9 @@ from import_spark.operators.link import (
     DictionaryOverBudget,
     dcid_map_from_df,
     derive_node_dictionary,
+    dictionary_map,
     local_graph_dictionary,
+    prepare_dictionary,
 )
 from import_spark.plans.genmcf import run_genmcf
 
@@ -172,3 +174,27 @@ def test_dict_df_skips_falsy_dcids_like_the_closure_walk(spark, monkeypatch):
     assert ("P1", "dcid", "country/USA") in got       # lower-priority real hit
     assert ("P2", "dcid", "iso/FR") in got            # prefix fallback
     assert not any(v == "" for n, p, v in got if p == "dcid")
+
+
+def test_dictionary_map_first_wins_on_min_dcid(spark):
+    """The driver-side dedupe keeps prepare_dictionary's rule: the
+    minimum non-null dcid per (prop, ext_id); None only when every
+    candidate is null."""
+    entries = [
+        ("isoCode", "US", "country/b"),
+        ("isoCode", "US", None),
+        ("isoCode", "US", "country/a"),
+        ("isoCode", "XX", None),
+        ("nutsCode", "US", "nuts/US"),
+    ]
+    want = {
+        (r["prop"], r["ext_id"]): r["dcid"]
+        for r in prepare_dictionary(_dict_df(spark, entries)).collect()
+    }
+    got = dictionary_map(_dict_df(spark, entries).toPandas())
+    assert got == want == {
+        ("isoCode", "US"): "country/a",
+        ("isoCode", "XX"): None,
+        ("nutsCode", "US"): "nuts/US",
+    }
+    assert dcid_map_from_df(_dict_df(spark, entries)) == want

@@ -15,43 +15,157 @@ from import_spark.sources.transcripts import (
 )
 
 
+def _job_ids(spark) -> set[int]:
+    """Ids of the jobs the driver's status store holds (the listener
+    bus drained first, so every finished job is in)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    seq = sc.statusStore().jobsList(None)
+    return {seq.apply(i).jobId() for i in range(seq.size())}
+
+
 @pytest.fixture(scope="module")
 def result(spark):
     tr = generate_transcripts(spark, 150).cache()
-    res = run_pipeline(spark, tr, dcid_dictionary(spark))
+    d = dcid_dictionary(spark)
+    tr.count()
+    before = _job_ids(spark)
+    res = run_pipeline(spark, tr, d)
+    jobs = len(_job_ids(spark) - before)
     got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
     want, failed_uses = expected_triples(tr.toPandas(), build_dcid_dictionary())
-    return res, got, want, failed_uses
+    return res, got, want, failed_uses, jobs
 
 
 def test_precision_recall_gate(result):
-    res, got, want, _ = result
+    res, got, want, _, _ = result
     p, r = precision_recall(got, want)
     assert p >= 0.95 and r >= 0.95, (p, r)
     assert p == 1.0 and r == 1.0  # deterministic generator → exact
 
 
 def test_failed_statement_parity(result):
-    res, _, _, failed_uses = result
+    res, _, _, failed_uses, _ = result
     assert res.failed.count() == len(failed_uses)
 
 
 def test_text_invariant(result):
-    res, _, _, _ = result
+    res, _, _, _, _ = result
     assert res.text_digest_in == res.text_digest_out != 0
 
 
 def test_no_unresolved_refs_in_output(result):
-    res, got, _, _ = result
+    res, got, _, _, _ = result
     assert not any(t == "UNRESOLVED_REF" for _, _, t, _ in got)
     assert not any(o.startswith("l:") for _, _, t, o in got if t == "RESOLVED_REF")
 
 
 def test_triples_are_distinct(result):
-    res, got, _, _ = result
+    res, got, _, _, _ = result
     assert res.triples.count() == res.triples.dropDuplicates(
         ["subj", "pred", "obj_type", "obj"]
     ).count()
+
+
+def test_in_memory_job_budget(result):
+    """The in-memory call takes the one-collect driver branch: one
+    aggregate and one Arrow collect for the dictionary and for the
+    narrow side, no size probes — at most 20 Spark jobs in all."""
+    res, _, _, _, jobs = result
+    counters = {r["counter"] for r in res.metrics}
+    assert "branch_driver" in counters
+    assert jobs <= 20, jobs
+
+
+def test_narrow_driver_step_matches_spec(spark):
+    """narrow_driver_step (vectorized def fixpoint, local-ref lookup,
+    union-find, quarantine) equals the spec — the pure-Python def walk
+    ``_resolve_defs_driver`` plus the distributed
+    ``connected_components`` — on a hand-built frame with a chain, a
+    cycle, a divergent def, an orphan local and a resolved and an
+    unresolved sameAs→local edge."""
+    import pandas as pd
+
+    from import_spark.operators.canonicalize import connected_components
+    from import_spark.operators.resolve import _resolve_defs_driver
+    from import_spark.plans.kg_pipeline import (
+        CLS_DEF,
+        CLS_LOCAL,
+        CLS_SAMEAS,
+        narrow_driver_step,
+    )
+
+    R, U = "RESOLVED_REF", "UNRESOLVED_REF"
+    defs = [
+        ("c1", "l:E1", R, "geoId/06"),
+        ("c1", "l:E1", R, "geoId/06"),  # exact duplicate: not divergent
+        ("c1", "l:E2", U, "l:E1"),  # chain E2 → E1 → geoId/06
+        ("c1", "l:E3", U, "l:E4"),  # cycle E3 ↔ E4
+        ("c1", "l:E4", U, "l:E3"),
+        ("c1", "l:E5", R, "geoId/07"),  # divergent E5
+        ("c1", "l:E5", R, "geoId/08"),
+        ("c1", "l:E6", U, "l:E5"),  # points at the divergent local
+        ("c2", "l:E1", R, "geoId/99"),  # same name, other conversation
+    ]
+    refs = [
+        (CLS_LOCAL, "c1", "s1", "mentions", U, "l:E2"),  # resolves via chain
+        (CLS_LOCAL, "c1", "s1", "mentions", U, "l:E3"),  # cycle
+        (CLS_LOCAL, "c1", "s1", "mentions", U, "l:E5"),  # divergent
+        (CLS_LOCAL, "c1", "s1", "mentions", U, "l:E6"),  # irreplaceable
+        (CLS_LOCAL, "c1", "s2", "mentions", U, "l:E9"),  # orphan
+        (CLS_LOCAL, "c2", "s3", "mentions", U, "l:E1"),
+        (CLS_LOCAL, "c2", "s3", "mentions", U, "l:E2"),  # defined in c1 only
+        (CLS_SAMEAS, "c1", "geoId/09", "sameAs", U, "l:E1"),  # resolved edge
+        (CLS_SAMEAS, "c1", "geoId/10", "sameAs", U, "l:E9"),  # unresolved edge
+        (CLS_SAMEAS, "c1", "geoId/11", "sameAs", R, "geoId/09"),
+        (CLS_SAMEAS, "c2", "geoId/12", "sameAs", R, "geoId/12"),  # self-loop
+    ]
+    rows = [
+        {"conv_id": c, "turn_idx": i, "kind": "DEF", "subj": s, "pred": "__def__",
+         "obj_type": t, "obj": o, "_cls": CLS_DEF}
+        for i, (c, s, t, o) in enumerate(defs)
+    ] + [
+        {"conv_id": c, "turn_idx": 100 + i, "kind": "TRIPLE", "subj": s, "pred": p,
+         "obj_type": t, "obj": o, "_cls": k}
+        for i, (k, c, s, p, t, o) in enumerate(refs)
+    ]
+    pdf = pd.DataFrame(rows)
+    got = narrow_driver_step(pdf)
+
+    # spec: the pure-Python def walk, then lookup / quarantine / edges
+    res, div, unres = _resolve_defs_driver(defs)
+    rmap = {(c, l): d for c, l, d in res}
+    assert set(got.rmap.itertuples(index=False, name=None)) == set(res)
+    cat = {}
+    for k in div:
+        cat.setdefault(k, "Resolution_DivergingDcids")
+    for k in unres:
+        cat.setdefault(k, "Resolution_IrreplaceableLocalRef")
+    want_failed, edges = [], []
+    for i, (k, c, s, p, t, o) in enumerate(refs):
+        hit = rmap.get((c, o)) if t == U else o
+        if hit is None:
+            err = cat.get((c, o), "Resolution_OrphanLocalReference")
+            want_failed.append((c, o, 100 + i, "TRIPLE", s, p, t, err))
+        elif k == CLS_SAMEAS:
+            edges.append((s, hit))
+    assert list(got.failed.columns) == [
+        "conv_id", "obj", "turn_idx", "kind", "subj", "pred", "obj_type", "error"
+    ]
+    assert sorted(got.failed.itertuples(index=False, name=None)) == sorted(want_failed)
+    assert {r[-1] for r in want_failed} == {
+        "Resolution_DivergingDcids",
+        "Resolution_IrreplaceableLocalRef",
+        "Resolution_OrphanLocalReference",
+    }
+    want_cc = {
+        (r.node, r.canon)
+        for r in connected_components(
+            spark.createDataFrame(edges, "src string, dst string"), edge_partitions=1
+        ).collect()
+    }
+    assert set(got.components.itertuples(index=False, name=None)) == want_cc
+    assert ("geoId/09", "geoId/06") in want_cc and ("geoId/11", "geoId/06") in want_cc
 
 
 def test_checkpoint_snapshot_class_layout_and_resume(spark, tmp_path):
@@ -295,6 +409,24 @@ def test_all_distributed_branches_match_oracle(spark, monkeypatch):
     assert res.text_digest_in == res.text_digest_out != 0
 
 
+def test_cc_gate_alone_forces_distributed_branch(spark, monkeypatch):
+    """Only the sameAs edge gate declines: the WHOLE narrow side takes
+    the distributed branch (never driver resolve with distributed CC)
+    and still meets the oracle gate."""
+    import import_spark.operators.canonicalize as cz
+
+    monkeypatch.setattr(cz, "DRIVER_CC_MAX_EDGES", 0)
+    tr = generate_transcripts(spark, 120).cache()
+    res = run_pipeline(spark, tr, dcid_dictionary(spark))
+    counters = {r["counter"]: r["value"] for r in res.metrics}
+    assert "branch_distributed" in counters and "branch_driver" not in counters
+    got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
+    want, failed_uses = expected_triples(tr.toPandas(), build_dcid_dictionary())
+    assert precision_recall(got, want) == (1.0, 1.0)
+    assert res.failed.count() == len(failed_uses)
+    assert res.text_digest_in == res.text_digest_out != 0
+
+
 @pytest.mark.parametrize("strategy", ["broadcast", "salted"])
 def test_link_strategy_fallback_matches_oracle(spark, strategy):
     """The big-dictionary fallback (unfused extract + link JOIN,
@@ -316,21 +448,28 @@ def test_link_strategy_fallback_matches_oracle(spark, strategy):
 
 
 def test_link_strategy_auto_resolution(spark):
-    """auto → fused for a dimension-sized dictionary; the entry-count
-    gate flips it to a join strategy."""
+    """auto → fused (with its driver dictionary) for a dimension-sized
+    dictionary; the entry-count gate flips it to a join strategy."""
     import import_spark.plans.kg_pipeline as kp
 
     d = dcid_dictionary(spark)
-    assert kp._resolve_link_strategy(d, "auto") == "fused"
-    assert kp._resolve_link_strategy(d, "salted") == "salted"
+    strategy, dmap = kp._link_dictionary(d, "auto")
+    assert strategy == "fused"
+    assert dmap == {
+        (p, e): v
+        for p, e, v in build_dcid_dictionary().sort_values("dcid").drop_duplicates(
+            ["prop", "ext_id"]
+        ).itertuples(index=False, name=None)
+    }
+    assert kp._link_dictionary(d, "salted") == ("salted", None)
     try:
         orig = kp.FUSED_DICT_MAX_ROWS
         kp.FUSED_DICT_MAX_ROWS = 0
-        assert kp._resolve_link_strategy(d, "auto") == "broadcast"
+        assert kp._link_dictionary(d, "auto") == ("broadcast", None)
     finally:
         kp.FUSED_DICT_MAX_ROWS = orig
     with pytest.raises(ValueError):
-        kp._resolve_link_strategy(d, "nope")
+        kp._link_dictionary(d, "nope")
 
 
 def test_adversarial_inputs_null_policy_and_idempotence(spark):

@@ -8,8 +8,11 @@ from pyspark.sql import functions as F
 from import_spark.functions.size_gate import (
     BROADCAST_BUDGET_BYTES,
     DRIVER_COLLECT_BUDGET_BYTES,
+    collect_within,
     estimate_row_bytes,
+    exact_size,
     fits_bytes,
+    pandas_bytes,
 )
 
 
@@ -108,3 +111,39 @@ def test_resolve_graph_wide_rows_take_distributed_path(spark, monkeypatch):
     assert called.get("distributed")
     got = {(r.prop, r.value) for r in res.resolved.filter(F.col("prop") == "dcid").collect()}
     assert ("dcid", "geoId/06") in got
+
+
+def test_collect_within_gates_on_exact_size(spark):
+    """One exact count+bytes aggregate, then the collect only when both
+    the byte budget and the row cap hold; pandas_bytes measures the
+    collected frame by the same per-cell rule."""
+    df = _wide(spark, 100, 10)
+    rows, nbytes = exact_size(df)
+    assert rows == 100
+    assert nbytes == sum(len(str(i)) + 8 + 10 + 8 for i in range(100))
+    assert collect_within(df, nbytes - 1) is None
+    assert collect_within(df, nbytes, max_rows=99) is None
+    pdf = collect_within(df, nbytes, max_rows=100, size=(rows, nbytes))
+    assert len(pdf) == 100
+    assert pandas_bytes(pdf) == nbytes
+    assert exact_size(df.filter(F.lit(False))) == (0, 0)
+
+
+def test_parquet_handoff_shares_one_root(spark):
+    """Every handoff is a unique file under ONE session-scoped root;
+    an empty frame round-trips with its schema."""
+    import os
+    from urllib.parse import urlparse
+
+    import pandas as pd
+
+    from import_spark.operators import resolve as rz
+
+    a = rz._driver_parquet_handoff(spark, pd.DataFrame({"x": ["1"], "y": [2]}), "x string, y int")
+    b = rz._driver_parquet_handoff(spark, pd.DataFrame({"x": [], "y": []}), "x string, y int")
+    (fa,), (fb,) = a.inputFiles(), b.inputFiles()
+    assert fa != fb
+    root = os.path.realpath(rz._HANDOFF_ROOT)
+    assert {os.path.dirname(urlparse(f).path) for f in (fa, fb)} == {root}
+    assert [tuple(r) for r in a.collect()] == [("1", 2)]
+    assert b.count() == 0 and b.schema.simpleString() == "struct<x:string,y:int>"
