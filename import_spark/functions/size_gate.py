@@ -4,19 +4,13 @@ Row-count gates alone mislead: 5M rows of 20-byte locals is 100 MB
 (fine to collect/broadcast), 5M rows of 10 KB literals is 50 GB (OOM).
 The reference's analogues are capacity-bounded caches
 (ExternalIdResolver's in-memory maps, LogWrapper's capped samples), so
-every fast path here gates on estimated BYTES = sampled average row
-width x row count, alongside the existing row cap.
+every fast path here gates on exact BYTES alongside its row cap.
 
-Two shapes:
-- ``exact_size`` / ``collect_within``: one exact count+bytes aggregate,
-  then (when both fit) one Arrow collect — the shape for any frame the
-  caller is about to pull to the driver anyway.
-- ``fits_bytes``: sampled width x a row count the caller already holds.
-  The width sample reads a bounded ``limit()`` head — one tiny job. The
-  head is not a uniform sample, but width skew across a table's scan
-  order is far smaller than the 100x-1000x row-width spread the gate
-  exists to catch, and over-estimating safety margins belong in the
-  budget constant, not the sampler.
+One shape: ``exact_size`` — one count+bytes aggregate — then, when the
+frame fits, at most one Arrow collect (``collect_within``). A broadcast
+gate reads the same aggregate and collects nothing; a map already on
+the driver is sized by ``pandas_bytes`` under the same per-cell rule,
+with no job at all.
 """
 
 from __future__ import annotations
@@ -59,24 +53,15 @@ def row_bytes(schema: T.StructType):
     return total
 
 
-def estimate_row_bytes(df: DataFrame, sample_rows: int = 2000) -> float:
-    """Average row width in bytes from a bounded head sample.
-
-    Returns 0.0 for an empty frame."""
+def exact_size(df: DataFrame) -> tuple[int, int]:
+    """(rows, bytes) of ``df`` from one exact aggregate. The width is a
+    projection, which the optimizer pushes below a ``limit``: sizing
+    ``df.limit(n)`` moves one integer per row, not the row."""
     row = (
-        df.limit(sample_rows)
-        .select(row_bytes(df.schema).alias("w"))
-        .agg(F.avg("w").alias("avg_w"))
+        df.select(row_bytes(df.schema).alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("w").alias("b"))
         .collect()[0]
     )
-    return float(row["avg_w"] or 0.0)
-
-
-def exact_size(df: DataFrame) -> tuple[int, int]:
-    """(rows, bytes) of ``df`` from one exact aggregate."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(row_bytes(df.schema)).alias("b")
-    ).collect()[0]
     return int(row["n"]), int(row["b"] or 0)
 
 
@@ -88,9 +73,12 @@ def collect_within(
 ):
     """Arrow-collect ``df`` as pandas when its exact size fits both the
     byte budget and the optional row cap; None otherwise (the caller
-    takes its distributed path). ``size`` reuses an ``exact_size``
-    result the caller already holds."""
-    rows, nbytes = size if size is not None else exact_size(df)
+    takes its distributed path). With ``max_rows`` the aggregate sizes
+    ``df.limit(max_rows + 1)``, so a frame over the cap stops early.
+    ``size`` reuses an ``exact_size`` result the caller already holds."""
+    if size is None:
+        size = exact_size(df if max_rows is None else df.limit(max_rows + 1))
+    rows, nbytes = size
     if nbytes > budget_bytes or (max_rows is not None and rows > max_rows):
         return None
     return df.toPandas()
@@ -106,16 +94,12 @@ def pandas_bytes(pdf) -> int:
     )
 
 
-def fits_bytes(
-    df: DataFrame,
-    n_rows: int,
-    budget_bytes: int,
-    sample_rows: int = 2000,
-) -> bool:
-    """True when ``n_rows`` rows of ``df``'s sampled width fit the
-    byte budget."""
+def fits_bytes(df: DataFrame, n_rows: int, budget_bytes: int) -> bool:
+    """True when ``df``'s exact bytes (``exact_size``) fit the budget.
+    ``n_rows`` is a row count the caller already holds: an empty frame
+    fits and more rows than budget bytes cannot, without a job."""
     if n_rows <= 0:
         return True
     if n_rows > budget_bytes:  # >1 byte/row minimum: cheap early out
         return False
-    return n_rows * estimate_row_bytes(df, sample_rows) <= budget_bytes
+    return exact_size(df)[1] <= budget_bytes

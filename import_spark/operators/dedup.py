@@ -155,8 +155,8 @@ def minhash_dedup(
 
     Tries the size-gated driver union-find first (alias graphs are
     tiny relative to the corpus); falls back to the distributed
-    fixpoint loop above the gate. Ids ride as zero-padded strings so
-    the CC min-label canon equals the numeric minimum.
+    large-star/small-star kernel above the gate. Ids ride as zero-padded strings so
+    the CC min-id canon equals the numeric minimum.
     """
     # NOTE: the verify step recomputes the shingle table from scratch —
     # measured 4.5x FASTER than persist()-and-reuse, because a cached

@@ -550,13 +550,10 @@ def statvar_collisions(nodes: DataFrame) -> DataFrame:
     working_df = packed.mapInPandas(
         derive, schema="node_id string, curated string, generated string"
     ).localCheckpoint()
-    from import_spark.functions.size_gate import (
-        DRIVER_COLLECT_BUDGET_BYTES,
-        fits_bytes,
-    )
+    from import_spark.functions import size_gate
 
-    n_sv = working_df.count()
-    if not fits_bytes(working_df, n_sv, DRIVER_COLLECT_BUDGET_BYTES):
+    working = size_gate.collect_within(working_df, size_gate.DRIVER_COLLECT_BUDGET_BYTES)
+    if working is None:
         # Degenerate scale (more StatVar bytes than the driver budget —
         # the reference's in-memory maps would not survive this input
         # either): first registration approximated by min(node_id) per
@@ -598,13 +595,14 @@ def statvar_collisions(nodes: DataFrame) -> DataFrame:
             )
         )
         return same.unionByName(diff)
-    working = working_df.collect()
 
     curated_to_gen: dict[str, str] = {}
     gen_to_curated: dict[str, str] = {}
     errors: list[tuple[str, str, str, str]] = []
-    for r in sorted(working, key=lambda r: r["node_id"]):
-        nid, curated, generated = r["node_id"], r["curated"], r["generated"]
+    working = working.sort_values("node_id", kind="stable")
+    for nid, curated, generated in zip(
+        working["node_id"], working["curated"], working["generated"]
+    ):
         existing_gen = curated_to_gen.get(curated)
         if existing_gen is not None and existing_gen != generated:
             errors.append(

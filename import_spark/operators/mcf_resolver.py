@@ -275,7 +275,6 @@ def resolve_graph_driver(
 def resolve_graph(
     nodes: DataFrame,
     assign_statvar_dcids: bool = True,
-    approx_rows: int | None = None,
     force_distributed: bool = False,
     dcid_dict: dict | None = None,
     dict_df: DataFrame | None = None,
@@ -283,8 +282,9 @@ def resolve_graph(
 ) -> McfResolveResult:
     """Alternating resolver over a long-form node table.
 
-    Size-gated: below DRIVER_RESOLVE_MAX_ROWS the fixpoint runs
-    driver-side (Arrow round-trip); above it, the distributed loop.
+    Size-gated: within DRIVER_RESOLVE_MAX_ROWS rows and the driver
+    byte budget the fixpoint runs driver-side (one size aggregate, one
+    Arrow round-trip); above either, the distributed loop.
 
     ``dict_df``: the external-id dictionary as a DataFrame — the
     over-driver-budget regime. Forces the distributed fixpoint (the
@@ -304,24 +304,17 @@ def resolve_graph(
     nodes = nodes.select(*base_cols)
     has_src = "src_file" in nodes.columns
 
-    n = (
-        approx_rows
-        if approx_rows is not None
-        else nodes.limit(DRIVER_RESOLVE_MAX_ROWS + 1).count()
-    )
-    from import_spark.functions.size_gate import (
-        DRIVER_COLLECT_BUDGET_BYTES,
-        fits_bytes,
-    )
+    from import_spark.functions.size_gate import DRIVER_COLLECT_BUDGET_BYTES, collect_within
 
-    if (
-        not force_distributed
-        and n <= DRIVER_RESOLVE_MAX_ROWS
-        # rows alone mislead: 5M wide-literal rows are GBs — byte-gate
-        # the Arrow collect on sampled width x count
-        and fits_bytes(nodes, n, DRIVER_COLLECT_BUDGET_BYTES)
-    ):
-        pdf = nodes.toPandas()
+    # rows alone mislead (5M wide-literal rows are GBs): one exact
+    # count+bytes aggregate gates the Arrow collect; a forced
+    # distributed run pays no size job at all
+    pdf = (
+        None
+        if force_distributed
+        else collect_within(nodes, DRIVER_COLLECT_BUDGET_BYTES, max_rows=DRIVER_RESOLVE_MAX_ROWS)
+    )
+    if pdf is not None:
         rows = list(pdf.itertuples(index=False, name=None))
         resolved_rows, failed_rows, failed_ids, errors, rounds = resolve_graph_driver(
             rows, assign_statvar_dcids=assign_statvar_dcids, dcid_dict=dcid_dict

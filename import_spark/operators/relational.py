@@ -51,8 +51,8 @@ def ancestor_closure(
     first. Returns (leaf, anc) with anc the top-level ancestor. Each
     level is a broadcast join by default (dimension tables); the fact
     table never shuffles. For deep/unbounded hierarchies use
-    operators.canonicalize.connected_components-style iteration with
-    pointer jumping instead."""
+    operators.canonicalize.connected_components (large-star/small-star,
+    rounds logarithmic in the component size) instead."""
     frontier = leaves.select(
         F.col(leaf_col).alias("leaf"), F.col(leaf_col).alias("anc")
     ).dropDuplicates(["leaf"])

@@ -141,16 +141,14 @@ def resolve_locals(
     self_cyc = pending_all.filter(F.col("local") == F.col("target_local"))
     pending = pending_all.filter(F.col("local") != F.col("target_local"))
 
-    from import_spark.functions.size_gate import (
-        BROADCAST_BUDGET_BYTES,
-        estimate_row_bytes,
-    )
+    from import_spark.functions.size_gate import BROADCAST_BUDGET_BYTES, exact_size
 
     rounds = 0
-    map_rows = resolved_map.count()
-    # width sampled once; per-round broadcast decisions then cost no
-    # extra job: bytes = width x current map_rows (row cap AND byte cap)
-    map_width = estimate_row_bytes(resolved_map) if map_rows else 0.0
+    # one exact aggregate; per-round broadcast decisions then cost no
+    # extra job: bytes = mean width x current map_rows (row cap AND
+    # byte cap)
+    map_rows, map_bytes = exact_size(resolved_map)
+    map_width = map_bytes / map_rows if map_rows else 0.0
 
     def _bcast_ok(rows: int) -> bool:
         return rows <= BROADCAST_MAP_MAX_ROWS and rows * map_width <= BROADCAST_BUDGET_BYTES
@@ -270,7 +268,7 @@ def _resolve_defs_driver(def_rows) -> tuple[list, list, list]:
     )
 
 
-def _resolve_defs_vectorized(defs_pdf, assume_unique: bool = False):
+def _resolve_defs_vectorized(defs_pdf):
     """Vectorized twin of ``_resolve_defs_driver`` (which remains the
     spec/oracle in tests): chain-walk as pandas merge rounds instead of
     a per-key Python loop — this runs driver-serial, so its wall-clock
@@ -287,11 +285,7 @@ def _resolve_defs_vectorized(defs_pdf, assume_unique: bool = False):
     """
     import pandas as pd
 
-    # callers that deduped in Spark (parallel, scales) skip the
-    # driver-serial pass here
-    d = defs_pdf if assume_unique else defs_pdf.drop_duplicates(
-        ["conv_id", "subj", "obj_type", "obj"]
-    )
+    d = defs_pdf.drop_duplicates(["conv_id", "subj", "obj_type", "obj"])
     dup = d.duplicated(["conv_id", "subj"], keep=False)
     divergent = d.loc[dup, ["conv_id", "subj"]].drop_duplicates().rename(
         columns={"subj": "key"}
@@ -362,28 +356,28 @@ def resolve_defs_fast(
     Row-object collect + tuple-list createDataFrame at 10^5 defs,
     which matters because this is driver-serial time that caps the
     pipeline's scaling efficiency.
+
+    The gate is one ``size_gate.collect_within`` (exact count+bytes
+    aggregate, then the collect); ``approx_defs``, a DEF count the
+    caller already holds, skips it when already over the row cap.
     """
     import pandas as pd
 
     spark = linked.sparkSession
-    if approx_defs is None or approx_defs > DRIVER_RESOLVE_MAX_DEFS:
+    if approx_defs is not None and approx_defs > DRIVER_RESOLVE_MAX_DEFS:
         return None
-    defs_df = linked.filter(F.col("kind") == "DEF").select(
-        "conv_id", "subj", "obj_type", "obj"
-    )
-    from import_spark.functions.size_gate import (
-        DRIVER_COLLECT_BUDGET_BYTES,
-        fits_bytes,
-    )
+    from import_spark.functions.size_gate import DRIVER_COLLECT_BUDGET_BYTES, collect_within
 
-    # byte gate on sampled width x count: a row cap alone would Arrow-
-    # collect GBs when locals carry wide values
-    if not fits_bytes(defs_df, approx_defs, DRIVER_COLLECT_BUDGET_BYTES):
+    # byte gate on the exact size: a row cap alone would Arrow-collect
+    # GBs when locals carry wide values
+    defs_pdf = collect_within(
+        linked.filter(F.col("kind") == "DEF").select("conv_id", "subj", "obj_type", "obj"),
+        DRIVER_COLLECT_BUDGET_BYTES,
+        max_rows=DRIVER_RESOLVE_MAX_DEFS,
+    )
+    if defs_pdf is None:
         return None
-    # exact-dup removal happens in the (parallel) scan, not on the
-    # driver — the fixpoint then skips its serial drop_duplicates pass
-    defs_pdf = defs_df.dropDuplicates().toPandas()
-    res_pdf, div_pdf, unres_pdf = _resolve_defs_vectorized(defs_pdf, assume_unique=True)
+    res_pdf, div_pdf, unres_pdf = _resolve_defs_vectorized(defs_pdf)
 
     def _df(pdf: "pd.DataFrame", cols: list[str], schema: str) -> DataFrame:
         # Hand the map back through a driver-written parquet file, not

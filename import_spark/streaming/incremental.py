@@ -30,8 +30,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from import_spark.operators.extract import extract_and_link, extract_statements
-from import_spark.operators.link import dcid_map_from_df, link_statements
+from import_spark.operators.extract import extract_statements
+from import_spark.operators.link import link_statements
 from import_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -114,22 +114,21 @@ def ingest_to_pipeline_snapshot(
     Returns the number of micro-batches processed this invocation
     (0 when the source offsets say everything was already ingested).
     """
-    from import_spark.plans.kg_pipeline import _with_cls, dict_digest, text_digest
+    from import_spark.plans.kg_pipeline import (
+        _link_dictionary,
+        _link_plan,
+        _with_cls,
+        dict_digest,
+        text_digest,
+    )
     from import_spark.plans.lineage import write_stage_lineage
 
     snap = os.path.join(checkpoint_dir, run_id, "linked")
     offsets = os.path.join(checkpoint_dir, run_id, "stream_offsets")
-    from import_spark.operators.link import DictionaryOverBudget
-    from import_spark.plans.kg_pipeline import _join_strategy_for, _link_plan
-
-    try:
-        dmap = dcid_map_from_df(dcid_dict)
-        join_strategy = None
-    except DictionaryOverBudget:
-        # over-budget dictionary: per-batch unfused extract + join link
-        # (broadcast/salted by size), same output contract as fused
-        dmap = None
-        join_strategy = _join_strategy_for(dcid_dict)
+    # the batch pipeline's dictionary gate: fused with a driver dict
+    # while it fits the driver budget, else the unfused extract + join
+    # link (broadcast/salted by size) — same output contract
+    strategy, dmap = _link_dictionary(dcid_dict, "fused")
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -138,10 +137,7 @@ def ingest_to_pipeline_snapshot(
     n_batches = {"n": 0}
 
     def process(batch_df, batch_id: int) -> None:
-        if dmap is not None:
-            linked = extract_and_link(batch_df, dmap)
-        else:
-            linked = _link_plan(batch_df, dcid_dict, join_strategy)
+        linked = _link_plan(batch_df, dcid_dict, strategy, dmap=dmap)
         out = _with_cls(linked).withColumn("_b", F.lit(batch_id))
         # dynamic overwrite forced at the writer: with the Spark
         # default (static) a caller-supplied session would truncate

@@ -272,7 +272,7 @@ def test_statvar_collisions_distributed_fallback(spark, monkeypatch):
     nodes = spark.createDataFrame(
         rows, "node_id string, prop string, value_type string, value string"
     )
-    monkeypatch.setattr(gate, "fits_bytes", lambda *a, **k: False)
+    monkeypatch.setattr(gate, "DRIVER_COLLECT_BUDGET_BYTES", 0)
     got = {(r.node_id, r.counter) for r in statvar_collisions(nodes).collect()}
     assert got == {
         ("n2", "Sanity_DifferentDcidsForSameStatVar"),

@@ -329,30 +329,43 @@ def test_resolve_defs_vectorized_parity():
 
 def test_connected_components_star_path_graph(spark):
     """Large-star/small-star CC (Kiveris et al. SoCC'14) on an
-    adversarially deep alias graph: a 10k-node path. Must converge in
-    O(log n) rounds (min-label propagation without the star moves
-    needs O(diameter)) and produce the identical mapping contract."""
-    from import_spark.operators.canonicalize import connected_components_star
+    adversarially deep alias graph: a 1,000-node path whose ids are a
+    seeded shuffle, so no id order helps (min-label propagation needs
+    hundreds of rounds here). Same mapping as the driver union-find,
+    one row per node."""
+    import random
 
-    n = 10_000
+    import pandas as pd
+
+    from import_spark.operators.canonicalize import union_find_components
+
+    ids = [f"n{i:04d}" for i in range(1000)]
+    random.Random(7).shuffle(ids)
+    pairs = list(zip(ids, ids[1:]))
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    got = sorted((r.node, r.canon) for r in connected_components(edges).collect())
+    want = union_find_components(pd.DataFrame(pairs, columns=["src", "dst"]))
+    assert got == sorted(want.itertuples(index=False, name=None))
+    assert len(got) == 999 and {c for _, c in got} == {"n0000"}
+
+
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """A loop that reaches MAX_CC_ROUNDS without converging raises
+    instead of returning a partial canon map."""
+    import import_spark.operators.canonicalize as cz
+
+    monkeypatch.setattr(cz, "MAX_CC_ROUNDS", 1)
     edges = spark.createDataFrame(
-        [(f"n{i:05d}", f"n{i + 1:05d}") for i in range(n - 1)], ["src", "dst"]
+        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
     )
-    mapping, rounds = connected_components_star(edges, return_rounds=True)
-    got = {(r.node, r.canon) for r in mapping.collect()}
-    want = {(f"n{i:05d}", "n00000") for i in range(1, n)}
-    assert got == want
-    assert rounds <= 18, rounds  # ~log2(10000) + slack; far below diameter
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges)
 
 
 def test_connected_components_star_matches_default(spark):
-    """Same mapping as the production min-label loop on a mixed graph
-    (multiple components, cycles, self-loops, duplicate edges)."""
-    from import_spark.operators.canonicalize import (
-        connected_components,
-        connected_components_star,
-    )
-
+    """The mixed-graph contract (multiple components, cycles,
+    self-loops, duplicate edges): canon = component minimum, one row
+    per non-canon node."""
     edges = spark.createDataFrame(
         [
             ("b", "a"), ("c", "b"), ("a", "c"),      # 3-cycle
@@ -362,8 +375,5 @@ def test_connected_components_star_matches_default(spark):
         ],
         ["src", "dst"],
     )
-    star = {(r.node, r.canon) for r in connected_components_star(edges).collect()}
-    base = {(r.node, r.canon) for r in connected_components(edges).collect()}
-    assert star == base == {
-        ("b", "a"), ("c", "a"), ("y", "x"), ("z", "x"), ("n", "m"),
-    }
+    got = sorted((r.node, r.canon) for r in connected_components(edges).collect())
+    assert got == [("b", "a"), ("c", "a"), ("n", "m"), ("y", "x"), ("z", "x")]

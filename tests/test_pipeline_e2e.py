@@ -15,23 +15,14 @@ from import_spark.sources.transcripts import (
 )
 
 
-def _job_ids(spark) -> set[int]:
-    """Ids of the jobs the driver's status store holds (the listener
-    bus drained first, so every finished job is in)."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    seq = sc.statusStore().jobsList(None)
-    return {seq.apply(i).jobId() for i in range(seq.size())}
-
-
 @pytest.fixture(scope="module")
-def result(spark):
+def result(spark, job_ids):
     tr = generate_transcripts(spark, 150).cache()
     d = dcid_dictionary(spark)
     tr.count()
-    before = _job_ids(spark)
+    before = job_ids()
     res = run_pipeline(spark, tr, d)
-    jobs = len(_job_ids(spark) - before)
+    jobs = len(job_ids() - before)
     got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
     want, failed_uses = expected_triples(tr.toPandas(), build_dcid_dictionary())
     return res, got, want, failed_uses, jobs
@@ -161,7 +152,7 @@ def test_narrow_driver_step_matches_spec(spark):
     want_cc = {
         (r.node, r.canon)
         for r in connected_components(
-            spark.createDataFrame(edges, "src string, dst string"), edge_partitions=1
+            spark.createDataFrame(edges, "src string, dst string")
         ).collect()
     }
     assert set(got.components.itertuples(index=False, name=None)) == want_cc
@@ -385,19 +376,19 @@ def test_narrow_extraction_parity(spark):
 def test_all_distributed_branches_match_oracle(spark, monkeypatch):
     """Force every size-gated driver fast path to DECLINE — the
     distributed def-fixpoint (resolve_locals), the distributed CC
-    min-label loop, and the shuffle-join canonical rewrite — and hold
-    the full pipeline to the same P/R = 1.0 oracle gate as the default
-    path. This is the branch combination a 100-TB input actually takes
-    (the 4M-conversation probe measured 3.35M DEF statements against
-    the 2M-row driver gate, so resolve ran distributed there): the
-    scale path must not be a weaker-tested sibling of the test path."""
+    kernel (large-star/small-star), and the shuffle-join canonical
+    rewrite — and hold the full pipeline to the same P/R = 1.0 oracle
+    gate as the default path. This is the branch combination a 100-TB
+    input actually takes (the 4M-conversation probe measured 3.35M DEF
+    statements against the 2M-row driver gate, so resolve ran
+    distributed there): the scale path must not be a weaker-tested
+    sibling of the test path."""
     import import_spark.operators.canonicalize as cz
     import import_spark.operators.resolve as rz
-    import import_spark.plans.kg_pipeline as kp
 
     monkeypatch.setattr(rz, "DRIVER_RESOLVE_MAX_DEFS", -1)
     monkeypatch.setattr(cz, "DRIVER_CC_MAX_EDGES", 0)
-    monkeypatch.setattr(kp, "BROADCAST_CC_MAX_ROWS", -1)
+    monkeypatch.setattr(cz, "BROADCAST_CC_MAX_ROWS", -1)
 
     tr = generate_transcripts(spark, 150).cache()
     res = run_pipeline(spark, tr, dcid_dictionary(spark))

@@ -9,7 +9,6 @@ from import_spark.functions.size_gate import (
     BROADCAST_BUDGET_BYTES,
     DRIVER_COLLECT_BUDGET_BYTES,
     collect_within,
-    estimate_row_bytes,
     exact_size,
     fits_bytes,
     pandas_bytes,
@@ -23,13 +22,6 @@ def _wide(spark, n_rows: int, width: int):
         F.col("id").cast("string").alias("key"),
         F.repeat(F.lit("x"), width).alias("val"),
     )
-
-
-def test_estimate_row_bytes_tracks_width(spark):
-    narrow = estimate_row_bytes(_wide(spark, 100, 10))
-    wide = estimate_row_bytes(_wide(spark, 100, 10_000))
-    assert 10 < narrow < 200
-    assert 10_000 < wide < 11_000
 
 
 def test_fits_bytes_rejects_wide_rows_below_row_cap(spark):
@@ -111,6 +103,27 @@ def test_resolve_graph_wide_rows_take_distributed_path(spark, monkeypatch):
     assert called.get("distributed")
     got = {(r.prop, r.value) for r in res.resolved.filter(F.col("prop") == "dcid").collect()}
     assert ("dcid", "geoId/06") in got
+
+
+def test_resolve_graph_gate_job_budget(spark, job_ids, monkeypatch):
+    """The resolver's gate is one size aggregate then one collect: on a
+    small checkpointed node table the driver path runs at most 3 jobs,
+    and a forced distributed run pays no size job at all."""
+    from import_spark.operators import mcf_resolver
+
+    nodes = spark.createDataFrame(
+        [(f"N{i}", p, "TEXT", f"v{i}") for i in range(10) for p in ("name", "description")],
+        "node_id string, prop string, value_type string, value string",
+    ).localCheckpoint()
+    before = job_ids()
+    mcf_resolver.resolve_graph(nodes)
+    assert len(job_ids() - before) <= 3
+
+    sentinel = object()
+    monkeypatch.setattr(mcf_resolver, "_resolve_graph_distributed", lambda *a, **k: sentinel)
+    before = job_ids()
+    assert mcf_resolver.resolve_graph(nodes, force_distributed=True) is sentinel
+    assert job_ids() == before
 
 
 def test_collect_within_gates_on_exact_size(spark):
