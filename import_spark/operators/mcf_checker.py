@@ -15,8 +15,11 @@ Spark-first shape: two passes, both fully JVM-side —
    rules consult (required-prop presence, single-valuedness, date
    validity, casing — McfChecker.java:151-171,225-420).
 
-No Python UDFs anywhere; every predicate is a column expression so the
-whole suite rides whole-stage codegen and one shuffle (the groupBy).
+The sanity suite (``check_nodes``) has no Python UDFs; every predicate
+is a column expression so the whole suite rides whole-stage codegen and
+one shuffle (the groupBy). ``statvar_collisions`` is the exception: its
+StatVar working set is derived in one ``mapInPandas`` stage (dcid key
+string and a batched FarmHash per Arrow batch) before the driver fold.
 
 Hot-path expressions carry only a static check id + up to 4 operand
 columns; the human-readable message is rendered AFTER the explode — on

@@ -7,6 +7,16 @@ shard salting, SpannerClient.java:305-316), adaptive shuffle partition
 coalescing, Arrow for every pandas UDF boundary, and broadcast joins
 for dimension tables (the reference's Recon/existence caches,
 ExternalIdResolver.java:57-152).
+
+Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+an LRU of Janino-compiled classes keyed by source and class loader) is
+sized to the MCF plans. The genmcf and lint plans are many small
+queries: one warm ``run_genmcf`` + ``run_lint`` call (perfbench
+``mcf_obs``) generates ~330 classes, one kg ``run_pipeline`` call
+(``kg_mem``) ~69. At Spark's default of 100 entries every MCF class was
+evicted before the next call, which recompiled ~326 of them; at 2000
+the next call compiles about 6. The plans are unchanged: the same
+generated code is compiled once per JVM instead of once per call.
 """
 
 from __future__ import annotations
@@ -45,27 +55,6 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
 
 
-def release_checkpoints(spark, results, before_ids):
-    """Re-materialize ``results`` and release every block-manager RDD
-    persisted since ``before_ids`` (a ``persistent_rdd_ids`` snapshot)
-    that does not back them.
-
-    Iterative operators cut lineage with ``localCheckpoint`` per round;
-    the superseded rounds' blocks otherwise linger until driver GC and
-    tax every later job in the session (measured: a 10-round resolver
-    left enough retained storage to double an unrelated follow-up
-    query). An EAGER localCheckpoint of each return value is
-    self-contained — it stores its own computed partitions — so the
-    loop-era blocks can be dropped immediately and safely."""
-    sc = spark.sparkContext
-    mid = persistent_rdd_ids(spark)
-    fresh = [df.localCheckpoint() for df in results]
-    for rid, rdd in dict(sc._jsc.getPersistentRDDs()).items():
-        if rid in mid and rid not in before_ids:
-            rdd.unpersist()
-    return fresh
-
-
 def get_spark(
     app_name: str = "import_spark",
     cores: int | None = None,
@@ -101,6 +90,9 @@ def get_spark(
         .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # static: holds every class a warm mcf_obs call reuses (~330;
+        # kg_mem ~69) with headroom, see the module docstring
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_NO_MASTER"):

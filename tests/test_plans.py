@@ -91,3 +91,39 @@ def test_max_fluctuation_single_exchange(spark):
         max_fluctuation_per_series(obs, series_key=["entity", "variable"])
     )
     assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_warm_mcf_call_reuses_compiled_classes(spark, tmp_path):
+    """A repeated run_genmcf + run_lint call reuses the classes the
+    first one compiled: the session's generated-class cache holds the
+    ~330 classes one MCF call generates. At Spark's default of 100
+    entries each was evicted before the repeat, which recompiled ~320.
+    The cache is keyed by source and the compiling thread's class
+    loader, so a repeat still compiles a few classes (2-10 measured)."""
+    from import_spark.plans.genmcf import run_genmcf
+    from import_spark.plans.lint import run_lint
+    from import_spark.queries import _GENMCF_TMCF, _event_nodes
+
+    csv = spark.createDataFrame(
+        [(f"2020-01-{i % 28 + 1:02d}", f"{i}.5", f"user/{i % 7}", i) for i in range(60)],
+        "date string, val string, place string, rid bigint",
+    )
+    t0 = datetime.datetime(2020, 1, 1, 12)
+    kinds = ["click", "view", "purchase", "share", "signup"]
+    spark.createDataFrame(
+        [(i, i % 7, kinds[i % 5], float(i % 40 - 5), t0 + datetime.timedelta(days=i))
+         for i in range(120)],
+        "event_id bigint, user_id bigint, event_type string, value double, ts timestamp",
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    nodes = _event_nodes(spark, str(tmp_path))
+
+    def call():
+        g = run_genmcf(spark, _GENMCF_TMCF, csv, row_id_col="rid")
+        l = run_lint(spark, nodes)
+        return g.nodes.count(), l.errors.count()
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    first = call()
+    before = compiles.getCount()
+    assert call() == first
+    assert compiles.getCount() - before <= 30
