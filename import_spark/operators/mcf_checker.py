@@ -23,7 +23,8 @@ string and a batched FarmHash per Arrow batch) before the driver fold.
 
 Hot-path expressions carry only a static check id + up to 4 operand
 columns; the human-readable message is rendered AFTER the explode — on
-the (tiny) error set — via a broadcast template join + format_string.
+the (tiny) error set — by format_string over a template picked from a
+literal array by check id (one projection, no join).
 Round 3 built the full message concat tree inside every check branch,
 which cost ~4s of py4j expression construction plus ~5s of Janino
 projection compilation per fresh session before the first row was
@@ -37,6 +38,7 @@ from pyspark.sql import functions as F
 
 from import_spark import vocabulary as V
 from import_spark.functions.values import col_is_valid_date
+from import_spark.session import local_frame
 
 LEVEL_ERROR = "LEVEL_ERROR"
 LEVEL_WARNING = "LEVEL_WARNING"
@@ -141,18 +143,31 @@ def _raw_explode(df: DataFrame, checks, gate=None) -> DataFrame:
 
 
 def _finalize(raw: DataFrame) -> DataFrame:
-    """(node_id, cid, counter, o1..o4) → (node_id, level, counter, message)
-    via a broadcast join against the ~60-row template table."""
-    spark = raw.sparkSession
-    tdf = spark.createDataFrame(_TEMPLATES, "cid int, level string, template string")
-    return raw.join(F.broadcast(tdf), "cid").select(
+    """(node_id, cid, counter, o1..o4) → (node_id, level, counter, message).
+
+    ``level`` and the message template are ``element_at`` lookups, at
+    ``cid + 1``, into literal arrays of every registered template, so
+    rendering is one projection over the error rows. The arrays are
+    rebuilt only when a check registers a new template.
+    """
+    n = len(_TEMPLATES)
+    cached = _EXPR_CACHE.get("finalize")
+    if cached is None or cached[0] != n:
+        levels = F.array(*[F.lit(level) for _, level, _ in _TEMPLATES])
+        templates = F.array(*[F.lit(t) for _, _, t in _TEMPLATES])
+        cached = _EXPR_CACHE["finalize"] = (n, levels, templates)
+    _, levels, templates = cached
+    idx = F.col("cid") + 1
+    return raw.select(
         "node_id",
-        "level",
+        F.element_at(levels, idx).alias("level"),
         "counter",
         # pyspark's format_string() helper requires a literal format;
-        # the SQL form accepts a per-row one (FormatString evaluates its
-        # first child like any other expression)
-        F.expr("format_string(template, o1, o2, o3, o4)").alias("message"),
+        # the SQL function accepts a per-row one (FormatString evaluates
+        # its first child like any other expression)
+        F.call_function(
+            "format_string", F.element_at(templates, idx), "o1", "o2", "o3", "o4"
+        ).alias("message"),
     )
 
 
@@ -632,9 +647,8 @@ def statvar_collisions(nodes: DataFrame) -> DataFrame:
             continue
         curated_to_gen.setdefault(curated, generated)
         gen_to_curated.setdefault(generated, curated)
-    return spark.createDataFrame(
-        pd.DataFrame(errors, columns=["node_id", "level", "counter", "message"])
-        if errors
-        else pd.DataFrame(columns=["node_id", "level", "counter", "message"]),
+    return local_frame(
+        spark,
+        pd.DataFrame(errors, columns=["node_id", "level", "counter", "message"]),
         "node_id string, level string, counter string, message string",
     )

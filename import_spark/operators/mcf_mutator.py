@@ -24,9 +24,11 @@ value, src_file):
 
 Spark-first: mutations 1 and 3 are pure DataFrame transforms (one
 groupBy per node for the synthesis pass); mutation 2 parses only the
-DISTINCT complex strings through a driver/pandas pass and broadcasts
-the lookup back — complex values are a bounded vocabulary, the node
-table never funnels through Python.
+DISTINCT complex strings through a driver/pandas pass and joins the
+result back as a ``LocalRelation`` (``session.local_frame``; empty when
+the input has no complex values, which lets the optimizer prune the
+lookup joins) — complex values are a bounded vocabulary, the node table
+never funnels through Python.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ from pyspark.sql import functions as F
 
 from import_spark import vocabulary as V
 from import_spark.functions.complex_values import parse_complex_value
+from import_spark.session import local_frame
 
 STAT_VALUE_PROPS = [
     "measuredValue",
@@ -112,15 +115,16 @@ def _complex_lookup(nodes: DataFrame) -> DataFrame:
         cv = parse_complex_value(v)
         if cv is None:
             continue
-        rows.append((v, cv.dcid, cv.type_of, cv.name, list(cv.pvs)))
+        pvs = [{"prop": p, "value_type": t, "value": pv} for p, t, pv in cv.pvs]
+        rows.append((v, cv.dcid, cv.type_of, cv.name, pvs))
     schema = (
         "value string, dcid string, type_of string, cname string, "
         "pvs array<struct<prop:string,value_type:string,value:string>>"
     )
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["value", "dcid", "type_of", "cname", "pvs"]), schema
+    return local_frame(
+        spark,
+        pd.DataFrame(rows, columns=["value", "dcid", "type_of", "cname", "pvs"]),
+        schema,
     )
 
 

@@ -52,6 +52,7 @@ from import_spark.functions.dcids import (
     svobs_key_string,
 )
 from import_spark.functions.farmhash import long_id_batch
+from import_spark.session import local_frame
 
 MAX_ROUNDS = 20
 
@@ -324,22 +325,21 @@ def resolve_graph(
         )
         cols = base_cols
         if resolved_rows:
-            # driver-written parquet + scan beats createDataFrame's
-            # driver-serial conversion ~9x at 100k+ rows (resolve.py's
-            # measured handoff; Amdahl-relevant, the upload is serial)
+            # driver-written parquet + scan beats a driver-serial
+            # pandas-to-DataFrame conversion ~9x at 100k+ rows
+            # (resolve.py's measured handoff; Amdahl-relevant, the
+            # upload is serial); empty or small frames use local_frame
             from import_spark.operators.resolve import _driver_parquet_handoff
 
             resolved = _driver_parquet_handoff(
                 spark, pd.DataFrame(resolved_rows, columns=cols), schema
             )
         else:
-            resolved = spark.createDataFrame(pd.DataFrame(columns=cols), schema)
-        err_schema = "node_id string, counter string, message string"
-        errors_df = spark.createDataFrame(
-            pd.DataFrame(errors, columns=["node_id", "counter", "message"])
-            if errors
-            else pd.DataFrame(columns=["node_id", "counter", "message"]),
-            err_schema,
+            resolved = local_frame(spark, pd.DataFrame(columns=cols), schema)
+        errors_df = local_frame(
+            spark,
+            pd.DataFrame(errors, columns=["node_id", "counter", "message"]),
+            "node_id string, counter string, message string",
         )
         if failed_ids:
             from import_spark.operators.resolve import _driver_parquet_handoff
@@ -428,7 +428,11 @@ def _resolve_graph_distributed(
     failed = errors.select("node_id").distinct()
     pending = pending.join(failed, "node_id", "left_anti").localCheckpoint()
 
-    resolved_refs = spark.createDataFrame([], "node_id string, prop string, target string, dcid string")
+    resolved_refs = local_frame(
+        spark,
+        pd.DataFrame(columns=["node_id", "prop", "target", "dcid"]),
+        "node_id string, prop string, target string, dcid string",
+    )
     rounds = 0
     # Every per-round lineage cut is an EAGER localCheckpoint, so a
     # round's blocks are self-contained and the previous round's are

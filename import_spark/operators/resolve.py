@@ -37,6 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from import_spark.session import typed_arrow_table
+
 MAX_ROUNDS = 20
 # broadcast the resolved map when it has fewer rows than this
 BROADCAST_MAP_MAX_ROWS = 5_000_000
@@ -66,17 +68,10 @@ def _driver_parquet_handoff(spark, pdf, schema) -> DataFrame:
     not from driver-serial conversion. ``schema`` (DDL string or
     StructType) also types the file, so empty and all-null columns
     round-trip."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    if isinstance(schema, str):
-        schema = _parse_datatype_string(schema)
+    table, schema = typed_arrow_table(pdf, schema)
     path = os.path.join(_handoff_root(), f"{uuid.uuid4().hex}.parquet")
-    table = pa.Table.from_pandas(
-        pdf[schema.fieldNames()], schema=to_arrow_schema(schema), preserve_index=False
-    )
     pq.write_table(table, path)
     return spark.read.schema(schema).parquet(path)
 

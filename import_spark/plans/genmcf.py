@@ -32,6 +32,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,6 +41,7 @@ from import_spark.operators.mcf_checker import check_nodes, failed_node_ids
 from import_spark.operators.mcf_mutator import mutate_nodes
 from import_spark.operators.mcf_resolver import resolve_graph
 from import_spark.report import build_report, write_report
+from import_spark.session import local_frame
 from import_spark.sources.mcf import write_mcf
 from import_spark.sources.tmcf import expand_template
 
@@ -67,8 +70,12 @@ def _combined_dictionary_df(
         )
     if dcid_dict:
         parts.append(
-            spark.createDataFrame(
-                [(p, e, d) for (p, e), d in dcid_dict.items()],
+            local_frame(
+                spark,
+                pd.DataFrame(
+                    [(p, e, d) for (p, e), d in dcid_dict.items()],
+                    columns=["prop", "ext_id", "dcid"],
+                ),
                 "prop string, ext_id string, dcid string",
             ).withColumn("_pri", F.lit(1))
         )
@@ -77,7 +84,11 @@ def _combined_dictionary_df(
             local_graph_dictionary_df(mutated).withColumn("_pri", F.lit(2))
         )
     if not parts:
-        return spark.createDataFrame([], "prop string, ext_id string, dcid string")
+        return local_frame(
+            spark,
+            pd.DataFrame(columns=["prop", "ext_id", "dcid"]),
+            "prop string, ext_id string, dcid string",
+        )
     allp = parts[0]
     for p in parts[1:]:
         allp = allp.unionByName(p)

@@ -17,13 +17,24 @@ queries: one warm ``run_genmcf`` + ``run_lint`` call (perfbench
 evicted before the next call, which recompiled ~326 of them; at 2000
 the next call compiles about 6. The plans are unchanged: the same
 generated code is compiled once per JVM instead of once per call.
+
+Small driver-built frames (template tables, empty results, a parsed
+lookup of a few hundred rows) go through ``local_frame``: an Arrow
+table typed by the DDL schema becomes a JVM ``LocalRelation``, so the
+frame costs no job and no Python worker, and an empty one lets the
+optimizer prune what joins against it. ``createDataFrame`` on a list
+or on an EMPTY pandas frame takes the pickled-row path instead
+(``SparkContext.parallelize``: a PythonRDD whose tasks each start a
+Python worker). A LocalRelation lives in the plan on the driver, so
+frames of 100k+ rows go through ``resolve._driver_parquet_handoff``
+(one parquet write, scanned like any file) instead.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -53,6 +64,30 @@ def _local_threads(cores: int) -> int:
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     """Ids of RDDs currently persisted in the block manager."""
     return set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
+
+
+def typed_arrow_table(pdf, schema):
+    """Driver pandas frame → (pyarrow Table, StructType), the table typed
+    by ``schema`` (DDL string or StructType), so empty frames, all-null
+    columns and nested ``array<struct>`` columns (each element a dict)
+    keep their declared types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    table = pa.Table.from_pandas(
+        pdf[schema.fieldNames()], schema=to_arrow_schema(schema), preserve_index=False
+    )
+    return table, schema
+
+
+def local_frame(spark: SparkSession, pdf, schema) -> DataFrame:
+    """Driver pandas frame → ``LocalRelation`` DataFrame via Arrow (see
+    ``typed_arrow_table``). For small frames only; see the module
+    docstring."""
+    return spark.createDataFrame(*typed_arrow_table(pdf, schema))
 
 
 def get_spark(

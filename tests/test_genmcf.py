@@ -176,6 +176,30 @@ def test_checker_valid_node_clean(spark):
     assert errors.filter(F.col("level") == "LEVEL_ERROR").count() == 0
 
 
+def test_checker_finalize_matches_template_join(spark):
+    """_finalize's literal lookup by check id gives the level and message
+    a join against the template table gives, for every registered check."""
+    from import_spark.operators import mcf_checker as mc
+
+    check_nodes(_df(spark, [("N1", "typeOf", "RESOLVED_REF", "City")]))  # registers every check
+    templates = list(mc._TEMPLATES)
+    assert [cid for cid, _, _ in templates] == list(range(len(templates)))
+    assert any(t.count("%s") == 4 for _, _, t in templates)
+    raw = spark.createDataFrame(
+        [(f"n{cid}", cid, f"c{cid}", "a", "b", "c", "d") for cid, _, _ in templates],
+        "node_id string, cid int, counter string, o1 string, o2 string, o3 string, o4 string",
+    )
+    tdf = spark.createDataFrame(templates, "cid int, level string, template string")
+    want = raw.join(tdf, "cid").select(
+        "node_id", "level", "counter",
+        F.expr("format_string(template, o1, o2, o3, o4)").alias("message"),
+    )
+    got = mc._finalize(raw)
+    assert got.columns == ["node_id", "level", "counter", "message"]
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == len(templates)
+
+
 # ---------------------------------------------------------------- resolver
 
 RESOLVE_ROWS = [

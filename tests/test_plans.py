@@ -93,13 +93,10 @@ def test_max_fluctuation_single_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_warm_mcf_call_reuses_compiled_classes(spark, tmp_path):
-    """A repeated run_genmcf + run_lint call reuses the classes the
-    first one compiled: the session's generated-class cache holds the
-    ~330 classes one MCF call generates. At Spark's default of 100
-    entries each was evicted before the repeat, which recompiled ~320.
-    The cache is keyed by source and the compiling thread's class
-    loader, so a repeat still compiles a few classes (2-10 measured)."""
+@pytest.fixture(scope="module")
+def mcf_call(spark, tmp_path_factory):
+    """A small run_genmcf + run_lint call (60 CSV rows, 120 events), its
+    inputs built here so a test can count what the call alone does."""
     from import_spark.plans.genmcf import run_genmcf
     from import_spark.plans.lint import run_lint
     from import_spark.queries import _GENMCF_TMCF, _event_nodes
@@ -110,20 +107,85 @@ def test_warm_mcf_call_reuses_compiled_classes(spark, tmp_path):
     )
     t0 = datetime.datetime(2020, 1, 1, 12)
     kinds = ["click", "view", "purchase", "share", "signup"]
+    root = tmp_path_factory.mktemp("mcf_call")
     spark.createDataFrame(
         [(i, i % 7, kinds[i % 5], float(i % 40 - 5), t0 + datetime.timedelta(days=i))
          for i in range(120)],
         "event_id bigint, user_id bigint, event_type string, value double, ts timestamp",
-    ).write.parquet(str(tmp_path / "events.parquet"))
-    nodes = _event_nodes(spark, str(tmp_path))
+    ).write.parquet(str(root / "events.parquet"))
+    nodes = _event_nodes(spark, str(root))
 
     def call():
         g = run_genmcf(spark, _GENMCF_TMCF, csv, row_id_col="rid")
         l = run_lint(spark, nodes)
         return g.nodes.count(), l.errors.count()
 
+    return call
+
+
+def test_warm_mcf_call_reuses_compiled_classes(spark, mcf_call):
+    """A repeated run_genmcf + run_lint call reuses the classes the
+    first one compiled: the session's generated-class cache holds the
+    ~330 classes one MCF call generates. At Spark's default of 100
+    entries each was evicted before the repeat, which recompiled ~320.
+    The cache is keyed by source and the compiling thread's class
+    loader, so a repeat still compiles a few classes (2-10 measured)."""
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    first = call()
+    first = mcf_call()
     before = compiles.getCount()
-    assert call() == first
+    assert mcf_call() == first
     assert compiles.getCount() - before <= 30
+
+
+def test_warm_mcf_call_starts_no_pickled_rdd(spark, mcf_call, monkeypatch):
+    """Every driver-built frame of the MCF plans is a LocalRelation
+    (session.local_frame), so a repeat call parallelizes no Python data:
+    a pickled-row createDataFrame is a PythonRDD whose tasks each run a
+    Python worker."""
+    from pyspark import SparkContext
+
+    first = mcf_call()
+    calls = []
+    orig = SparkContext.parallelize
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkContext, "parallelize", counting)
+    assert mcf_call() == first
+    assert len(calls) == 0
+
+
+@pytest.mark.parametrize("n_rows", [0, 3])
+def test_local_frame_is_local_table_scan(spark, n_rows, monkeypatch):
+    """local_frame types the Arrow table by the DDL schema, so empty,
+    all-null and nested array<struct> columns round-trip, and the frame
+    is a LocalTableScan built without a Python RDD."""
+    import pandas as pd
+    from pyspark import SparkContext
+    from pyspark.sql.types import _parse_datatype_string
+
+    from import_spark.session import local_frame
+
+    ddl = (
+        "k string, n bigint, note string, "
+        "pvs array<struct<prop:string,value_type:string,value:string>>"
+    )
+    rows = [
+        ("a", 1, None, [{"prop": "p", "value_type": None, "value": "1"}]),
+        ("b", None, None, None),
+        (None, 3, None, []),
+    ][:n_rows]
+    monkeypatch.setattr(
+        SparkContext, "parallelize", lambda *a, **k: pytest.fail("pickled-row path")
+    )
+    df = local_frame(spark, pd.DataFrame(rows, columns=["k", "n", "note", "pvs"]), ddl)
+    assert df.schema == _parse_datatype_string(ddl)
+    got = [
+        (r.k, r.n, r.note, None if r.pvs is None else [p.asDict() for p in r.pvs])
+        for r in df.collect()
+    ]
+    assert got == rows
+    plan = _plan(df)
+    assert plan.startswith("LocalTableScan"), plan
