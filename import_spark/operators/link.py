@@ -167,8 +167,9 @@ def link_statements(
 
 def local_graph_dictionary_df(nodes: DataFrame) -> DataFrame:
     """J2 local-graph seed as a (prop, ext_id, dcid) DataFrame — the
-    shape :func:`prepare_dictionary` and the over-budget fallback paths
-    consume. Deterministic first-wins (min dcid) on conflicts."""
+    shape :func:`prepare_dictionary` and the distributed MCF resolver's
+    dictionary join consume. Deterministic first-wins on conflicts: min
+    dcid per node, then min dcid per (prop, ext_id)."""
     ext_props = list(V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS)
     ids = nodes.filter(F.col("prop").isin(*ext_props)).select(
         "node_id", F.col("prop").alias("id_prop"), F.col("value").alias("id_val")
@@ -190,6 +191,26 @@ def local_graph_dictionary_df(nodes: DataFrame) -> DataFrame:
     )
 
 
+def local_graph_seed(pdf) -> dict:
+    """:func:`local_graph_dictionary_df`'s rule over a collected
+    long-form pandas frame (the MCF resolver's driver path already
+    holds one): min dcid per node, then min dcid per (prop, ext_id)
+    (:func:`dictionary_map`). Null dcids sort last, as Spark's ``min``
+    ignores them."""
+    ids = pdf.loc[
+        pdf["prop"].isin(list(V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS)), ["node_id", "prop", "value"]
+    ]
+    if ids.empty:
+        return {}
+    dcids = (
+        pdf.loc[pdf["prop"] == V.DCID, ["node_id", "value"]]
+        .sort_values("value", na_position="last", kind="stable")
+        .drop_duplicates("node_id")
+        .rename(columns={"value": "dcid"})
+    )
+    return dictionary_map(ids.rename(columns={"value": "ext_id"}).merge(dcids, on="node_id"))
+
+
 def local_graph_dictionary(nodes: DataFrame, budget_bytes: int | None = None) -> dict:
     """J2 — local-graph seeding (ExternalIdResolver.addLocalGraph,
     ExternalIdResolver.java:57-96): nodes that carry BOTH an external id
@@ -199,8 +220,10 @@ def local_graph_dictionary(nodes: DataFrame, budget_bytes: int | None = None) ->
 
     ``nodes``: long-form (node_id, prop, value) rows. Raises
     :class:`DictionaryOverBudget` when the seed set exceeds the driver
-    budget — callers use :func:`local_graph_dictionary_df` + the join
-    path instead."""
+    budget. The MCF resolver does not call this: it seeds from the
+    rows its driver gate already collected (:func:`local_graph_seed`)
+    or joins :func:`local_graph_dictionary_df` in its distributed
+    loop."""
     return _pairs_dict(
         _collect_dictionary_rows(local_graph_dictionary_df(nodes), budget_bytes)
     )
@@ -259,10 +282,14 @@ def derive_transcript_dictionary(
 
 
 def derive_node_dictionary_df(nodes: DataFrame, recon_table: DataFrame) -> DataFrame:
-    """Two-pass dictionary derivation as a (prop, ext_id, dcid)
-    DataFrame (never touches the driver): pass 1 collects the distinct
-    external-id working set from the parsed graph, the join against the
-    offline recon table stands in for drainRemoteCalls."""
+    """FULL-resolution two-pass derivation over long-form MCF statement
+    rows (the genmcf shape) as a (prop, ext_id, dcid) DataFrame: pass 1
+    collects the distinct external-id working set from the parsed graph
+    (ExternalIdResolver.submitNode, ExternalIdResolver.java:98-130), the
+    join against the offline recon table stands in for
+    drainRemoteCalls. genmcf hands it to the MCF resolver as
+    ``dict_df``, which collects it through its driver gate when it fits
+    and joins it in the distributed loop otherwise."""
     ext_props = list(V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS)
     working_set = (
         nodes.filter(F.col("prop").isin(*ext_props))
@@ -273,24 +300,6 @@ def derive_node_dictionary_df(nodes: DataFrame, recon_table: DataFrame) -> DataF
         recon_table.join(working_set, ["prop", "ext_id"], "left_semi")
         .groupBy("prop", "ext_id")
         .agg(F.min("dcid").alias("dcid"))
-    )
-
-
-def derive_node_dictionary(
-    nodes: DataFrame, recon_table: DataFrame, budget_bytes: int | None = None
-) -> dict:
-    """The same two-pass derivation over long-form MCF statement rows
-    (the genmcf shape): pass 1 collects the distinct external-id
-    working set from the parsed graph (ExternalIdResolver.submitNode,
-    ExternalIdResolver.java:98-130), the join against the offline recon
-    table stands in for drainRemoteCalls. Returns the dictionary as a
-    driver dict (dimension-sized), ready for run_genmcf's dcid_dict.
-    Raises :class:`DictionaryOverBudget` when the working-set hits
-    exceed the driver budget — callers use
-    :func:`derive_node_dictionary_df` + :func:`preassign_place_dcids`
-    instead."""
-    return _pairs_dict(
-        _collect_dictionary_rows(derive_node_dictionary_df(nodes, recon_table), budget_bytes)
     )
 
 
@@ -381,7 +390,7 @@ def resolve_names(
     working set to the Recon ``<-description->dcid`` endpoint and takes
     the FIRST candidate per name (NameResolver.java:60-64).
 
-    Offline stand-in, same two-pass shape as derive_node_dictionary:
+    Offline stand-in, same two-pass shape as derive_node_dictionary_df:
     pass 1 reduces the corpus to the distinct (node, name) working set —
     a node submits its name iff the value is TEXT or NUMBER
     (NameResolver.getValue, :91-98); with several name rows the

@@ -13,9 +13,11 @@ phases until fixpoint:
    one generated by type — StatVarObservation / legacy Population /
    legacy Observation are content-hashes that require **all** their
    refs resolved first (AssignmentMode.allRefsMustBeResolved); OTHER
-   nodes resolve via external ids (our broadcast-dictionary stand-in
-   for the Recon idResolver) or fail with
-   ``Resolution_DcidAssignmentFailure_<type>``.
+   nodes resolve via external ids or fail with
+   ``Resolution_DcidAssignmentFailure_<type>``. The external-id
+   dictionary is ExternalIdResolver's: the local-graph seed (J2, nodes
+   of this graph carrying both an external id and a dcid) over the
+   caller's entries, which stand in for the Recon idResolver.
 
 Leftovers after fixpoint → ``Resolution_IrreplaceableLocalRef`` /
 ``Resolution_UnassignableNodeDcid`` (McfResolver.java:92-128).
@@ -27,12 +29,16 @@ global fixpoint. Each round touches only the shrinking working sets
 full table is rewritten ONCE at the end with a broadcast-gated join.
 A size-gated driver fast path (Arrow collect + the pure-Python
 resolver below, which mirrors the reference loop 1:1) serves the
-common genmcf case where one CSV's sub-graph fits the driver.
+common genmcf case where one CSV's sub-graph fits the driver; it reads
+the local-graph seed off the rows it collected, at no Spark job. The
+distributed loop joins one checkpointed (prop, ext_id, dcid) frame
+that merges the seed and the caller's dictionaries with the same
+precedence.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 
@@ -41,23 +47,27 @@ from pyspark.sql import functions as F
 
 from import_spark import vocabulary as V
 from import_spark.functions.dcids import (
-    legacy_obs_dcid,
     legacy_obs_key_string,
-    legacy_pop_dcid,
     legacy_pop_key_string,
     place_dcid,
-    statvar_dcid,
     statvar_key_string,
-    svobs_dcid,
     svobs_key_string,
 )
 from import_spark.functions.farmhash import long_id_batch
+from import_spark.operators.link import (
+    dictionary_map,
+    local_graph_dictionary_df,
+    local_graph_seed,
+    prepare_dictionary,
+)
+from import_spark.operators.resolve import _driver_parquet_handoff
 from import_spark.session import local_frame
 
 MAX_ROUNDS = 20
 
-# sentinel priority for the prefix-fallback row in the dict_df assign
-# path (real priorities index V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS)
+# sentinel priority for the prefix-fallback row in the distributed
+# place assignment (real priorities index
+# V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS)
 _FALLBACK_PRI = 10_000
 # Crossover measured at sf0.1 on local[32] (warm session): the driver
 # fixpoint costs ~2.3 s/M statement rows for the pure-Python loop plus
@@ -90,7 +100,7 @@ def _mode(types: list[str]) -> str:
 
 
 def _place_dcid(pvs: dict, dcid_dict: dict | None) -> str | None:
-    """External-id place resolution: the broadcast dictionary first
+    """External-id place resolution: the dictionary first
     (ExternalIdResolver.java:57-152 checks the local graph + Recon maps
     before anything else — J2), then the priority-prefix fallback
     (DcidGenerator.forPlace)."""
@@ -283,86 +293,124 @@ def resolve_graph(
 ) -> McfResolveResult:
     """Alternating resolver over a long-form node table.
 
-    Size-gated: within DRIVER_RESOLVE_MAX_ROWS rows and the driver
-    byte budget the fixpoint runs driver-side (one size aggregate, one
-    Arrow round-trip); above either, the distributed loop.
+    The external-id dictionary has three sources, highest precedence
+    first: the local-graph seed (J2, ExternalIdResolver.addLocalGraph,
+    ExternalIdResolver.java:57-96: nodes of this graph that carry both
+    an external id and a dcid, first-wins on min dcid), ``dcid_dict``
+    (a driver dict keyed by (prop, ext_id)) and ``dict_df`` (a
+    (prop, ext_id, dcid) DataFrame, min dcid per key). An empty or null
+    dcid never resolves; the walk moves on to the next external id.
 
-    ``dict_df``: the external-id dictionary as a DataFrame — the
-    over-driver-budget regime. Forces the distributed fixpoint (the
-    driver loop would need the dict in memory, which is exactly what
-    the budget ruled out); mutually exclusive with ``dcid_dict``.
+    Size-gated: within DRIVER_RESOLVE_MAX_ROWS rows and the driver byte
+    budget the node table is Arrow-collected (one size aggregate, one
+    collect), the seed is read off the collected rows, ``dict_df`` goes
+    through the same gate, and the fixpoint runs on the driver. When
+    either frame does not fit, or with ``force_distributed``, the
+    distributed loop joins the three sources as one dictionary frame.
+    ``input_materialized``: ``nodes`` is already checkpointed.
     """
-    if dict_df is not None:
-        if dcid_dict:
-            raise ValueError("pass dcid_dict or dict_df, not both")
-        base_cols = [c for c in NODE_COLS if c in nodes.columns]
-        return _resolve_graph_distributed(
-            nodes.select(*base_cols), assign_statvar_dcids, None, dict_df,
-            input_materialized=input_materialized,
-        )
+    from import_spark.functions.size_gate import DRIVER_COLLECT_BUDGET_BYTES, collect_within
+
     spark = nodes.sparkSession
     base_cols = [c for c in NODE_COLS if c in nodes.columns]
     nodes = nodes.select(*base_cols)
     has_src = "src_file" in nodes.columns
 
-    from import_spark.functions.size_gate import DRIVER_COLLECT_BUDGET_BYTES, collect_within
-
     # rows alone mislead (5M wide-literal rows are GBs): one exact
-    # count+bytes aggregate gates the Arrow collect; a forced
+    # count+bytes aggregate gates each Arrow collect; a forced
     # distributed run pays no size job at all
     pdf = (
         None
         if force_distributed
         else collect_within(nodes, DRIVER_COLLECT_BUDGET_BYTES, max_rows=DRIVER_RESOLVE_MAX_ROWS)
     )
-    if pdf is not None:
-        rows = list(pdf.itertuples(index=False, name=None))
-        resolved_rows, failed_rows, failed_ids, errors, rounds = resolve_graph_driver(
-            rows, assign_statvar_dcids=assign_statvar_dcids, dcid_dict=dcid_dict
+    dict_pdf = None
+    if pdf is not None and dict_df is not None:
+        dict_pdf = collect_within(
+            dict_df.select("prop", "ext_id", "dcid"), DRIVER_COLLECT_BUDGET_BYTES
         )
-        schema = "node_id string, prop string, value_type string, value string" + (
-            ", src_file string" if has_src else ""
+        if dict_pdf is None:
+            pdf = None
+    if pdf is None:
+        return _resolve_graph_distributed(
+            nodes, assign_statvar_dcids, _dictionary_frame(nodes, dcid_dict, dict_df),
+            input_materialized=input_materialized,
         )
-        cols = base_cols
-        if resolved_rows:
-            # driver-written parquet + scan beats a driver-serial
-            # pandas-to-DataFrame conversion ~9x at 100k+ rows
-            # (resolve.py's measured handoff; Amdahl-relevant, the
-            # upload is serial); empty or small frames use local_frame
-            from import_spark.operators.resolve import _driver_parquet_handoff
+    # later entries win: dict_df < dcid_dict < local seed
+    full_dict = {} if dict_pdf is None else dictionary_map(dict_pdf)
+    full_dict.update(dcid_dict or {})
+    full_dict.update(local_graph_seed(pdf))
+    rows = list(pdf.itertuples(index=False, name=None))
+    resolved_rows, failed_rows, failed_ids, errors, rounds = resolve_graph_driver(
+        rows, assign_statvar_dcids=assign_statvar_dcids, dcid_dict=full_dict
+    )
+    schema = "node_id string, prop string, value_type string, value string" + (
+        ", src_file string" if has_src else ""
+    )
+    cols = base_cols
+    if resolved_rows:
+        # driver-written parquet + scan beats a driver-serial
+        # pandas-to-DataFrame conversion ~9x at 100k+ rows
+        # (resolve.py's measured handoff; Amdahl-relevant, the
+        # upload is serial); empty or small frames use local_frame
+        resolved = _driver_parquet_handoff(
+            spark, pd.DataFrame(resolved_rows, columns=cols), schema
+        )
+    else:
+        resolved = local_frame(spark, pd.DataFrame(columns=cols), schema)
+    errors_df = local_frame(
+        spark,
+        pd.DataFrame(errors, columns=["node_id", "counter", "message"]),
+        "node_id string, counter string, message string",
+    )
+    if failed_ids:
+        failed_df = _driver_parquet_handoff(
+            spark, pd.DataFrame(failed_rows, columns=cols), schema
+        ).join(F.broadcast(errors_df.groupBy("node_id").agg(F.min("counter").alias("error"))), "node_id", "left")
+    else:
+        failed_df = nodes.filter(F.lit(False)).withColumn("error", F.lit(""))
+    return McfResolveResult(
+        resolved=resolved, failed=failed_df, errors=errors_df, rounds=rounds
+    )
 
-            resolved = _driver_parquet_handoff(
-                spark, pd.DataFrame(resolved_rows, columns=cols), schema
-            )
-        else:
-            resolved = local_frame(spark, pd.DataFrame(columns=cols), schema)
-        errors_df = local_frame(
-            spark,
-            pd.DataFrame(errors, columns=["node_id", "counter", "message"]),
-            "node_id string, counter string, message string",
-        )
-        if failed_ids:
-            from import_spark.operators.resolve import _driver_parquet_handoff
 
-            failed_df = _driver_parquet_handoff(
-                spark, pd.DataFrame(failed_rows, columns=cols), schema
-            ).join(F.broadcast(errors_df.groupBy("node_id").agg(F.min("counter").alias("error"))), "node_id", "left")
-        else:
-            failed_df = nodes.filter(F.lit(False)).withColumn("error", F.lit(""))
-        return McfResolveResult(
-            resolved=resolved, failed=failed_df, errors=errors_df, rounds=rounds
+def _dictionary_frame(
+    nodes: DataFrame, dcid_dict: dict | None, dict_df: DataFrame | None
+) -> DataFrame:
+    """The three dictionary sources as one (prop, ext_id, dcid) frame for
+    the distributed loop: per key the highest-precedence source wins
+    (local seed > ``dcid_dict`` > ``dict_df``, the driver path's update
+    order), then empty and null dcids drop out. The driver walk skips
+    such a hit (``if hit:``) and tries the next external id; an absent
+    key makes the join do the same."""
+    parts = [local_graph_dictionary_df(nodes).withColumn("_pri", F.lit(2))]
+    if dcid_dict:
+        parts.append(
+            _driver_parquet_handoff(
+                nodes.sparkSession,
+                pd.DataFrame(
+                    [(p, e, d) for (p, e), d in dcid_dict.items()],
+                    columns=["prop", "ext_id", "dcid"],
+                ),
+                "prop string, ext_id string, dcid string",
+            ).withColumn("_pri", F.lit(1))
         )
-    return _resolve_graph_distributed(
-        nodes, assign_statvar_dcids, dcid_dict,
-        input_materialized=input_materialized,
+    if dict_df is not None:
+        parts.append(prepare_dictionary(dict_df).withColumn("_pri", F.lit(0)))
+    merged = parts[0]
+    for part in parts[1:]:
+        merged = merged.unionByName(part)
+    return (
+        merged.groupBy("prop", "ext_id")
+        .agg(F.max_by("dcid", "_pri").alias("dcid"))
+        .filter(F.col("dcid").isNotNull() & (F.col("dcid") != ""))
     )
 
 
 def _resolve_graph_distributed(
     nodes: DataFrame,
     assign_statvar_dcids: bool,
-    dcid_dict: dict | None = None,
-    dict_df: DataFrame | None = None,
+    dictionary: DataFrame,
     input_materialized: bool = False,
 ) -> McfResolveResult:
     """Distributed alternating fixpoint.
@@ -374,14 +422,14 @@ def _resolve_graph_distributed(
     (small) candidate set through the same vectorized key builders the
     extract path uses.
 
-    ``dict_df``: the external-id dictionary as a (prop, ext_id, dcid)
-    DataFrame instead of a driver dict — the over-budget regime (a
-    full Recon map at 10^12-turn scale cannot live in a UDF closure).
-    Place-mode candidates then resolve via a per-round JOIN against the
-    dictionary with the same priority-order semantics as
-    :func:`_place_dcid`; each node passes through the join at most once
-    (assigned or failed nodes leave the candidate set), so the total
-    join work is one pass over the place nodes regardless of rounds.
+    ``dictionary``: the external-id dictionary as a (prop, ext_id, dcid)
+    frame with one non-empty dcid per key (:func:`_dictionary_frame`),
+    checkpointed once here. Place-mode candidates resolve via a
+    per-round JOIN against it with the same priority-order semantics
+    as :func:`_place_dcid`; each node passes through the join at most
+    once (assigned or failed nodes leave the candidate set), so the
+    total join work is one pass over the place nodes regardless of
+    rounds.
     """
     spark = nodes.sparkSession
     # callers that hand over an already-materialized table (genmcf
@@ -390,6 +438,9 @@ def _resolve_graph_distributed(
     # through a trivial projection instead
     if not input_materialized:
         nodes = nodes.localCheckpoint()
+    # every round's place join reads the dictionary: materialize its
+    # seed join and source union once, not once per round
+    dictionary = dictionary.localCheckpoint()
     # ONE pass over the statement table yields both setup frames: the
     # node-id universe and the per-node min dcid (previously two full
     # scans + two shuffles)
@@ -519,15 +570,11 @@ def _resolve_graph_distributed(
         )
         import pandas as pd_  # local alias for the UDF closure
 
-        dict_mode = dict_df is not None
-        assign_cols = ["node_id", "dcid", "status", "type0"] + (
-            ["pri", "prop", "ext_id"] if dict_mode else []
-        )
+        assign_cols = ["node_id", "dcid", "status", "type0", "pri", "prop", "ext_id"]
         assign_schema = (
-            "node_id string, dcid string, status string, type0 string"
-            + (", pri int, prop string, ext_id string" if dict_mode else "")
+            "node_id string, dcid string, status string, type0 string,"
+            " pri int, prop string, ext_id string"
         )
-        _pad = [None, None, None] if dict_mode else []
 
         def assign(batches):
             # one input row per node (pre-packed below): an Arrow batch
@@ -548,7 +595,7 @@ def _resolve_graph_distributed(
                     mode = _mode(tlist)
                     type0 = tlist[0] if tlist else "Thing"
                     if mode in ("SVOBS", "POP", "OBS") and bool(pend):
-                        out.append([nid, None, "PENDING", type0] + _pad)
+                        out.append([nid, None, "PENDING", type0, None, None, None])
                         continue
                     pvs, constraints = {}, set()
                     pcounts: dict[str, int] = {}
@@ -568,34 +615,25 @@ def _resolve_graph_distributed(
                             statvar_key_string(pvs), V.DC_NAMESPACE,
                         ) if assign_statvar_dcids and "StatisticalVariable" in tlist else (None, "")
                         if key is None:
-                            if dict_mode:
-                                # emit the ordered dictionary candidates
-                                # + a sentinel fallback row; the hit is
-                                # decided by the post-UDF join (same
-                                # priority walk as _place_dcid)
-                                for i, p in enumerate(
-                                    V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS
-                                ):
-                                    v = pvs.get(p)
-                                    if v:
-                                        out.append(
-                                            [nid, None, "PLACE", type0, i, p, v]
-                                        )
-                                out.append(
-                                    [nid, place_dcid(pvs), "PLACE", type0,
-                                     _FALLBACK_PRI, None, None]
-                                )
-                            else:
-                                d = _place_dcid(pvs, dcid_dict)
-                                out.append([nid, d, "OK" if d else "FAIL", type0])
+                            # emit the ordered dictionary candidates + a
+                            # sentinel fallback row; the hit is decided
+                            # by the post-UDF join (same priority walk
+                            # as _place_dcid)
+                            for i, p in enumerate(V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS):
+                                v = pvs.get(p)
+                                if v:
+                                    out.append([nid, None, "PLACE", type0, i, p, v])
+                            out.append(
+                                [nid, place_dcid(pvs), "PLACE", type0, _FALLBACK_PRI, None, None]
+                            )
                             continue
                     if key is None:
-                        out.append([nid, None, "FAIL", type0] + _pad)
+                        out.append([nid, None, "FAIL", type0, None, None, None])
                     else:
                         hash_pos.append(len(out))
                         hash_ns.append(ns)
                         hash_keys.append(key)
-                        out.append([nid, None, "OK", type0] + _pad)
+                        out.append([nid, None, "OK", type0, None, None, None])
                 if hash_keys:
                     for pos, ns, h in zip(hash_pos, hash_ns, long_id_batch(hash_keys)):
                         out[pos][1] = ns + h
@@ -612,49 +650,34 @@ def _resolve_graph_distributed(
                 F.max("_p").alias("_p"),
             )
         )
-        assigned = cand_packed.mapInPandas(assign, schema=assign_schema)
-        if dict_mode:
-            # checkpoint BEFORE splitting: place and rest both read the
-            # pack-shuffle + Arrow UDF output from blocks instead of
-            # each re-running it (the per-round cost driver)
-            assigned = assigned.localCheckpoint()
-            # resolve the PLACE candidates against the dictionary
-            # DataFrame: lowest-priority-index hit wins, sentinel
-            # fallback row (prefix dcid or null) when no hit — exactly
-            # _place_dcid's walk, as a join instead of a closure dict.
-            # Falsy dcids are dropped from the dimension: _place_dcid
-            # skips empty/null hits (`if hit:`) and keeps walking, and
-            # an absent key makes the join do the same.
-            place = assigned.filter(F.col("status") == "PLACE")
-            rest = assigned.filter(F.col("status") != "PLACE").select(
-                "node_id", "dcid", "status", "type0"
+        # checkpoint BEFORE splitting: place and rest both read the
+        # pack-shuffle + Arrow UDF output from blocks instead of each
+        # re-running it (the per-round cost driver)
+        assigned = cand_packed.mapInPandas(assign, schema=assign_schema).localCheckpoint()
+        # resolve the PLACE candidates against the dictionary frame:
+        # lowest-priority-index hit wins, sentinel fallback row (prefix
+        # dcid or null) when no hit — exactly _place_dcid's walk, as a
+        # join instead of a driver dict
+        place = assigned.filter(F.col("status") == "PLACE")
+        rest = assigned.filter(F.col("status") != "PLACE").select(
+            "node_id", "dcid", "status", "type0"
+        )
+        hits = place.filter(F.col("pri") < _FALLBACK_PRI).join(
+            dictionary.withColumnRenamed("dcid", "_ddc"), ["prop", "ext_id"]
+        )
+        best = hits.groupBy("node_id").agg(F.min_by("_ddc", "pri").alias("_hit"))
+        resolved_place = (
+            place.filter(F.col("pri") == _FALLBACK_PRI)
+            .select("node_id", F.col("dcid").alias("_fb"), "type0")
+            .join(best, "node_id", "left")
+            .withColumn("dcid", F.coalesce("_hit", "_fb"))
+            .withColumn(
+                "status",
+                F.when(F.col("dcid").isNotNull(), F.lit("OK")).otherwise(F.lit("FAIL")),
             )
-            from import_spark.operators.link import prepare_dictionary
-
-            dict_dim = (
-                prepare_dictionary(dict_df)
-                .filter(F.col("dcid").isNotNull() & (F.col("dcid") != ""))
-                .withColumnRenamed("dcid", "_ddc")
-            )
-            hits = place.filter(F.col("pri") < _FALLBACK_PRI).join(
-                dict_dim, ["prop", "ext_id"]
-            )
-            best = hits.groupBy("node_id").agg(F.min_by("_ddc", "pri").alias("_hit"))
-            resolved_place = (
-                place.filter(F.col("pri") == _FALLBACK_PRI)
-                .select("node_id", F.col("dcid").alias("_fb"), "type0")
-                .join(best, "node_id", "left")
-                .withColumn("dcid", F.coalesce("_hit", "_fb"))
-                .withColumn(
-                    "status",
-                    F.when(F.col("dcid").isNotNull(), F.lit("OK")).otherwise(
-                        F.lit("FAIL")
-                    ),
-                )
-                .select("node_id", "dcid", "status", "type0")
-            )
-            assigned = rest.unionByName(resolved_place)
-        assigned = assigned.localCheckpoint()
+            .select("node_id", "dcid", "status", "type0")
+        )
+        assigned = rest.unionByName(resolved_place).localCheckpoint()
         new_dcids = assigned.filter(F.col("status") == "OK").select("node_id", "dcid")
         n_new = new_dcids.count()
         fail_assign = assigned.filter(F.col("status") == "FAIL")

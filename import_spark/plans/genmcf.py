@@ -14,7 +14,9 @@ The reference's #1 user entry point (Processor.java:59-147,299-407):
    counters (nodes with errors still flow on, like the reference:
    Processor.java:330-345 writes them unless resolution quarantines)
 4. McfResolver (McfResolver.java:39-128) — alternating local-ref
-   replacement ⇄ dcid assignment to fixpoint; failures quarantined
+   replacement ⇄ dcid assignment to fixpoint; failures quarantined.
+   External ids resolve through the local-graph seed (J2), then the
+   caller's ``dcid_dict``, then the recon-derived dictionary
 5. write — resolved nodes as MCF text (``table_mcf_nodes``), failed
    nodes separately (``failed_table_mcf_nodes``), ``report.json``
    (LogWrapper.persistLog model) — the WriterPair split of
@@ -32,8 +34,6 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,62 +41,8 @@ from import_spark.operators.mcf_checker import check_nodes, failed_node_ids
 from import_spark.operators.mcf_mutator import mutate_nodes
 from import_spark.operators.mcf_resolver import resolve_graph
 from import_spark.report import build_report, write_report
-from import_spark.session import local_frame
 from import_spark.sources.mcf import write_mcf
 from import_spark.sources.tmcf import expand_template
-
-
-def _combined_dictionary_df(
-    spark: SparkSession,
-    stmts: DataFrame,
-    mutated: DataFrame,
-    dcid_dict: dict | None,
-    recon_table: DataFrame | None,
-    seed_local_graph: bool,
-) -> DataFrame:
-    """All dictionary sources as one (prop, ext_id, dcid) DataFrame,
-    highest-precedence entry winning per key: local-graph seeds (2) >
-    explicit dcid_dict (1) > recon-derived (0) — the same later-wins
-    order the in-driver ``dict.update`` chain applies."""
-    from import_spark.operators.link import (
-        derive_node_dictionary_df,
-        local_graph_dictionary_df,
-    )
-
-    parts = []
-    if recon_table is not None:
-        parts.append(
-            derive_node_dictionary_df(stmts, recon_table).withColumn("_pri", F.lit(0))
-        )
-    if dcid_dict:
-        parts.append(
-            local_frame(
-                spark,
-                pd.DataFrame(
-                    [(p, e, d) for (p, e), d in dcid_dict.items()],
-                    columns=["prop", "ext_id", "dcid"],
-                ),
-                "prop string, ext_id string, dcid string",
-            ).withColumn("_pri", F.lit(1))
-        )
-    if seed_local_graph:
-        parts.append(
-            local_graph_dictionary_df(mutated).withColumn("_pri", F.lit(2))
-        )
-    if not parts:
-        return local_frame(
-            spark,
-            pd.DataFrame(columns=["prop", "ext_id", "dcid"]),
-            "prop string, ext_id string, dcid string",
-        )
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return (
-        allp.groupBy("prop", "ext_id")
-        .agg(F.max_by("dcid", "_pri").alias("dcid"))
-        .select("prop", "ext_id", "dcid")
-    )
 
 
 @dataclass
@@ -117,7 +63,6 @@ def run_genmcf(
     out_dir: str | None = None,
     assign_statvar_dcids: bool = True,
     dcid_dict: dict | None = None,
-    seed_local_graph: bool = True,
     force_distributed_resolve: bool = False,
     recon_table: DataFrame | None = None,
 ) -> GenMcfResult:
@@ -125,12 +70,15 @@ def run_genmcf(
     optional pre-parsed long-form MCF rows (read_mcf output) unioned in
     like Processor.processNodes.
 
+    ``dcid_dict``: optional (prop, ext_id) → dcid driver dict.
     ``recon_table``: optional offline Recon dimension (prop, ext_id,
     dcid). When given, the FULL-resolution two-pass orchestration runs
     (Processor.java:82-86,451-497): pass 1 collects the distinct
     external-id working set from the parsed graph and derives the
-    dictionary by joining the recon table; explicit ``dcid_dict``
-    entries and local-graph seeds override derived ones."""
+    dictionary by joining the recon table. The resolver always seeds
+    the local graph (J2), as the reference does; local-graph seeds
+    override explicit ``dcid_dict`` entries, which override derived
+    ones."""
     from import_spark.session import persistent_rdd_ids
 
     _ids0 = persistent_rdd_ids(spark)
@@ -193,53 +141,23 @@ def run_genmcf(
     # reference's full post-mutation pass, a fraction of the I/O.
     check_errors = check_nodes(mutated_t.filter(F.col("_touched")).drop("_touched"))
 
-    # 4. resolve — dictionary = caller's (the Recon stand-in) + local-
-    # graph seeding (J2: external ids defined WITH a dcid in this very
-    # import resolve to the local nodes, ExternalIdResolver.addLocalGraph)
-    from import_spark.operators.link import (
-        DictionaryOverBudget,
-        derive_node_dictionary,
-        local_graph_dictionary,
-    )
+    # 4. resolve — the resolver seeds the local graph itself (J2:
+    # external ids defined WITH a dcid in this very import resolve to
+    # the local nodes, ExternalIdResolver.addLocalGraph) over the
+    # caller's dictionary and, in FULL-resolution mode, the recon
+    # dictionary. Pass 1 is a pruned re-scan of the materialized
+    # expansion (the reference re-reads the CSVs because it streams);
+    # the recon join stands in for the batched API calls.
+    from import_spark.operators.link import derive_node_dictionary_df
 
-    full_dict = {}
-    dict_over_budget = False
-    try:
-        if recon_table is not None:
-            # FULL-resolution pass 1: the materialized expansion IS the
-            # first scan (the reference re-reads the CSVs because it
-            # streams; a pruned re-scan of the checkpoint is the Spark
-            # analogue), the recon join stands in for the batched API
-            # calls
-            full_dict.update(derive_node_dictionary(stmts, recon_table))
-        full_dict.update(dcid_dict or {})
-        if seed_local_graph:
-            full_dict.update(local_graph_dictionary(mutated))
-    except DictionaryOverBudget:
-        # over-budget regime: the dictionary never touches the driver —
-        # rebuild ALL sources as one (prop, ext_id, dcid) DataFrame
-        # with the same precedence (local-graph > explicit dcid_dict >
-        # recon-derived, matching the dict.update order above) and run
-        # the join-based distributed resolver
-        dict_over_budget = True
-    if dict_over_budget:
-        dict_df = _combined_dictionary_df(
-            spark, stmts, mutated, dcid_dict, recon_table, seed_local_graph
-        )
-        res = resolve_graph(
-            mutated,
-            assign_statvar_dcids=assign_statvar_dcids,
-            dict_df=dict_df,
-            input_materialized=True,
-        )
-    else:
-        res = resolve_graph(
-            mutated,
-            assign_statvar_dcids=assign_statvar_dcids,
-            dcid_dict=full_dict or None,
-            force_distributed=force_distributed_resolve,
-            input_materialized=True,
-        )
+    res = resolve_graph(
+        mutated,
+        assign_statvar_dcids=assign_statvar_dcids,
+        dcid_dict=dcid_dict,
+        dict_df=None if recon_table is None else derive_node_dictionary_df(stmts, recon_table),
+        force_distributed=force_distributed_resolve,
+        input_materialized=True,
+    )
 
     # materialize the (small) error set ONCE: it feeds the report union,
     # the failed-sanity counter AND the returned frame — unmaterialized,

@@ -16,9 +16,10 @@ from pyspark.sql import functions as F
 from import_spark.operators.link import (
     DictionaryOverBudget,
     dcid_map_from_df,
-    derive_node_dictionary,
     dictionary_map,
     local_graph_dictionary,
+    local_graph_dictionary_df,
+    local_graph_seed,
     prepare_dictionary,
 )
 from import_spark.plans.genmcf import run_genmcf
@@ -66,12 +67,9 @@ def test_builders_raise_instead_of_collecting_over_budget(spark):
     with pytest.raises(DictionaryOverBudget):
         local_graph_dictionary(nodes, budget_bytes=1)
     with pytest.raises(DictionaryOverBudget):
-        derive_node_dictionary(nodes, recon, budget_bytes=1)
-    with pytest.raises(DictionaryOverBudget):
         dcid_map_from_df(recon, budget_bytes=1)
     # within budget: same entries as ever
     assert local_graph_dictionary(nodes) == {("isoCode", "US"): "country/USA"}
-    assert derive_node_dictionary(nodes, recon) == {("isoCode", "US"): "country/USA"}
     assert dcid_map_from_df(recon) == {("isoCode", "US"): "country/USA"}
 
 
@@ -88,11 +86,11 @@ def _genmcf_stmt_set(spark, **kw):
 
 
 def test_genmcf_over_budget_dictionary_matches_driver_path(spark, monkeypatch):
-    """Force the dictionary builders over budget: genmcf must fall back
-    to the combined dict_df + join-based distributed resolver and emit
-    EXACTLY the statements of the driver-dict path — including the
-    local-graph > explicit-dict > recon precedence and the
-    prefix-fallback for recon misses."""
+    """Force the resolver's driver gate over budget: genmcf must take
+    the distributed resolver, whose dictionary join merges the same
+    sources, and emit EXACTLY the statements of the driver path —
+    including the local-graph > explicit-dict > recon precedence and
+    the prefix-fallback for recon misses."""
     recon = _dict_df(
         spark,
         [
@@ -168,7 +166,7 @@ def test_dict_df_skips_falsy_dcids_like_the_closure_walk(spark, monkeypatch):
     dict_df = _dict_df(spark, [(p, e, d) for (p, e), d in dirty.items()])
     got = {
         (r.node_id, r.prop, r.value)
-        for r in resolve_graph(nodes, dict_df=dict_df).resolved.collect()
+        for r in resolve_graph(nodes, dict_df=dict_df, force_distributed=True).resolved.collect()
     }
     assert got == want
     assert ("P1", "dcid", "country/USA") in got       # lower-priority real hit
@@ -198,3 +196,69 @@ def test_dictionary_map_first_wins_on_min_dcid(spark):
         ("nutsCode", "US"): "nuts/US",
     }
     assert dcid_map_from_df(_dict_df(spark, entries)) == want
+
+
+def test_local_graph_seed_matches_dictionary_df(spark):
+    """The resolver's driver seed (read off collected rows) follows
+    local_graph_dictionary_df's rule: min dcid per node, then min dcid
+    per (prop, ext_id); a node without a dcid seeds nothing, and one
+    whose dcid cell is null seeds None."""
+    nodes = _nodes(
+        spark,
+        [
+            ("A", "dcid", "TEXT", "geo/b"),  # two dcids: min wins
+            ("A", "dcid", "TEXT", "geo/a"),
+            ("A", "isoCode", "TEXT", "AA"),
+            ("B1", "dcid", "TEXT", "geo/z"),  # shared isoCode, other dcids
+            ("B1", "isoCode", "TEXT", "BB"),
+            ("B2", "dcid", "TEXT", "geo/y"),
+            ("B2", "isoCode", "TEXT", "BB"),
+            ("B2", "wikidataId", "TEXT", "Q2"),
+            ("C", "typeOf", "RESOLVED_REF", "City"),  # ext id, no dcid
+            ("C", "isoCode", "TEXT", "CC"),
+            ("N", "dcid", "TEXT", None),  # null dcid cell: seeds None
+            ("N", "isoCode", "TEXT", "NN"),
+        ],
+    )
+    want = {(r.prop, r.ext_id): r.dcid for r in local_graph_dictionary_df(nodes).collect()}
+    assert local_graph_seed(nodes.toPandas()) == want == {
+        ("isoCode", "AA"): "geo/a",
+        ("isoCode", "BB"): "geo/y",
+        ("wikidataId", "Q2"): "geo/y",
+        ("isoCode", "NN"): None,
+    }
+
+
+@pytest.mark.parametrize("dist", [False, True])
+def test_resolver_dictionary_precedence(spark, dist):
+    """One key in all three sources resolves to the local seed; a key
+    in dcid_dict and dict_df to dcid_dict; a dict_df-only key to
+    dict_df. Driver and distributed paths agree."""
+    nodes = _nodes(
+        spark,
+        [
+            ("Def1", "typeOf", "RESOLVED_REF", "Country"),
+            ("Def1", "dcid", "TEXT", "local/XY"),
+            ("Def1", "isoCode", "TEXT", "XY"),
+            ("P1", "typeOf", "RESOLVED_REF", "City"),
+            ("P1", "isoCode", "TEXT", "XY"),
+            ("P2", "typeOf", "RESOLVED_REF", "City"),
+            ("P2", "isoCode", "TEXT", "YZ"),
+            ("P3", "typeOf", "RESOLVED_REF", "City"),
+            ("P3", "isoCode", "TEXT", "ZZ"),
+        ],
+    )
+    explicit = {("isoCode", "XY"): "dict/XY", ("isoCode", "YZ"): "dict/YZ"}
+    recon = _dict_df(
+        spark,
+        [
+            ("isoCode", "XY", "recon/XY"),
+            ("isoCode", "YZ", "recon/YZ"),
+            ("isoCode", "ZZ", "recon/ZZ"),
+        ],
+    )
+    from import_spark.operators.mcf_resolver import resolve_graph
+
+    res = resolve_graph(nodes, dcid_dict=explicit, dict_df=recon, force_distributed=dist)
+    got = {r.node_id: r.value for r in res.resolved.filter(F.col("prop") == "dcid").collect()}
+    assert got == {"Def1": "local/XY", "P1": "local/XY", "P2": "dict/YZ", "P3": "recon/ZZ"}

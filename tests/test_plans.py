@@ -157,6 +157,19 @@ def test_warm_mcf_call_starts_no_pickled_rdd(spark, mcf_call, monkeypatch):
     assert len(calls) == 0
 
 
+def test_genmcf_seeds_the_local_graph_without_a_dictionary_collect(mcf_call, monkeypatch):
+    """The resolver reads the local-graph seed off the node rows its
+    driver gate collects: genmcf makes no separate dictionary collect
+    (at 7 Spark jobs, it used to return an empty seed on this input)."""
+    from import_spark.operators import link
+
+    def no_collect(*args, **kwargs):
+        raise AssertionError("genmcf collected a dictionary")
+
+    monkeypatch.setattr(link, "_collect_dictionary_rows", no_collect)
+    mcf_call()
+
+
 @pytest.mark.parametrize("n_rows", [0, 3])
 def test_local_frame_is_local_table_scan(spark, n_rows, monkeypatch):
     """local_frame types the Arrow table by the DDL schema, so empty,

@@ -108,16 +108,24 @@ def test_resolve_graph_wide_rows_take_distributed_path(spark, monkeypatch):
 def test_resolve_graph_gate_job_budget(spark, job_ids, monkeypatch):
     """The resolver's gate is one size aggregate then one collect: on a
     small checkpointed node table the driver path runs at most 3 jobs,
-    and a forced distributed run pays no size job at all."""
+    local-graph seeding included (P9's isoCode resolves to Def1's
+    dcid), and a forced distributed run pays no size job at all."""
     from import_spark.operators import mcf_resolver
 
     nodes = spark.createDataFrame(
-        [(f"N{i}", p, "TEXT", f"v{i}") for i in range(10) for p in ("name", "description")],
+        [(f"N{i}", p, "TEXT", f"v{i}") for i in range(10) for p in ("name", "description")]
+        + [
+            ("Def1", "dcid", "TEXT", "country/XYZ"),
+            ("Def1", "isoCode", "TEXT", "XY"),
+            ("P9", "isoCode", "TEXT", "XY"),
+        ],
         "node_id string, prop string, value_type string, value string",
     ).localCheckpoint()
     before = job_ids()
-    mcf_resolver.resolve_graph(nodes)
+    res = mcf_resolver.resolve_graph(nodes)
     assert len(job_ids() - before) <= 3
+    got = {(r.node_id, r.value) for r in res.resolved.filter(F.col("prop") == "dcid").collect()}
+    assert ("P9", "country/XYZ") in got
 
     sentinel = object()
     monkeypatch.setattr(mcf_resolver, "_resolve_graph_distributed", lambda *a, **k: sentinel)
