@@ -256,6 +256,65 @@ def col_is_number(c):
     return c.rlike("\\A" + _JAVA_FP_CORE + "\\z")
 
 
+def col_parse_typed_value(prop: str, c):
+    """Column twin of P1 ``parse_typed_value`` for a fixed ``prop``:
+    ``struct(value_type, value)``, with a null ``value_type`` where the
+    spec returns None (a malformed complex value; ``value`` then keeps
+    the input, as the node-id pass reads it)."""
+    from pyspark.sql import functions as F
+
+    quoted = c.startswith('"')
+    stripped = F.when(
+        quoted & c.endswith('"') & (F.length(c) > 1), c.substr(F.lit(2), F.length(c) - 2)
+    ).otherwise(c)
+    expect_ref = V.is_reference_property(prop)
+    v = stripped if expect_ref else c
+    is_global = v.startswith(V.GLOBAL_REF_PREFIXES[0])
+    for pfx in V.GLOBAL_REF_PREFIXES[1:]:
+        is_global = is_global | v.startswith(pfx)
+    vt = (
+        F.when(v.startswith("["), F.when(v.endswith("]"), F.lit(COMPLEX_VALUE)))
+        .when(is_global, RESOLVED_REF)
+        .when(v.startswith(V.INTERNAL_REF_PREFIX), UNRESOLVED_REF)
+    )
+    val = F.when(is_global, col_strip_namespace(v)).otherwise(v)
+    if expect_ref:
+        vt = vt.otherwise(RESOLVED_REF)
+    else:
+        numeric = col_is_number(c) | F.lower(c).isin(*sorted(_BOOLS))
+        vt = F.when(quoted, TEXT).otherwise(vt.when(numeric, NUMBER).otherwise(TEXT))
+        val = F.when(quoted, stripped).otherwise(val)
+    return F.struct(vt.alias("value_type"), val.alias("value"))
+
+
+# What Python's str.strip() removes: the str.isspace() code points.
+_PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+# One unit of split_structured_line_with_escapes' grammar: a run of
+# plain characters, a backslash escape (a lone trailing backslash
+# included), or a quoted section, which may hold escapes and commas.
+# Possessive quantifiers keep Java's matcher linear on failure.
+_SPLIT_UNIT = r'\\.|\\\z|"[^"\\]*+(?:\\.[^"\\]*+)*+"'
+_BALANCED_RE = r'(?s)\A(?:[^"\\]++|' + _SPLIT_UNIT + r")*+\z"
+_FIELD_RE = r'(?s)(?:[^,"\\]++|' + _SPLIT_UNIT + r")++"
+
+
+def col_split_and_strip(c):
+    """Column twin of P2 ``split_and_strip(c, strip_enclosing_quotes=False)``:
+    the stripped, non-empty comma-separated values, or null where the
+    spec returns None (a newline, or unbalanced quotes)."""
+    from pyspark.sql import functions as F
+
+    fields = F.regexp_extract_all(c, F.lit(_FIELD_RE), 0)
+    stripped = F.transform(fields, lambda s: F.btrim(s, F.lit(_PY_WHITESPACE)))
+    return F.when(
+        ~c.contains("\n") & c.rlike(_BALANCED_RE), F.filter(stripped, lambda s: s != "")
+    )
+
+
 def col_is_valid_dcid(c):
     """Column version of P14."""
     from pyspark.sql import functions as F

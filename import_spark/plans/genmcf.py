@@ -22,10 +22,10 @@ The reference's #1 user entry point (Processor.java:59-147,299-407):
    (LogWrapper.persistLog model) — the WriterPair split of
    Processor.java:315-320.
 
-Spark shape: the expansion is one mapInPandas pass over the CSV scan;
-mutator/checker are JVM-side column passes; the resolver touches only
-the shrinking ref/dcid working sets per round; the statement table is
-rewritten once. Equivalent semantics to
+Spark shape: the expansion is one cached JVM projection over the CSV
+scan (no Python worker); mutator/checker are JVM-side column passes;
+the resolver touches only the shrinking ref/dcid working sets per
+round; the statement table is rewritten once. Equivalent semantics to
 ``dc-import genmcf tmcf csv...`` in LOCAL resolution mode.
 """
 
@@ -86,6 +86,9 @@ def run_genmcf(
     parse_errors = None
     exp_ids: set[int] = set()
     if csv_df is not None:
+        # checkpointed although the projection is cheap: the gate's
+        # checker pass and the anti-join read it several times, and
+        # recomputing it made a warm mcf_obs genmcf call ~5% slower
         stmts = expand_template(
             csv_df,
             tmcf_text,
@@ -117,7 +120,7 @@ def run_genmcf(
         raise ValueError("need csv_df and/or instance_nodes")
     # materialize the expansion ONCE: the mutator/checker/resolver each
     # consume it several times (flags, complex lookup, synthesis,
-    # row+node checks) and would re-run the Python stage otherwise
+    # row+node checks) and would re-run the expansion otherwise
     _pre_union = persistent_rdd_ids(spark)
     stmts = stmts.localCheckpoint()
     union_ids = persistent_rdd_ids(spark) - _pre_union

@@ -16,25 +16,31 @@ TmcfCsvParser.java:125-375):
 - Multi-value cells are split quote/escape-aware (P2,
   StringUtil.java:182-218) and each value typed-value parsed (P1).
 
-The template is compiled once on the driver and **broadcast** via UDF
-closure; expansion is a single vectorized ``mapInPandas`` pass — the
-Spark analogue of the reference's thread-per-file RowProcessor.
+The template compiles on the driver into two JVM projections, cached
+per template and CSV header: the first parses each used cell once
+(``col_split_and_strip`` then ``col_parse_typed_value``, the Column
+twins of P2 and P1), the second builds one array of statement structs
+per row, which ``inline`` turns into rows. No Python worker runs; the
+Spark analogue of the reference's thread-per-file RowProcessor is the
+scan's tasks.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
-from typing import Iterator
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from import_spark.functions.values import parse_typed_value, split_and_strip
-from import_spark.sources.mcf import MCF_SCHEMA, parse_mcf_string
+from import_spark import vocabulary as V
+from import_spark.functions.values import (
+    col_parse_typed_value,
+    col_split_and_strip,
+    parse_typed_value,
+    split_and_strip,
+)
 
 _ENTITY_RE = re.compile(r"^E:([^->]+)->(.+)$")
 _COLUMN_RE = re.compile(r"^C:([^->]+)->(.+)$")
@@ -85,82 +91,40 @@ def parse_tmcf(text: str) -> list[TemplateNode]:
     return [nodes[k] for k in order]
 
 
-def _typed_values_vec(prop: str, vals: pd.Series) -> pd.DataFrame:
-    """Vectorized parse_typed_value for a FIXED prop over a value Series
-    (McfParser.java:336-437 semantics, identical to the scalar P1
-    function). Returns columns (value_type, value); malformed complex
-    values get value_type None (callers drop them, mirroring the
-    per-row ``tv is None`` skip)."""
-    import numpy as np
-
-    expect_ref = V_IS_REF(prop)
-    v = vals.astype(str)
-    quoted = v.str.startswith('"') & v.str.endswith('"') & (v.str.len() > 1)
-    if expect_ref:
-        # refs strip an enclosing quote pair then continue classification
-        v = v.where(~quoted, v.str.slice(1, -1))
-    is_quoted_text = (~expect_ref) & vals.astype(str).str.startswith('"')
-    text_stripped = vals.astype(str).where(~quoted, vals.astype(str).str.slice(1, -1))
-
-    bracket = v.str.startswith("[")
-    closed = v.str.endswith("]")
-    has_colon = v.str.contains(":", regex=False)
-    is_global = v.str.match(r"^(dcid|dcs|schema):")
-    is_local = v.str.startswith("l:")
-    after_colon = v.str.replace(r"^[^:]*:", "", regex=True, n=1)
-    numeric = v.str.match(
-        r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$|^[+-]?Infinity$|^NaN$"
-    ) | v.str.lower().isin(["true", "false", "1", "0"])
-
-    vt = np.select(
-        [
-            is_quoted_text,
-            bracket & closed,
-            bracket & ~closed,
-            has_colon & is_global,
-            has_colon & is_local,
-            pd.Series(expect_ref, index=v.index),
-            numeric,
-        ],
-        ["TEXT", "COMPLEX_VALUE", None, "RESOLVED_REF", "UNRESOLVED_REF", "RESOLVED_REF", "NUMBER"],
-        default="TEXT",
-    )
-    out_val = np.select(
-        [is_quoted_text, bracket, has_colon & is_global],
-        [text_stripped, v, after_colon],
-        default=v,
-    )
-    return pd.DataFrame({"value_type": vt, "value": out_val}, index=vals.index)
+def _col(name: str) -> Column:
+    """A CSV column by its exact header, dots and backticks included."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
-def V_IS_REF(prop: str) -> bool:
-    from import_spark import vocabulary as V
+@functools.lru_cache(maxsize=16)
+def _expansion(
+    tmcf_text: str, columns: tuple[str, ...], row_id_col: str
+) -> tuple[list[Column], Column]:
+    """The two projections of ``expand_template`` for one template over
+    one CSV header: the per-cell parse (row id, dcid cells, typed
+    multi-value arrays), then ``inline`` over each row's array of
+    statement structs.
 
-    return V.is_reference_property(prop)
+    Built once per ``(tmcf_text, columns, row_id_col)``: the Column
+    trees cost hundreds of py4j calls, and a warm genmcf call reuses
+    them."""
+    present = set(columns)
+    no_values = F.array().cast("array<string>")
+    parse = [_col(row_id_col).cast("string").alias("_rid")]
+    cells: dict[tuple[str, bool], Column] = {}
 
+    def cell_values(column: str, prop: str) -> Column:
+        # typed values depend on the prop only through is_reference_property
+        key = (column, V.is_reference_property(prop))
+        if key not in cells:
+            name = f"_v{len(parse)}"
+            split = F.coalesce(col_split_and_strip(_col(column).cast("string")), no_values)
+            typed = F.transform(split, lambda s: col_parse_typed_value(prop, s))
+            parse.append(F.filter(typed, lambda t: t.value_type.isNotNull()).alias(name))
+            cells[key] = F.col(name)
+        return cells[key]
 
-def _expand_batch(
-    pdf: pd.DataFrame, template: list[TemplateNode], row_id_col: str
-) -> pd.DataFrame:
-    """Vectorized template expansion (T1): per template term, ONE pandas
-    column pass over the whole batch — no per-row Python. Multi-value
-    cells (the quote/comma minority) route through the scalar
-    split_and_strip on their distinct values only."""
-    import numpy as np
-
-    frames: list[pd.DataFrame] = []
-    rowid = pdf[row_id_col].astype(str)
-
-    # per-template-node dcid source, if the template assigns one (T2 pass 1)
-    dcid_cols = {
-        tn.entity: next((p for pr, k, p in tn.terms if pr == "dcid" and k == "COLUMN"), None)
-        for tn in template
-    }
-    dcid_consts = {
-        tn.entity: next((p for pr, k, p in tn.terms if pr == "dcid" and k == "CONST"), None)
-        for tn in template
-    }
-
+    template = parse_tmcf(tmcf_text)
     # pass 1: node ids (dcid-first, TmcfCsvParser.java:156-230).
     # An entity whose template maps ``dcid`` but whose cell is empty (or
     # whose column is missing) is SKIPPED for that row, and E: refs to
@@ -168,130 +132,74 @@ def _expand_batch(
     # malformed/empty DCID. SKip this node") and :268-280
     # (CSV_EmptyDcidReferences drops the ref value). Verified against
     # the reference's McfResolverTest_TmcfCsv golden.
-    node_ids: dict[str, pd.Series] = {}
-    is_dcid: dict[str, pd.Series] = {}
-    skip_rows: dict[str, pd.Series] = {}
+    ids: dict[str, tuple[Column, Column, Column]] = {}  # entity → (node id, has dcid, emits)
     for tn in template:
-        fallback = tn.table + "/" + tn.entity + "/" + rowid
-        col = dcid_cols[tn.entity]
-        has_dcid_prop = col is not None or dcid_consts[tn.entity] is not None
-        if col and col in pdf.columns:
-            raw = pdf[col]
-            present = raw.notna() & (raw.astype(str) != "")
-            parsed = _typed_values_vec("dcid", raw.fillna("").astype(str))
-            dc = parsed["value"].where(present)
-            node_ids[tn.entity] = dc.fillna(fallback)
-            is_dcid[tn.entity] = present
-            skip_rows[tn.entity] = ~present
-        elif dcid_consts[tn.entity]:
-            tv = parse_typed_value("dcid", dcid_consts[tn.entity])
+        fallback = F.concat(F.lit(f"{tn.table}/{tn.entity}/"), F.col("_rid"))
+        dcid_col = next((p for pr, k, p in tn.terms if pr == "dcid" and k == "COLUMN"), None)
+        dcid_const = next((p for pr, k, p in tn.terms if pr == "dcid" and k == "CONST"), None)
+        if dcid_col in present:
+            name = f"_v{len(parse)}"
+            cell = _col(dcid_col).cast("string")
+            parse.append(F.when(cell != "", col_parse_typed_value("dcid", cell).value).alias(name))
+            has_dcid = F.col(name).isNotNull()
+            ids[tn.entity] = (F.coalesce(F.col(name), fallback), has_dcid, has_dcid)
+        elif dcid_const:
+            tv = parse_typed_value("dcid", dcid_const)
             const = tv[1] if tv else None
-            node_ids[tn.entity] = pd.Series(const or fallback, index=pdf.index)
-            is_dcid[tn.entity] = pd.Series(const is not None, index=pdf.index)
-            skip_rows[tn.entity] = pd.Series(const is None, index=pdf.index)
+            has_dcid = F.lit(const is not None)
+            ids[tn.entity] = (F.lit(const) if const else fallback, has_dcid, has_dcid)
         else:
-            node_ids[tn.entity] = fallback
-            is_dcid[tn.entity] = pd.Series(False, index=pdf.index)
-            # dcid column referenced but absent from the CSV: the
-            # reference logs CSV_TmcfMissingColumn and skips the node
-            skip_rows[tn.entity] = pd.Series(has_dcid_prop, index=pdf.index)
+            # a dcid column the CSV lacks: the reference logs
+            # CSV_TmcfMissingColumn and skips the node
+            emits = F.lit(dcid_col is None)
+            ids[tn.entity] = (fallback, F.lit(False), emits)
 
-    def emit(idx, nid, prop, vt, val):
-        frames.append(
-            pd.DataFrame(
-                {
-                    "node_id": nid.loc[idx].values if hasattr(nid, "loc") else nid,
-                    "prop": prop,
-                    "value_type": vt.values if hasattr(vt, "values") else vt,
-                    "value": val.values if hasattr(val, "values") else val,
-                    "src_file": "",
-                },
-                index=idx,
-            ).reset_index(drop=True)
+    def stmt(nid, prop, vt, val) -> Column:
+        return F.struct(
+            nid.alias("node_id"),
+            F.lit(prop).alias("prop"),
+            vt.alias("value_type"),
+            val.alias("value"),
+            F.lit("").alias("src_file"),
         )
 
-    # pass 2: emit statements — one vectorized pass per template term
+    # pass 2: one statement struct per (row, template term, value); a
+    # null struct is a statement the row does not emit
+    singles: list[Column] = []
+    multi: list[Column] = []
     for tn in template:
-        nid = node_ids[tn.entity]
-        active = ~skip_rows[tn.entity]
-        act_idx = pdf.index[active]
-        if not len(act_idx):
-            continue
+        nid, has_dcid, emits = ids[tn.entity]
         # template-assigned dcids stay as a PV on the node (the
         # reference's dcid-first pass keeps Vocabulary.DCID among the
         # node's PVs, which McfResolver.assignDcids checks —
         # TmcfCsvParser.java:156-230, McfResolver.java:190-193)
-        if is_dcid[tn.entity].any():
-            idx = pdf.index[is_dcid[tn.entity]]
-            emit(idx, nid, "dcid", "TEXT", nid.loc[idx])
+        singles.append(F.when(has_dcid, stmt(nid, "dcid", F.lit("TEXT"), nid)))
         for prop, kind, payload in tn.terms:
             if prop == "dcid":
                 continue
             if kind == "CONST":
                 tv = parse_typed_value(prop, payload)
                 if tv:
-                    emit(act_idx, nid, prop, tv[0], tv[1])
+                    singles.append(F.when(emits, stmt(nid, prop, F.lit(tv[0]), F.lit(tv[1]))))
+            elif kind == "ENTITY" and payload in ids:
+                # refs to a dcid-skipped target row are DROPPED
+                # (CSV_EmptyDcidReferences, TmcfCsvParser.java:268-280)
+                tgt, tgt_dcid, tgt_emits = ids[payload]
+                vt = F.when(tgt_dcid, "RESOLVED_REF").otherwise("UNRESOLVED_REF")
+                val = F.when(tgt_dcid, tgt).otherwise(F.concat(F.lit("l:"), tgt))
+                singles.append(F.when(emits & tgt_emits, stmt(nid, prop, vt, val)))
             elif kind == "ENTITY":
-                tgt = payload
-                if tgt in node_ids:
-                    # refs to a dcid-skipped target row are DROPPED
-                    # (CSV_EmptyDcidReferences, TmcfCsvParser.java:268-280)
-                    keep = active & ~skip_rows[tgt]
-                    kidx = pdf.index[keep]
-                    if not len(kidx):
-                        continue
-                    resolved = is_dcid[tgt].loc[kidx]
-                    val = np.where(resolved, node_ids[tgt].loc[kidx], "l:" + node_ids[tgt].loc[kidx])
-                    vt = np.where(resolved, "RESOLVED_REF", "UNRESOLVED_REF")
-                    emit(kidx, nid, prop, pd.Series(vt, index=kidx), pd.Series(val, index=kidx))
-                else:
-                    emit(act_idx, nid, prop, "UNRESOLVED_REF", f"l:{tgt}")
-            else:  # COLUMN
-                if payload not in pdf.columns:
-                    continue
-                cell = pdf[payload]
-                present = cell.notna() & active
-                cs = cell.astype(str).where(present, "")
-                present &= cs != ""
-                if not present.any():
-                    continue
-                # multi-value / quoted / escaped cells go through the
-                # exact scalar splitter on DISTINCT values only
-                hard = present & cs.str.contains(r'[,"\\\n]', regex=True)
-                simple = present & ~hard
-                if simple.any():
-                    vals = cs[simple].str.strip()
-                    keep = vals != ""
-                    parsed = _typed_values_vec(prop, vals[keep])
-                    ok = parsed["value_type"].notna()
-                    idx = parsed.index[ok]
-                    emit(idx, nid, prop, parsed.loc[idx, "value_type"], parsed.loc[idx, "value"])
-                if hard.any():
-                    lut = {
-                        s: split_and_strip(s, strip_enclosing_quotes=False)
-                        for s in cs[hard].unique()
-                    }
-                    split = cs[hard].map(lut)
-                    split = split[split.notna()]
-                    exploded = split.explode().dropna()
-                    if len(exploded):
-                        # exploded has duplicate row labels — go positional
-                        labels = exploded.index
-                        parsed = _typed_values_vec(
-                            prop, exploded.reset_index(drop=True).astype(str)
-                        )
-                        ok = parsed["value_type"].notna().values
-                        emit(
-                            labels[ok],
-                            nid,
-                            prop,
-                            parsed.loc[ok, "value_type"].values,
-                            parsed.loc[ok, "value"].values,
-                        )
-
-    if not frames:
-        return pd.DataFrame(columns=["node_id", "prop", "value_type", "value", "src_file"])
-    return pd.concat(frames, ignore_index=True)
+                ref = F.lit(f"l:{payload}")
+                singles.append(F.when(emits, stmt(nid, prop, F.lit("UNRESOLVED_REF"), ref)))
+            elif payload in present:
+                multi.append(
+                    F.transform(
+                        cell_values(payload, prop),
+                        lambda t: F.when(emits, stmt(nid, prop, t.value_type, t.value)),
+                    )
+                )
+    statements = F.concat(F.array(*singles), *multi)
+    return parse, F.inline(F.filter(statements, lambda s: s.isNotNull()))
 
 
 def expand_template(
@@ -308,13 +216,12 @@ def expand_template(
     full shuffle; at scale always supply a natural key column.
 
     ``min_partitions``: repartition the scan up to this count before
-    the Python stage — a single small CSV otherwise expands on one
-    task (the reference parallelizes thread-per-FILE,
-    Processor.java:272-293; we parallelize within the file too). At
-    real scale the scan already has more partitions and this is a
-    no-op (only ever raises the count).
+    the expansion — a single small CSV otherwise expands on one task
+    (the reference parallelizes thread-per-FILE, Processor.java:272-293;
+    we parallelize within the file too). At real scale the scan already
+    has more partitions and this is a no-op (only ever raises the
+    count).
     """
-    template = parse_tmcf(tmcf_text)
     if min_partitions and csv_df.rdd.getNumPartitions() < min_partitions:
         csv_df = csv_df.repartition(min_partitions)
     if row_id_col is None:
@@ -324,13 +231,8 @@ def expand_template(
             "_rowid", F.row_number().over(Window.orderBy(*csv_df.columns))
         )
         row_id_col = "_rowid"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _expand_batch(pdf, template, row_id_col)
-
-    return csv_df.mapInPandas(gen, schema=MCF_SCHEMA)
+    parse, rows = _expansion(tmcf_text, tuple(csv_df.columns), row_id_col)
+    return csv_df.select(*parse).select(rows)
 
 
 def read_csv(spark: SparkSession, path: str) -> DataFrame:

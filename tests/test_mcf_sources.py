@@ -125,3 +125,19 @@ def test_expand_template(spark):
     assert not any(n == "Table/E0/3" and p == "observationAbout" for (n, p, _, _) in got)
     # constants pass through on every row
     assert ("Table/E0/3", "measurementMethod", "RESOLVED_REF", "TestMethod") in got
+
+
+def test_expand_template_runs_no_python(spark):
+    """The expansion is a JVM projection: its executed plan holds no
+    Python evaluation node, so a genmcf call starts no Python worker."""
+    csv = spark.createDataFrame(
+        [("2019", "dcid:geoId/06", '100, "a,b", x\\,y', 1), ("2020", None, None, 2)],
+        ["Year", "GeoId", "Count", "rid"],
+    )
+    for rid in ("rid", None):
+        out = expand_template(csv, TMCF, row_id_col=rid, min_partitions=2)
+        assert out.count() > 0
+        qe = out._jdf.queryExecution()
+        plan = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+            assert node not in plan, (rid, node)

@@ -71,6 +71,13 @@ def test_split_never_raises_and_preserves_content(line):
         assert ",".join(parts) == line
 
 
+def test_jvm_strip_set_is_python_whitespace():
+    """col_split_and_strip strips exactly what str.strip() does."""
+    from import_spark.functions.values import _PY_WHITESPACE
+
+    assert sorted(_PY_WHITESPACE) == [c for c in map(chr, range(0x110000)) if c.isspace()]
+
+
 @given(_any_text)
 def test_strip_namespace_idempotent(val):
     """namespace strip is idempotent (McfUtil.java stripNamespace)."""
@@ -169,6 +176,47 @@ class TestSparkTwins:
             assert r["isn"] == is_number(r["s"]), ("is_number", r["s"])
             assert r["isd"] == is_valid_dcid(r["s"]), ("is_valid_dcid", r["s"])
             assert r["isdate"] == is_valid_date(r["s"]), ("is_valid_date", r["s"])
+
+    @_spark_settings
+    @given(
+        st.lists(
+            st.text(alphabet='a,"\\ \t\n\xa0[]:' + string.digits, max_size=16),
+            min_size=1,
+            max_size=40,
+        )
+    )
+    def test_cell_split_and_typed_parse_match_python(self, spark, values):
+        """The TMCF expansion's cell path (col_split_and_strip, then
+        col_parse_typed_value per value) equals split_and_strip without
+        enclosing-quote stripping, then parse_typed_value — escapes,
+        unbalanced quotes, newlines and str.strip() whitespace included,
+        for a plain and a reference property."""
+        from pyspark.sql import functions as F
+
+        from import_spark.functions.values import (
+            col_parse_typed_value,
+            col_split_and_strip,
+            parse_typed_value,
+        )
+
+        def typed(prop):
+            return F.transform(
+                col_split_and_strip(F.col("s")),
+                lambda v: col_parse_typed_value(prop, v),
+            ).alias(prop)
+
+        df = spark.createDataFrame([(v,) for v in values], "s string").select(
+            "s", typed("name"), typed("location")
+        )
+        for r in df.collect():
+            parts = split_and_strip(r["s"], strip_enclosing_quotes=False)
+            for prop in ("name", "location"):
+                want = None if parts is None else [parse_typed_value(prop, p) for p in parts]
+                got = None if r[prop] is None else [
+                    None if t["value_type"] is None else (t["value_type"], t["value"])
+                    for t in r[prop]
+                ]
+                assert got == want, (prop, r["s"])
 
 
 # ------------------------------------------------------- connected components

@@ -1,15 +1,15 @@
 """One shared vector set locks the two typed-value implementations
 together: the scalar spec (functions/values.py parse_typed_value) and
-its vectorized twin (sources/tmcf.py _typed_values_vec) are separately
-golden-tested but could drift — this file pins both on the same
-(prop, value) vectors (McfParser.java:336-437 semantics), including
-the McfParserTest-style corner shapes."""
+its Column twin (col_parse_typed_value, which the TMCF expansion runs)
+are separately golden-tested but could drift — this file pins both on
+the same (prop, value) vectors (McfParser.java:336-437 semantics),
+including the McfParserTest-style corner shapes."""
 
-import pandas as pd
 import pytest
 
-from import_spark.functions.values import parse_typed_value
-from import_spark.sources.tmcf import _typed_values_vec
+from pyspark.sql import functions as F
+
+from import_spark.functions.values import col_parse_typed_value, parse_typed_value
 
 # (prop, value) — ref props and plain props crossed with every value shape
 REF_PROPS = ["location", "typeOf", "observationAbout", "containedInPlace"]
@@ -33,21 +33,28 @@ VALUES = [
     "plain text",
     '""',
     "geoId/06",
+    # Java FP literals beyond plain decimals (StringUtil.isNumber)
+    "1.5f",
+    "1e5d",
+    "0x1p3",
 ]
 
 
 @pytest.mark.parametrize("prop", REF_PROPS + PLAIN_PROPS)
-def test_vectorized_matches_scalar_spec(prop):
-    vec = _typed_values_vec(prop, pd.Series(VALUES))
-    assert len(vec) == len(VALUES)
-    for i, val in enumerate(VALUES):
-        scalar = parse_typed_value(prop, val)
-        got_type = vec.iloc[i]["value_type"]
-        got_val = vec.iloc[i]["value"]
+def test_vectorized_matches_scalar_spec(spark, prop):
+    rows = (
+        spark.createDataFrame([(v,) for v in VALUES], "s string")
+        .select("s", col_parse_typed_value(prop, F.col("s")).alias("tv"))
+        .collect()
+    )
+    assert len(rows) == len(VALUES)
+    for r in rows:
+        scalar = parse_typed_value(prop, r["s"])
+        got = r["tv"]
         if scalar is None:
-            assert got_type is None or pd.isna(got_type), (prop, val, got_type)
+            assert got["value_type"] is None, (prop, r["s"], got)
         else:
-            assert (got_type, got_val) == scalar, (prop, val)
+            assert (got["value_type"], got["value"]) == scalar, (prop, r["s"])
 
 
 def test_known_corner_semantics():
@@ -66,3 +73,4 @@ def test_known_corner_semantics():
     # numbers and bools
     assert parse_typed_value("value", "123") == ("NUMBER", "123")
     assert parse_typed_value("value", "true") == ("NUMBER", "true")
+    assert parse_typed_value("value", "1.5f") == ("NUMBER", "1.5f")
