@@ -148,15 +148,6 @@ def legacy_obs_key_string(
     return "".join(parts)
 
 
-def legacy_obs_dcid(
-    pvs: dict[str, str], counts: dict[str, int] | None = None
-) -> str | None:
-    key = legacy_obs_key_string(pvs, counts)
-    if key is None:
-        return None
-    return V.DC_NAMESPACE + "o/" + long_id(key)
-
-
 def legacy_pop_key_string(pvs: dict[str, str], constraints: set[str] | None = None) -> str | None:
     """Legacy StatisticalPopulation key (DcidGenerator.java:237-304):
     popType + location + memberOf + sorted ``<cprop><value>`` pairs
@@ -193,13 +184,6 @@ def legacy_pop_key_string(pvs: dict[str, str], constraints: set[str] | None = No
             return None
         parts.append(f"{p}{v}")
     return "".join(parts)
-
-
-def legacy_pop_dcid(pvs: dict[str, str], constraints: set[str] | None = None) -> str | None:
-    key = legacy_pop_key_string(pvs, constraints)
-    if key is None:
-        return None
-    return V.POP_NAMESPACE + long_id(key)
 
 
 def pandas_long_id(keys: pd.Series, namespace: str = "") -> pd.Series:

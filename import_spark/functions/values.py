@@ -349,15 +349,6 @@ def col_is_valid_date(c):
     )
 
 
-def col_object_value_key(c):
-    """P15: ``first16(trim(v)) + ':' + sha256(trim(v))`` literal-node key
-    (PipelineUtils.java:450-455)."""
-    from pyspark.sql import functions as F
-
-    t = F.trim(c)
-    return F.concat(F.substring(t, 1, 16), F.lit(":"), F.sha2(t, 256))
-
-
 # P16 — gzip-compressed large literals (PipelineUtils.java:64-70,440-474;
 # decompress twin GraphReader.java:76-99). The reference stores the value
 # of these predicates as GZIP bytes in the Node table's `bytes` column.

@@ -6,14 +6,24 @@ grammar is the "template", and the emitted rows are long-form
 statements ``(subj, pred, obj_type, obj)`` (the flattening that
 GraphReader.java:107-155 / simple/kg_util/mcf_parser.py:169-240 do).
 
-Vectorized: one ``mapInPandas`` pass, pandas ``str.extractall`` with
-compiled regexes per statement anchor (Arrow-batched; no per-row
-Python). Deterministic node ids derive from ``(conv_id, turn_idx)``
-(the reference's TEST-mode row-number ids, TmcfCsvParser.java:41,137)
-hashed with FarmHash→base32 (DcidGenerator.java:354-375).
+One extractor, :func:`extract_statements`, in two parts:
+- ``_jvm_statements``: the base per-turn statements and the mention,
+  note, metric, define, see and sameAs anchors as ONE native
+  projection (``regexp_extract_all`` + array/explode inside whole-stage
+  codegen). Transcript node ids are xxhash64-hex, which Spark computes
+  natively; mention tokens and define targets are classified by
+  :func:`classify_token`.
+- ``_extract_batch_python``, the one Python (Arrow) stage: only the
+  complex-value (ComplexValueParser) and observe (FarmHash ``dc/o/``
+  ids, DcidGenerator.java:178-211) anchors, over the turns one rlike
+  pre-filter selects.
 
-Output kinds (one cached DF, filtered downstream — the Beam
-side-output pattern, PipelineUtils.java:222-242):
+External-id tokens come out as ``EXT_ID`` rows carrying
+``ext_prop``/``ext_id``; linking them to dcids is the next step
+(operators/link.py), under any of its strategies.
+
+Output kinds (one DF, filtered downstream — the Beam side-output
+pattern, PipelineUtils.java:222-242):
 - ``TRIPLE`` candidate statement rows
 - ``DEF``    local-entity definition records for the resolver
 - ``ERROR``  per-statement error rows (counter name in ``pred``)
@@ -21,20 +31,20 @@ side-output pattern, PipelineUtils.java:222-242):
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from import_spark.functions.complex_values import parse_complex_value
-from import_spark.functions.farmhash import long_id, long_id_batch
+from import_spark.functions.farmhash import long_id_batch
 from import_spark.functions.values import clean_numeric_string, is_number, is_valid_date
-from import_spark.vocabulary import place_dcid_prefix
 
 EXTRACT_SCHEMA = T.StructType(
     [
@@ -50,16 +60,26 @@ EXTRACT_SCHEMA = T.StructType(
     ]
 )
 
-# statement anchors (the "template"):
-_RE_MENTION = re.compile(r"we looked at (\S+)")
-_RE_NOTE = re.compile(r'note "([^"]*)"')
-_RE_METRIC = re.compile(r"metric is (-?\d+(?:\.\d+)?)")
+# JVM token class: under (?U), exactly Python's \S (Unicode White_Space
+# plus U+001C..1F as separators) — see `_matches` for why
+_TOK = r"[^\s\x1c-\x1f]"
+
+# statement anchors (the "template"); the JVM ones run under (?U)
+_MENTION = rf"we looked at ({_TOK}+)"
+_NOTE = r'note "([^"]*)"'
+_METRIC = r"metric is (-?\d+(?:\.\d+)?)"
+_DEFINE = rf"define (l:E\d+) = ({_TOK}+)"
+_SEE = r"see (l:E\d+)"
+_SAMEAS = rf"sameAs ({_TOK}+) ({_TOK}+)"
 _RE_COMPLEX = re.compile(r"(?:range|at coords) (\[[^\]]*\])")
 _RE_COMPLEX_OPEN = re.compile(r"(?:range|at coords) \[[^\]]*$")
-_RE_DEFINE = re.compile(r"define (l:E\d+) = (\S+)")
-_RE_SEE = re.compile(r"see (l:E\d+)")
 _RE_OBSERVE = re.compile(r"observe (\S+) (\S+) (\S+) = (\S+)(?: unit (\S+))?")
-_RE_SAMEAS = re.compile(r"sameAs (\S+) (\S+)")
+
+# superset guards: turns that can bear a narrow statement on the JVM
+# side (see / sameAs / define), and the turns the Python stage parses
+# (_RE_COMPLEX, _RE_COMPLEX_OPEN, _RE_OBSERVE)
+_NARROW_JVM = r"see l:E|sameAs |define l:E"
+_PY_NEEDED = r"range \[|at coords \[|observe "
 
 # external-id token prefixes → id property (Vocabulary.java:291-307 subset)
 EXT_PREFIXES = {
@@ -71,10 +91,6 @@ EXT_PREFIXES = {
 
 TURN_TYPE = "ConversationTurn"
 CONV_TYPE = "Conversation"
-
-
-def turn_dcid_key(conv_id: str, turn_idx) -> str:
-    return f"conv_id={conv_id}turn_idx={turn_idx}"
 
 
 # Transcript-domain node ids are xxhash64-hex — Spark evaluates them
@@ -92,247 +108,46 @@ def conv_node_col(conv):
     return F.format_string("dc/c/%016x", F.xxhash64(F.concat(F.lit("conv_id="), conv)))
 
 
-def _turn_dcids(conv_id: pd.Series, turn_idx: pd.Series) -> pd.Series:
-    from import_spark.functions.xxhash import hex_id
+def _matches(pattern: str, group: int):
+    """All matches of one anchor group in ``text``, as an array.
 
-    keys = "conv_id=" + conv_id + "turn_idx=" + turn_idx.astype(str)
-    return "dc/t/" + keys.map(hex_id)
+    Every pattern carries the embedded ``(?U)`` flag
+    (UNICODE_CHARACTER_CLASS): Java's default ``\\S``/``\\d`` are
+    ASCII-only while the oracle (Python ``re``) is Unicode-aware, so
+    without it a token followed by U+00A0/U+2009/… whitespace is
+    swallowed into the token and dictionary links silently miss. With
+    ``(?U)`` the JVM tokenizes on Unicode White_Space; the sole
+    residual difference is U+001C..1F, which Python deems whitespace
+    and the Unicode property does not — token classes therefore use
+    ``_TOK`` (``[^\\s\\x1c-\\x1f]``), which under ``(?U)`` is
+    character-for-character Python's ``\\S``."""
+    return F.regexp_extract_all(F.col("text"), F.lit("(?U)" + pattern), F.lit(group))
 
 
-def _conv_dcids(conv_id: pd.Series) -> pd.Series:
-    from import_spark.functions.xxhash import hex_id
-
-    keys = "conv_id=" + conv_id
-    # hash only distinct convs per batch, then map back
-    uniq = keys.unique()
-    return keys.map({k: "dc/c/" + hex_id(k) for k in uniq})
+def linkable_tokens():
+    """Every token of ``text`` that :func:`classify_token` classifies:
+    mention tokens and define targets, as one array."""
+    return F.concat(_matches(_MENTION, 1), _matches(_DEFINE, 2))
 
 
-def _classify_token(tok: pd.Series) -> pd.DataFrame:
-    """Mention token → (obj_type, obj, ext_prop, ext_id).
+def classify_token(tok):
+    """Token Column → ``(obj_type, obj, ext_prop, ext_id)`` Columns.
 
-    ``prefix:id`` with a known prefix → EXT_ID awaiting linking;
-    ``dcid:x`` → RESOLVED_REF (namespace strip, McfUtil.java:164-171);
-    anything containing ``/`` (e.g. geoId/06) → already a dcid.
-    """
-    out = pd.DataFrame(
-        {
-            "obj_type": "RESOLVED_REF",
-            "obj": tok,
-            "ext_prop": None,
-            "ext_id": None,
-        },
-        index=tok.index,
+    ``prefix:id`` with a known prefix → ``EXT_ID`` awaiting linking
+    (null ``obj``); ``dcid:x`` → ``RESOLVED_REF`` x (namespace strip,
+    McfUtil.java:164-171); anything else (e.g. geoId/06) is already a
+    dcid."""
+    split = r"^([A-Za-z]+):(.+)$"
+    pfx = F.regexp_extract(tok, split, 1)
+    rest = F.regexp_extract(tok, split, 2)
+    prop = F.create_map(*[F.lit(x) for kv in EXT_PREFIXES.items() for x in kv])[pfx]
+    is_ext = prop.isNotNull()
+    return (
+        F.when(is_ext, F.lit("EXT_ID")).otherwise(F.lit("RESOLVED_REF")),
+        F.when(~is_ext, F.when(pfx == "dcid", rest).otherwise(tok)),
+        prop,
+        F.when(is_ext, rest),
     )
-    split = tok.str.extract(r"^([A-Za-z]+):(.+)$")
-    has_pfx = split[0].notna()
-    known = split[0].map(EXT_PREFIXES).notna()
-    ext = has_pfx & known
-    out.loc[ext, "obj_type"] = "EXT_ID"
-    out.loc[ext, "ext_prop"] = split.loc[ext, 0].map(EXT_PREFIXES)
-    out.loc[ext, "ext_id"] = split.loc[ext, 1]
-    out.loc[ext, "obj"] = None
-    dcid_pfx = has_pfx & (split[0] == "dcid")
-    out.loc[dcid_pfx, "obj"] = split.loc[dcid_pfx, 1]
-    return out
-
-
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    conv = pdf["conv_id"]
-    tidx = pdf["turn_idx"]
-    text = pdf["text"]
-    turn_id = _turn_dcids(conv, tidx)
-    conv_id_dc = _conv_dcids(conv)
-
-    frames: list[pd.DataFrame] = []
-
-    def _v(x):
-        # Series → positional values (avoid index alignment in the ctor)
-        return x.values if hasattr(x, "values") else x
-
-    def emit(
-        idx, subj, pred, obj_type, obj, kind="TRIPLE", ext_prop=None, ext_id=None
-    ) -> None:
-        frames.append(
-            pd.DataFrame(
-                {
-                    "conv_id": conv.loc[idx].values,
-                    "turn_idx": tidx.loc[idx].values,
-                    "kind": kind,
-                    "subj": _v(subj),
-                    "pred": _v(pred),
-                    "obj_type": _v(obj_type),
-                    "obj": _v(obj),
-                    "ext_prop": _v(ext_prop),
-                    "ext_id": _v(ext_id),
-                }
-            )
-        )
-
-    # --- per-turn base statements ---
-    emit(pdf.index, turn_id, "typeOf", "RESOLVED_REF", TURN_TYPE)
-    emit(pdf.index, turn_id, "partOf", "RESOLVED_REF", conv_id_dc)
-    emit(pdf.index, conv_id_dc, "typeOf", "RESOLVED_REF", CONV_TYPE)
-    emit(pdf.index, turn_id, "role", "TEXT", pdf["role"])
-    has_tool = pdf.index[pdf["tool"] != ""]
-    if len(has_tool):
-        emit(has_tool, turn_id.loc[has_tool], "toolUsed", "TEXT", pdf["tool"].loc[has_tool])
-
-    # --- mentions ---
-    m = text.str.extractall(_RE_MENTION)
-    if len(m):
-        i = m.index.get_level_values(0)
-        cls = _classify_token(m[0].reset_index(drop=True))
-        emit(
-            i,
-            turn_id.loc[i],
-            "mentions",
-            cls["obj_type"],
-            cls["obj"],
-            ext_prop=cls["ext_prop"],
-            ext_id=cls["ext_id"],
-        )
-
-    # --- quoted notes ---
-    m = text.str.extractall(_RE_NOTE)
-    if len(m):
-        i = m.index.get_level_values(0)
-        emit(i, turn_id.loc[i], "says", "TEXT", m[0].reset_index(drop=True))
-
-    # --- numbers ---
-    m = text.str.extractall(_RE_METRIC)
-    if len(m):
-        i = m.index.get_level_values(0)
-        emit(i, turn_id.loc[i], "value", "NUMBER", m[0].reset_index(drop=True))
-
-    # --- complex values (Quantity/QuantityRange/GeoCoordinates, P8) ---
-    m = text.str.extractall(_RE_COMPLEX)
-    if len(m):
-        i = m.index.get_level_values(0)
-        vals = m[0].reset_index(drop=True)
-        lut = {v: parse_complex_value(v) for v in vals.unique()}
-        parsed = vals.map(lut)
-        ok = parsed.notna().values
-        cv = parsed[ok]
-        iok = i[ok]
-        dcids = cv.map(lambda c: c.dcid)
-        pred = cv.map(lambda c: "location" if c.type_of == "GeoCoordinates" else "quantity")
-        emit(iok, turn_id.loc[iok], pred, "RESOLVED_REF", dcids)
-        # child node triples for each distinct complex value
-        emit(iok, dcids, "typeOf", "RESOLVED_REF", cv.map(lambda c: c.type_of))
-        emit(iok, dcids, "name", "TEXT", cv.map(lambda c: c.name))
-        for k in range(3):  # complex pvs have ≤3 entries
-            sub = cv[cv.map(lambda c: len(c.pvs) > k)]
-            if not len(sub):
-                continue
-            isub = iok[cv.map(lambda c: len(c.pvs) > k).values]
-            emit(
-                isub,
-                sub.map(lambda c: c.dcid),
-                sub.map(lambda c, _k=k: c.pvs[_k][0]),
-                sub.map(lambda c, _k=k: c.pvs[_k][1]),
-                sub.map(lambda c, _k=k: c.pvs[_k][2]),
-            )
-        bad = ~ok
-        if bad.any():
-            ibad = i[bad]
-            emit(
-                ibad,
-                turn_id.loc[ibad],
-                "MCF_MalformedComplexValue",
-                "TEXT",
-                vals[bad],
-                kind="ERROR",
-            )
-    # unterminated complex value → error (MCF_MalformedComplexValue,
-    # McfParser.java:377-384)
-    open_bad = text.str.contains(_RE_COMPLEX_OPEN)
-    if open_bad.any():
-        ib = pdf.index[open_bad]
-        emit(ib, turn_id.loc[ib], "MCF_MalformedComplexValue", "TEXT", text.loc[ib], kind="ERROR")
-
-    # --- defines (DEF records for the resolver) + defines triple ---
-    m = text.str.extractall(_RE_DEFINE)
-    if len(m):
-        i = m.index.get_level_values(0)
-        local = m[0].reset_index(drop=True)
-        tgt = m[1].reset_index(drop=True)
-        cls = _classify_token(tgt)
-        is_local_tgt = tgt.str.startswith("l:")
-        cls.loc[is_local_tgt.values, "obj_type"] = "UNRESOLVED_REF"
-        cls.loc[is_local_tgt.values, "obj"] = tgt[is_local_tgt]
-        emit(
-            i,
-            local,
-            "__def__",
-            cls["obj_type"],
-            cls["obj"],
-            kind="DEF",
-            ext_prop=cls["ext_prop"],
-            ext_id=cls["ext_id"],
-        )
-        emit(i, turn_id.loc[i], "defines", "UNRESOLVED_REF", local)
-
-    # --- uses ---
-    m = text.str.extractall(_RE_SEE)
-    if len(m):
-        i = m.index.get_level_values(0)
-        emit(i, turn_id.loc[i], "references", "UNRESOLVED_REF", m[0].reset_index(drop=True))
-
-    # --- observations (SVObs, dcid per DcidGenerator.java:178-211) ---
-    m = text.str.extractall(_RE_OBSERVE)
-    if len(m):
-        i = m.index.get_level_values(0)
-        place = m[0].reset_index(drop=True)
-        var = m[1].reset_index(drop=True)
-        date = m[2].reset_index(drop=True)
-        val = m[3].reset_index(drop=True).map(clean_numeric_string)
-        unit = m[4].reset_index(drop=True)
-        date_ok = date.map(is_valid_date)
-        val_ok = val.map(is_number)
-        good = (date_ok & val_ok).values
-        if (~good).any():
-            ibad = i[~good]
-            cnt = pd.Series("Sanity_InvalidObsDate", index=date.index[~good])
-            cnt[~val_ok[~good]] = "Sanity_NonDoubleObsValue"
-            emit(ibad, turn_id.loc[ibad], cnt, "TEXT", (date + "=" + val)[~good], kind="ERROR")
-        ig = i[good]
-        if len(ig):
-            pg, vg, dg, vvg, ug = (s[good].reset_index(drop=True) for s in (place, var, date, val, unit))
-            # ordered SVObs key string (DcidGenerator.java:178-211),
-            # vectorized: unit appended only where present
-            keys = (
-                "observationAbout=" + pg
-                + "variableMeasured=" + vg
-                + "observationDate=" + dg
-                + "value=" + vvg
-                + np.where(ug.fillna("") != "", "unit=" + ug.fillna(""), "")
-            )
-            obs_id = pd.Series("dc/o/" + long_id_batch(keys.values), index=pg.index)
-            emit(ig, obs_id, "typeOf", "RESOLVED_REF", "StatVarObservation")
-            emit(ig, obs_id, "observationAbout", "RESOLVED_REF", pg)
-            emit(ig, obs_id, "variableMeasured", "RESOLVED_REF", vg)
-            emit(ig, obs_id, "observationDate", "TEXT", dg)
-            emit(ig, obs_id, "value", "NUMBER", vvg)
-            has_u = ug.notna() & (ug != "")
-            if has_u.any():
-                iu = ig[has_u.values]
-                emit(iu, obs_id[has_u], "unit", "RESOLVED_REF", ug[has_u])
-            emit(ig, turn_id.loc[ig], "observes", "RESOLVED_REF", obs_id)
-
-    # --- sameAs edges ---
-    m = text.str.extractall(_RE_SAMEAS)
-    if len(m):
-        i = m.index.get_level_values(0)
-        a = m[0].reset_index(drop=True)
-        b = m[1].reset_index(drop=True)
-        emit(i, a, "sameAs", "RESOLVED_REF", b)
-
-    if not frames:
-        return pd.DataFrame(columns=[f.name for f in EXTRACT_SCHEMA.fields])
-    out = pd.concat(frames, ignore_index=True)
-    out["turn_idx"] = out["turn_idx"].astype("int32")
-    return out
 
 
 def statement_bearing(transcripts: DataFrame) -> DataFrame:
@@ -351,214 +166,99 @@ def statement_bearing(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def extract_statements(transcripts: DataFrame) -> DataFrame:
-    """transcripts → long-form candidate statements (narrow, no shuffle)."""
+@functools.lru_cache(maxsize=2)
+def _statement_array(narrow_only: bool) -> Column:
+    """Every anchor except complex/observe as one array of statement
+    structs per turn (nulls filtered). Built once per mode: the Column
+    tree costs thousands of py4j calls, and every later extraction
+    reuses it.
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _extract_batch(pdf)
-
-    # column-prune before the Python boundary: ts never crosses Arrow
-    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
-    return statement_bearing(transcripts).select(*cols).mapInPandas(
-        gen, schema=EXTRACT_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# Fused extract+link (the pipeline hot path)
-# ---------------------------------------------------------------------------
-# Bandwidth design (what bounds this stage at high core counts is
-# memory bandwidth — Arrow serialization both ways plus the Python
-# workers' copies — not CPU):
-# 1. The dcid dictionary is tiny (the reference batches it over RPC,
-#    ReconClient.java:31), so linking happens inline — a map literal
-#    JVM-side, a dict closure Python-side; no downstream join.
-# 2. The SIMPLE anchors (base per-turn statements, mentions, notes,
-#    metrics, sees, sameAs) never touch Python at all: they are
-#    regexp_extract_all + array/explode column expressions over the
-#    transcript scan, inside whole-stage codegen. This is possible
-#    because the transcript-domain node ids (dc/t/, dc/c/) are
-#    format_string('%016x', xxhash64(key)) — native — rather than
-#    farmhash (which has no JVM column function); the reference-parity
-#    dcids (dc/o/ observations etc.) stay farmhash.
-# 3. Only turns carrying a DEFINE / complex-value / observe statement
-#    (the parse-heavy grammar) cross the Arrow boundary, pre-filtered
-#    by one rlike — a fraction of the corpus — and their turn ids
-#    arrive precomputed from the JVM so Python hashes nothing but the
-#    farmhash observation keys.
-
-FUSED_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),  # TRIPLE | DEF | ERROR
-        T.StructField("subj", T.StringType(), True),
-        T.StructField("pred", T.StringType(), True),
-        T.StructField("obj_type", T.StringType(), True),
-        T.StructField("obj", T.StringType(), True),
-    ]
-)
-
-OUT_COLS = ["conv_id", "turn_idx", "kind", "subj", "pred", "obj_type", "obj"]
-
-# JVM token class: under (?U), exactly Python's \S (Unicode White_Space
-# plus U+001C..1F as separators) — see `anchored` for why
-_TOK = r"[^\s\x1c-\x1f]"
-
-# turns that need the Python parser: DEFINE (resolver records), complex
-# values (ComplexValueParser), observations (farmhash dc/o/ ids) — a
-# superset guard for the corresponding _RE_* anchors
-_PY_NEEDED = r"define l:E|range \[|at coords \[|observe "
-
-
-def _resolve_token(tok: pd.Series, dcid_map: dict) -> pd.Series:
-    """Mention token → resolved dcid (dictionary first-wins, priority
-    prefix fallback — J1 + DcidGenerator.forPlace semantics)."""
-    split = tok.str.extract(r"^([A-Za-z]+):(.+)$")
-    prefix, rest = split[0], split[1]
-    known = prefix.map(EXT_PREFIXES)
-    out = tok.copy()
-    is_dcid = prefix == "dcid"
-    out[is_dcid] = rest[is_dcid]
-    is_ext = known.notna()
-    if is_ext.any():
-        props = known[is_ext]
-        exts = rest[is_ext]
-        hits = pd.Series(
-            [dcid_map.get((p, e)) for p, e in zip(props, exts)], index=props.index
-        )
-        fallback = props.map(place_dcid_prefix) + "/" + exts
-        out[is_ext] = hits.fillna(fallback)
-    return out
-
-
-def _link_token_col(tok, dcid_map: dict):
-    """JVM twin of ``_resolve_token``: dictionary first-wins via a map
-    literal (the dict is RPC-batch-sized, ReconClient.java:31), priority
-    prefix fallback, ``dcid:`` namespace strip — all native."""
-    pfx = F.regexp_extract(tok, r"^([A-Za-z]+):(.+)$", 1)
-    rest = F.regexp_extract(tok, r"^([A-Za-z]+):(.+)$", 2)
-    entries: list = []
-    for (p, e), d in sorted(dcid_map.items()):
-        entries += [F.lit(f"{p}\x00{e}"), F.lit(d)]
-    lut = F.create_map(*entries) if entries else F.create_map()
-    prop = F.lit(None).cast("string")
-    fb_pfx = F.lit(None).cast("string")
-    for k, v in EXT_PREFIXES.items():
-        prop = F.when(pfx == k, F.lit(v)).otherwise(prop)
-        fb_pfx = F.when(pfx == k, F.lit(place_dcid_prefix(v))).otherwise(fb_pfx)
-    hit = lut[F.concat(prop, F.lit("\x00"), rest)]
-    return (
-        F.when(pfx == "dcid", rest)
-        .when(prop.isNotNull(), F.coalesce(hit, F.concat(fb_pfx, F.lit("/"), rest)))
-        .otherwise(tok)
-    )
-
-
-def _jvm_statements(
-    transcripts: DataFrame, dcid_map: dict, narrow_only: bool = False
-) -> DataFrame:
-    """The simple anchors as ONE native projection: base per-turn
-    statements + mentions (linked inline) + notes + metrics + sees +
-    sameAs, concatenated into an array and exploded — a single
-    whole-stage-codegen scan, zero Python.
-
-    ``narrow_only`` keeps just the narrow statement classes this branch
-    produces (sees → UNRESOLVED_REF locals, sameAs edges) — the cheap
-    first pass that feeds the resolver/CC side tables while the fat
-    rows are recomputed by the big fused pass (plans/kg_pipeline.py)."""
+    ``narrow_only`` keeps just the narrow statement classes this part
+    produces (DEF records, defines/sees → UNRESOLVED_REF locals, sameAs
+    edges) — the cheap first pass that feeds the resolver/CC side
+    tables while the fat rows are recomputed by the big pass
+    (plans/kg_pipeline.py)."""
     turn = turn_id_col(F.col("conv_id"), F.col("turn_idx"))
     cnode = conv_node_col(F.col("conv_id"))
+    null = F.lit(None).cast("string")
 
-    def s(subj, pred, obj_type, obj):
+    def s(subj, pred, obj_type, obj, kind="TRIPLE", ext_prop=null, ext_id=null):
+        def c(v):
+            return F.lit(v) if isinstance(v, str) else v
+
         return F.struct(
-            F.lit("TRIPLE").alias("kind"),
-            (F.lit(subj) if isinstance(subj, str) else subj).alias("subj"),
-            (F.lit(pred) if isinstance(pred, str) else pred).alias("pred"),
-            F.lit(obj_type).alias("obj_type"),
-            (F.lit(obj) if isinstance(obj, str) else obj).alias("obj"),
+            c(kind).alias("kind"),
+            c(subj).alias("subj"),
+            c(pred).alias("pred"),
+            c(obj_type).alias("obj_type"),
+            c(obj).alias("obj"),
+            ext_prop.alias("ext_prop"),
+            ext_id.alias("ext_id"),
         )
 
-    base = F.array(
-        s(turn, "typeOf", "RESOLVED_REF", TURN_TYPE),
-        s(turn, "partOf", "RESOLVED_REF", cnode),
-        s(cnode, "typeOf", "RESOLVED_REF", CONV_TYPE),
-        # an absent property is simply not asserted (a null obj would
-        # be unserializable in the MCF sink) — same rule as tool below
-        F.when(F.col("role").isNotNull(), s(turn, "role", "TEXT", F.col("role"))),
-        F.when(F.col("tool") != "", s(turn, "toolUsed", "TEXT", F.col("tool"))),
-    )
+    def mention(tok):
+        obj_type, obj, prop, ext = classify_token(tok)
+        return s(turn, "mentions", obj_type, obj, ext_prop=prop, ext_id=ext)
 
-    def anchored(pattern: str, build):
-        """regexp_extract_all → one struct per match (multi-match safe,
-        same semantics as the pandas extractall path).
-
-        Every pattern carries the embedded ``(?U)`` flag
-        (UNICODE_CHARACTER_CLASS): Java's default ``\\S``/``\\d`` are
-        ASCII-only while the Python twin (``re``) is Unicode-aware, so
-        without it a token followed by U+00A0/U+2009/… whitespace is
-        swallowed into the token on the JVM path and the two engines
-        emit different statements (and dictionary links silently miss).
-        With ``(?U)`` both sides tokenize on Unicode White_Space; the
-        sole residual difference is U+001C..1F, which Python deems
-        whitespace and the Unicode property does not — token classes
-        therefore use ``_TOK`` (``[^\\s\\x1c-\\x1f]``), which under
-        ``(?U)`` is character-for-character Python's ``\\S``."""
-        return F.transform(
-            F.regexp_extract_all(F.col("text"), F.lit("(?U)" + pattern), F.lit(1)), build
+    def define(local, tgt):
+        # DEF record for the resolver: a local target stays a local ref
+        obj_type, obj, prop, ext = classify_token(tgt)
+        obj_type = F.when(tgt.startswith("l:"), F.lit("UNRESOLVED_REF")).otherwise(obj_type)
+        return F.array(
+            s(local, "__def__", obj_type, obj, kind="DEF", ext_prop=prop, ext_id=ext),
+            s(turn, "defines", "UNRESOLVED_REF", local),
         )
 
-    mentions = anchored(
-        rf"we looked at ({_TOK}+)",
-        lambda tok: s(turn, "mentions", "RESOLVED_REF", _link_token_col(tok, dcid_map)),
-    )
-    notes = anchored(r'note "([^"]*)"', lambda v: s(turn, "says", "TEXT", v))
-    metrics = anchored(
-        r"metric is (-?\d+(?:\.\d+)?)", lambda v: s(turn, "value", "NUMBER", v)
-    )
+    defines = F.flatten(F.zip_with(_matches(_DEFINE, 1), _matches(_DEFINE, 2), define))
     sees = F.transform(
-        F.regexp_extract_all(F.col("text"), F.lit(r"(?U)see (l:E\d+)"), F.lit(1)),
-        lambda v: F.struct(
-            F.lit("TRIPLE").alias("kind"),
-            turn.alias("subj"),
-            F.lit("references").alias("pred"),
-            F.lit("UNRESOLVED_REF").alias("obj_type"),
-            v.alias("obj"),
-        ),
+        _matches(_SEE, 1), lambda v: s(turn, "references", "UNRESOLVED_REF", v)
     )
-    same_a = F.regexp_extract_all(
-        F.col("text"), F.lit(rf"(?U)sameAs ({_TOK}+) ({_TOK}+)"), F.lit(1)
+    sames = F.zip_with(
+        _matches(_SAMEAS, 1),
+        _matches(_SAMEAS, 2),
+        lambda a, b: s(a, "sameAs", "RESOLVED_REF", b),
     )
-    same_b = F.regexp_extract_all(
-        F.col("text"), F.lit(rf"(?U)sameAs ({_TOK}+) ({_TOK}+)"), F.lit(2)
-    )
-    sames = F.zip_with(same_a, same_b, lambda a, b: s(a, "sameAs", "RESOLVED_REF", b))
-
     if narrow_only:
-        arr = F.concat(sees, sames)
+        arr = F.concat(defines, sees, sames)
     else:
-        arr = F.concat(base, mentions, notes, metrics, sees, sames)
+        base = F.array(
+            s(turn, "typeOf", "RESOLVED_REF", TURN_TYPE),
+            s(turn, "partOf", "RESOLVED_REF", cnode),
+            s(cnode, "typeOf", "RESOLVED_REF", CONV_TYPE),
+            # an absent property is simply not asserted (a null obj
+            # would be unserializable in the MCF sink)
+            F.when(F.col("role").isNotNull(), s(turn, "role", "TEXT", F.col("role"))),
+            F.when(F.col("tool") != "", s(turn, "toolUsed", "TEXT", F.col("tool"))),
+        )
+        mentions = F.transform(_matches(_MENTION, 1), mention)
+        notes = F.transform(_matches(_NOTE, 1), lambda v: s(turn, "says", "TEXT", v))
+        metrics = F.transform(
+            _matches(_METRIC, 1), lambda v: s(turn, "value", "NUMBER", v)
+        )
+        arr = F.concat(base, mentions, notes, metrics, defines, sees, sames)
+    return F.filter(arr, lambda x: x.isNotNull())
+
+
+def _jvm_statements(transcripts: DataFrame, narrow_only: bool = False) -> DataFrame:
+    """The JVM part of the extraction: ONE native projection, the
+    statement array exploded — a single whole-stage-codegen scan, zero
+    Python."""
     return transcripts.select(
-        "conv_id",
-        "turn_idx",
-        F.explode(F.filter(arr, lambda x: x.isNotNull())).alias("b"),
-    ).select("conv_id", "turn_idx", "b.kind", "b.subj", "b.pred", "b.obj_type", "b.obj")
+        "conv_id", "turn_idx", F.explode(_statement_array(narrow_only)).alias("b")
+    ).select("conv_id", "turn_idx", "b.*")
 
 
-def _extract_batch_python(
-    pdf: pd.DataFrame, dcid_map: dict, narrow_only: bool = False
-) -> pd.DataFrame:
-    """The parse-heavy anchors (define / complex / observe) for the
-    pre-filtered turn subset. ``turn_id`` arrives precomputed (JVM).
+def _extract_batch_python(pdf: pd.DataFrame, narrow_only: bool = False) -> pd.DataFrame:
+    """The complex-value and observe anchors for the pre-filtered turn
+    subset, as ``EXTRACT_SCHEMA`` rows minus the ext columns (these
+    anchors carry no external ids). ``turn_id`` arrives precomputed
+    (JVM).
 
-    ``narrow_only`` emits just the narrow classes (DEF records, the
-    defines local-ref triple, ERROR rows): the statements still get
+    ``narrow_only`` emits just the ERROR rows: the statements still get
     PARSED (malformed complex values / invalid observations must be
     classified either way) but the fat result rows — complex-value
     child triples and the 6-row observation fan-out with its farmhash
-    dc/o/ ids — are skipped; the big fused pass recomputes those."""
+    dc/o/ ids — are skipped; the big pass recomputes those."""
     conv = pdf["conv_id"]
     tidx = pdf["turn_idx"]
     text = pdf["text"]
@@ -584,6 +284,7 @@ def _extract_batch_python(
             )
         )
 
+    # --- complex values (Quantity/QuantityRange/GeoCoordinates, P8) ---
     m = text.str.extractall(_RE_COMPLEX)
     if len(m):
         i = m.index.get_level_values(0)
@@ -597,9 +298,10 @@ def _extract_batch_python(
             dcids = cv.map(lambda c: c.dcid)
             pred = cv.map(lambda c: "location" if c.type_of == "GeoCoordinates" else "quantity")
             emit(iok, turn_id.loc[iok], pred, "RESOLVED_REF", dcids)
+            # child node triples for each complex value
             emit(iok, dcids, "typeOf", "RESOLVED_REF", cv.map(lambda c: c.type_of))
             emit(iok, dcids, "name", "TEXT", cv.map(lambda c: c.name))
-            for k in range(3):
+            for k in range(3):  # complex pvs have ≤3 entries
                 mask = cv.map(lambda c, _k=k: len(c.pvs) > _k)
                 sub = cv[mask]
                 if not len(sub):
@@ -617,26 +319,15 @@ def _extract_batch_python(
             ibad = i[bad]
             emit(ibad, turn_id.loc[ibad], "MCF_MalformedComplexValue", "TEXT",
                  vals[bad], kind="ERROR")
+    # unterminated complex value → error (MCF_MalformedComplexValue,
+    # McfParser.java:377-384)
     open_bad = text.str.contains(_RE_COMPLEX_OPEN)
     if open_bad.any():
         ib = pdf.index[open_bad]
         emit(ib, turn_id.loc[ib], "MCF_MalformedComplexValue", "TEXT",
              text.loc[ib], kind="ERROR")
 
-    m = text.str.extractall(_RE_DEFINE)
-    if len(m):
-        i = m.index.get_level_values(0)
-        local = m[0].reset_index(drop=True)
-        tgt = m[1].reset_index(drop=True)
-        is_local_tgt = tgt.str.startswith("l:")
-        obj = _resolve_token(tgt, dcid_map)
-        obj[is_local_tgt] = tgt[is_local_tgt]
-        obj_type = pd.Series(
-            np.where(is_local_tgt, "UNRESOLVED_REF", "RESOLVED_REF"), index=tgt.index
-        )
-        emit(i, local, "__def__", obj_type, obj, kind="DEF")
-        emit(i, turn_id.loc[i], "defines", "UNRESOLVED_REF", local)
-
+    # --- observations (SVObs, dcid per DcidGenerator.java:178-211) ---
     m = text.str.extractall(_RE_OBSERVE)
     if len(m):
         i = m.index.get_level_values(0)
@@ -656,6 +347,8 @@ def _extract_batch_python(
         ig = i[good]
         if len(ig) and not narrow_only:
             pg, vg, dg, vvg, ug = (s[good].reset_index(drop=True) for s in (place, var, date, val, unit))
+            # ordered SVObs key string, vectorized: unit appended only
+            # where present
             keys = (
                 "observationAbout=" + pg
                 + "variableMeasured=" + vg
@@ -676,53 +369,35 @@ def _extract_batch_python(
             emit(ig, turn_id.loc[ig], "observes", "RESOLVED_REF", obs_id)
 
     if not frames:
-        return pd.DataFrame(columns=OUT_COLS)
+        return pd.DataFrame(columns=EXTRACT_SCHEMA.fieldNames()[:-2])
     out = pd.concat(frames, ignore_index=True)
     out["turn_idx"] = out["turn_idx"].astype("int32")
-    # cluster the batch by statement class (stable, so within-class
-    # emit order is preserved): the pipeline cache's batch-stat
-    # pruning skips whole 10k-row batches only when they are
-    # class-homogeneous, and a kind/pred/obj_type keyed argsort over
-    # one in-memory batch is ~free compared to a Spark-side sort of
-    # the materialized statement table
-    cls = (
-        (out["kind"] == "DEF") * 3
-        + (out["kind"] == "ERROR") * 4
-        + ((out["kind"] == "TRIPLE") & (out["pred"] == "sameAs")) * 2
-        + ((out["kind"] == "TRIPLE") & (out["obj_type"] == "UNRESOLVED_REF")) * 1
-    )
-    out = out.iloc[np.argsort(cls.values, kind="stable")].reset_index(drop=True)
-    return out[OUT_COLS]
+    return out
 
 
-_NARROW_JVM = r"see l:E|sameAs "
-
-
-def extract_and_link(
-    transcripts: DataFrame, dcid_map: dict, narrow_only: bool = False
-) -> DataFrame:
-    """Fused extract+link; output semantics identical to
-    ``link_statements(extract_statements(df), dict_df)`` minus the
-    (internal) ext columns. Simple anchors run JVM-side; only the
-    DEFINE/complex/observe turn subset crosses Arrow.
+def extract_statements(transcripts: DataFrame, narrow_only: bool = False) -> DataFrame:
+    """transcripts → long-form candidate statements (``EXTRACT_SCHEMA``;
+    narrow, no shuffle). The JVM projection takes every turn; only the
+    complex/observe turn subset crosses Arrow, column-pruned (``ts``
+    and ``role``/``tool`` never cross).
 
     ``narrow_only=True`` returns exactly the narrow statement classes
     (DEF / ERROR / sameAs / UNRESOLVED_REF locals) — the same rows the
     full output yields for those classes, via the same code paths —
-    with the fat-row work elided and the JVM branch pre-filtered to
-    the see/sameAs turn subset."""
+    with the fat-row work elided and the JVM part pre-filtered to the
+    see/sameAs/define turn subset."""
     transcripts = statement_bearing(transcripts)
     src = (
         transcripts.filter(F.col("text").rlike(_NARROW_JVM))
         if narrow_only
         else transcripts
     )
-    jvm = _jvm_statements(src, dcid_map, narrow_only=narrow_only)
+    jvm = _jvm_statements(src, narrow_only=narrow_only)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
-                yield _extract_batch_python(pdf, dcid_map, narrow_only=narrow_only)
+                yield _extract_batch_python(pdf, narrow_only=narrow_only)
 
     py_in = transcripts.filter(F.col("text").rlike(_PY_NEEDED)).select(
         "conv_id",
@@ -730,5 +405,21 @@ def extract_and_link(
         turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("turn_id"),
         "text",
     )
-    py = py_in.mapInPandas(gen, schema=FUSED_SCHEMA)
-    return jvm.unionByName(py)
+    # the Python stage emits no external ids: its rows get null ext
+    # columns JVM-side, so the optimizer prunes that branch from any
+    # plan that keeps only ext rows (the salted link's join side)
+    py = py_in.mapInPandas(gen, schema=T.StructType(EXTRACT_SCHEMA.fields[:-2]))
+    null = F.lit(None).cast("string")
+    return jvm.unionByName(py.withColumns({"ext_prop": null, "ext_id": null}))
+
+
+def extract_and_link(
+    transcripts: DataFrame, dcid_map: dict, narrow_only: bool = False
+) -> DataFrame:
+    """:func:`extract_statements`, then the ``fused`` link over the
+    driver dictionary (``link.link_with_map``), minus the ext columns —
+    the same rows every link strategy yields."""
+    from import_spark.operators.link import link_with_map
+
+    extracted = extract_statements(transcripts, narrow_only=narrow_only)
+    return link_with_map(extracted, dcid_map).drop("ext_prop", "ext_id")

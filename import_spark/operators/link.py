@@ -1,4 +1,4 @@
-"""Stage 3 — link: external-id mentions → dcids via broadcast join.
+"""Stage 3 — link: external-id mentions → dcids, one step after extraction.
 
 Re-expresses the reference's resolution join (J1-J3):
 - ExternalIdResolver.java:57-152 — collect external ids, resolve
@@ -8,19 +8,31 @@ Re-expresses the reference's resolution join (J1-J3):
 - DcidGenerator.forPlace (DcidGenerator.java:213-229) — fallback dcid
   assignment ``<prefix>/<ext_id>`` for ids the dictionary misses.
 
-The dictionary is a small dimension → **broadcast hash join** (no
-shuffle of the big side; the skewed hot entity is harmless because a
-broadcast join has no key-partitioned reduce — the explicit salting the
-reference needs for Spanner writes, SpannerClient.java:305-316, is only
-required for shuffle joins; see operators/skew.py for that path).
+The extraction (operators/extract.py) leaves every external id as an
+``EXT_ID`` row with ``ext_prop``/``ext_id``. Three strategies rewrite
+those rows to ``RESOLVED_REF``, all through one fallback rule
+(``_rewrite_exprs``):
+- ``fused`` (:func:`link_with_map`): the driver dictionary as a map
+  literal over the ext columns — no join at all;
+- ``broadcast`` (:func:`link_statements`): the dictionary is a small
+  dimension → broadcast hash join (no shuffle of the big side; the
+  skewed hot entity is harmless because a broadcast join has no
+  key-partitioned reduce);
+- ``salted``: a dictionary past the broadcast budget → only the ext
+  rows shuffle, hot keys spread over salts (the explicit salting the
+  reference needs for Spanner writes, SpannerClient.java:305-316; see
+  operators/skew.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from import_spark import vocabulary as V
+from import_spark.operators.extract import EXT_PREFIXES, classify_token, linkable_tokens
 
 
 class DictionaryOverBudget(RuntimeError):
@@ -89,6 +101,45 @@ def prepare_dictionary(dcid_dict: DataFrame) -> DataFrame:
     )
 
 
+@functools.lru_cache(maxsize=16)
+def _rewrite_exprs(dict_items: tuple | None) -> dict[str, Column]:
+    """``obj``/``obj_type`` that rewrite EXT_ID rows to RESOLVED_REF: the
+    dictionary hit, else the priority-prefix fallback
+    ``<prefix>/<ext_id>`` (DcidGenerator.java:213-229,
+    ``vocabulary.place_dcid_prefix``) — the one rule every link
+    strategy applies; other rows pass through. The hit is the map
+    literal of ``dict_items`` (the ``fused`` strategy) or, for
+    ``None``, the joined ``_dict_dcid`` column. Built once per
+    dictionary: the Column trees cost hundreds of py4j calls."""
+    prop = F.col("ext_prop")
+    if dict_items is None:
+        hit = F.col("_dict_dcid")
+    elif dict_items:
+        lut = F.create_map(*[F.lit(x) for (p, e), d in dict_items for x in (f"{p}\x00{e}", d)])
+        hit = lut[F.concat(prop, F.lit("\x00"), F.col("ext_id"))]
+    else:
+        # an empty map() literal is map<void,void>, which a string key
+        # cannot index: no entries means every id takes the fallback
+        hit = F.lit(None).cast("string")
+    prefix = prop
+    for p in EXT_PREFIXES.values():
+        if V.place_dcid_prefix(p) != p:
+            prefix = F.when(prop == p, F.lit(V.place_dcid_prefix(p))).otherwise(prefix)
+    is_ext = prop.isNotNull()
+    fallback = F.concat(prefix, F.lit("/"), F.col("ext_id"))
+    return {
+        "obj": F.when(is_ext, F.coalesce(hit, fallback)).otherwise(F.col("obj")),
+        "obj_type": F.when(is_ext, F.lit("RESOLVED_REF")).otherwise(F.col("obj_type")),
+    }
+
+
+def link_with_map(extracted: DataFrame, dcid_map: dict) -> DataFrame:
+    """The ``fused`` strategy: the driver dictionary (``dictionary_map``
+    output, RPC-batch-sized, ReconClient.java:31) as a map literal
+    looked up on the ext columns — native, no join, no shuffle."""
+    return extracted.withColumns(_rewrite_exprs(tuple(sorted(dcid_map.items()))))
+
+
 def link_statements(
     extracted: DataFrame,
     dcid_dict: DataFrame,
@@ -97,41 +148,29 @@ def link_statements(
     hot: list[tuple] | None = None,
     hot_min_count: int = 1_000_000,
 ) -> DataFrame:
-    """Resolve every EXT_ID row (TRIPLE objects and DEF targets) to a dcid.
-
-    Dictionary hit → mapped dcid; miss → priority-prefix fallback
-    ``<prefix>/<ext_id>`` (DcidGenerator.java:213-229). Returns the
-    input with EXT_ID rows rewritten to RESOLVED_REF.
+    """Resolve every EXT_ID row (TRIPLE objects and DEF targets) to a
+    dcid by a join against the dictionary DataFrame; returns the input
+    with EXT_ID rows rewritten to RESOLVED_REF (``_rewrite_exprs``).
 
     ``strategy="broadcast"`` (default): the dictionary fits executor
     memory — broadcast hash join, no shuffle of the big side, hot
     entities free. ``strategy="salted"``: the dictionary exceeds the
     broadcast budget (a full Recon map at 10^12-turn scale) — only the
-    mention rows shuffle, joined via :func:`skew.salted_join` so hot
-    entities spread over ``n_salts`` reduce tasks; non-mention rows
-    bypass the shuffle entirely. Both strategies produce identical
-    output (equality-tested; the salted plan is hash-gated by the
-    ``j1_salted_link`` driver oracle on the same SQL as broadcast J1).
+    ext rows shuffle, joined via :func:`skew.salted_join` so hot
+    entities spread over ``n_salts`` reduce tasks; other rows bypass
+    the shuffle entirely. Both strategies and :func:`link_with_map`
+    produce identical output (equality-tested; the salted plan is
+    hash-gated by the ``j1_salted_link`` driver oracle on the same SQL
+    as broadcast J1).
     """
     dim = prepare_dictionary(dcid_dict).withColumnRenamed("dcid", "_dict_dcid")
-    # DcidGenerator.forPlace prefix mapping (isoCode→iso, nutsCode→nuts).
-    prefix_expr = (
-        F.when(F.col("ext_prop") == "isoCode", F.lit("iso"))
-        .when(F.col("ext_prop") == "nutsCode", F.lit("nuts"))
-        .otherwise(F.col("ext_prop"))
-    )
     is_ext = F.col("ext_prop").isNotNull()
-    resolved = F.coalesce(
-        F.col("_dict_dcid"), F.concat(prefix_expr, F.lit("/"), F.col("ext_id"))
-    )
     if strategy == "salted":
         from import_spark.operators.skew import salted_join
 
         dim_keyed = dim.withColumnRenamed("prop", "ext_prop")
-        ext_rows = extracted.filter(is_ext)
-        rest = extracted.filter(~is_ext)
         linked_ext = salted_join(
-            ext_rows,
+            extracted.filter(is_ext),
             dim_keyed,
             ["ext_prop", "ext_id"],
             how="left",
@@ -139,12 +178,11 @@ def link_statements(
             hot=hot,
             hot_min_count=hot_min_count,
         )
-        rewritten = (
-            linked_ext.withColumn("obj", resolved)
-            .withColumn("obj_type", F.lit("RESOLVED_REF"))
-            .drop("_dict_dcid")
+        return (
+            linked_ext.withColumns(_rewrite_exprs(None))
+            .select(*extracted.columns)
+            .unionByName(extracted.filter(~is_ext))
         )
-        return rewritten.select(*extracted.columns).unionByName(rest)
     if strategy != "broadcast":
         raise ValueError(f"unknown link strategy {strategy!r}")
     linked = (
@@ -156,13 +194,7 @@ def link_statements(
         .drop("prop")
         .drop(dim["ext_id"])
     )
-    return (
-        linked.withColumn("obj", F.when(is_ext, resolved).otherwise(F.col("obj")))
-        .withColumn(
-            "obj_type", F.when(is_ext, F.lit("RESOLVED_REF")).otherwise(F.col("obj_type"))
-        )
-        .drop("_dict_dcid")
-    )
+    return linked.withColumns(_rewrite_exprs(None)).drop("_dict_dcid")
 
 
 def local_graph_dictionary_df(nodes: DataFrame) -> DataFrame:
@@ -240,39 +272,18 @@ def derive_transcript_dictionary(
     import's dictionary. Pass 2 is the ordinary pipeline run with the
     derived dictionary.
 
-    Fully native (regexp_extract + distinct): the id-collection pass
+    Fully native (regexp_extract_all + distinct): the id-collection pass
     reads one column and shuffles only the distinct (prop, ext_id)
     set — dimension-sized even at 10^12 turns. ``recon_table``:
     (prop, ext_id, dcid) rows, the in-sandbox Recon API stand-in.
     """
-    # (?U) + _TOK: Unicode-aware tokenization, character-for-character
-    # the Python extraction twin's \S (see extract.py `anchored`) —
-    # without it an id followed by U+00A0-style whitespace collects a
-    # corrupted working-set key
-    from import_spark.operators.extract import _TOK
-
-    tok = F.explode(
-        F.array(
-            F.regexp_extract("text", rf"(?U)we looked at ({_TOK}+)", 1),
-            F.regexp_extract("text", rf"(?U)define (l:E\d+) = ({_TOK}+)", 2),
-        )
-    ).alias("tok")
-    parsed = (
-        transcripts.select(tok)
-        .filter(F.col("tok").contains(":"))
-        .select(
-            F.regexp_extract("tok", r"^([A-Za-z]+):(.+)$", 1).alias("pfx"),
-            F.regexp_extract("tok", r"^([A-Za-z]+):(.+)$", 2).alias("ext_id"),
-        )
-    )
-    from import_spark.operators.extract import EXT_PREFIXES
-
-    prop = F.col("pfx")
-    for k, v in EXT_PREFIXES.items():
-        prop = F.when(F.col("pfx") == k, F.lit(v)).otherwise(prop)
+    # the extraction's own token arrays and classifier, so the working
+    # set holds exactly the ids the link step will look up
+    _, _, prop, ext_id = classify_token(F.col("tok"))
     working_set = (
-        parsed.filter(F.col("pfx").isin(*EXT_PREFIXES))
-        .select(prop.alias("prop"), "ext_id")
+        transcripts.select(F.explode(linkable_tokens()).alias("tok"))
+        .select(prop.alias("prop"), ext_id.alias("ext_id"))
+        .filter(F.col("prop").isNotNull())
         .distinct()
     )
     # the Recon "batch lookup": only submitted ids come back
@@ -304,9 +315,9 @@ def derive_node_dictionary_df(nodes: DataFrame, recon_table: DataFrame) -> DataF
 
 
 def dcid_map_from_df(dcid_dict: DataFrame, budget_bytes: int | None = None) -> dict:
-    """Collect the (small) dictionary to a driver dict for UDF-closure
-    broadcast (the fused extract+link path). Deterministic first-wins
-    per (prop, ext_id) like prepare_dictionary. Raises
+    """Collect the (small) dictionary to a driver dict for the
+    ``fused`` map-literal link (:func:`link_with_map`). Deterministic
+    first-wins per (prop, ext_id) like prepare_dictionary. Raises
     :class:`DictionaryOverBudget` when the dictionary exceeds the
     driver budget — callers fall back to :func:`link_statements`'s
     broadcast/salted join strategies.

@@ -62,10 +62,6 @@ STAT_VALUE_PROPS = [
 _NODE_COLS = ["node_id", "prop", "value_type", "value", "src_file"]
 
 
-def _is_legacy_obs_type(col):
-    return col.endswith("Observation") & (col != "StatVarObservation")
-
-
 def _node_type_flags(nodes: DataFrame) -> DataFrame:
     """One partial-agg pass → (node_id, is_legacy_obs, is_statvar,
     has_type, has_cv). Covers every node (not just those with typeOf)

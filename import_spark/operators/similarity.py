@@ -105,34 +105,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
     return rng.standard_normal((dim, n_planes)).astype(np.float32)
 
 
-def lsh_signatures(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """Random-hyperplane signature as one int bucket id per row.
-
-    One vectorized pandas UDF: each Arrow batch is stacked into a
-    (batch, dim) matrix and multiplied against the fixed (dim, planes)
-    hyperplane matrix — BLAS, not per-row Python.
-    """
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    def _sig_fn(v: pd.Series) -> pd.Series:
-        m = np.stack(v.values).astype(np.float32)
-        bits = (m @ planes) > 0
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    sig_udf = pandas_udf(_sig_fn, "long")
-    return df.select(F.col(id_col), F.col(vec_col), sig_udf(F.col(vec_col)).alias("bucket"))
-
-
 def lsh_banded_signatures(
     df: DataFrame,
     dim: int,

@@ -69,8 +69,8 @@ from import_spark.operators.canonicalize import (
     connected_components_fast,
     union_find_components,
 )
-from import_spark.operators.extract import FUSED_SCHEMA, extract_and_link, extract_statements
-from import_spark.operators.link import link_statements
+from import_spark.operators.extract import extract_statements
+from import_spark.operators.link import link_statements, link_with_map
 from import_spark.operators.merge import (
     dedupe_and_materialize,
     dedupe_triples,
@@ -91,11 +91,9 @@ FINAL_COLS = ["subj", "pred", "obj_type", "obj", "conv_id", "turn_idx"]
 #  - parquet snapshot: `_cls` is the partition column (partition
 #    pruning — the DEF/ERROR/sameAs/local scans touch only their
 #    tiny files; finer than the earlier kind= layout);
-#  - in-memory cache: the extract output is sorted within partitions
-#    by `_cls`, so the columnar cache's 10k-row batches are
-#    class-homogeneous and the cache scan's batch-stat pruning
-#    (min/max on `_cls`) skips the ~95% plain-triple batches for
-#    every narrow pass.
+#  - in-memory: only the narrow classes (`_cls` >= 1) are persisted,
+#    from the narrow-only extract+link pass, so every narrow pass
+#    reads that small cache.
 # Plain triples (cls 0) are ~95% of rows at any scale (measured 46.0M
 # of 48.6M at 1M conversations), so the narrow passes drop from full
 # scans to ~5% scans; only the final merge pass reads cls<=2 in full.
@@ -161,21 +159,20 @@ class _Metrics:
         )
 
 
-# The fused extract+link carries the dictionary as a JVM map literal
-# (one py4j-built expression pair per entry, extract.py:427-428) and a
-# Python closure — both driver-side structures whose practical limit is
-# ENTRY COUNT, not the collect byte budget. Above it, the pipeline
-# falls back to the unfused extract + link JOIN (broadcast while the
-# dictionary fits the broadcast budget, hot-key salted shuffle beyond —
-# operators/skew.py), which is the only shape a multi-GB Recon map can
-# take at 10^12-turn scale.
+# The fused link carries the dictionary as a JVM map literal
+# (operators/link.py:link_with_map, one py4j-built expression pair per
+# entry) — a driver-side structure whose practical limit is ENTRY
+# COUNT, not the collect byte budget. Above it, the pipeline links by
+# JOIN instead (broadcast while the dictionary fits the broadcast
+# budget, hot-key salted shuffle beyond — operators/skew.py), which is
+# the only shape a multi-GB Recon map can take at 10^12-turn scale.
 FUSED_DICT_MAX_ROWS = 10_000
 _DICT_COLS = ("prop", "ext_id", "dcid")
 
 
 def _join_strategy(size: tuple[int, int]) -> str:
     """broadcast vs salted for a dictionary that cannot be a driver
-    closure, from its ``size_gate.exact_size``: broadcast while it fits
+    map literal, from its ``size_gate.exact_size``: broadcast while it fits
     the executor broadcast budget, hot-key salted shuffle beyond."""
     from import_spark.functions import size_gate
 
@@ -222,18 +219,17 @@ def _link_plan(
     narrow_only: bool = False,
     dmap: dict | None = None,
 ) -> DataFrame:
-    """The extract+link stage under the strategy ``_link_dictionary``
-    resolved. ``fused`` (with its driver ``dmap``) is the
-    closure-dictionary hot path; the join strategies produce the same
-    columns/rows via the unfused pair (equality asserted in
-    test_pipeline_e2e), without the narrow-only elision — the
-    downstream ``_cls`` filter prunes the same rows."""
+    """The extract+link stage: extract, then link by the strategy
+    ``_link_dictionary`` resolved — ``fused`` over its driver ``dmap``,
+    ``broadcast``/``salted`` by join. Every strategy yields the same
+    rows (equality asserted in test_pipeline_e2e), and ``narrow_only``
+    elides the fat-row work under each."""
+    extracted = extract_statements(transcripts, narrow_only=narrow_only)
     if strategy == "fused":
-        return extract_and_link(transcripts, dmap, narrow_only=narrow_only)
-    cols = [f.name for f in FUSED_SCHEMA.fields]
-    return link_statements(
-        extract_statements(transcripts), dcid_dict, strategy=strategy
-    ).select(*cols)
+        linked = link_with_map(extracted, dmap)
+    else:
+        linked = link_statements(extracted, dcid_dict, strategy=strategy)
+    return linked.drop("ext_prop", "ext_id")
 
 
 # Failed-quarantine layout: the local-ref statement columns led by the
@@ -370,8 +366,9 @@ def run_pipeline(
     din = text_digest(transcripts) if verify_text_invariant else 0
     m.add("scan", "text_digest", din)
 
-    # 2-3. extract + link: fused JVM projection + Python stage for the
-    # parse-heavy turn subset (operators/extract.py). With a
+    # 2-3. extract + link: the JVM projection plus the Python stage
+    # for the complex/observe turn subset (operators/extract.py), then
+    # the link strategy (operators/link.py). With a
     # checkpoint_dir the full output is snapshotted once as a
     # class-partitioned parquet table (resumable across processes;
     # narrow scans touch only their tiny partitions). Without one,

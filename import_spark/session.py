@@ -28,6 +28,14 @@ or on an EMPTY pandas frame takes the pickled-row path instead
 Python worker). A LocalRelation lives in the plan on the driver, so
 frames of 100k+ rows go through ``resolve._driver_parquet_handoff``
 (one parquet write, scanned like any file) instead.
+
+Python workers import the package the driver imported. A worker runs
+``python -m pyspark.daemon``, which puts the working directory first on
+``sys.path``: a driver started from another checkout's directory would
+run that checkout's ``import_spark`` in its workers, two versions at
+once. ``get_spark`` puts the driver package's parent on the workers'
+``PYTHONPATH`` and sets ``PYTHONSAFEPATH`` (Python 3.11+), which drops
+the working directory from a ``-m`` module's ``sys.path``.
 """
 
 from __future__ import annotations
@@ -35,6 +43,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+# the directory this driver imported import_spark from (a checkout, a
+# site-packages dir or a --py-files zip)
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -129,6 +141,10 @@ def get_spark(
         # kg_mem ~69) with headroom, see the module docstring
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
+        # workers import this driver's package, not the working
+        # directory's (see the module docstring)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     if not os.environ.get("SPARK_GRAFT_NO_MASTER"):
         b = b.master(f"local[{_local_threads(cores)}]")

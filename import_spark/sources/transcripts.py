@@ -292,7 +292,3 @@ def generate_transcripts(
         spark.range(0, n_convs, 1, parts)
         .mapInPandas(lambda it: _gen_batch(it, tpc), schema=TRANSCRIPT_SCHEMA)
     )
-
-
-def conv_index(conv_id: str) -> int:
-    return int(conv_id.split("/")[1])

@@ -15,7 +15,7 @@ the snapshot: local-ref resolution is conversation-local, so appending
 whole conversations never invalidates previously resolved ones.
 
 ``ingest_to_pipeline_snapshot`` is the production-shaped variant: it
-writes the FUSED extract+link output in ``run_pipeline``'s own
+writes the extract+link output in ``run_pipeline``'s own
 checkpoint layout (class-partitioned, digest success marker,
 per-partition lineage), so the batch pipeline RESUMES from the
 streamed snapshot and the whole streaming path is gated by the same
@@ -97,7 +97,7 @@ def ingest_to_pipeline_snapshot(
     """Stream the transcripts directory into ``run_pipeline``'s own
     extract+link snapshot, exactly-once.
 
-    Each micro-batch runs the fused JVM+Arrow extract+link and lands as
+    Each micro-batch runs the pipeline's extract+link and lands as
     its own ``(_b=batch_id, _cls=class)`` partition via dynamic
     partition overwrite — a retried batch REPLACES its partitions
     instead of appending duplicates, which with the checkpointed source
@@ -125,9 +125,9 @@ def ingest_to_pipeline_snapshot(
 
     snap = os.path.join(checkpoint_dir, run_id, "linked")
     offsets = os.path.join(checkpoint_dir, run_id, "stream_offsets")
-    # the batch pipeline's dictionary gate: fused with a driver dict
-    # while it fits the driver budget, else the unfused extract + join
-    # link (broadcast/salted by size) — same output contract
+    # the batch pipeline's dictionary gate: the fused map-literal link
+    # while the dictionary fits the driver budget, else the join link
+    # (broadcast/salted by size) — same output contract
     strategy, dmap = _link_dictionary(dcid_dict, "fused")
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)

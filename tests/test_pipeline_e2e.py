@@ -308,13 +308,14 @@ def test_per_partition_lineage(spark, tmp_path):
 
 
 def test_unicode_whitespace_parity(spark):
-    """Java regex \\S/\\d are ASCII-only by default while the Python
-    twin (re) is Unicode-aware: a token followed by U+00A0/U+2009/
+    """Java regex \\S/\\d are ASCII-only by default while the oracle
+    (Python re) is Unicode-aware: a token followed by U+00A0/U+2009/
     U+3000 whitespace used to be swallowed into the token on the JVM
-    fast path (silently missing dictionary links). The (?U)+_TOK fix
-    makes the two engines tokenize identically — gate it on adversarial
-    text end-to-end: fused == unfused extraction AND the full pipeline
-    still matches the independent pandas oracle."""
+    (silently missing dictionary links). The (?U)+_TOK fix makes the
+    JVM tokenize like re — gate it on adversarial text end-to-end: the
+    fused map-literal link == the broadcast join link over the one
+    extractor, AND the full pipeline matches the independent
+    row-at-a-time oracle, which shares no tokenization code with it."""
     import pandas as pd
 
     from import_spark.operators.extract import extract_and_link, extract_statements
@@ -344,6 +345,21 @@ def test_unicode_whitespace_parity(spark):
     want, _ = expected_triples(tr_pdf, build_dcid_dictionary())
     p, r = precision_recall(got, want)
     assert p == 1.0 and r == 1.0, (sorted(got - want)[:5], sorted(want - got)[:5])
+
+
+def test_empty_dictionary_links_by_fallback(spark):
+    """An empty dictionary takes the fused link (it fits every gate) and
+    links every external id by the prefix fallback, as the join does."""
+    from import_spark.operators.extract import extract_and_link, extract_statements
+    from import_spark.operators.link import link_statements
+
+    tr = generate_transcripts(spark, 30)
+    empty = spark.createDataFrame([], "prop string, ext_id string, dcid string")
+    fused = extract_and_link(tr, {})
+    joined = link_statements(extract_statements(tr), empty).select(*fused.columns)
+    a = {tuple(r) for r in fused.collect()}
+    assert a == {tuple(r) for r in joined.collect()}
+    assert ("mentions", "iso/US") in {(r[4], r[6]) for r in a}
 
 
 def test_narrow_extraction_parity(spark):
@@ -461,6 +477,40 @@ def test_link_strategy_auto_resolution(spark):
         kp.FUSED_DICT_MAX_ROWS = orig
     with pytest.raises(ValueError):
         kp._link_dictionary(d, "nope")
+
+
+@pytest.fixture(scope="module")
+def null_role_tool(spark):
+    """Generated turns plus one valid turn with a null role AND a null
+    tool (a real parquet can carry both), and the fused triple set."""
+    import pyspark.sql.types as T
+
+    from import_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in TRANSCRIPT_SCHEMA.fields]
+    )
+    extra = spark.createDataFrame(
+        [("conv/7000000003", 0, None, "we looked at iso:US define l:E1 = nuts:DE1", None, None)],
+        schema=nullable,
+    )
+    tr = generate_transcripts(spark, 20).unionByName(extra).cache()
+    fused = run_pipeline(spark, tr, dcid_dictionary(spark), link_strategy="fused")
+    return tr, {tuple(r) for r in fused.triples.collect()}
+
+
+@pytest.mark.parametrize("strategy", ["fused", "broadcast", "salted"])
+def test_null_role_and_tool_bear_no_null_statement(spark, null_role_tool, strategy):
+    """A null role / null tool skips that property's statement under
+    every link strategy (statement_bearing's null policy): no triple
+    with a null obj, and every strategy returns the fused triples."""
+    tr, fused = null_role_tool
+    res = run_pipeline(spark, tr, dcid_dictionary(spark), link_strategy=strategy)
+    got = {tuple(r) for r in res.triples.collect()}
+    assert not [t for t in got if t[3] is None]
+    row = {t[1] for t in got if t[4] == "conv/7000000003"}
+    assert {"typeOf", "mentions"} <= row and not row & {"role", "toolUsed"}
+    assert got == fused
 
 
 def test_adversarial_inputs_null_policy_and_idempotence(spark):

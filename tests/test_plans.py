@@ -6,6 +6,7 @@ filters reach the parquet scan) against silent plan regressions.
 """
 
 import datetime
+import re
 
 import pytest
 
@@ -42,10 +43,38 @@ def test_extract_prunes_ts_from_python_boundary(spark, turns):
     ex = extract_statements(turns)
     plan = ex._jdf.queryExecution().analyzed().toString()
     # ts must not cross into the Python stage (Arrow bytes + overflow hazard)
-    import re
-
     mapinpandas = [l for l in plan.split("\n") if "mapInPandas" in l.lower() or "MapInPandas" in l]
     assert mapinpandas and all("ts" not in l.split("#")[0] for l in mapinpandas)
+
+
+def _plan_nodes(plan, name: str) -> list:
+    """Every node of a JVM plan tree whose ``nodeName`` is ``name``."""
+    out = [plan] if plan.nodeName() == name else []
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _plan_nodes(kids.apply(i), name)
+    return out
+
+
+@pytest.mark.parametrize("narrow_only", [False, True])
+@pytest.mark.parametrize("strategy", ["fused", "broadcast", "salted"])
+def test_link_plan_has_one_python_stage_over_complex_observe_turns(
+    spark, turns, strategy, narrow_only
+):
+    """Every link strategy runs the one extractor: exactly one Python
+    stage, fed only the turns the complex/observe rlike selects (the
+    other anchors, defines included, and every link are JVM-side)."""
+    from import_spark.plans.kg_pipeline import _link_dictionary, _link_plan
+
+    d = dcid_dictionary(spark)
+    _, dmap = _link_dictionary(d, "fused")
+    df = _link_plan(
+        turns, d, strategy, narrow_only=narrow_only, dmap=dmap if strategy == "fused" else None
+    )
+    stages = _plan_nodes(df._jdf.queryExecution().optimizedPlan(), "MapInPandas")
+    assert len(stages) == 1
+    feed = stages[0].children().apply(0).toString()
+    assert re.findall(r"RLIKE\(text#\d+, ([^)]*)\)", feed) == [r"range \[|at coords \[|observe "]
 
 
 def test_parquet_filter_pushdown(spark, tmp_path):

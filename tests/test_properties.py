@@ -308,13 +308,18 @@ class TestExtractionParity:
     @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
     @given(st.lists(_turn_text, min_size=1, max_size=12))
     def test_fused_equals_unfused(self, spark, texts):
-        """The fused JVM+Arrow extraction (pipeline hot path) emits
-        exactly the statements of the all-Python path on randomized
-        anchor/near-miss/unicode-whitespace text — the invariant behind
-        the (?U)+_TOK tokenization fix."""
+        """On randomized anchor/near-miss/unicode-whitespace text, the
+        fused map-literal link emits exactly the statements of the
+        broadcast join link over the one extractor, and the pipeline
+        matches the row-at-a-time oracle (Python ``re``, no code shared
+        with the JVM's (?U)+_TOK tokenization) at P = R = 1."""
+        import pandas as pd
+
         from import_spark.operators.extract import extract_and_link, extract_statements
         from import_spark.operators.link import dcid_map_from_df, link_statements
-        from import_spark.sources.transcripts import dcid_dictionary
+        from import_spark.oracle import expected_triples, precision_recall
+        from import_spark.plans.kg_pipeline import run_pipeline
+        from import_spark.sources.transcripts import build_dcid_dictionary, dcid_dictionary
 
         rows = [
             ("c0", i, "user", t, "", None) for i, t in enumerate(texts)
@@ -329,6 +334,14 @@ class TestExtractionParity:
         a = sorted(tuple(r) for r in fused.collect())
         b = sorted(tuple(r) for r in unfused.collect())
         assert a == b
+
+        res = run_pipeline(spark, tr, d)
+        got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
+        cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+        want, _ = expected_triples(pd.DataFrame(rows, columns=cols), build_dcid_dictionary())
+        assert precision_recall(got, want) == (1.0, 1.0), (
+            sorted(got - want)[:5], sorted(want - got)[:5]
+        )
 
 
 # --------------------------------------------------- repetition stats vs python
