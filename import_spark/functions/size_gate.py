@@ -15,7 +15,7 @@ with no job at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -63,6 +63,18 @@ def exact_size(df: DataFrame) -> tuple[int, int]:
         .collect()[0]
     )
     return int(row["n"]), int(row["b"] or 0)
+
+
+def checkpoint_sized(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """``df.localCheckpoint()`` and its exact (rows, bytes): the
+    ``exact_size`` aggregate rides the checkpoint job as an Observation,
+    so materializing a map and sizing it for a broadcast gate is one
+    job, not two."""
+    obs = Observation()
+    out = df.observe(
+        obs, F.count(F.lit(1)).alias("n"), F.sum(row_bytes(df.schema)).alias("b")
+    ).localCheckpoint()
+    return out, (int(obs.get["n"]), int(obs.get["b"] or 0))
 
 
 def collect_within(

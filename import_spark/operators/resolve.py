@@ -1,27 +1,31 @@
-"""Stage 4 — resolve: iterative local-ref resolution with quarantine.
+"""Stage 4 — resolve: local-ref resolution with quarantine categories.
 
 Re-expresses the reference's multi-round resolver (O1/J4/O2,
 McfResolver.java:39-128,182-242,244-322): local ``l:`` references are
 replaced by the dcid of the conversation-local entity they name;
-definition chains (``l:E1 = l:E2 = dcid:X``) resolve by iterating a
-self-join to fixpoint; cycles and orphan refs are quarantined into a
-failed table with error categories (McfResolver.java:262-281,92-110).
+definition chains (``l:E1 = l:E2 = dcid:X``) resolve to a fixpoint;
+cycles and orphan refs are quarantined with error categories
+(McfResolver.java:262-281,92-110).
 
 Divergence: a local defined with ≥2 distinct immediate targets inside
 one conversation is an error and the local is quarantined
 (PropertyResolver.java:114-127 analogue).
 
-Scale design:
-- The def table is tiny relative to the statement table (bounded
-  locals per conversation), so the fixpoint loop runs on a
-  coalesced DataFrame with ``localCheckpoint`` per round (lineage cut,
-  McfResolver snapshot-per-round precedent, McfResolver.java:163-180);
-  rounds are bounded like the reference's level-capped recursion
-  (linked_edge_generator.py:110-112).
-- The final rewrite join is **size-adaptive**: the resolved map is
-  broadcast when it fits (one narrow pass over the statements),
-  otherwise it shuffle-joins on (conv_id, local) — only the filtered
-  local-ref statements shuffle, never the full statement table.
+This module resolves only the DEF rows, into three narrow maps
+(``ResolvedMaps``): the resolution map and the divergent and
+unresolved locals. Two engines, one contract:
+
+- ``_resolve_defs_vectorized`` — the driver engine (pandas merge
+  rounds), below ``DRIVER_RESOLVE_MAX_DEFS``; ``_resolve_defs_driver``
+  is its pure-Python spec.
+- ``resolve_locals`` — the distributed engine: one grouped
+  ``localCheckpoint`` of the def table, then one checkpointed join of
+  the pending chains to it per chain step, run until a round resolves
+  nothing (so every chain resolves, however deep, and the loop still
+  terminates: each round either resolves a pending def or is the last).
+
+Applying the map to the statements is not done here: the kg pipeline
+has one rewrite pass for both engines (plans/kg_pipeline.py).
 """
 
 from __future__ import annotations
@@ -34,16 +38,11 @@ import threading
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from import_spark.session import typed_arrow_table
-
-MAX_ROUNDS = 20
-# broadcast the resolved map when it has fewer rows than this
-BROADCAST_MAP_MAX_ROWS = 5_000_000
-_SMALL_PARTS = 8
-
 
 _HANDOFF_ROOT: str | None = None
 _HANDOFF_LOCK = threading.Lock()
@@ -77,144 +76,109 @@ def _driver_parquet_handoff(spark, pdf, schema) -> DataFrame:
 
 
 @dataclass
-class ResolveResult:
-    resolved: DataFrame  # TRIPLE rows with UNRESOLVED_REF rewritten
-    failed: DataFrame  # quarantine rows with `error` category
-    rounds: int
+class ResolvedMaps:
+    """Outcome of the def fixpoint, as DataFrames.
+
+    ``rmap``: (conv_id, obj, dcid) — local name (as it appears in an
+    UNRESOLVED_REF ``obj``) → resolved dcid. ``divergent`` /
+    ``unresolved``: (conv_id, obj) quarantine categories. ``rounds``:
+    the distributed engine's join rounds (0 on the driver)."""
+
+    rmap: DataFrame
+    divergent: DataFrame
+    unresolved: DataFrame
+    rounds: int = 0
 
 
-def _dedupe_defs(
-    defs: DataFrame, approx_defs: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Dedupe identical defs; flag divergent locals (≥2 distinct targets).
+def resolve_locals(linked: DataFrame) -> ResolvedMaps:
+    """Distributed def fixpoint over the DEF rows of ``linked`` (the
+    Spark twin of ``_resolve_defs_vectorized``, same maps and the same
+    chain walk).
 
-    ``approx_defs`` (e.g. the pipeline's DEF row counter) sizes the
-    broadcast decision without an extra count job.
-    """
-    d = (
-        defs.select(
+    One grouped aggregate collects each local's distinct targets and is
+    checkpointed once: ≥2 targets → divergent, one → a clean def, and
+    an Observation on that job sizes the clean table. Each round then
+    follows every pending chain one step by joining it to the clean
+    table — broadcast while ``canonicalize.broadcastable`` admits it —
+    in one observed ``localCheckpoint`` job whose count of dcid hits is
+    the convergence counter (RoundResult.numUpdated,
+    McfResolver.java:139-148). A chain of length L has a pending def at
+    every distance 1..L from its dcid, so each round up to L resolves
+    one: the first round that resolves nothing leaves only cycles and
+    chains into undefined or divergent locals, and the loop stops there.
+    Every clean local it did not resolve is unresolved.
+
+    The walk joins against the FIXED clean table rather than the map
+    resolved so far, so each round's size estimate (a join's is the
+    product of its inputs') grows by one factor, not by squaring: a
+    deep chain stays cheap to plan."""
+    from import_spark.functions.size_gate import row_bytes
+    from import_spark.operators.canonicalize import broadcastable
+
+    targets = linked.filter(F.col("kind") == "DEF").groupBy(
+        "conv_id", F.col("subj").alias("local")
+    ).agg(F.collect_set(F.struct("obj_type", F.col("obj").alias("target"))).alias("_t"))
+    one = F.size("_t") == 1
+    base_cols = ("conv_id", "_cur", "_ttype", "_tobj")
+    base_schema = T.StructType([T.StructField(c, T.StringType()) for c in base_cols])
+    sized = Observation()
+    targets = (
+        targets.select(
             "conv_id",
-            F.col("subj").alias("local"),
-            F.col("obj_type"),
-            F.col("obj").alias("target"),
+            "local",
+            "_t",
+            F.col("local").alias("_cur"),
+            F.col("_t")[0]["obj_type"].alias("_ttype"),
+            F.col("_t")[0]["target"].alias("_tobj"),
         )
-        .dropDuplicates(["conv_id", "local", "target"])
-        .coalesce(_SMALL_PARTS)
+        .observe(
+            sized,
+            F.count(F.when(one, 1)).alias("n"),
+            F.sum(F.when(one, row_bytes(base_schema))).alias("b"),
+        )
+        .localCheckpoint()
     )
-    d = d.localCheckpoint()
-    counts = d.groupBy("conv_id", "local").agg(F.count("*").alias("n_targets"))
-    divergent = (
-        counts.filter(F.col("n_targets") > 1).select("conv_id", "local").localCheckpoint()
-    )
-    n_d = approx_defs if approx_defs is not None else d.count()
-    div_side = F.broadcast(divergent) if n_d <= BROADCAST_MAP_MAX_ROWS else divergent
-    clean = d.join(div_side, ["conv_id", "local"], "left_anti")
-    return clean, divergent
-
-
-def resolve_locals(
-    linked: DataFrame,
-    num_partitions: int | None = None,
-    approx_defs: int | None = None,
-) -> ResolveResult:
-    """Resolve UNRESOLVED_REF objects using DEF records in ``linked``."""
-    triples = linked.filter(F.col("kind") == "TRIPLE")
-    defs = linked.filter(F.col("kind") == "DEF")
-
-    clean, divergent = _dedupe_defs(defs, approx_defs=approx_defs)
-    # one materialization: everything below derives from this small snapshot
-    clean = clean.localCheckpoint()
+    divergent = targets.filter(~one).select("conv_id", F.col("local").alias("obj"))
+    clean = targets.filter(one)
+    base = clean.select(*base_cols)
+    if broadcastable(sized.get["n"], sized.get["b"] or 0):
+        base = F.broadcast(base)
 
     # direct defs: target already a dcid; chained defs: target is l:X
-    resolved_map = clean.filter(F.col("obj_type") == "RESOLVED_REF").select(
-        "conv_id", "local", F.col("target").alias("dcid")
+    is_dcid = F.col("_ttype") == "RESOLVED_REF"
+    resolved_map = clean.filter(is_dcid).select(
+        "conv_id", "local", F.col("_tobj").alias("dcid")
     )
-    pending_all = clean.filter(F.col("obj_type") == "UNRESOLVED_REF").select(
-        "conv_id", "local", F.col("target").alias("target_local")
-    )
-    # self-cycles are immediately irreplaceable
-    self_cyc = pending_all.filter(F.col("local") == F.col("target_local"))
-    pending = pending_all.filter(F.col("local") != F.col("target_local"))
-
-    from import_spark.functions.size_gate import BROADCAST_BUDGET_BYTES, exact_size
-
+    pending = clean.filter(~is_dcid).select("conv_id", "local", F.col("_tobj").alias("_cur"))
     rounds = 0
-    # one exact aggregate; per-round broadcast decisions then cost no
-    # extra job: bytes = mean width x current map_rows (row cap AND
-    # byte cap)
-    map_rows, map_bytes = exact_size(resolved_map)
-    map_width = map_bytes / map_rows if map_rows else 0.0
-
-    def _bcast_ok(rows: int) -> bool:
-        return rows <= BROADCAST_MAP_MAX_ROWS and rows * map_width <= BROADCAST_BUDGET_BYTES
-
-    while rounds < MAX_ROUNDS:
+    while True:
         rounds += 1
-        lookup = resolved_map.select("conv_id", F.col("local").alias("target_local"), "dcid")
-        if _bcast_ok(map_rows):
-            lookup = F.broadcast(lookup)
-        step = pending.join(lookup, ["conv_id", "target_local"], "left")
-        # one materialization per round; newly/pending are cheap filters of it
-        step = step.localCheckpoint()
-        newly = step.filter(F.col("dcid").isNotNull()).select("conv_id", "local", "dcid")
-        # convergence counter (RoundResult.numUpdated, McfResolver.java:139-148)
-        n_new = newly.count()
-        if n_new == 0:
+        hits = Observation()
+        # one materialization per round; hits/pending are cheap filters of it
+        step = (
+            pending.join(base, ["conv_id", "_cur"], "left")
+            .observe(hits, F.count(F.when(is_dcid, 1)).alias("n"))
+            .localCheckpoint()
+        )
+        if hits.get["n"] == 0:
             break
-        map_rows += n_new
         # union keeps lineage shallow: every leg is a checkpointed snapshot
-        resolved_map = resolved_map.unionByName(newly)
-        pending = step.filter(F.col("dcid").isNull()).select(
-            "conv_id", "local", "target_local"
+        resolved_map = resolved_map.unionByName(
+            step.filter(is_dcid).select("conv_id", "local", F.col("_tobj").alias("dcid"))
+        )
+        pending = step.filter(F.col("_ttype") == "UNRESOLVED_REF").select(
+            "conv_id", "local", F.col("_tobj").alias("_cur")
         )
 
-    # leftovers: cycles or defs pointing at quarantined/undefined locals
-    unresolved_defs = pending.select("conv_id", "local").unionByName(
-        self_cyc.select("conv_id", "local")
+    unresolved = clean.select("conv_id", "local").join(
+        resolved_map.select("conv_id", "local"), ["conv_id", "local"], "left_anti"
     )
-
-    # --- rewrite UNRESOLVED_REF objects in statements ---
-    is_local = F.col("obj_type") == "UNRESOLVED_REF"
-    locals_used = triples.filter(is_local)
-    others = triples.filter(~is_local)
-
-    rmap = resolved_map.select("conv_id", F.col("local").alias("obj"), "dcid")
-    if _bcast_ok(map_rows):
-        rmap = F.broadcast(rmap)
-    # localCheckpoint (not cache): materialized once, auto-released by the
-    # context cleaner when unreferenced — no cross-run cache leak
-    joined = locals_used.join(rmap, ["conv_id", "obj"], "left").localCheckpoint()
-
-    ok = (
-        joined.filter(F.col("dcid").isNotNull())
-        .withColumn("obj", F.col("dcid"))
-        .withColumn("obj_type", F.lit("RESOLVED_REF"))
-        .drop("dcid")
+    return ResolvedMaps(
+        rmap=resolved_map.withColumnRenamed("local", "obj"),
+        divergent=divergent,
+        unresolved=unresolved.withColumnRenamed("local", "obj"),
+        rounds=rounds,
     )
-    # error categorization for the quarantine table (O2)
-    failed_raw = joined.filter(F.col("dcid").isNull()).drop("dcid")
-    failed = (
-        failed_raw.join(
-            F.broadcast(
-                divergent.withColumn("err", F.lit("Resolution_DivergingDcids"))
-            ).withColumnRenamed("local", "obj"),
-            ["conv_id", "obj"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                unresolved_defs.withColumn("err2", F.lit("Resolution_IrreplaceableLocalRef"))
-            ).withColumnRenamed("local", "obj"),
-            ["conv_id", "obj"],
-            "left",
-        )
-        .withColumn(
-            "error",
-            F.coalesce(F.col("err"), F.col("err2"), F.lit("Resolution_OrphanLocalReference")),
-        )
-        .drop("err", "err2")
-    )
-    return ResolveResult(resolved=others.unionByName(ok), failed=failed, rounds=rounds)
 
 
 # ---------------------------------------------------------------------------
@@ -323,19 +287,6 @@ def _resolve_defs_vectorized(defs_pdf):
         else pd.DataFrame(columns=["conv_id", "key"])
     )
     return resolved, divergent, unresolved
-
-
-@dataclass
-class ResolvedMaps:
-    """Outcome of the driver-side def fixpoint, as broadcastable DFs.
-
-    ``rmap``: (conv_id, obj, dcid) — local name (as it appears in an
-    UNRESOLVED_REF ``obj``) → resolved dcid. ``divergent`` /
-    ``unresolved``: (conv_id, obj) quarantine categories."""
-
-    rmap: DataFrame
-    divergent: DataFrame
-    unresolved: DataFrame
 
 
 def resolve_defs_fast(

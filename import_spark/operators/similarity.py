@@ -197,8 +197,7 @@ def ivf_train_centroids(
 
     ``approx_count``: callers that already know the corpus size (even
     roughly — it only sets the sampling fraction) pass it to skip the
-    count job, the same size-gate-parameter pattern as
-    resolve_defs_fast(approx_defs=...)."""
+    count job."""
     n = approx_count if approx_count is not None else corpus.select(vec_col).count()
     sampled = corpus.select(vec_col)
     if n > sample_rows:

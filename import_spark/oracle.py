@@ -69,8 +69,10 @@ def expected_triples(
         triples.add((turn, "typeOf", "RESOLVED_REF", "ConversationTurn"))
         triples.add((turn, "partOf", "RESOLVED_REF", cnode))
         triples.add((cnode, "typeOf", "RESOLVED_REF", "Conversation"))
-        triples.add((turn, "role", "TEXT", row["role"]))
-        if row["tool"]:
+        # a null role bears no statement (extract's null policy)
+        if pd.notna(row["role"]):
+            triples.add((turn, "role", "TEXT", row["role"]))
+        if pd.notna(row["tool"]) and row["tool"]:
             triples.add((turn, "toolUsed", "TEXT", row["tool"]))
 
         for tok in _MENTION.findall(text):

@@ -29,13 +29,17 @@ The narrow side is decided and resolved in two driver round-trips:
 ONE aggregate over the narrow classes returns the per-class counts,
 the exact bytes of the DEF/local/sameAs rows and the ERROR counters;
 the gates (defs, sameAs edges, driver byte budget) read those counts,
-with no probe job. When all three fit, ONE Arrow collect of those rows
-feeds ``narrow_driver_step`` — def fixpoint, local-ref lookup, sameAs
-union-find and the failed quarantine with its error counts — and the
-resolution map, component map and failed table come back as parquet
-handoffs that the big pass broadcast-joins. When any gate declines,
-the whole narrow side takes the distributed branch (iterative
-resolver loop, then connected components). The dictionary gets the
+with no probe job. The gates pick only WHERE the three narrow maps —
+resolution map, sameAs component map, failed quarantine — are built:
+when all three fit, ONE Arrow collect of those rows feeds
+``narrow_driver_step`` and the maps come back as parquet handoffs;
+when any declines, ``narrow_distributed_step`` builds the same maps in
+Spark from the persisted narrow rows (def fixpoint loop, local-ref
+lookup, connected components), each materialized by
+``localCheckpoint``. Everything after the maps is one code path: one
+broadcast gate sizes both maps, and the fused resolve+canonicalize+
+dedupe(+write) pass is the only pass over the fat rows, with the
+plain-triple count observed on its stream. The dictionary gets the
 same shape: one count+bytes aggregate, then one collect
 (``size_gate.collect_within``). Either way the big table is shuffled
 exactly once (dedupe), and the final row count is the count the big
@@ -58,7 +62,7 @@ import time
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -232,9 +236,9 @@ def _link_plan(
     return linked.drop("ext_prop", "ext_id")
 
 
-# Failed-quarantine layout: the local-ref statement columns led by the
-# (conv_id, obj) lookup key, then the error category — the column order
-# of the distributed resolver's join output, kept on both branches.
+# Failed-quarantine layout, the same from both narrow engines: the
+# local-ref statement columns led by the (conv_id, obj) lookup key, then
+# the error category.
 _FAILED_LEAD = ("conv_id", "obj")
 
 
@@ -249,15 +253,18 @@ def _failed_schema(narrow_schema: T.StructType) -> T.StructType:
 
 @dataclass
 class NarrowMaps:
-    """The driver step's outputs, as pandas frames.
+    """A narrow step's outputs: pandas frames from
+    ``narrow_driver_step``, DataFrames from ``narrow_distributed_step``.
 
     ``rmap``: (conv_id, obj, dcid) — local name → resolved dcid.
     ``components``: (node, canon) — sameAs component map, canon = min.
-    ``failed``: unresolvable local-ref statements plus ``error``."""
+    ``failed``: unresolvable local-ref statements plus ``error``.
+    ``rounds``: def-fixpoint join rounds (0 on the driver)."""
 
-    rmap: pd.DataFrame
-    components: pd.DataFrame
-    failed: pd.DataFrame
+    rmap: pd.DataFrame | DataFrame
+    components: pd.DataFrame | DataFrame
+    failed: pd.DataFrame | DataFrame
+    rounds: int = 0
 
 
 def narrow_driver_step(pdf: pd.DataFrame) -> NarrowMaps:
@@ -307,6 +314,86 @@ def narrow_driver_step(pdf: pd.DataFrame) -> NarrowMaps:
         }
     )
     return NarrowMaps(rmap=rmap, components=union_find_components(edges), failed=failed)
+
+
+def _lookup(rows: DataFrame, rmap: DataFrame, broadcast: bool) -> DataFrame:
+    """``rows`` plus ``_dc``: the resolution map's dcid for each
+    local-ref row, null for an unresolved local and for every other row.
+    The join key is (conv_id, ``_lk``), ``_lk`` = obj on local refs and
+    null elsewhere: null keys never match, so non-local rows pass
+    through, and when the map is not broadcast the shuffle still hashes
+    them by conv_id rather than piling them onto one key."""
+    m = rmap.select("conv_id", F.col("obj").alias("_lk"), F.col("dcid").alias("_dc"))
+    return (
+        rows.withColumn("_lk", F.when(F.col("obj_type") == "UNRESOLVED_REF", F.col("obj")))
+        .join(F.broadcast(m) if broadcast else m, ["conv_id", "_lk"], "left")
+        .drop("_lk")
+    )
+
+
+def resolve_triples(triples: DataFrame, rmap: DataFrame, broadcast: bool = False) -> DataFrame:
+    """The resolve rewrite, the same after either narrow engine: local
+    refs take their dcid from ``rmap`` (conv_id, obj, dcid) and become
+    RESOLVED_REF; local refs with no dcid are dropped (the failed table
+    quarantines them)."""
+    is_local = F.col("obj_type") == "UNRESOLVED_REF"
+    return (
+        _lookup(triples, rmap, broadcast)
+        .filter(~(is_local & F.col("_dc").isNull()))
+        .withColumn("obj", F.coalesce(F.col("_dc"), F.col("obj")))
+        .withColumn(
+            "obj_type", F.when(is_local, F.lit("RESOLVED_REF")).otherwise(F.col("obj_type"))
+        )
+        .drop("_dc")
+    )
+
+
+def narrow_distributed_step(
+    narrow: DataFrame,
+) -> tuple[NarrowMaps, tuple[int, int], tuple[int, int]]:
+    """Spark twin of ``narrow_driver_step`` over the narrow classes
+    (DEF/local/sameAs rows with their ``_cls``; ERROR rows are
+    ignored): the distributed def fixpoint (``resolve_locals``), the
+    local-ref lookup of every local and sameAs row, connected components
+    (driver union-find while the edges fit, else the distributed
+    kernel) and the failed table, in ``_failed_schema`` order.
+
+    Every map is materialized by ``localCheckpoint``, so the caller may
+    release ``narrow``; the exact (rows, bytes) of ``rmap`` and of
+    ``components`` are observed on their checkpoint jobs and returned
+    with the maps."""
+    from import_spark.functions.size_gate import checkpoint_sized
+
+    cls = F.col("_cls")
+    defs = resolve_locals(narrow)
+    rmap, rmap_size = checkpoint_sized(defs.rmap)
+    refs = _lookup(
+        narrow.filter(cls.isin(CLS_LOCAL, CLS_SAMEAS)), rmap, broadcastable(*rmap_size)
+    ).localCheckpoint()
+    lost = (F.col("obj_type") == "UNRESOLVED_REF") & F.col("_dc").isNull()
+    key = list(_FAILED_LEAD)
+    failed = (
+        refs.filter(lost)
+        .join(defs.divergent.withColumn("_div", F.lit(True)), key, "left")
+        .join(defs.unresolved.withColumn("_unres", F.lit(True)), key, "left")
+        .withColumn(
+            "error",
+            F.when(F.col("_div"), F.lit("Resolution_DivergingDcids"))
+            .when(F.col("_unres"), F.lit("Resolution_IrreplaceableLocalRef"))
+            .otherwise(F.lit("Resolution_OrphanLocalReference")),
+        )
+        .select(*_failed_schema(narrow.schema).names)
+        .localCheckpoint()
+    )
+    edges = refs.filter((cls == CLS_SAMEAS) & ~lost).select(
+        F.col("subj").alias("src"), F.coalesce(F.col("_dc"), F.col("obj")).alias("dst")
+    )
+    fast_cc = connected_components_fast(edges)
+    components, cc_size = checkpoint_sized(
+        fast_cc if fast_cc is not None else connected_components(edges)
+    )
+    maps = NarrowMaps(rmap=rmap, components=components, failed=failed, rounds=defs.rounds)
+    return maps, rmap_size, cc_size
 
 
 def _narrow_sizes(narrow: DataFrame) -> tuple[dict, int, dict]:
@@ -419,10 +506,9 @@ def run_pipeline(
             if lin_dir:
                 write_stage_lineage(spark, snap, lin_dir, run_id, "link", part_col="_cls")
                 m.add("link", "lineage_written", 1)
-        linked = spark.read.parquet(snap)
-        fat_src = linked
+        fat_src = spark.read.parquet(snap)
         # partition pruning: the narrow passes read only their files
-        narrow = linked.filter(F.col("_cls") >= CLS_LOCAL)
+        narrow = fat_src.filter(F.col("_cls") >= CLS_LOCAL)
     else:
         # In-memory mode: persist ONLY the narrow classes (~5% of rows —
         # DEF/ERROR/sameAs/local; measured 2.6M of 48.6M at 1M convs).
@@ -437,7 +523,6 @@ def run_pipeline(
         # cores on a box (and at 100 TB the fat intermediate could
         # never be cached at all; persisting small side-outputs and
         # recomputing narrow lineage is the only design that survives).
-        linked = None
         fat_src = _with_cls(_link_plan(transcripts, dcid_dict, link_strategy, dmap=dmap))
         narrow = (
             _with_cls(
@@ -463,14 +548,16 @@ def run_pipeline(
 
     # 4-6. resolve → canonicalize → merge.
     #
-    # Driver branch (the narrow side fits — the common shape: locals
-    # and aliases are bounded per conversation): the gate reads the
-    # aggregate above, ONE Arrow collect of the DEF/local/sameAs rows
+    # The gates read the aggregate above and decide only where the
+    # three narrow maps are built. Driver branch (the narrow side fits —
+    # the common shape: locals and aliases are bounded per
+    # conversation): ONE Arrow collect of the DEF/local/sameAs rows
     # feeds narrow_driver_step, and its maps come back as parquet
-    # handoffs that every downstream consumer broadcast-joins. The
+    # handoffs. Distributed branch (a gate declines):
+    # narrow_distributed_step builds the same maps in Spark from the
+    # persisted narrow rows. After the branch there is one path: the
     # ONLY pass that touches the fat plain-triple rows is the final
-    # fused resolve+canonicalize+dedupe+write. The distributed branch
-    # (a gate declines) keeps the iterative resolver loop.
+    # fused resolve+canonicalize+dedupe+write.
     driver = (
         n_defs <= rz.DRIVER_RESOLVE_MAX_DEFS
         and n_same <= cz.DRIVER_CC_MAX_EDGES
@@ -478,79 +565,40 @@ def run_pipeline(
     )
     m.add("extract", "narrow_bytes", narrow_bytes)
     m.add("resolve", f"branch_{'driver' if driver else 'distributed'}", 1)
-    triples = fat_src.filter(F.col("_cls") <= CLS_SAMEAS).drop("_cls")
-    obs = None
     if driver:
-        from pyspark.sql import Observation
-
-        obs = Observation("extract")
-        triples = triples.observe(obs, F.count(F.lit(1)).alias("rows_triple"))
-        pdf = narrow.filter(F.col("_cls") != CLS_ERROR).toPandas()
-        step = narrow_driver_step(pdf)
-        m.add("resolve", "rounds", 0)
-        rmap = F.broadcast(
-            rz._driver_parquet_handoff(
-                spark,
-                step.rmap.set_axis(["conv_id", "_lk", "_dc"], axis=1),
-                "conv_id string, _lk string, _dc string",
-            )
+        maps = narrow_driver_step(narrow.filter(F.col("_cls") != CLS_ERROR).toPandas())
+        rmap_size, cc_size = (
+            (len(f), size_gate.pandas_bytes(f)) for f in (maps.rmap, maps.components)
+        )
+        failed_counts = list(maps.failed["error"].value_counts().items())
+        rmap = rz._driver_parquet_handoff(
+            spark, maps.rmap, "conv_id string, obj string, dcid string"
         )
         components = rz._driver_parquet_handoff(
-            spark, step.components, "node string, canon string"
+            spark, maps.components, "node string, canon string"
         )
-        failed = rz._driver_parquet_handoff(spark, step.failed, _failed_schema(narrow.schema))
-        failed_counts = list(step.failed["error"].value_counts().items())
-        n_components = len(step.components)
-        broadcast_cc = broadcastable(n_components, size_gate.pandas_bytes(step.components))
-        # the fused final pass: resolve locals inline (dropping failed
-        # rows — they are quarantined above), then canonicalize
-        # join on a nulled key so only local-ref rows can match the map
-        # (null join keys never match — non-local rows pass through)
-        is_local = F.col("obj_type") == "UNRESOLVED_REF"
-        resolved = (
-            triples.withColumn("_lk", F.when(is_local, F.col("obj")))
-            .join(rmap, ["conv_id", "_lk"], "left")
-            .filter(~(is_local & F.col("_dc").isNull()))
-            .withColumn("obj", F.coalesce(F.col("_dc"), F.col("obj")))
-            .withColumn(
-                "obj_type",
-                F.when(is_local, F.lit("RESOLVED_REF")).otherwise(F.col("obj_type")),
-            )
-            .drop("_dc", "_lk")
-        )
+        failed = rz._driver_parquet_handoff(spark, maps.failed, _failed_schema(narrow.schema))
     else:
-        # distributed fallback (a gate declined): the iterative
-        # resolver consumes the full statement set several times —
-        # materialize it for this path only
-        fallback_src = fat_src.persist() if linked is None else linked
-        res = resolve_locals(
-            fallback_src.drop("_cls"), num_partitions=num_partitions, approx_defs=n_defs
-        )
-        m.add(
-            "extract",
-            "rows_triple",
-            fallback_src.filter(F.col("_cls") <= CLS_SAMEAS).count(),
-        )
-        resolved = res.resolved
-        failed = res.failed.localCheckpoint()
+        maps, rmap_size, cc_size = narrow_distributed_step(narrow)
+        rmap, components, failed = maps.rmap, maps.components, maps.failed
         failed_counts = None
-        m.add("resolve", "rounds", res.rounds)
-        edges = resolved.filter(F.col("pred") == "sameAs").select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst")
-        )
-        # 5. canonicalize (sameAs connected components): the driver
-        # union-find while the edge set fits, else the distributed kernel
-        fast_cc = connected_components_fast(edges)
-        components = (
-            fast_cc if fast_cc is not None else connected_components(edges).localCheckpoint()
-        )
-        n_components, cc_bytes = size_gate.exact_size(components)
-        broadcast_cc = broadcastable(n_components, cc_bytes)
-    if linked is None:
-        # the narrow cache has served the aggregate and the collect
+    if snap is None:
+        # the maps are materialized: the narrow cache has served
         narrow.unpersist()
-    m.add("canonicalize", "nodes_rewritten", n_components)
-    canon = canonicalize_triples(resolved, components, broadcast_map=broadcast_cc)
+    m.add("resolve", "rounds", maps.rounds)
+    m.add("canonicalize", "nodes_rewritten", cc_size[0])
+
+    # the fused final pass: resolve locals inline (dropping failed rows
+    # — they are quarantined above), then canonicalize; the plain-triple
+    # count is observed on its stream (no extra job)
+    obs = Observation("extract")
+    triples = (
+        fat_src.filter(F.col("_cls") <= CLS_SAMEAS)
+        .drop("_cls")
+        .observe(obs, F.count(F.lit(1)).alias("rows_triple"))
+    )
+    resolved = resolve_triples(triples, rmap, broadcast=broadcastable(*rmap_size))
+    canon = canonicalize_triples(resolved, components, broadcast_map=broadcastable(*cc_size))
 
     # 6. merge + materialize. The failed-quarantine sink write and its
     # error counters are independent of the big triple write (S11's
@@ -607,9 +655,8 @@ def run_pipeline(
             error_rows = fut_failed.result()
     for err, n in error_rows:
         m.add("resolve", err, n)
-    if obs is not None:
-        # collected during the big pass — no extra job
-        m.add("extract", "rows_triple", obs.get["rows_triple"])
+    # collected during the big pass — no extra job
+    m.add("extract", "rows_triple", obs.get["rows_triple"])
     m.add("merge", "triples_final", n_final)
 
     # invariant: input text unchanged under stable ordering
@@ -633,12 +680,7 @@ def run_pipeline(
         ).write.mode("append").partitionBy("run_id").parquet(
             os.path.join(out_dir, "metrics")
         )
-    if snap is None:
-        # final is materialized (counted above); release the fallback
-        # cache so repeated in-process runs don't accumulate storage
-        if not driver:
-            fallback_src.unpersist()
-    elif not keep and os.path.exists(snap):
+    if snap is not None and not keep and os.path.exists(snap):
         shutil.rmtree(snap, ignore_errors=True)
 
     return PipelineResult(

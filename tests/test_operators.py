@@ -11,7 +11,6 @@ from import_spark.operators.canonicalize import canonicalize_triples, connected_
 from import_spark.operators.extract import extract_statements
 from import_spark.operators.link import link_statements
 from import_spark.operators.merge import dedupe_triples, drop_generic_types
-from import_spark.operators.resolve import resolve_locals
 from import_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 TS = datetime.datetime(2025, 1, 1)
@@ -74,14 +73,25 @@ def test_resolve_chain_cycle_orphan_divergence(spark):
         ("c3", 1, "define l:E6 = iso:US"),
         ("c3", 2, "see l:E6"),
     ]
-    res = resolve_locals(_extract_link(spark, rows))
+    # the distributed narrow engine builds the maps; the pipeline's one
+    # rewrite applies them
+    from import_spark.plans.kg_pipeline import (
+        CLS_LOCAL,
+        _with_cls,
+        narrow_distributed_step,
+        resolve_triples,
+    )
+
+    linked = _with_cls(_extract_link(spark, rows))
+    maps, _, _ = narrow_distributed_step(linked.filter(F.col("_cls") >= CLS_LOCAL))
+    resolved = resolve_triples(linked.filter(F.col("kind") == "TRIPLE"), maps.rmap)
     refs = {
         (r.conv_id, r.obj)
-        for r in res.resolved.filter(F.col("pred") == "references").collect()
+        for r in resolved.filter(F.col("pred") == "references").collect()
     }
     assert ("c1", "country/BRA") in refs
     assert ("c3", "country/USA") in refs
-    errs = {(r.conv_id, r.obj, r.error) for r in res.failed.filter(F.col("pred") == "references").collect()}
+    errs = {(r.conv_id, r.obj, r.error) for r in maps.failed.filter(F.col("pred") == "references").collect()}
     assert ("c1", "l:E3", "Resolution_IrreplaceableLocalRef") in errs
     assert ("c1", "l:E9", "Resolution_OrphanLocalReference") in errs
     assert ("c2", "l:E5", "Resolution_DivergingDcids") in errs

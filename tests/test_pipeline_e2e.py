@@ -434,6 +434,151 @@ def test_cc_gate_alone_forces_distributed_branch(spark, monkeypatch):
     assert res.text_digest_in == res.text_digest_out != 0
 
 
+def _force_distributed(monkeypatch):
+    """Every kg size gate declines, as in
+    test_all_distributed_branches_match_oracle."""
+    import import_spark.operators.canonicalize as cz
+    import import_spark.operators.resolve as rz
+
+    monkeypatch.setattr(rz, "DRIVER_RESOLVE_MAX_DEFS", -1)
+    monkeypatch.setattr(cz, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(cz, "BROADCAST_CC_MAX_ROWS", -1)
+
+
+CHAIN_DEPTH = 25
+CHAIN_CONV = "conv/8000000001"
+
+
+def _deep_chain(spark):
+    """One conversation with a 25-deep def chain (``l:E0 = geoId/06``,
+    ``l:Ei = l:E(i-1)``) and a reference to its far end."""
+    import datetime
+
+    from import_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+
+    texts = ["define l:E0 = geoId/06"]
+    texts += [f"define l:E{i} = l:E{i - 1}" for i in range(1, CHAIN_DEPTH)]
+    texts.append(f"see l:E{CHAIN_DEPTH - 1}")
+    ts = datetime.datetime(2025, 1, 1)
+    return spark.createDataFrame(
+        [(CHAIN_CONV, i, "user", t, "", ts) for i, t in enumerate(texts)],
+        schema=TRANSCRIPT_SCHEMA,
+    )
+
+
+def test_deep_def_chain_resolves_on_both_engines_and_branches(spark, monkeypatch):
+    """A def chain deeper than any fixed round cap resolves to its dcid
+    through the driver engine, the distributed engine, and run_pipeline
+    on both branches: the distributed loop stops only on a round that
+    resolves nothing."""
+    from pyspark.sql import functions as F
+
+    from import_spark.operators.extract import extract_and_link
+    from import_spark.operators.link import dcid_map_from_df
+    from import_spark.plans.kg_pipeline import (
+        CLS_ERROR,
+        CLS_LOCAL,
+        _with_cls,
+        narrow_distributed_step,
+        narrow_driver_step,
+    )
+
+    tr = _deep_chain(spark).cache()
+    d = dcid_dictionary(spark)
+    narrow = _with_cls(extract_and_link(tr, dcid_map_from_df(d))).filter(
+        (F.col("_cls") >= CLS_LOCAL) & (F.col("_cls") != CLS_ERROR)
+    )
+    far = (CHAIN_CONV, f"l:E{CHAIN_DEPTH - 1}", "geoId/06")
+    drv = narrow_driver_step(narrow.toPandas())
+    assert len(drv.rmap) == CHAIN_DEPTH and far in set(drv.rmap.itertuples(index=False, name=None))
+    assert drv.failed.empty
+    dist, _, _ = narrow_distributed_step(narrow)
+    assert {tuple(r) for r in dist.rmap.collect()} == set(
+        drv.rmap.itertuples(index=False, name=None)
+    )
+    assert dist.failed.count() == 0
+    assert dist.rounds == CHAIN_DEPTH  # one round per chain step, one that resolves nothing
+
+    want, failed_uses = expected_triples(tr.toPandas(), build_dcid_dictionary())
+    assert not failed_uses
+    for forced in (False, True):
+        if forced:
+            _force_distributed(monkeypatch)
+        res = run_pipeline(spark, tr, d)
+        counters = {r["counter"] for r in res.metrics}
+        assert f"branch_{'distributed' if forced else 'driver'}" in counters
+        got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
+        assert precision_recall(got, want) == (1.0, 1.0)
+        assert res.failed.count() == 0
+        refs = [t for t in got if t[1] == "references"]
+        assert [t[2:] for t in refs] == [("RESOLVED_REF", "geoId/06")]
+
+
+def test_branches_agree_exactly(spark, monkeypatch):
+    """run_pipeline with the default gates (driver branch) and with
+    every gate forced to decline (distributed branch) returns the same
+    triples over every output column, the same failed rows in the same
+    column order with the same error categories, and the same counters
+    apart from the branch marker and the def-fixpoint round count."""
+    from import_spark.plans.kg_pipeline import FINAL_COLS
+
+    tr = generate_transcripts(spark, 150).unionByName(_deep_chain(spark)).cache()
+    d = dcid_dictionary(spark)
+
+    def run():
+        res = run_pipeline(spark, tr, d)
+        counters = {
+            (r["stage"], r["counter"]): r["value"]
+            for r in res.metrics
+            if not r["counter"].startswith("branch_") and r["counter"] != "rounds"
+        }
+        branch = [r["counter"] for r in res.metrics if r["counter"].startswith("branch_")]
+        return (
+            branch,
+            sorted(tuple(r) for r in res.triples.select(*FINAL_COLS).collect()),
+            res.failed.columns,
+            sorted(tuple(r) for r in res.failed.collect()),
+            counters,
+        )
+
+    drv = run()
+    _force_distributed(monkeypatch)
+    dist = run()
+    assert (drv[0], dist[0]) == (["branch_driver"], ["branch_distributed"])
+    assert drv[1] == dist[1]
+    assert drv[2] == dist[2] and drv[2][-1] == "error"
+    assert drv[3] == dist[3] and drv[3]
+    assert drv[4] == dist[4]
+
+
+def test_distributed_branch_job_budget(spark, job_ids, monkeypatch):
+    """The forced-distributed in-memory call (2,000 conversations, one
+    triples count and one failed count after it) stays within the job
+    count the former two-path pipeline ran: the distributed engine
+    builds only the narrow maps, and the fat rows are read once, by the
+    shared final pass."""
+    _force_distributed(monkeypatch)
+    tr = generate_transcripts(spark, 2000).cache()
+    d = dcid_dictionary(spark)
+    tr.count()
+    before = job_ids()
+    res = run_pipeline(spark, tr, d)
+    res.triples.count()
+    res.failed.count()
+    jobs = len(job_ids() - before)
+    assert "branch_distributed" in {r["counter"] for r in res.metrics}
+    assert jobs <= 105, jobs
+
+
+def test_oracle_skips_null_role(null_role_tool):
+    """The oracle emits no role statement for a null role, as extract
+    does: the pipeline and the oracle agree on a null-role turn."""
+    tr, fused = null_role_tool
+    want, _ = expected_triples(tr.toPandas(), build_dcid_dictionary())
+    assert not [t for t in want if t[3] is None]
+    assert precision_recall({t[:4] for t in fused}, want) == (1.0, 1.0)
+
+
 @pytest.mark.parametrize("strategy", ["broadcast", "salted"])
 def test_link_strategy_fallback_matches_oracle(spark, strategy):
     """The big-dictionary fallback (unfused extract + link JOIN,
