@@ -22,18 +22,28 @@ phases until fixpoint:
 Leftovers after fixpoint → ``Resolution_IrreplaceableLocalRef`` /
 ``Resolution_UnassignableNodeDcid`` (McfResolver.java:92-128).
 
-Spark shape: node ids out of the template expander embed the row id, so
-local refs are **globally unique** and the whole table resolves in one
-global fixpoint. Each round touches only the shrinking working sets
-(pending refs, dcid-less nodes) — never the full statement table; the
-full table is rewritten ONCE at the end with a broadcast-gated join.
-A size-gated driver fast path (Arrow collect + the pure-Python
-resolver below, which mirrors the reference loop 1:1) serves the
-common genmcf case where one CSV's sub-graph fits the driver; it reads
-the local-graph seed off the rows it collected, at no Spark job. The
-distributed loop joins one checkpointed (prop, ext_id, dcid) frame
-that merges the seed and the caller's dictionaries with the same
-precedence.
+Two engines run the same rules. A size-gated driver engine
+(:func:`resolve_graph_driver`, Arrow collect + a pure-Python loop that
+mirrors the reference 1:1) serves the common genmcf case where one
+CSV's sub-graph fits the driver; it reads the local-graph seed off the
+rows it collected, at no Spark job. The distributed engine
+(:func:`_resolve_graph_distributed`) is a Spark loop around the same
+rules. Written once and called by both:
+
+- the assign rule, :func:`assign_dcids` (the driver calls it once per
+  round, the distributed engine once per Arrow batch);
+- every error text, in :data:`_ERRORS` (``%`` on the driver,
+  ``format_string`` in Spark);
+- the value order: a node's rows in input order, so its first type
+  names the assignment failure and its first value of a property keys
+  the content hash;
+- the round count and the exit: a round is one assign phase; the loop
+  stops when a refs phase after the first replaces nothing or an
+  assign phase assigns nothing.
+
+Node ids out of the template expander embed the row id, so local refs
+are **globally unique** and the whole table resolves in one global
+fixpoint.
 """
 
 from __future__ import annotations
@@ -42,7 +52,7 @@ from dataclasses import dataclass
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from import_spark import vocabulary as V
@@ -65,10 +75,6 @@ from import_spark.session import local_frame
 
 MAX_ROUNDS = 20
 
-# sentinel priority for the prefix-fallback row in the distributed
-# place assignment (real priorities index
-# V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS)
-_FALLBACK_PRI = 10_000
 # Crossover measured at sf0.1 on local[32] (warm session): the driver
 # fixpoint costs ~2.3 s/M statement rows for the pure-Python loop plus
 # ~1.5 s/M for collect+upload, while the distributed loop's fixed
@@ -78,6 +84,52 @@ _FALLBACK_PRI = 10_000
 DRIVER_RESOLVE_MAX_ROWS = 1_000_000
 
 NODE_COLS = ["node_id", "prop", "value_type", "value", "src_file"]
+
+# Every resolver error: (counter template, its operands, message
+# template, its operands), rendered with `%` on the driver (_error) and
+# with format_string in Spark (_error_cols).
+_ERRORS = {
+    "orphan": (
+        "Resolution_OrphanLocalReference_%s", ("prop",),
+        "Found orphan local ref :: ref: '%s', property: '%s', node: '%s'",
+        ("ref", "prop", "node"),
+    ),
+    "to_failed": (
+        "Resolution_ReferenceToFailedNode_%s", ("prop",),
+        "Found a local ref to an unresolvable node :: ref: '%s', property: '%s', node: '%s'",
+        ("ref", "prop", "node"),
+    ),
+    "unassigned": (
+        "Resolution_DcidAssignmentFailure_%s", ("type",),
+        "Failed to assign DCID :: type: '%s', node: '%s'",
+        ("type", "node"),
+    ),
+    "irreplaceable": (
+        "Resolution_IrreplaceableLocalRef", (),
+        "Unable to replace a local reference :: ref: '%s', node: '%s'",
+        ("ref", "node"),
+    ),
+    "unassignable": (
+        "Resolution_UnassignableNodeDcid", (),
+        "Unable to assign DCID due to unresolved local reference :: ref: '%s', node: '%s'",
+        ("ref", "node"),
+    ),
+}
+
+
+def _error(kind: str, **ops: str) -> tuple[str, str]:
+    """(counter, message) of a resolver error, rendered on the driver."""
+    counter, c_ops, message, m_ops = _ERRORS[kind]
+    return counter % tuple(ops[o] for o in c_ops), message % tuple(ops[o] for o in m_ops)
+
+
+def _error_cols(kind: str, **ops: Column) -> list[Column]:
+    """``counter`` and ``message`` columns of a resolver error."""
+    counter, c_ops, message, m_ops = _ERRORS[kind]
+    return [
+        F.format_string(counter, *(ops[o] for o in c_ops)).alias("counter"),
+        F.format_string(message, *(ops[o] for o in m_ops)).alias("message"),
+    ]
 
 
 @dataclass
@@ -114,29 +166,83 @@ def _place_dcid(pvs: dict, dcid_dict: dict | None) -> str | None:
     return place_dcid(pvs)
 
 
+def assign_dcids(cands, dcid_dict: dict | None, assign_statvar_dcids: bool = True) -> list[list]:
+    """assignDcids (McfResolver.java:181-242) over candidate nodes — the
+    one assign rule of both engines.
+
+    ``cands``: (node_id, rows) pairs, ``rows`` the node's (prop,
+    value_type, value) triples in input order with the refs replaced so
+    far. Returns one ``[node_id, dcid, ref, counter, message]`` row per
+    node, exactly one of three outcomes: a ``dcid``; the first
+    unreplaced ``ref`` a content-hashed node waits on; or the
+    DcidAssignmentFailure error, named after the node's first type.
+    The first value of each property keys the hash, and the farmhash
+    runs ONCE over the call's keys (long_id_batch is the
+    numpy-vectorized path; per-key pure-Python hashing dominated at
+    ~100k SVObs nodes)."""
+    out: list[list] = []
+    keyed: list[tuple[int, str, str]] = []  # (row in out, namespace, key)
+    for nid, rows in cands:
+        tlist = [v for p, _, v in rows if p == V.TYPE_OF]
+        mode = _mode(tlist)
+        if mode != "OTHER":
+            ref = next((v for _, t, v in rows if t == "UNRESOLVED_REF"), None)
+            if ref is not None:
+                out.append([nid, None, ref, None, None])
+                continue
+        pvs: dict[str, str] = {}
+        constraints = set()
+        pcounts: dict[str, int] = {}
+        for p, _, v in rows:
+            if p == "constraintProperties":
+                constraints.add(v)
+            pvs.setdefault(p, v)
+            pcounts[p] = pcounts.get(p, 0) + 1
+        key, dcid = None, None
+        if mode == "SVOBS":
+            ns, key = V.SVOBS_NAMESPACE, svobs_key_string(pvs)
+        elif mode == "POP":
+            ns, key = V.POP_NAMESPACE, legacy_pop_key_string(pvs, constraints or None)
+        elif mode == "OBS":
+            ns, key = V.DC_NAMESPACE + "o/", legacy_obs_key_string(pvs, pcounts)
+        else:
+            ns = V.DC_NAMESPACE
+            if assign_statvar_dcids and "StatisticalVariable" in tlist:
+                key = statvar_key_string(pvs)
+            if key is None:
+                dcid = _place_dcid(pvs, dcid_dict)
+        if key is not None:
+            keyed.append((len(out), ns, key))
+        elif not dcid:
+            out.append([nid, None, None, *_error("unassigned", type=tlist[0] if tlist else "Thing", node=nid)])
+            continue
+        out.append([nid, dcid, None, None, None])
+    if keyed:
+        for (pos, ns, _), h in zip(keyed, long_id_batch([k for _, _, k in keyed])):
+            out[pos][1] = ns + h
+    return out
+
+
 def resolve_graph_driver(
     rows: list[tuple],
     assign_statvar_dcids: bool = True,
     dcid_dict: dict | None = None,
-) -> tuple[list[tuple], set, list[tuple], int]:
+) -> tuple[list[tuple], list[tuple], set, list[tuple], int]:
     """Pure-Python alternating resolver over (node_id, prop, value_type,
-    value) tuples — mirrors McfResolver.resolve() exactly; also the test
-    oracle for the distributed path.
+    value[, src_file]) tuples — mirrors McfResolver.resolve() exactly;
+    also the test oracle for the distributed engine.
 
-    Returns (resolved_rows, failed_node_ids, errors, rounds) where
-    resolved_rows carry rewritten refs + assigned dcid rows.
+    Returns (resolved_rows, failed_rows, failed_node_ids, errors,
+    rounds): resolved rows carry rewritten refs + assigned dcid rows.
     """
     nodes: dict[str, list] = {}
     for r in rows:
         nodes.setdefault(r[0], []).append(list(r))
     dcids: dict[str, str] = {}
-    types: dict[str, list] = {}
     for nid, rs in nodes.items():
-        for r in rs:
-            if r[1] == V.DCID and nid not in dcids:
-                dcids[nid] = r[3]
-            if r[1] == V.TYPE_OF:
-                types.setdefault(nid, []).append(r[3])
+        own = next((r[3] for r in rs if r[1] == V.DCID), None)
+        if own is not None:
+            dcids[nid] = own
     failed: set[str] = set()
     errors: list[tuple] = []
 
@@ -146,16 +252,13 @@ def resolve_graph_driver(
             errors.append((nid, counter, message))
 
     rounds = 0
-    ref_updated, dcid_updated = 1, 1
     needs_ref: dict[str, str] = {}
     needs_dcid: dict[str, str] = {}
     while rounds < MAX_ROUNDS:
-        if not (rounds == 0 or dcid_updated > 0):
-            break
         # --- replaceLocalRefs ---
         ref_updated = 0
         needs_ref = {}
-        for nid, rs in list(nodes.items()):
+        for nid, rs in nodes.items():
             if nid in failed:
                 continue
             for r in rs:
@@ -163,115 +266,44 @@ def resolve_graph_driver(
                     continue
                 target = r[3][2:] if r[3].startswith("l:") else r[3]
                 if target in failed:
-                    fail(
-                        nid,
-                        f"Resolution_ReferenceToFailedNode_{r[1]}",
-                        f"Found a local ref to an unresolvable node :: ref: '{r[3]}', "
-                        f"property: '{r[1]}', node: '{nid}'",
-                    )
+                    fail(nid, *_error("to_failed", ref=r[3], prop=r[1], node=nid))
                 elif target not in nodes:
-                    fail(
-                        nid,
-                        f"Resolution_OrphanLocalReference_{r[1]}",
-                        f"Found orphan local ref :: ref: '{r[3]}', property: '{r[1]}', "
-                        f"node: '{nid}'",
-                    )
+                    fail(nid, *_error("orphan", ref=r[3], prop=r[1], node=nid))
                 elif target in dcids:
                     r[2], r[3] = "RESOLVED_REF", dcids[target]
                     ref_updated += 1
                 else:
                     needs_ref[nid] = target
-        if not (rounds == 0 or ref_updated > 0):
+        if rounds and not ref_updated:
             break
         # --- assignDcids ---
-        # key strings are built per node, but the farmhash runs ONCE per
-        # round over the whole candidate batch (long_id_batch is the
-        # numpy-vectorized path; per-key pure-Python hashing dominated
-        # this loop at ~100k SVObs nodes)
         dcid_updated = 0
         needs_dcid = {}
-        defer: list[tuple] = []  # (nid, key_string|None, namespace, tlist)
-        for nid, rs in list(nodes.items()):
-            if nid in failed or nid in dcids:
-                continue
-            tlist = types.get(nid, [])
-            mode = _mode(tlist)
-            pending = next((r[3] for r in rs if r[2] == "UNRESOLVED_REF"), None)
-            if mode in ("SVOBS", "POP", "OBS") and pending is not None:
-                needs_dcid[nid] = pending
-                continue
-            pvs = {}
-            constraints = set()
-            pcounts: dict[str, int] = {}
-            for r in rs:
-                if r[1] == "constraintProperties":
-                    constraints.add(r[3])
-                pvs.setdefault(r[1], r[3])
-                pcounts[r[1]] = pcounts.get(r[1], 0) + 1
-            if mode == "SVOBS":
-                defer.append((nid, svobs_key_string(pvs), V.SVOBS_NAMESPACE, tlist))
-            elif mode == "POP":
-                defer.append(
-                    (nid, legacy_pop_key_string(pvs, constraints or None), V.POP_NAMESPACE, tlist)
-                )
-            elif mode == "OBS":
-                defer.append(
-                    (nid, legacy_obs_key_string(pvs, pcounts), V.DC_NAMESPACE + "o/", tlist)
-                )
+        cands = [
+            (nid, [r[1:4] for r in rs])
+            for nid, rs in nodes.items()
+            if nid not in failed and nid not in dcids
+        ]
+        for nid, dcid, ref, counter, message in assign_dcids(cands, dcid_dict, assign_statvar_dcids):
+            if dcid:
+                dcids[nid] = dcid
+                rs = nodes[nid]
+                rs.append([nid, V.DCID, "TEXT", dcid] + rs[0][4:])
+                dcid_updated += 1
+            elif ref is not None:
+                needs_dcid[nid] = ref
             else:
-                key = statvar_key_string(pvs) if (
-                    assign_statvar_dcids and "StatisticalVariable" in tlist
-                ) else None
-                if key is not None:
-                    defer.append((nid, key, V.DC_NAMESPACE, tlist))
-                    continue
-                dcid = _place_dcid(pvs, dcid_dict)
-                if dcid:
-                    dcids[nid] = dcid
-                    rs.append([nid, V.DCID, "TEXT", dcid] + list(rs[0][4:]))
-                    dcid_updated += 1
-                else:
-                    t0 = tlist[0] if tlist else "Thing"
-                    fail(
-                        nid,
-                        f"Resolution_DcidAssignmentFailure_{t0}",
-                        f"Failed to assign DCID :: type: '{t0}', node: '{nid}'",
-                    )
-        if defer:
-            hashable = [(i, d) for i, d in enumerate(defer) if d[1] is not None]
-            batch_ids = long_id_batch([d[1] for _, d in hashable]) if hashable else []
-            hashed = {i: h for (i, _), h in zip(hashable, batch_ids)}
-            for i, (nid, key, ns, tlist) in enumerate(defer):
-                if key is not None:
-                    dcid = ns + hashed[i]
-                    dcids[nid] = dcid
-                    rs = nodes[nid]
-                    rs.append([nid, V.DCID, "TEXT", dcid] + list(rs[0][4:]))
-                    dcid_updated += 1
-                else:
-                    t0 = tlist[0] if tlist else "Thing"
-                    fail(
-                        nid,
-                        f"Resolution_DcidAssignmentFailure_{t0}",
-                        f"Failed to assign DCID :: type: '{t0}', node: '{nid}'",
-                    )
+                fail(nid, counter, message)
         rounds += 1
+        if not dcid_updated:
+            break
 
     for nid, ref in needs_ref.items():
         if nid not in failed:
-            fail(
-                nid,
-                "Resolution_IrreplaceableLocalRef",
-                f"Unable to replace a local reference :: ref: '{ref}', node: '{nid}'",
-            )
+            fail(nid, *_error("irreplaceable", ref=ref, node=nid))
     for nid, ref in needs_dcid.items():
         if nid not in failed:
-            fail(
-                nid,
-                "Resolution_UnassignableNodeDcid",
-                f"Unable to assign DCID due to unresolved local reference :: ref: "
-                f"'{ref}', node: '{nid}'",
-            )
+            fail(nid, *_error("unassignable", ref=ref, node=nid))
 
     resolved_rows = [
         tuple(r) for nid, rs in nodes.items() if nid not in failed for r in rs
@@ -407,368 +439,282 @@ def _dictionary_frame(
     )
 
 
+_ASSIGN_SCHEMA = "node_id string, dcid string, ref string, counter string, message string"
+
+
+def _first(col: str, cond: Column | None = None) -> Column:
+    """Aggregate: ``col`` of the group's first row in input order (the
+    lowest ``_ord``) among the rows where ``cond`` holds."""
+    s = F.struct("_ord", col)
+    return F.min(s if cond is None else F.when(cond, s))[col]
+
+
+def _is_ref() -> Column:
+    return F.col("value_type").eqNullSafe("UNRESOLVED_REF")
+
+
+def _replace_refs(rows: DataFrame, refs: DataFrame, cols: list[str]) -> DataFrame:
+    """``rows`` with every UNRESOLVED_REF row in ``refs`` (node_id,
+    _ord, _rdc) rewritten to a RESOLVED_REF of ``_rdc``. Only ref rows
+    enter the join; the non-ref majority passes around it."""
+    return rows.filter(~_is_ref()).select(*cols).unionByName(
+        rows.filter(_is_ref())
+        .join(refs, ["node_id", "_ord"], "left")
+        .withColumn(
+            "value_type",
+            F.when(F.col("_rdc").isNotNull(), F.lit("RESOLVED_REF")).otherwise(F.col("value_type")),
+        )
+        .withColumn("value", F.coalesce("_rdc", "value"))
+        .select(*cols)
+    )
+
+
+def _update(state: DataFrame, updates: DataFrame) -> DataFrame:
+    """``state`` with (node_id, dcid, counter, message) ``updates``
+    applied: an assigned dcid marks ``assigned``, an error marks
+    ``failed``; a node keeps its first error."""
+    upd = updates.select(
+        "node_id",
+        F.col("dcid").alias("_ndc"),
+        F.col("counter").alias("_nc"),
+        F.col("message").alias("_nm"),
+    )
+    return state.join(upd, "node_id", "left").select(
+        "node_id",
+        F.coalesce("dcid", "_ndc").alias("dcid"),
+        (F.col("assigned") | F.col("_ndc").isNotNull()).alias("assigned"),
+        (F.col("failed") | F.col("_nc").isNotNull()).alias("failed"),
+        F.coalesce("counter", "_nc").alias("counter"),
+        F.coalesce("message", "_nm").alias("message"),
+        *(["_src"] if "_src" in state.columns else []),
+    )
+
+
 def _resolve_graph_distributed(
     nodes: DataFrame,
     assign_statvar_dcids: bool,
     dictionary: DataFrame,
     input_materialized: bool = False,
 ) -> McfResolveResult:
-    """Distributed alternating fixpoint.
+    """The driver engine's rules as a Spark loop.
 
-    Working sets per round: pending refs (UNRESOLVED_REF rows) and
-    dcid-less nodes — both shrink monotonically and are orders of
-    magnitude smaller than the statement table, which is touched once
-    at the end for the rewrite. Candidate dcid generation fans the
-    (small) candidate set through the same vectorized key builders the
-    extract path uses.
+    Shared with :func:`resolve_graph_driver`: the assign rule
+    (:func:`assign_dcids`, called once per Arrow batch of a
+    ``mapInPandas`` over candidate nodes packed one row each, so a
+    batch boundary never splits a node), the error texts
+    (:data:`_ERRORS`), the value order and the round count and exit.
+    Input order is an ordinal taken on the materialized ``nodes`` rows:
+    a node's packed values are sorted by it, its first dcid row, first
+    src_file and first failing ref are the lowest, its last pending ref
+    the highest — the driver's list order.
+
+    State: one checkpointed row per node (dcid, whether the resolver
+    assigned it, whether it failed and its first error). A round
+    classifies the pending refs against their targets' state in one
+    observed checkpoint (the observed hit count is RoundResult's
+    numUpdated, McfResolver.java:139-148), then assigns the candidates
+    in a second observed checkpoint, then folds both into the state.
+    The statement table is read per round only for the candidates'
+    rows and rewritten ONCE at the end.
+
+    Differs from the driver only where the driver's outcome depends on
+    node order: a ref fails on a node that failed earlier in the same
+    pass (the driver walks nodes in order); here, in the first round,
+    on nodes holding an orphan ref, and otherwise one round later.
 
     ``dictionary``: the external-id dictionary as a (prop, ext_id, dcid)
     frame with one non-empty dcid per key (:func:`_dictionary_frame`),
-    checkpointed once here. Place-mode candidates resolve via a
-    per-round JOIN against it with the same priority-order semantics
-    as :func:`_place_dcid`; each node passes through the join at most
-    once (assigned or failed nodes leave the candidate set), so the
-    total join work is one pass over the place nodes regardless of
-    rounds.
+    checkpointed once and left-joined onto each candidate's external-id
+    rows, so the assign rule reads a per-batch dict of the hits.
     """
+    from import_spark.session import persistent_rdd_ids
+
     spark = nodes.sparkSession
     # callers that hand over an already-materialized table (genmcf
     # checkpoints the mutated statement table) skip the redundant
-    # 7M-row re-checkpoint; the per-round scans read the parent blocks
-    # through a trivial projection instead
+    # 7M-row re-checkpoint
     if not input_materialized:
         nodes = nodes.localCheckpoint()
-    # every round's place join reads the dictionary: materialize its
-    # seed join and source union once, not once per round
-    dictionary = dictionary.localCheckpoint()
-    # ONE pass over the statement table yields both setup frames: the
-    # node-id universe and the per-node min dcid (previously two full
-    # scans + two shuffles)
-    ids_and_dcids = (
-        nodes.groupBy("node_id")
-        .agg(F.min(F.when(F.col("prop") == V.DCID, F.col("value"))).alias("dcid"))
-        .localCheckpoint()
-    )
-    all_ids = ids_and_dcids.select("node_id")
-    dcids = ids_and_dcids.filter(F.col("dcid").isNotNull()).select("node_id", "dcid")
-    pending = (
-        nodes.filter(F.col("value_type") == "UNRESOLVED_REF")
-        .select(
-            "node_id",
-            "prop",
-            F.regexp_replace("value", "^l:", "").alias("target"),
-        )
-        .localCheckpoint()
-    )
-    # orphans fail up-front (target id never appears)
-    orphan = pending.join(
-        all_ids.withColumnRenamed("node_id", "target"), "target", "left_anti"
-    )
-    errors = orphan.select(
-        "node_id",
-        F.concat(F.lit("Resolution_OrphanLocalReference_"), F.col("prop")).alias("counter"),
-        F.concat(F.lit("Found orphan local ref :: ref: 'l:"), F.col("target"),
-                 F.lit("', property: '"), F.col("prop"), F.lit("', node: '"),
-                 F.col("node_id"), F.lit("'")).alias("message"),
+    cols = nodes.columns
+    has_src = "src_file" in cols
+    # the ordinal is stable: the rows are materialized blocks
+    nodes = nodes.withColumn("_ord", F.monotonically_increasing_id())
+    dictionary = dictionary.select(
+        "prop", F.col("ext_id").alias("value"), F.col("dcid").alias("_dc")
     ).localCheckpoint()
-    # `failed` is always a tiny distinct over the CHECKPOINTED errors
-    # frame — deriving it lazily at each use point saves two eager
-    # checkpoint jobs per round (the loop is job-count-bound: its
-    # per-round working sets are orders of magnitude under a task's
-    # worth of data, so every removed job is removed wall-clock)
-    failed = errors.select("node_id").distinct()
-    pending = pending.join(failed, "node_id", "left_anti").localCheckpoint()
 
-    resolved_refs = local_frame(
-        spark,
-        pd.DataFrame(columns=["node_id", "prop", "target", "dcid"]),
-        "node_id string, prop string, target string, dcid string",
+    pending = nodes.filter(_is_ref()).select(
+        "node_id", "prop", "value", F.regexp_replace("value", "^l:", "").alias("target"), "_ord"
     )
-    rounds = 0
-    # Every per-round lineage cut is an EAGER localCheckpoint, so a
-    # round's blocks are self-contained and the previous round's are
-    # dead the moment the round completes — release them, or ~8 blocks
-    # x MAX_ROUNDS of retained storage linger until driver GC and tax
-    # every later job in the session (measured: 2x on an unrelated
-    # follow-up query after a 10-round resolve).
-    from import_spark.session import persistent_rdd_ids
+    base = nodes.groupBy("node_id").agg(
+        _first("value", F.col("prop") == V.DCID).alias("dcid"),
+        *([_first("src_file").alias("_src")] if has_src else []),
+    )
+    # nodes holding an orphan ref count as failed from the first pass on,
+    # so a ref to one fails there (the driver's in-order walk reaches
+    # such a node before the nodes that reference it)
+    holders = (
+        pending.join(base.select(F.col("node_id").alias("target")), "target", "left_anti")
+        .select("node_id", F.lit(True).alias("_h"))
+        .distinct()
+    )
+    start_ids = persistent_rdd_ids(spark)
+    state = base.join(holders, "node_id", "left").select(
+        "node_id",
+        "dcid",
+        F.lit(False).alias("assigned"),
+        F.coalesce("_h", F.lit(False)).alias("failed"),
+        F.lit(None).cast("string").alias("counter"),
+        F.lit(None).cast("string").alias("message"),
+        *(["_src"] if has_src else []),
+    ).localCheckpoint()
+    resolved_refs = local_frame(
+        spark, pd.DataFrame(columns=["node_id", "_ord", "_rdc"]),
+        "node_id string, _ord long, _rdc string",
+    )
+    pack_cols = ["node_id", "_ord", "prop", "value_type", "value"]
+    is_id = F.coalesce(F.col("prop").isin(*V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS), F.lit(False))
 
+    def assign(batches):
+        for pdf in batches:
+            hits: dict = {}
+            cands = []
+            for nid, pvl in zip(pdf["node_id"], pdf["pvl"]):
+                cands.append((nid, [(d["prop"], d["value_type"], d["value"]) for d in pvl]))
+                hits.update(((d["prop"], d["value"]), d["_dc"]) for d in pvl if d["_dc"])
+            yield pd.DataFrame(
+                assign_dcids(cands, hits, assign_statvar_dcids),
+                columns=["node_id", "dcid", "ref", "counter", "message"],
+            )
+
+    rounds = 0
+    new_errors = None
+    # Each round's checkpoints supersede the previous round's (the
+    # initial state's, for the first), which are dead once the round
+    # completes — release them, or blocks x MAX_ROUNDS of retained
+    # storage linger until driver GC and tax every later job in the
+    # session (measured: 2x on an unrelated follow-up query after a
+    # 10-round resolve).
     prev_round_ids: set[int] = set()
     while rounds < MAX_ROUNDS:
-        rounds += 1
-        round_start_ids = persistent_rdd_ids(spark)
-        # refs to failed nodes poison their holders
-        to_failed = pending.join(
-            failed.withColumnRenamed("node_id", "target"), "target"
+        # --- replaceLocalRefs: each pending ref against its target ---
+        n_hit = Observation()
+        target = state.select(
+            F.col("node_id").alias("target"),
+            F.col("dcid").alias("_tdc"),
+            F.col("failed").alias("_tfail"),
         )
-        new_fail_errors = to_failed.select(
-            "node_id",
-            F.concat(F.lit("Resolution_ReferenceToFailedNode_"), F.col("prop")).alias("counter"),
-            F.concat(F.lit("Found a local ref to an unresolvable node :: ref: 'l:"),
-                     F.col("target"), F.lit("', node: '"), F.col("node_id"), F.lit("'")).alias("message"),
-        )
-        # replace refs whose target has a dcid — `hit` joins two small
-        # CHECKPOINTED frames, so it stays lazy: the count materializes
-        # it once and the resolved_refs checkpoint re-evaluates a
-        # broadcast-sized join rather than paying an extra eager job
-        hit = pending.join(
-            dcids.select(F.col("node_id").alias("target"), "dcid"), "target"
-        )
-        n_hit = hit.count()
-        resolved_refs = resolved_refs.unionByName(
-            hit.select("node_id", "prop", "target", "dcid")
-        ).localCheckpoint()
-        # one carried-errors checkpoint per round: new_fail_errors stays
-        # lazy here (its inputs — pending, errors — are this round's
-        # checkpoints, unpersisted only at the NEXT round's end, after
-        # the post-assign checkpoint below has materialized the union)
-        errors = errors.unionByName(new_fail_errors)
-        failed = errors.select("node_id").distinct()
-        pending = (
-            pending.join(failed, "node_id", "left_anti")
-            .join(
-                dcids.select(F.col("node_id").alias("target")), "target", "left_anti"
+        step = (
+            pending.join(target, "target", "left")
+            .withColumn(
+                "_st",
+                F.when(F.col("_tfail").isNull(), "orphan")
+                .when(F.col("_tfail"), "to_failed")
+                .when(F.col("_tdc").isNotNull(), "hit")
+                .otherwise("pending"),
             )
+            .observe(n_hit, F.count(F.when(F.col("_st") == "hit", 1)).alias("n"))
             .localCheckpoint()
         )
-
-        # --- assignDcids over candidates ---
-        cand_ids = all_ids.join(
-            dcids.select("node_id"), "node_id", "left_anti"
-        ).join(failed, "node_id", "left_anti")
-        n_cand = cand_ids.count()
-        if n_cand == 0 and n_hit == 0 and rounds > 1:
-            break
-        if n_cand == 0:
-            if n_hit == 0:
-                break
-            continue
-        has_pending = pending.select("node_id").distinct().withColumn("_p", F.lit(True))
-        # candidate pvs: original non-ref rows + resolved refs so far
-        cand_rows = (
-            nodes.join(cand_ids, "node_id")
-            .select("node_id", "prop", "value_type", "value")
-        )
-        # only UNRESOLVED_REF rows can match the resolved-ref rewrite
-        # (pending/resolved_refs are derived from exactly those rows):
-        # keep the non-ref majority out of the join entirely instead of
-        # shuffling every candidate row through it
-        is_ref = F.col("value_type").eqNullSafe("UNRESOLVED_REF")
-        cand_rows = cand_rows.filter(~is_ref).unionByName(
-            cand_rows.filter(is_ref)
-            .join(
-                resolved_refs.select(
-                    "node_id", "prop",
-                    F.concat(F.lit("l:"), F.col("target")).alias("value"),
-                    F.col("dcid").alias("_rdc"),
-                ),
-                ["node_id", "prop", "value"],
-                "left",
+        # a node's error is its first failing ref
+        failing = [
+            step.filter(F.col("_st") == kind).select(
+                "node_id", "_ord",
+                *_error_cols(kind, ref=F.col("value"), prop=F.col("prop"), node=F.col("node_id")),
             )
-            .withColumn("value", F.coalesce("_rdc", "value"))
-            .drop("_rdc")
-        )
-        import pandas as pd_  # local alias for the UDF closure
-
-        assign_cols = ["node_id", "dcid", "status", "type0", "pri", "prop", "ext_id"]
-        assign_schema = (
-            "node_id string, dcid string, status string, type0 string,"
-            " pri int, prop string, ext_id string"
-        )
-
-        def assign(batches):
-            # one input row per node (pre-packed below): an Arrow batch
-            # boundary can never split a node's pvs, which would run the
-            # node twice with partial state and mis-fail it.
-            # Key strings are built per node; the farmhash runs ONCE per
-            # Arrow batch via long_id_batch — the same deferred pattern
-            # as the driver fixpoint above (per-key pure-Python hashing
-            # dominated this stage at ~100k SVObs nodes per round).
-            for pdf in batches:
-                out = []
-                hash_pos: list[int] = []
-                hash_ns: list[str] = []
-                hash_keys: list[str] = []
-                for nid, pvl, pend in zip(pdf["node_id"], pdf["pvl"], pdf["_p"]):
-                    pairs = [(d["prop"], d["value"]) for d in pvl]
-                    tlist = [v for p, v in pairs if p == V.TYPE_OF]
-                    mode = _mode(tlist)
-                    type0 = tlist[0] if tlist else "Thing"
-                    if mode in ("SVOBS", "POP", "OBS") and bool(pend):
-                        out.append([nid, None, "PENDING", type0, None, None, None])
-                        continue
-                    pvs, constraints = {}, set()
-                    pcounts: dict[str, int] = {}
-                    for p, v in pairs:
-                        if p == "constraintProperties":
-                            constraints.add(v)
-                        pvs.setdefault(p, v)
-                        pcounts[p] = pcounts.get(p, 0) + 1
-                    if mode == "SVOBS":
-                        key, ns = svobs_key_string(pvs), V.SVOBS_NAMESPACE
-                    elif mode == "POP":
-                        key, ns = legacy_pop_key_string(pvs, constraints or None), V.POP_NAMESPACE
-                    elif mode == "OBS":
-                        key, ns = legacy_obs_key_string(pvs, pcounts), V.DC_NAMESPACE + "o/"
-                    else:
-                        key, ns = (
-                            statvar_key_string(pvs), V.DC_NAMESPACE,
-                        ) if assign_statvar_dcids and "StatisticalVariable" in tlist else (None, "")
-                        if key is None:
-                            # emit the ordered dictionary candidates + a
-                            # sentinel fallback row; the hit is decided
-                            # by the post-UDF join (same priority walk
-                            # as _place_dcid)
-                            for i, p in enumerate(V.PLACE_RESOLVABLE_AND_ASSIGNABLE_IDS):
-                                v = pvs.get(p)
-                                if v:
-                                    out.append([nid, None, "PLACE", type0, i, p, v])
-                            out.append(
-                                [nid, place_dcid(pvs), "PLACE", type0, _FALLBACK_PRI, None, None]
-                            )
-                            continue
-                    if key is None:
-                        out.append([nid, None, "FAIL", type0, None, None, None])
-                    else:
-                        hash_pos.append(len(out))
-                        hash_ns.append(ns)
-                        hash_keys.append(key)
-                        out.append([nid, None, "OK", type0, None, None, None])
-                if hash_keys:
-                    for pos, ns, h in zip(hash_pos, hash_ns, long_id_batch(hash_keys)):
-                        out[pos][1] = ns + h
-                yield pd_.DataFrame(out, columns=assign_cols)
-
-        # pack each node into ONE row (sorted pvs pin first-value-wins
-        # determinism regardless of shuffle order)
-        cand_packed = (
-            cand_rows.join(has_pending, "node_id", "left")
-            .na.fill({"_p": False})
+            for kind in ("orphan", "to_failed")
+        ]
+        new_errors = (
+            failing[0].unionByName(failing[1])
             .groupBy("node_id")
-            .agg(
-                F.sort_array(F.collect_list(F.struct("prop", "value"))).alias("pvl"),
-                F.max("_p").alias("_p"),
-            )
+            .agg(F.min(F.struct("_ord", "counter", "message")).alias("_e"))
+            .select("node_id", F.lit(None).cast("string").alias("dcid"), "_e.counter", "_e.message")
         )
-        # checkpoint BEFORE splitting: place and rest both read the
-        # pack-shuffle + Arrow UDF output from blocks instead of each
-        # re-running it (the per-round cost driver)
-        assigned = cand_packed.mapInPandas(assign, schema=assign_schema).localCheckpoint()
-        # resolve the PLACE candidates against the dictionary frame:
-        # lowest-priority-index hit wins, sentinel fallback row (prefix
-        # dcid or null) when no hit — exactly _place_dcid's walk, as a
-        # join instead of a driver dict
-        place = assigned.filter(F.col("status") == "PLACE")
-        rest = assigned.filter(F.col("status") != "PLACE").select(
-            "node_id", "dcid", "status", "type0"
-        )
-        hits = place.filter(F.col("pri") < _FALLBACK_PRI).join(
-            dictionary.withColumnRenamed("dcid", "_ddc"), ["prop", "ext_id"]
-        )
-        best = hits.groupBy("node_id").agg(F.min_by("_ddc", "pri").alias("_hit"))
-        resolved_place = (
-            place.filter(F.col("pri") == _FALLBACK_PRI)
-            .select("node_id", F.col("dcid").alias("_fb"), "type0")
-            .join(best, "node_id", "left")
-            .withColumn("dcid", F.coalesce("_hit", "_fb"))
-            .withColumn(
-                "status",
-                F.when(F.col("dcid").isNotNull(), F.lit("OK")).otherwise(F.lit("FAIL")),
-            )
-            .select("node_id", "dcid", "status", "type0")
-        )
-        assigned = rest.unionByName(resolved_place).localCheckpoint()
-        new_dcids = assigned.filter(F.col("status") == "OK").select("node_id", "dcid")
-        n_new = new_dcids.count()
-        fail_assign = assigned.filter(F.col("status") == "FAIL")
-        errors = errors.unionByName(
-            fail_assign.select(
-                "node_id",
-                F.concat(F.lit("Resolution_DcidAssignmentFailure_"), F.col("type0")).alias("counter"),
-                F.concat(F.lit("Failed to assign DCID :: type: '"), F.col("type0"),
-                         F.lit("', node: '"), F.col("node_id"), F.lit("'")).alias("message"),
-            )
+        if rounds and not n_hit.get["n"]:
+            break
+        # a failing node keeps the refs this pass replaced before and
+        # after its first failing ref, as the driver's row walk does
+        resolved_refs = resolved_refs.unionByName(
+            step.filter(F.col("_st") == "hit").select("node_id", "_ord", F.col("_tdc").alias("_rdc"))
         ).localCheckpoint()
-        failed = errors.select("node_id").distinct()
-        dcids = dcids.unionByName(new_dcids).localCheckpoint()
+
+        # --- assignDcids over the candidates ---
+        cands = state.filter(F.col("dcid").isNull() & ~F.col("failed")).join(
+            new_errors, "node_id", "left_anti"
+        )
+        rows = _replace_refs(nodes.join(cands, "node_id", "left_semi"), resolved_refs, pack_cols)
+        rows = rows.filter(~is_id).withColumn("_dc", F.lit(None).cast("string")).unionByName(
+            rows.filter(is_id).join(dictionary, ["prop", "value"], "left")
+        )
+        n_new = Observation()
+        assigned = (
+            rows.groupBy("node_id")
+            .agg(
+                F.sort_array(
+                    F.collect_list(F.struct("_ord", "prop", "value_type", "value", "_dc"))
+                ).alias("pvl")
+            )
+            .mapInPandas(assign, schema=_ASSIGN_SCHEMA)
+            .observe(n_new, F.count("dcid").alias("n"))
+            .localCheckpoint()
+        )
+        state = _update(
+            state, new_errors.unionByName(assigned.filter(F.col("ref").isNull()).drop("ref"))
+        ).localCheckpoint()
+        new_errors = None
+        pending = step.filter(F.col("_st") == "pending").join(
+            state.filter("failed"), "node_id", "left_anti"
+        ).select("node_id", "prop", "value", "target", "_ord")
         now_ids = persistent_rdd_ids(spark)
         for rid, rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items():
             if rid in prev_round_ids:
                 rdd.unpersist()
-        prev_round_ids = now_ids - round_start_ids
-        if n_new == 0 and n_hit == 0:
+        prev_round_ids, start_ids = now_ids - start_ids, now_ids
+        rounds += 1
+        if not n_new.get["n"]:
             break
+    if new_errors is not None:
+        state = _update(state, new_errors)
 
-    # leftovers
-    leftover_ref = pending.join(failed, "node_id", "left_anti")
-    errors = errors.unionByName(
-        leftover_ref.select(
-            "node_id",
-            F.lit("Resolution_IrreplaceableLocalRef").alias("counter"),
-            F.concat(F.lit("Unable to replace a local reference :: ref: '"),
-                     F.col("target"), F.lit("', node: '"), F.col("node_id"), F.lit("'")).alias("message"),
-        )
+    # --- leftovers: the last refs pass's pending refs (the node's last
+    # one), then the last assign pass's waiting nodes ---
+    failed = state.filter("failed").select("node_id")
+    irreplaceable = (
+        step.filter(F.col("_st") == "pending")
+        .groupBy("node_id")
+        .agg(F.max(F.struct("_ord", "target"))["target"].alias("ref"))
+        .join(failed, "node_id", "left_anti")
     )
-    leftover_dcid = (
-        all_ids.join(dcids.select("node_id"), "node_id", "left_anti")
-        .join(errors.select("node_id").distinct(), "node_id", "left_anti")
-        .join(pending.select("node_id").distinct(), "node_id", "left")
+    unassignable = (
+        assigned.filter(F.col("ref").isNotNull())
+        .join(failed, "node_id", "left_anti")
+        .join(irreplaceable, "node_id", "left_anti")
     )
-    errors = errors.unionByName(
-        leftover_dcid.select(
-            "node_id",
-            F.lit("Resolution_UnassignableNodeDcid").alias("counter"),
-            F.concat(F.lit("Unable to assign DCID :: node: '"), F.col("node_id"), F.lit("'")).alias("message"),
-        )
-    ).localCheckpoint()
-    failed = errors.select("node_id").distinct().localCheckpoint()
+    ops = {"ref": F.col("ref"), "node": F.col("node_id")}
+    errors = (
+        state.filter(F.col("counter").isNotNull())
+        .select("node_id", "counter", "message")
+        .unionByName(irreplaceable.select("node_id", *_error_cols("irreplaceable", **ops)))
+        .unionByName(unassignable.select("node_id", *_error_cols("unassignable", **ops)))
+        .localCheckpoint()
+    )
 
     # --- final rewrite: ONE pass over the statement table ---
     # rewrite BEFORE splitting so failed nodes keep partial progress
     # (reference parity, McfResolverTest_Resolved_InstanceFailure)
-    rr = resolved_refs.select(
-        "node_id", "prop",
-        F.concat(F.lit("l:"), F.col("target")).alias("value"),
-        F.col("dcid").alias("_rdc"),
-    )
-    # same ref-only split as the candidate pack: only UNRESOLVED_REF
-    # rows can be rewritten, so the non-ref majority of the statement
-    # table never enters the 3-column join shuffle
-    is_ref_row = F.col("value_type").eqNullSafe("UNRESOLVED_REF")
-    out = nodes.filter(~is_ref_row).unionByName(
-        nodes.filter(is_ref_row)
-        .join(rr, ["node_id", "prop", "value"], "left")
-        .withColumn(
-            "value_type",
-            F.when(F.col("_rdc").isNotNull(), F.lit("RESOLVED_REF")).otherwise(F.col("value_type")),
-        )
-        .withColumn("value", F.coalesce("_rdc", "value"))
-        .drop("_rdc")
-        .select(*nodes.columns)
-    )
-    # add assigned dcid rows
-    src = F.lit("").alias("src_file") if "src_file" in nodes.columns else None
-    new_dcid_rows = (
-        dcids.join(
-            nodes.filter(F.col("prop") == V.DCID).select("node_id").distinct(),
-            "node_id",
-            "left_anti",
-        )
-        .join(failed, "node_id", "left_anti")
-        .select(
+    out = _replace_refs(nodes, resolved_refs, cols).unionByName(
+        state.filter("assigned").select(
             "node_id",
             F.lit(V.DCID).alias("prop"),
             F.lit("TEXT").alias("value_type"),
             F.col("dcid").alias("value"),
-            *([src] if src is not None else []),
+            *([F.col("_src").alias("src_file")] if has_src else []),
         )
     )
-    rewritten = out.select(*nodes.columns)
-    out = (
-        rewritten.join(failed, "node_id", "left_anti")
-        .unionByName(new_dcid_rows.select(*nodes.columns))
+    error = errors.groupBy("node_id").agg(F.min("counter").alias("error"))
+    return McfResolveResult(
+        resolved=out.join(error, "node_id", "left_anti"),
+        failed=out.join(error, "node_id"),
+        errors=errors,
+        rounds=rounds,
     )
-    failed_rows = rewritten.join(failed, "node_id").join(
-        errors.groupBy("node_id").agg(F.min("counter").alias("error")), "node_id", "left"
-    )
-    return McfResolveResult(resolved=out, failed=failed_rows, errors=errors, rounds=rounds)

@@ -349,7 +349,7 @@ def resolve_triples(triples: DataFrame, rmap: DataFrame, broadcast: bool = False
 
 
 def narrow_distributed_step(
-    narrow: DataFrame,
+    narrow: DataFrame, n_same: int | None = None
 ) -> tuple[NarrowMaps, tuple[int, int], tuple[int, int]]:
     """Spark twin of ``narrow_driver_step`` over the narrow classes
     (DEF/local/sameAs rows with their ``_cls``; ERROR rows are
@@ -357,12 +357,16 @@ def narrow_distributed_step(
     local-ref lookup of every local and sameAs row, connected components
     (driver union-find while the edges fit, else the distributed
     kernel) and the failed table, in ``_failed_schema`` order.
+    ``n_same``: the sameAs row count when the caller already holds it;
+    over ``DRIVER_CC_MAX_EDGES`` the distributed kernel runs without
+    the union-find path's checkpoint and size probe.
 
     Every map is materialized by ``localCheckpoint``, so the caller may
     release ``narrow``; the exact (rows, bytes) of ``rmap`` and of
     ``components`` are observed on their checkpoint jobs and returned
     with the maps."""
     from import_spark.functions.size_gate import checkpoint_sized
+    from import_spark.operators import canonicalize as cz
 
     cls = F.col("_cls")
     defs = resolve_locals(narrow)
@@ -388,7 +392,11 @@ def narrow_distributed_step(
     edges = refs.filter((cls == CLS_SAMEAS) & ~lost).select(
         F.col("subj").alias("src"), F.coalesce(F.col("_dc"), F.col("obj")).alias("dst")
     )
-    fast_cc = connected_components_fast(edges)
+    fast_cc = (
+        connected_components_fast(edges)
+        if n_same is None or n_same <= cz.DRIVER_CC_MAX_EDGES
+        else None
+    )
     components, cc_size = checkpoint_sized(
         fast_cc if fast_cc is not None else connected_components(edges)
     )
@@ -579,7 +587,7 @@ def run_pipeline(
         )
         failed = rz._driver_parquet_handoff(spark, maps.failed, _failed_schema(narrow.schema))
     else:
-        maps, rmap_size, cc_size = narrow_distributed_step(narrow)
+        maps, rmap_size, cc_size = narrow_distributed_step(narrow, n_same)
         rmap, components, failed = maps.rmap, maps.components, maps.failed
         failed_counts = None
     if snap is None:

@@ -304,6 +304,135 @@ def test_resolver_statvar_content_hash(spark):
     assert len(dcids) == 1 and dcids[0].startswith("dc/")
 
 
+R, U, T, N = "RESOLVED_REF", "UNRESOLVED_REF", "TEXT", "NUMBER"
+
+
+def _svobs(nid, about, date="2020", value="1"):
+    return [
+        (nid, "typeOf", R, "StatVarObservation"),
+        (nid, "variableMeasured", R, "Count_Person"),
+        (nid, "observationAbout", U, about),
+        (nid, "observationDate", T, date),
+        (nid, "value", N, value),
+    ]
+
+
+# one node per case the two engines must agree on, in an order where
+# every failed node precedes the nodes that reference it
+ENGINE_BATTERY = [
+    # place resolved through dcid_dict, then an SVObs waiting on it
+    ("P1", "typeOf", R, "City"), ("P1", "isoCode", T, "US"),
+    *_svobs("O1", "l:P1", value="7"),
+    # orphan ref; a ref to that failed node
+    ("B1", "typeOf", R, "City"), ("B1", "dcid", T, "geoId/01"),
+    ("B1", "containedIn", U, "l:Nowhere"),
+    ("B2", "typeOf", R, "City"), ("B2", "dcid", T, "geoId/02"), ("B2", "near", U, "l:B1"),
+    # two-node SVObs cycle
+    *_svobs("C1", "l:C2"), *_svobs("C2", "l:C1", value="2"),
+    # no dcid: the failure names the FIRST type
+    ("Z", "typeOf", R, "Zeta"), ("Z", "typeOf", R, "Alpha"), ("Z", "name", T, "zed"),
+    # place resolved through the local-graph seed; the SVObs on it has
+    # two dates, and the first one keys its hash
+    ("L1", "typeOf", R, "Country"), ("L1", "isoCode", T, "FR"), ("L1", "dcid", T, "country/FRA"),
+    ("L2", "typeOf", R, "City"), ("L2", "isoCode", T, "FR"),
+    *_svobs("O2", "l:L2", date="2021", value="3"), ("O2", "observationDate", T, "2020"),
+    # dict_df hit; prefix fallback
+    ("P3", "typeOf", R, "City"), ("P3", "wikidataId", T, "Q90"),
+    ("P4", "typeOf", R, "City"), ("P4", "isoCode", T, "ZZ"),
+    # legacy Population, and a legacy Observation waiting on it
+    ("POP", "typeOf", R, "StatisticalPopulation"), ("POP", "populationType", R, "Person"),
+    ("POP", "location", U, "l:P1"),
+    ("OB", "typeOf", R, "Observation"), ("OB", "observedNode", U, "l:POP"),
+    ("OB", "measuredProperty", R, "count"), ("OB", "observationDate", T, "2020"),
+    ("OB", "measuredValue", N, "5"),
+    # StatVar content hash
+    ("SV", "typeOf", R, "StatisticalVariable"), ("SV", "populationType", R, "Person"),
+    ("SV", "measuredProperty", R, "count"), ("SV", "statType", R, "measuredValue"),
+    ("SV", "gender", R, "Female"),
+    # multi-valued legacy-obs key prop: fails
+    ("BAD", "typeOf", R, "Observation"), ("BAD", "observedNode", R, "geoId/06"),
+    ("BAD", "observationDate", T, "2020"), ("BAD", "measuredProperty", R, "count"),
+    ("BAD", "measuredValue", N, "1"), ("BAD", "unit", R, "Meter"), ("BAD", "unit", R, "Foot"),
+    # failed by its orphan ref, keeping the ref the same pass replaced
+    ("X1", "typeOf", R, "City"), ("X1", "dcid", T, "geoId/x1"), ("X1", "near", U, "l:L1"),
+    ("X1", "containedIn", U, "l:Nowhere2"),
+    # assigned a dcid, then failed by its ref to BAD: keeps the dcid row
+    ("F1", "typeOf", R, "City"), ("F1", "isoCode", T, "DE"), ("F1", "near", U, "l:BAD"),
+]
+
+
+def test_resolver_engines_agree_exactly(spark):
+    """The driver and the distributed engine on one battery: identical
+    resolved rows, failed rows with their error, error rows and
+    rounds — messages, first-type failures, partial ref replacement and
+    the assigned dcid row's src_file included."""
+    rows = [r + (f"f{i % 3}.csv",) for i, r in enumerate(ENGINE_BATTERY)]
+    dict_df = spark.createDataFrame(
+        [("wikidataId", "Q90", "geoId/Paris")], "prop string, ext_id string, dcid string"
+    )
+    cols = ["node_id", "prop", "value_type", "value", "src_file"]
+    got = []
+    for dist in (False, True):
+        res = resolve_graph(
+            _df(spark, rows),
+            force_distributed=dist,
+            dcid_dict={("isoCode", "US"): "country/USA"},
+            dict_df=dict_df,
+        )
+        got.append((
+            sorted(tuple(r) for r in res.resolved.select(*cols).collect()),
+            sorted(tuple(r) for r in res.failed.select(*cols, "error").collect()),
+            sorted(tuple(r) for r in res.errors.select("node_id", "counter", "message").collect()),
+            res.rounds,
+        ))
+    (resolved, failed, errors, rounds), dist = got
+    assert resolved == dist[0]
+    assert failed == dist[1]
+    assert errors == dist[2]
+    assert rounds == dist[3] == 3
+    msgs = {e[0]: e[1:] for e in errors}
+    assert msgs["Z"] == (
+        "Resolution_DcidAssignmentFailure_Zeta", "Failed to assign DCID :: type: 'Zeta', node: 'Z'"
+    )
+    assert msgs["B2"][1] == (
+        "Found a local ref to an unresolvable node :: ref: 'l:B1', property: 'near', node: 'B2'"
+    )
+    assert set(msgs) == {"B1", "B2", "C1", "C2", "Z", "BAD", "X1", "F1"}
+    dcids = {r[0]: r[3] for r in resolved if r[1] == "dcid"}
+    assert dcids["P1"] == "country/USA" and dcids["L2"] == "country/FRA"
+    assert dcids["P3"] == "geoId/Paris" and dcids["P4"] == "iso/ZZ"
+    assert ("X1", "near", "RESOLVED_REF", "country/FRA") in {r[:4] for r in failed}
+    assert ("F1", "dcid", "TEXT", "iso/DE") in {r[:4] for r in failed}
+
+
+def _budget_graph(spark):
+    """50 isoCode places and 2,000 SVObs referencing them."""
+    rows = [
+        r
+        for p in range(50)
+        for r in ((f"P{p}", "typeOf", R, "City"), (f"P{p}", "isoCode", T, f"C{p:02d}"))
+    ]
+    for i in range(2000):
+        rows += _svobs(f"O{i}", f"l:P{i % 50}", value=str(i))
+    return _df(spark, rows).localCheckpoint()
+
+
+def test_resolve_graph_job_budget(spark, job_ids):
+    """Jobs one resolve_graph call runs on a checkpointed 50-place +
+    2,000-SVObs graph: the distributed engine's per-round counts ride
+    its checkpoints, and the driver engine stays at one size aggregate,
+    one collect and the parquet handoff. Both report the driver's two
+    rounds."""
+    nodes = _budget_graph(spark)
+    for dist, bound in ((True, 66), (False, 3)):
+        before = job_ids()
+        res = resolve_graph(nodes, force_distributed=dist, input_materialized=True)
+        jobs = len(job_ids() - before)
+        assert res.rounds == 2, (dist, res.rounds)
+        assert jobs <= bound, (dist, jobs)
+        assert res.resolved.filter(F.col("prop") == "dcid").count() == 2050
+
+
 # ---------------------------------------------------------------- plan
 
 TMCF = textwrap.dedent(

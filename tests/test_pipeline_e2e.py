@@ -416,15 +416,29 @@ def test_all_distributed_branches_match_oracle(spark, monkeypatch):
     assert res.text_digest_in == res.text_digest_out != 0
 
 
-def test_cc_gate_alone_forces_distributed_branch(spark, monkeypatch):
+def test_cc_gate_alone_forces_distributed_branch(spark, job_ids, monkeypatch):
     """Only the sameAs edge gate declines: the WHOLE narrow side takes
     the distributed branch (never driver resolve with distributed CC)
-    and still meets the oracle gate."""
+    and still meets the oracle gate. The sameAs count that declined
+    the gate also skips the driver union-find probe, so no job runs in
+    ``connected_components_fast``."""
     import import_spark.operators.canonicalize as cz
+    import import_spark.plans.kg_pipeline as kp
 
     monkeypatch.setattr(cz, "DRIVER_CC_MAX_EDGES", 0)
+    probe_jobs = []
+    fast = kp.connected_components_fast
+
+    def spy(edges):
+        before = job_ids()
+        out = fast(edges)
+        probe_jobs.append(len(job_ids() - before))
+        return out
+
+    monkeypatch.setattr(kp, "connected_components_fast", spy)
     tr = generate_transcripts(spark, 120).cache()
     res = run_pipeline(spark, tr, dcid_dictionary(spark))
+    assert sum(probe_jobs) == 0, probe_jobs
     counters = {r["counter"]: r["value"] for r in res.metrics}
     assert "branch_distributed" in counters and "branch_driver" not in counters
     got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
