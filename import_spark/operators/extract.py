@@ -20,7 +20,7 @@ One extractor, :func:`extract_statements`, in two parts:
 
 External-id tokens come out as ``EXT_ID`` rows carrying
 ``ext_prop``/``ext_id``; linking them to dcids is the next step
-(operators/link.py), under any of its strategies.
+(operators/link.py).
 
 Output kinds (one DF, filtered downstream — the Beam side-output
 pattern, PipelineUtils.java:222-242):
@@ -416,10 +416,11 @@ def extract_statements(transcripts: DataFrame, narrow_only: bool = False) -> Dat
 def extract_and_link(
     transcripts: DataFrame, dcid_map: dict, narrow_only: bool = False
 ) -> DataFrame:
-    """:func:`extract_statements`, then the ``fused`` link over the
-    driver dictionary (``link.link_with_map``), minus the ext columns —
-    the same rows every link strategy yields."""
-    from import_spark.operators.link import link_with_map
+    """:func:`extract_statements`, then the link join over the driver
+    dictionary ``dcid_map`` (``link.dictionary_from_map``), minus the
+    ext columns — the rows ``run_pipeline``'s link step yields."""
+    from import_spark.operators.link import dictionary_from_map, link_statements
 
     extracted = extract_statements(transcripts, narrow_only=narrow_only)
-    return link_with_map(extracted, dcid_map).drop("ext_prop", "ext_id")
+    dictionary = dictionary_from_map(transcripts.sparkSession, dcid_map)
+    return link_statements(extracted, dictionary).drop("ext_prop", "ext_id")

@@ -9,24 +9,23 @@ Re-expresses the reference's resolution join (J1-J3):
   assignment ``<prefix>/<ext_id>`` for ids the dictionary misses.
 
 The extraction (operators/extract.py) leaves every external id as an
-``EXT_ID`` row with ``ext_prop``/``ext_id``. Three strategies rewrite
-those rows to ``RESOLVED_REF``, all through one fallback rule
-(``_rewrite_exprs``):
-- ``fused`` (:func:`link_with_map`): the driver dictionary as a map
-  literal over the ext columns — no join at all;
-- ``broadcast`` (:func:`link_statements`): the dictionary is a small
-  dimension → broadcast hash join (no shuffle of the big side; the
-  skewed hot entity is harmless because a broadcast join has no
-  key-partitioned reduce);
-- ``salted``: a dictionary past the broadcast budget → only the ext
-  rows shuffle, hot keys spread over salts (the explicit salting the
-  reference needs for Spanner writes, SpannerClient.java:305-316; see
-  operators/skew.py).
+``EXT_ID`` row with ``ext_prop``/``ext_id``. Linking is one dictionary
+join that rewrites those rows to ``RESOLVED_REF`` (``_link_columns``:
+the hit, else the fallback). The dictionary is prepared once per run
+(:func:`link_dictionary`: deduped, then materialized by one checkpoint
+that observes its size), and its size picks how the join runs:
+- ``broadcast`` while it fits the broadcast budget: a broadcast hash
+  join, no shuffle of the big side; the skewed hot entity is harmless
+  because a broadcast join has no key-partitioned reduce;
+- ``salted`` beyond it: only the ext rows shuffle, hot keys spread
+  over salts (the explicit salting the reference needs for Spanner
+  writes, SpannerClient.java:305-316; see operators/skew.py).
 """
 
 from __future__ import annotations
 
 import functools
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -101,100 +100,127 @@ def prepare_dictionary(dcid_dict: DataFrame) -> DataFrame:
     )
 
 
-@functools.lru_cache(maxsize=16)
-def _rewrite_exprs(dict_items: tuple | None) -> dict[str, Column]:
-    """``obj``/``obj_type`` that rewrite EXT_ID rows to RESOLVED_REF: the
-    dictionary hit, else the priority-prefix fallback
-    ``<prefix>/<ext_id>`` (DcidGenerator.java:213-229,
-    ``vocabulary.place_dcid_prefix``) — the one rule every link
-    strategy applies; other rows pass through. The hit is the map
-    literal of ``dict_items`` (the ``fused`` strategy) or, for
-    ``None``, the joined ``_dict_dcid`` column. Built once per
-    dictionary: the Column trees cost hundreds of py4j calls."""
+@dataclass(frozen=True)
+class LinkDictionary:
+    """A prepared link dictionary: one (prop, ext_id, dcid) row per key
+    (``prepare_dictionary``'s rule) in ``frame``, its exact size, and
+    the join that size picks, ``"broadcast"`` or ``"salted"``."""
+
+    frame: DataFrame
+    rows: int
+    nbytes: int
+    strategy: str
+
+
+def _sized(frame: DataFrame, rows: int, nbytes: int) -> LinkDictionary:
+    from import_spark.functions import size_gate
+
+    strategy = "broadcast" if nbytes <= size_gate.BROADCAST_BUDGET_BYTES else "salted"
+    return LinkDictionary(frame, rows, nbytes, strategy)
+
+
+def link_dictionary(dcid_dict: DataFrame) -> LinkDictionary:
+    """The run's dictionary, built once: ``prepare_dictionary``,
+    materialized by ``localCheckpoint`` with its (rows, bytes) observed
+    on the checkpoint job (``size_gate.checkpoint_sized``, no separate
+    size job), so no link plan re-runs the dedupe."""
+    from import_spark.functions.size_gate import checkpoint_sized
+
+    frame, (rows, nbytes) = checkpoint_sized(prepare_dictionary(dcid_dict))
+    return _sized(frame, rows, nbytes)
+
+
+def dictionary_from_map(spark, dcid_map: dict) -> LinkDictionary:
+    """A driver dictionary (``dictionary_map`` output, one dcid per
+    (prop, ext_id)) as a :class:`LinkDictionary` over a
+    ``LocalRelation`` (``session.local_frame``), sized by
+    ``size_gate.pandas_bytes`` with no job."""
+    import pandas as pd
+
+    from import_spark.functions.size_gate import pandas_bytes
+    from import_spark.session import local_frame
+
+    pdf = pd.DataFrame(
+        [(p, e, d) for (p, e), d in dcid_map.items()],
+        columns=["prop", "ext_id", "dcid"],
+        dtype=object,
+    )
+    frame = local_frame(spark, pdf, "prop string, ext_id string, dcid string")
+    return _sized(frame, len(pdf), pandas_bytes(pdf))
+
+
+@functools.lru_cache(maxsize=4)
+def _link_columns(columns: tuple[str, ...]) -> tuple[list[Column], Column]:
+    """The link's projection of the extraction's ``columns`` and its
+    join condition on the renamed dictionary (``_dict_prop``,
+    ``_dict_ext``, ``_dict_dcid``). The projection rewrites EXT_ID rows
+    to RESOLVED_REF: ``obj`` is the dictionary hit, else the
+    priority-prefix fallback ``<prefix>/<ext_id>``
+    (DcidGenerator.java:213-229, ``vocabulary.place_dcid_prefix``);
+    other rows pass through. Built once per column list, as
+    ``extract._statement_array`` is: the Column trees cost ~100 py4j
+    calls, a third of a link plan's build time."""
     prop = F.col("ext_prop")
-    if dict_items is None:
-        hit = F.col("_dict_dcid")
-    elif dict_items:
-        lut = F.create_map(*[F.lit(x) for (p, e), d in dict_items for x in (f"{p}\x00{e}", d)])
-        hit = lut[F.concat(prop, F.lit("\x00"), F.col("ext_id"))]
-    else:
-        # an empty map() literal is map<void,void>, which a string key
-        # cannot index: no entries means every id takes the fallback
-        hit = F.lit(None).cast("string")
     prefix = prop
     for p in EXT_PREFIXES.values():
         if V.place_dcid_prefix(p) != p:
             prefix = F.when(prop == p, F.lit(V.place_dcid_prefix(p))).otherwise(prefix)
     is_ext = prop.isNotNull()
     fallback = F.concat(prefix, F.lit("/"), F.col("ext_id"))
-    return {
-        "obj": F.when(is_ext, F.coalesce(hit, fallback)).otherwise(F.col("obj")),
+    rewrite = {
+        "obj": F.when(is_ext, F.coalesce(F.col("_dict_dcid"), fallback)).otherwise(F.col("obj")),
         "obj_type": F.when(is_ext, F.lit("RESOLVED_REF")).otherwise(F.col("obj_type")),
     }
+    on = (prop == F.col("_dict_prop")) & (F.col("ext_id") == F.col("_dict_ext"))
+    return [rewrite.get(c, F.col(c)).alias(c) for c in columns], on
 
 
-def link_with_map(extracted: DataFrame, dcid_map: dict) -> DataFrame:
-    """The ``fused`` strategy: the driver dictionary (``dictionary_map``
-    output, RPC-batch-sized, ReconClient.java:31) as a map literal
-    looked up on the ext columns — native, no join, no shuffle."""
-    return extracted.withColumns(_rewrite_exprs(tuple(sorted(dcid_map.items()))))
+def hot_link_keys(extracted: DataFrame) -> list[tuple]:
+    """The salted link's hot-key census (``skew.hot_join_keys``) over
+    the ext rows of ``extracted``: every (ext_prop, ext_id) carrying at
+    least a million rows (``salted_join``'s threshold). A caller that
+    links several plans over one input runs it once and passes the
+    list to each."""
+    from import_spark.operators.skew import hot_join_keys
+
+    ext = extracted.filter(F.col("ext_prop").isNotNull())
+    return hot_join_keys(ext, ["ext_prop", "ext_id"], min_count=1_000_000)
 
 
 def link_statements(
-    extracted: DataFrame,
-    dcid_dict: DataFrame,
-    strategy: str = "broadcast",
-    n_salts: int = 16,
-    hot: list[tuple] | None = None,
-    hot_min_count: int = 1_000_000,
+    extracted: DataFrame, dictionary: LinkDictionary, hot: list[tuple] | None = None
 ) -> DataFrame:
     """Resolve every EXT_ID row (TRIPLE objects and DEF targets) to a
-    dcid by a join against the dictionary DataFrame; returns the input
-    with EXT_ID rows rewritten to RESOLVED_REF (``_rewrite_exprs``).
+    dcid by a join against the prepared ``dictionary``; returns the
+    input with EXT_ID rows rewritten to RESOLVED_REF (``_link_columns``).
 
-    ``strategy="broadcast"`` (default): the dictionary fits executor
-    memory — broadcast hash join, no shuffle of the big side, hot
-    entities free. ``strategy="salted"``: the dictionary exceeds the
-    broadcast budget (a full Recon map at 10^12-turn scale) — only the
-    ext rows shuffle, joined via :func:`skew.salted_join` so hot
-    entities spread over ``n_salts`` reduce tasks; other rows bypass
-    the shuffle entirely. Both strategies and :func:`link_with_map`
-    produce identical output (equality-tested; the salted plan is
-    hash-gated by the ``j1_salted_link`` driver oracle on the same SQL
-    as broadcast J1).
+    ``broadcast``: the dictionary fits executor memory — broadcast hash
+    join, no shuffle of the big side, hot entities free. ``salted``:
+    the dictionary exceeds the broadcast budget (a full Recon map at
+    10^12-turn scale) — only the ext rows shuffle, joined via
+    :func:`skew.salted_join` so the ``hot`` keys (:func:`hot_link_keys`,
+    run here when None) spread over its salts; other rows bypass the
+    shuffle entirely. Both produce identical output (equality-tested;
+    the salted plan is hash-gated by the ``j1_salted_link`` driver
+    oracle on the same SQL as broadcast J1).
     """
-    dim = prepare_dictionary(dcid_dict).withColumnRenamed("dcid", "_dict_dcid")
-    is_ext = F.col("ext_prop").isNotNull()
-    if strategy == "salted":
+    out, on = _link_columns(tuple(extracted.columns))
+    if dictionary.strategy == "salted":
         from import_spark.operators.skew import salted_join
 
-        dim_keyed = dim.withColumnRenamed("prop", "ext_prop")
+        is_ext = F.col("ext_prop").isNotNull()
         linked_ext = salted_join(
             extracted.filter(is_ext),
-            dim_keyed,
+            dictionary.frame.toDF("ext_prop", "ext_id", "_dict_dcid"),
             ["ext_prop", "ext_id"],
             how="left",
-            n_salts=n_salts,
-            hot=hot,
-            hot_min_count=hot_min_count,
+            hot=hot_link_keys(extracted) if hot is None else hot,
         )
-        return (
-            linked_ext.withColumns(_rewrite_exprs(None))
-            .select(*extracted.columns)
-            .unionByName(extracted.filter(~is_ext))
-        )
-    if strategy != "broadcast":
-        raise ValueError(f"unknown link strategy {strategy!r}")
-    linked = (
-        extracted.join(
-            F.broadcast(dim),
-            on=(extracted["ext_prop"] == dim["prop"]) & (extracted["ext_id"] == dim["ext_id"]),
-            how="left",
-        )
-        .drop("prop")
-        .drop(dim["ext_id"])
-    )
-    return linked.withColumns(_rewrite_exprs(None)).drop("_dict_dcid")
+        return linked_ext.select(*out).unionByName(extracted.filter(~is_ext))
+    if dictionary.strategy != "broadcast":
+        raise ValueError(f"unknown link strategy {dictionary.strategy!r}")
+    dim = F.broadcast(dictionary.frame.toDF("_dict_prop", "_dict_ext", "_dict_dcid"))
+    return extracted.join(dim, on=on, how="left").select(*out)
 
 
 def local_graph_dictionary_df(nodes: DataFrame) -> DataFrame:
@@ -315,12 +341,10 @@ def derive_node_dictionary_df(nodes: DataFrame, recon_table: DataFrame) -> DataF
 
 
 def dcid_map_from_df(dcid_dict: DataFrame, budget_bytes: int | None = None) -> dict:
-    """Collect the (small) dictionary to a driver dict for the
-    ``fused`` map-literal link (:func:`link_with_map`). Deterministic
+    """Collect the (small) dictionary to a driver dict, deterministic
     first-wins per (prop, ext_id) like prepare_dictionary. Raises
     :class:`DictionaryOverBudget` when the dictionary exceeds the
-    driver budget — callers fall back to :func:`link_statements`'s
-    broadcast/salted join strategies.
+    driver budget.
 
     The raw (prop, ext_id, dcid) rows are collected and deduped on the
     driver (:func:`dictionary_map`), so the byte gate counts duplicate

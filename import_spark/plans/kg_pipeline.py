@@ -5,7 +5,7 @@ GraphIngestionPipeline.java:44-113 + Processor.java:59-147):
 
 1. scan        — stable (conv_id, turn_idx) input; text-equality digest
 2. extract     — vectorized statement extraction (operators/extract.py)
-3. link        — broadcast entity linking (operators/link.py)
+3. link        — dictionary-join entity linking (operators/link.py)
 4. resolve     — iterative local-ref resolution + quarantine (operators/resolve.py)
 5. canonicalize— sameAs connected components, min-dcid rewrite
 6. merge       — single-shuffle dedupe, subject-hash layout, write
@@ -39,9 +39,10 @@ lookup, connected components), each materialized by
 ``localCheckpoint``. Everything after the maps is one code path: one
 broadcast gate sizes both maps, and the fused resolve+canonicalize+
 dedupe(+write) pass is the only pass over the fat rows, with the
-plain-triple count observed on its stream. The dictionary gets the
-same shape: one count+bytes aggregate, then one collect
-(``size_gate.collect_within``). Either way the big table is shuffled
+plain-triple count observed on its stream. The dictionary is prepared
+once per run (``link.link_dictionary``: deduped, then materialized by
+one checkpoint that observes its size), and every link plan joins that frame,
+broadcast or salted by its size. Either way the big table is shuffled
 exactly once (dedupe), and the final row count is the count the big
 pass already returned (parquet metadata when written).
 
@@ -74,7 +75,12 @@ from import_spark.operators.canonicalize import (
     union_find_components,
 )
 from import_spark.operators.extract import extract_statements
-from import_spark.operators.link import link_statements, link_with_map
+from import_spark.operators.link import (
+    LinkDictionary,
+    hot_link_keys,
+    link_dictionary,
+    link_statements,
+)
 from import_spark.operators.merge import (
     dedupe_and_materialize,
     dedupe_triples,
@@ -163,77 +169,17 @@ class _Metrics:
         )
 
 
-# The fused link carries the dictionary as a JVM map literal
-# (operators/link.py:link_with_map, one py4j-built expression pair per
-# entry) — a driver-side structure whose practical limit is ENTRY
-# COUNT, not the collect byte budget. Above it, the pipeline links by
-# JOIN instead (broadcast while the dictionary fits the broadcast
-# budget, hot-key salted shuffle beyond — operators/skew.py), which is
-# the only shape a multi-GB Recon map can take at 10^12-turn scale.
-FUSED_DICT_MAX_ROWS = 10_000
-_DICT_COLS = ("prop", "ext_id", "dcid")
-
-
-def _join_strategy(size: tuple[int, int]) -> str:
-    """broadcast vs salted for a dictionary that cannot be a driver
-    map literal, from its ``size_gate.exact_size``: broadcast while it fits
-    the executor broadcast budget, hot-key salted shuffle beyond."""
-    from import_spark.functions import size_gate
-
-    return "broadcast" if size[1] <= size_gate.BROADCAST_BUDGET_BYTES else "salted"
-
-
-def _join_strategy_for(dcid_dict: DataFrame) -> str:
-    from import_spark.functions.size_gate import exact_size
-
-    return _join_strategy(exact_size(dcid_dict.select(*_DICT_COLS)))
-
-
-def _link_dictionary(dcid_dict: DataFrame, requested: str) -> tuple[str, dict | None]:
-    """Resolve the link strategy and, for ``fused``, its driver
-    dictionary: one exact count+bytes aggregate, then at most one Arrow
-    collect (``size_gate.collect_within``). ``auto`` picks fused while
-    the dictionary fits both the entry cap and the driver budget; an
-    explicit ``fused`` request over the driver budget degrades to the
-    join path here, so the recorded strategy is the one that runs."""
-    if requested in ("broadcast", "salted"):
-        return requested, None
-    if requested not in ("auto", "fused"):
-        raise ValueError(f"unknown link_strategy {requested!r}")
-    from import_spark.functions import size_gate
-    from import_spark.operators.link import dictionary_map
-
-    pairs = dcid_dict.select(*_DICT_COLS)
-    size = size_gate.exact_size(pairs)
-    pdf = size_gate.collect_within(
-        pairs,
-        size_gate.DRIVER_COLLECT_BUDGET_BYTES,
-        max_rows=FUSED_DICT_MAX_ROWS if requested == "auto" else None,
-        size=size,
-    )
-    if pdf is None:
-        return _join_strategy(size), None
-    return "fused", dictionary_map(pdf)
-
-
 def _link_plan(
     transcripts: DataFrame,
-    dcid_dict: DataFrame,
-    strategy: str,
+    dictionary: LinkDictionary,
     narrow_only: bool = False,
-    dmap: dict | None = None,
+    hot: list[tuple] | None = None,
 ) -> DataFrame:
-    """The extract+link stage: extract, then link by the strategy
-    ``_link_dictionary`` resolved — ``fused`` over its driver ``dmap``,
-    ``broadcast``/``salted`` by join. Every strategy yields the same
-    rows (equality asserted in test_pipeline_e2e), and ``narrow_only``
-    elides the fat-row work under each."""
+    """The extract+link stage: extract, then join the prepared
+    dictionary (``link.link_statements``; ``hot`` is the salted join's
+    census). ``narrow_only`` elides the fat-row work."""
     extracted = extract_statements(transcripts, narrow_only=narrow_only)
-    if strategy == "fused":
-        linked = link_with_map(extracted, dmap)
-    else:
-        linked = link_statements(extracted, dcid_dict, strategy=strategy)
-    return linked.drop("ext_prop", "ext_id")
+    return link_statements(extracted, dictionary, hot=hot).drop("ext_prop", "ext_id")
 
 
 # Failed-quarantine layout, the same from both narrow engines: the
@@ -440,15 +386,16 @@ def run_pipeline(
     num_buckets: int = 64,
     verify_text_invariant: bool = True,
     keep_snapshot: bool | None = None,
-    link_strategy: str = "auto",
 ) -> PipelineResult:
     from import_spark.functions import size_gate
     from import_spark.operators import canonicalize as cz
     from import_spark.operators import resolve as rz
 
     m = _Metrics(run_id)
-    link_strategy, dmap = _link_dictionary(dcid_dict, link_strategy)
-    m.add("link", f"strategy_{link_strategy}", 1)
+    dictionary = link_dictionary(dcid_dict)
+    m.add("link", f"strategy_{dictionary.strategy}", 1)
+    m.add("link", "dict_rows", dictionary.rows)
+    m.add("link", "dict_bytes", dictionary.nbytes)
     # per-partition lineage lands next to the checkpoint (or, without
     # one, the output) — one (run_id, stage)-partitioned parquet table
     lin_dir = (
@@ -463,7 +410,7 @@ def run_pipeline(
 
     # 2-3. extract + link: the JVM projection plus the Python stage
     # for the complex/observe turn subset (operators/extract.py), then
-    # the link strategy (operators/link.py). With a
+    # the dictionary join (operators/link.py). With a
     # checkpoint_dir the full output is snapshotted once as a
     # class-partitioned parquet table (resumable across processes;
     # narrow scans touch only their tiny partitions). Without one,
@@ -498,9 +445,7 @@ def run_pipeline(
             # mixed-depth partition dirs that break discovery.
             if os.path.exists(snap):
                 shutil.rmtree(snap, ignore_errors=True)
-            linked_plan = _with_cls(
-                _link_plan(transcripts, dcid_dict, link_strategy, dmap=dmap)
-            )
+            linked_plan = _with_cls(_link_plan(transcripts, dictionary))
             (
                 linked_plan.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
@@ -531,13 +476,16 @@ def run_pipeline(
         # cores on a box (and at 100 TB the fat intermediate could
         # never be cached at all; persisting small side-outputs and
         # recomputing narrow lineage is the only design that survives).
-        fat_src = _with_cls(_link_plan(transcripts, dcid_dict, link_strategy, dmap=dmap))
+        # both link plans read one input: a salted join takes one
+        # hot-key census for the two of them
+        hot = (
+            hot_link_keys(extract_statements(transcripts))
+            if dictionary.strategy == "salted"
+            else None
+        )
+        fat_src = _with_cls(_link_plan(transcripts, dictionary, hot=hot))
         narrow = (
-            _with_cls(
-                _link_plan(
-                    transcripts, dcid_dict, link_strategy, narrow_only=True, dmap=dmap
-                )
-            )
+            _with_cls(_link_plan(transcripts, dictionary, narrow_only=True, hot=hot))
             .filter(F.col("_cls") >= CLS_LOCAL)
             .persist()
         )
@@ -679,11 +627,13 @@ def run_pipeline(
         # A11: counters as a queryable table, appended per run — the
         # LogWrapper counter model as data (run_id, stage, counter,
         # value, elapsed_sec), partitioned by run for lineage
-        spark.createDataFrame(
-            [
-                (r["run_id"], r["stage"], r["counter"], r["value"], r["elapsed_sec"])
-                for r in m.rows
-            ],
+        import pandas as pd
+
+        from import_spark.session import local_frame
+
+        local_frame(
+            spark,
+            pd.DataFrame(m.rows, dtype=object),
             "run_id string, stage string, counter string, value long, elapsed_sec double",
         ).write.mode("append").partitionBy("run_id").parquet(
             os.path.join(out_dir, "metrics")

@@ -807,7 +807,7 @@ def q_kg_streaming(spark, sf):
     """Structured-Streaming variant of the flagship, gated by the SAME
     DuckDB triple oracle: the fixture transcripts (split into several
     files → several micro-batches) are drained by an
-    ``Trigger.AvailableNow`` stream that writes the fused extract+link
+    ``Trigger.AvailableNow`` stream that writes the pipeline's extract+link
     output in ``run_pipeline``'s checkpoint layout with exactly-once
     per-batch partitions (streaming/incremental.py:
     ingest_to_pipeline_snapshot); the batch pipeline then RESUMES from

@@ -6,20 +6,18 @@ provenance. This module is the Spark-native upgrade the SURVEY's §2.8
 flags as the natural stretch: new conversation partitions landing in
 the transcripts directory are picked up by a file-source stream with
 ``Trigger.AvailableNow`` (drain-everything-then-stop — cron-friendly),
-pushed through the SAME extract→link transforms, and appended to the
+pushed through the pipeline's own extract→link, and appended to the
 statement snapshot exactly once (checkpointed source offsets make the
 ingest idempotent across restarts).
 
-Downstream stages (resolve/canonicalize/merge) remain batch jobs over
-the snapshot: local-ref resolution is conversation-local, so appending
+``ingest_to_pipeline_snapshot`` writes the extract+link output in
+``run_pipeline``'s own checkpoint layout (class-partitioned, digest
+success marker, per-partition lineage), so the batch pipeline RESUMES
+from the streamed snapshot and the whole streaming path is gated by the
+same end-to-end triple oracle as the batch path (queries.kg_streaming).
+Downstream stages (resolve/canonicalize/merge) stay batch jobs over the
+snapshot: local-ref resolution is conversation-local, so appending
 whole conversations never invalidates previously resolved ones.
-
-``ingest_to_pipeline_snapshot`` is the production-shaped variant: it
-writes the extract+link output in ``run_pipeline``'s own
-checkpoint layout (class-partitioned, digest success marker,
-per-partition lineage), so the batch pipeline RESUMES from the
-streamed snapshot and the whole streaming path is gated by the same
-end-to-end triple oracle as the batch path (queries.kg_streaming).
 """
 
 from __future__ import annotations
@@ -30,59 +28,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from import_spark.operators.extract import extract_statements
-from import_spark.operators.link import link_statements
+from import_spark.operators.link import link_dictionary
 from import_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-
-
-def ingest_available_now(
-    spark: SparkSession,
-    transcripts_dir: str,
-    snapshot_dir: str,
-    checkpoint_dir: str,
-    dcid_dict,
-) -> int:
-    """Drain all unprocessed transcript files into the statement
-    snapshot; returns the number of micro-batches processed.
-
-    Each batch lands as its own ``_b=batch_id`` partition via dynamic
-    partition overwrite (forced at the writer so a caller-supplied
-    session with the static default cannot truncate the snapshot): a
-    batch replayed after a crash mid-write REPLACES its partition
-    instead of appending duplicates — exactly-once together with the
-    checkpointed source offsets, the same idempotent-unit pattern as
-    ``ingest_to_pipeline_snapshot``."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(transcripts_dir)
-    )
-    from import_spark.plans.kg_pipeline import _join_strategy_for
-
-    strategy = _join_strategy_for(dcid_dict)
-    n_batches = {"n": 0}
-
-    def process(batch_df, batch_id: int) -> None:
-        linked = link_statements(
-            extract_statements(batch_df), dcid_dict, strategy=strategy
-        )
-        (
-            linked.withColumn("_b", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_b")
-            .parquet(snapshot_dir)
-        )
-        n_batches["n"] += 1
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches["n"]
 
 
 def ingest_to_pipeline_snapshot(
@@ -115,7 +62,6 @@ def ingest_to_pipeline_snapshot(
     (0 when the source offsets say everything was already ingested).
     """
     from import_spark.plans.kg_pipeline import (
-        _link_dictionary,
         _link_plan,
         _with_cls,
         dict_digest,
@@ -125,10 +71,8 @@ def ingest_to_pipeline_snapshot(
 
     snap = os.path.join(checkpoint_dir, run_id, "linked")
     offsets = os.path.join(checkpoint_dir, run_id, "stream_offsets")
-    # the batch pipeline's dictionary gate: the fused map-literal link
-    # while the dictionary fits the driver budget, else the join link
-    # (broadcast/salted by size) — same output contract
-    strategy, dmap = _link_dictionary(dcid_dict, "fused")
+    # the batch pipeline's dictionary, prepared once for every batch
+    dictionary = link_dictionary(dcid_dict)
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -137,7 +81,7 @@ def ingest_to_pipeline_snapshot(
     n_batches = {"n": 0}
 
     def process(batch_df, batch_id: int) -> None:
-        linked = _link_plan(batch_df, dcid_dict, strategy, dmap=dmap)
+        linked = _link_plan(batch_df, dictionary)
         out = _with_cls(linked).withColumn("_b", F.lit(batch_id))
         # dynamic overwrite forced at the writer: with the Spark
         # default (static) a caller-supplied session would truncate

@@ -115,28 +115,6 @@ def test_genmcf_over_budget_dictionary_matches_driver_path(spark, monkeypatch):
     assert ("T/E1/3", "dcid", "TEXT", "iso/ZZ") in got  # prefix fallback
 
 
-def test_kg_fused_request_degrades_to_join_over_budget(spark, monkeypatch):
-    """run_pipeline(link_strategy='fused') with an over-budget
-    dictionary must degrade to the join link path, same triples."""
-    from import_spark.plans.kg_pipeline import run_pipeline
-    from import_spark.sources.transcripts import dcid_dictionary, generate_transcripts
-
-    tr = generate_transcripts(spark, 60).cache()
-    d = dcid_dictionary(spark)
-    want = {
-        (r.subj, r.pred, r.obj_type, r.obj)
-        for r in run_pipeline(spark, tr, d, link_strategy="fused").triples.collect()
-    }
-    import import_spark.functions.size_gate as sg
-
-    monkeypatch.setattr(sg, "DRIVER_COLLECT_BUDGET_BYTES", 1)
-    got = {
-        (r.subj, r.pred, r.obj_type, r.obj)
-        for r in run_pipeline(spark, tr, d, link_strategy="fused").triples.collect()
-    }
-    assert got == want
-
-
 def test_dict_df_skips_falsy_dcids_like_the_closure_walk(spark, monkeypatch):
     """_place_dcid skips empty/null dict hits (`if hit:`) and keeps
     walking lower-priority props; the join path must do the same — an

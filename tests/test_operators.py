@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from import_spark.operators.canonicalize import canonicalize_triples, connected_components
 from import_spark.operators.extract import extract_statements
-from import_spark.operators.link import link_statements
+from import_spark.operators.link import link_dictionary, link_statements
 from import_spark.operators.merge import dedupe_triples, drop_generic_types
 from import_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
@@ -30,7 +30,7 @@ def _dict(spark):
 
 
 def _extract_link(spark, rows):
-    return link_statements(extract_statements(_turns(spark, rows)), _dict(spark))
+    return link_statements(extract_statements(_turns(spark, rows)), link_dictionary(_dict(spark)))
 
 
 def test_extract_base_and_mentions(spark):

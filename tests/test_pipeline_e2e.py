@@ -295,6 +295,15 @@ def test_per_partition_lineage(spark, tmp_path):
     link_rows = [r for r in rows if r["stage"] == "link"]
     assert all(r["file"] and r["conv_id_min"] <= r["conv_id_max"] for r in link_rows)
     assert {r["part"] for r in link_rows} >= {"0", "3"}  # fat + DEF classes
+    # the counters land as a queryable table, one row per counter row,
+    # 64-bit digests exact
+    table = spark.read.parquet(os.path.join(out, "metrics"))
+    assert dict(table.dtypes) == {
+        "stage": "string", "counter": "string", "value": "bigint",
+        "elapsed_sec": "double", "run_id": "string",
+    }
+    key = lambda r: (r["run_id"], r["stage"], r["counter"], r["value"], r["elapsed_sec"])  # noqa: E731
+    assert sorted(map(key, table.collect())) == sorted(map(key, res.metrics))
     # idempotent per (run_id, stage): a resumed re-run must not duplicate
     run_pipeline(
         spark, tr, dcid_dictionary(spark), out_dir=out, checkpoint_dir=ckpt,
@@ -307,20 +316,27 @@ def test_per_partition_lineage(spark, tmp_path):
     assert by_stage2["merge"] == tri_n and by_stage2["link"] == snap_n
 
 
-def test_unicode_whitespace_parity(spark):
+def _force_salted(monkeypatch):
+    """Every dictionary is over the broadcast budget: the link joins by
+    the hot-key salted shuffle."""
+    import import_spark.functions.size_gate as sg
+
+    monkeypatch.setattr(sg, "BROADCAST_BUDGET_BYTES", -1)
+
+
+def test_unicode_whitespace_parity(spark, monkeypatch):
     """Java regex \\S/\\d are ASCII-only by default while the oracle
     (Python re) is Unicode-aware: a token followed by U+00A0/U+2009/
     U+3000 whitespace used to be swallowed into the token on the JVM
     (silently missing dictionary links). The (?U)+_TOK fix makes the
     JVM tokenize like re — gate it on adversarial text end-to-end: the
-    fused map-literal link == the broadcast join link over the one
-    extractor, AND the full pipeline matches the independent
-    row-at-a-time oracle, which shares no tokenization code with it."""
+    broadcast link == the salted link over the one extractor, AND the
+    full pipeline matches the independent row-at-a-time oracle, which
+    shares no tokenization code with it, on both branches."""
     import pandas as pd
 
-    from import_spark.operators.extract import extract_and_link, extract_statements
-    from import_spark.operators.link import dcid_map_from_df, link_statements
-    from import_spark.oracle import expected_triples, precision_recall
+    from import_spark.operators.extract import extract_statements
+    from import_spark.operators.link import link_dictionary, link_statements
 
     rows = [
         ("c1", 0, "user", 'we looked at geoId/06 tail note "a b"', "", None),
@@ -335,31 +351,79 @@ def test_unicode_whitespace_parity(spark):
     schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     tr = spark.createDataFrame(rows, schema)
     d = dcid_dictionary(spark)
-    fused = extract_and_link(tr, dcid_map_from_df(d))
-    unfused = link_statements(extract_statements(tr), d).select(*fused.columns)
-    assert {tuple(r) for r in fused.collect()} == {tuple(r) for r in unfused.collect()}
-
-    res = run_pipeline(spark, tr, d, verify_text_invariant=True)
-    got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
     tr_pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
     want, _ = expected_triples(tr_pdf, build_dcid_dictionary())
-    p, r = precision_recall(got, want)
-    assert p == 1.0 and r == 1.0, (sorted(got - want)[:5], sorted(want - got)[:5])
+
+    def run():
+        linked = link_statements(extract_statements(tr), link_dictionary(d))
+        res = run_pipeline(spark, tr, d, verify_text_invariant=True)
+        got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
+        p, r = precision_recall(got, want)
+        assert p == 1.0 and r == 1.0, (sorted(got - want)[:5], sorted(want - got)[:5])
+        return {tuple(r) for r in linked.collect()}
+
+    broadcast = run()
+    _force_salted(monkeypatch)
+    assert run() == broadcast
 
 
-def test_empty_dictionary_links_by_fallback(spark):
-    """An empty dictionary takes the fused link (it fits every gate) and
-    links every external id by the prefix fallback, as the join does."""
+def test_empty_dictionary_links_by_fallback(spark, monkeypatch):
+    """An empty dictionary links every external id by the prefix
+    fallback on both link branches and through ``extract_and_link``'s
+    empty local frame."""
     from import_spark.operators.extract import extract_and_link, extract_statements
-    from import_spark.operators.link import link_statements
+    from import_spark.operators.link import link_dictionary, link_statements
 
     tr = generate_transcripts(spark, 30)
     empty = spark.createDataFrame([], "prop string, ext_id string, dcid string")
-    fused = extract_and_link(tr, {})
-    joined = link_statements(extract_statements(tr), empty).select(*fused.columns)
-    a = {tuple(r) for r in fused.collect()}
-    assert a == {tuple(r) for r in joined.collect()}
+
+    def linked():
+        dictionary = link_dictionary(empty)
+        out = link_statements(extract_statements(tr), dictionary).drop("ext_prop", "ext_id")
+        return dictionary.strategy, {tuple(r) for r in out.collect()}
+
+    strategy, a = linked()
+    assert strategy == "broadcast"
     assert ("mentions", "iso/US") in {(r[4], r[6]) for r in a}
+    assert {tuple(r) for r in extract_and_link(tr, {}).collect()} == a
+    _force_salted(monkeypatch)
+    assert linked() == ("salted", a)
+
+
+def test_large_dictionary_links_by_broadcast_join(spark):
+    """A ~9.9k-entry dictionary (once the map-literal link's range)
+    links by the broadcast hash join — no dictionary entry is a literal
+    in the plan — at P = R = 1.0 against the oracle over the same
+    dictionary."""
+    import pandas as pd
+
+    from import_spark.operators.link import link_dictionary
+    from import_spark.plans.kg_pipeline import _link_plan
+
+    base = build_dcid_dictionary()
+    filler = pd.DataFrame(
+        {
+            "prop": "isoCode",
+            "ext_id": [f"fill/{i}" for i in range(9_900 - len(base))],
+            "dcid": [f"dc/fill/{i}" for i in range(9_900 - len(base))],
+        }
+    )
+    big = pd.concat([base, filler], ignore_index=True)
+    d = spark.createDataFrame(big)
+    tr = generate_transcripts(spark, 120).cache()
+
+    dictionary = link_dictionary(d)
+    assert dictionary.strategy == "broadcast"
+    assert dictionary.rows == len(big.drop_duplicates(["prop", "ext_id"]))
+    plan = _link_plan(tr, dictionary)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "country/USA" not in plan and "dc/fill/" not in plan
+
+    res = run_pipeline(spark, tr, d)
+    got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
+    want, failed_uses = expected_triples(tr.toPandas(), big)
+    assert precision_recall(got, want) == (1.0, 1.0)
+    assert res.failed.count() == len(failed_uses)
 
 
 def test_narrow_extraction_parity(spark):
@@ -587,61 +651,67 @@ def test_distributed_branch_job_budget(spark, job_ids, monkeypatch):
 def test_oracle_skips_null_role(null_role_tool):
     """The oracle emits no role statement for a null role, as extract
     does: the pipeline and the oracle agree on a null-role turn."""
-    tr, fused = null_role_tool
+    tr, triples = null_role_tool
     want, _ = expected_triples(tr.toPandas(), build_dcid_dictionary())
     assert not [t for t in want if t[3] is None]
-    assert precision_recall({t[:4] for t in fused}, want) == (1.0, 1.0)
+    assert precision_recall({t[:4] for t in triples}, want) == (1.0, 1.0)
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "salted"])
-def test_link_strategy_fallback_matches_oracle(spark, strategy):
-    """The big-dictionary fallback (unfused extract + link JOIN,
-    broadcast or hot-key salted — taken when the dictionary exceeds
-    the fused closure/map-literal gate) produces the exact oracle
-    triple set, failed parity, and the text invariant, same as the
-    fused hot path."""
+@pytest.mark.parametrize("branch", ["broadcast", "salted"])
+def test_link_branch_matches_oracle(spark, monkeypatch, branch):
+    """Both link branches — the broadcast dictionary join and, past the
+    broadcast budget, the hot-key salted shuffle — produce the exact
+    oracle triple set, failed parity and the text invariant; the link
+    counters name the branch and the deduped dictionary size it was
+    picked on."""
+    from import_spark.functions.size_gate import pandas_bytes
+
+    if branch == "salted":
+        _force_salted(monkeypatch)
     tr = generate_transcripts(spark, 120).cache()
-    res = run_pipeline(spark, tr, dcid_dictionary(spark), link_strategy=strategy)
+    res = run_pipeline(spark, tr, dcid_dictionary(spark))
     got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}
     want, failed_uses = expected_triples(tr.toPandas(), build_dcid_dictionary())
     assert precision_recall(got, want) == (1.0, 1.0)
     assert res.failed.count() == len(failed_uses)
     assert res.text_digest_in == res.text_digest_out != 0
-    strategies = [
-        r["counter"] for r in res.metrics if r["counter"].startswith("strategy_")
-    ]
-    assert strategies == [f"strategy_{strategy}"]
+    deduped = build_dcid_dictionary().sort_values("dcid").drop_duplicates(["prop", "ext_id"])
+    link = {r["counter"]: r["value"] for r in res.metrics if r["stage"] == "link"}
+    assert link == {
+        f"strategy_{branch}": 1,
+        "dict_rows": len(deduped),
+        "dict_bytes": pandas_bytes(deduped),
+    }
 
 
-def test_link_strategy_auto_resolution(spark):
-    """auto → fused (with its driver dictionary) for a dimension-sized
-    dictionary; the entry-count gate flips it to a join strategy."""
-    import import_spark.plans.kg_pipeline as kp
+def test_link_dictionary_is_one_sized_checkpoint(spark, job_ids, monkeypatch):
+    """link_dictionary dedupes (min dcid per key) and materializes the
+    dictionary with its exact size observed on the checkpoint — no
+    separate size job — and picks broadcast within the byte budget,
+    salted past it."""
+    from import_spark.functions.size_gate import pandas_bytes
+    from import_spark.operators.link import link_dictionary
 
     d = dcid_dictionary(spark)
-    strategy, dmap = kp._link_dictionary(d, "auto")
-    assert strategy == "fused"
-    assert dmap == {
-        (p, e): v
-        for p, e, v in build_dcid_dictionary().sort_values("dcid").drop_duplicates(
-            ["prop", "ext_id"]
-        ).itertuples(index=False, name=None)
-    }
-    assert kp._link_dictionary(d, "salted") == ("salted", None)
-    try:
-        orig = kp.FUSED_DICT_MAX_ROWS
-        kp.FUSED_DICT_MAX_ROWS = 0
-        assert kp._link_dictionary(d, "auto") == ("broadcast", None)
-    finally:
-        kp.FUSED_DICT_MAX_ROWS = orig
-    with pytest.raises(ValueError):
-        kp._link_dictionary(d, "nope")
+    before = job_ids()
+    dictionary = link_dictionary(d)
+    jobs = len(job_ids() - before)
+    want = build_dcid_dictionary().sort_values("dcid").drop_duplicates(["prop", "ext_id"])
+    assert {tuple(r) for r in dictionary.frame.collect()} == set(
+        want.itertuples(index=False, name=None)
+    )
+    assert (dictionary.rows, dictionary.nbytes) == (len(want), pandas_bytes(want))
+    assert dictionary.strategy == "broadcast"
+    assert jobs <= 2, jobs  # the dedupe's shuffle stage, then the checkpoint
+    _force_salted(monkeypatch)
+    assert link_dictionary(d).strategy == "salted"
 
 
 @pytest.fixture(scope="module")
 def null_role_tool(spark):
     """Generated turns plus one valid turn with a null role AND a null
-    tool (a real parquet can carry both), and the fused triple set."""
+    tool (a real parquet can carry both), and the default run's triple
+    set."""
     import pyspark.sql.types as T
 
     from import_spark.sources.transcripts import TRANSCRIPT_SCHEMA
@@ -654,22 +724,25 @@ def null_role_tool(spark):
         schema=nullable,
     )
     tr = generate_transcripts(spark, 20).unionByName(extra).cache()
-    fused = run_pipeline(spark, tr, dcid_dictionary(spark), link_strategy="fused")
-    return tr, {tuple(r) for r in fused.triples.collect()}
+    res = run_pipeline(spark, tr, dcid_dictionary(spark))
+    return tr, {tuple(r) for r in res.triples.collect()}
 
 
-@pytest.mark.parametrize("strategy", ["fused", "broadcast", "salted"])
-def test_null_role_and_tool_bear_no_null_statement(spark, null_role_tool, strategy):
-    """A null role / null tool skips that property's statement under
-    every link strategy (statement_bearing's null policy): no triple
-    with a null obj, and every strategy returns the fused triples."""
-    tr, fused = null_role_tool
-    res = run_pipeline(spark, tr, dcid_dictionary(spark), link_strategy=strategy)
+@pytest.mark.parametrize("branch", ["broadcast", "salted"])
+def test_null_role_and_tool_bear_no_null_statement(spark, null_role_tool, monkeypatch, branch):
+    """A null role / null tool skips that property's statement on both
+    link branches (statement_bearing's null policy): no triple with a
+    null obj, and the salted branch returns the default triples."""
+    tr, default = null_role_tool
+    if branch == "salted":
+        _force_salted(monkeypatch)
+    res = run_pipeline(spark, tr, dcid_dictionary(spark))
     got = {tuple(r) for r in res.triples.collect()}
+    assert f"strategy_{branch}" in {r["counter"] for r in res.metrics}
     assert not [t for t in got if t[3] is None]
     row = {t[1] for t in got if t[4] == "conv/7000000003"}
     assert {"typeOf", "mentions"} <= row and not row & {"role", "toolUsed"}
-    assert got == fused
+    assert got == default
 
 
 def test_adversarial_inputs_null_policy_and_idempotence(spark):

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from import_spark.operators.extract import extract_statements
-from import_spark.operators.link import link_statements
+from import_spark.operators.link import link_dictionary, link_statements
 from import_spark.sources.transcripts import TRANSCRIPT_SCHEMA, dcid_dictionary
 
 
@@ -28,12 +28,11 @@ def turns(spark):
 
 
 def test_link_uses_broadcast_join(spark, turns):
-    linked = link_statements(extract_statements(turns), dcid_dictionary(spark))
+    linked = link_statements(extract_statements(turns), link_dictionary(dcid_dictionary(spark)))
     plan = _plan(linked)
     assert "BroadcastHashJoin" in plan
     # the statement (streamed) side — between the join and the broadcast
-    # build side — must have no shuffle; the dictionary side may shuffle
-    # its own (tiny) dedupe aggregation
+    # build side — must have no shuffle
     streamed = plan.split("BroadcastHashJoin", 1)[1].split("BroadcastExchange", 1)[0]
     assert "MapInPandas" in streamed
     assert "Exchange hashpartitioning" not in streamed
@@ -57,20 +56,21 @@ def _plan_nodes(plan, name: str) -> list:
 
 
 @pytest.mark.parametrize("narrow_only", [False, True])
-@pytest.mark.parametrize("strategy", ["fused", "broadcast", "salted"])
+@pytest.mark.parametrize("branch", ["broadcast", "salted"])
 def test_link_plan_has_one_python_stage_over_complex_observe_turns(
-    spark, turns, strategy, narrow_only
+    spark, turns, monkeypatch, branch, narrow_only
 ):
-    """Every link strategy runs the one extractor: exactly one Python
+    """Both link branches run the one extractor: exactly one Python
     stage, fed only the turns the complex/observe rlike selects (the
-    other anchors, defines included, and every link are JVM-side)."""
-    from import_spark.plans.kg_pipeline import _link_dictionary, _link_plan
+    other anchors, defines included, and the link are JVM-side)."""
+    import import_spark.functions.size_gate as sg
+    from import_spark.plans.kg_pipeline import _link_plan
 
-    d = dcid_dictionary(spark)
-    _, dmap = _link_dictionary(d, "fused")
-    df = _link_plan(
-        turns, d, strategy, narrow_only=narrow_only, dmap=dmap if strategy == "fused" else None
-    )
+    if branch == "salted":
+        monkeypatch.setattr(sg, "BROADCAST_BUDGET_BYTES", -1)
+    dictionary = link_dictionary(dcid_dictionary(spark))
+    assert dictionary.strategy == branch
+    df = _link_plan(turns, dictionary, narrow_only=narrow_only)
     stages = _plan_nodes(df._jdf.queryExecution().optimizedPlan(), "MapInPandas")
     assert len(stages) == 1
     feed = stages[0].children().apply(0).toString()

@@ -307,16 +307,19 @@ _turn_text = st.lists(_frag, min_size=0, max_size=8).map("".join)
 class TestExtractionParity:
     @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
     @given(st.lists(_turn_text, min_size=1, max_size=12))
-    def test_fused_equals_unfused(self, spark, texts):
+    def test_link_branches_agree_and_match_oracle(self, spark, texts):
         """On randomized anchor/near-miss/unicode-whitespace text, the
-        fused map-literal link emits exactly the statements of the
-        broadcast join link over the one extractor, and the pipeline
-        matches the row-at-a-time oracle (Python ``re``, no code shared
-        with the JVM's (?U)+_TOK tokenization) at P = R = 1."""
+        broadcast link, the salted link and ``extract_and_link`` (the
+        driver map as a local frame) emit exactly the same statements
+        over the one extractor, and the pipeline matches the
+        row-at-a-time oracle (Python ``re``, no code shared with the
+        JVM's (?U)+_TOK tokenization) at P = R = 1."""
+        import dataclasses
+
         import pandas as pd
 
         from import_spark.operators.extract import extract_and_link, extract_statements
-        from import_spark.operators.link import dcid_map_from_df, link_statements
+        from import_spark.operators.link import dcid_map_from_df, link_dictionary, link_statements
         from import_spark.oracle import expected_triples, precision_recall
         from import_spark.plans.kg_pipeline import run_pipeline
         from import_spark.sources.transcripts import build_dcid_dictionary, dcid_dictionary
@@ -329,11 +332,18 @@ class TestExtractionParity:
             "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
         )
         d = dcid_dictionary(spark)
-        fused = extract_and_link(tr, dcid_map_from_df(d))
-        unfused = link_statements(extract_statements(tr), d).select(*fused.columns)
-        a = sorted(tuple(r) for r in fused.collect())
-        b = sorted(tuple(r) for r in unfused.collect())
-        assert a == b
+        dictionary = link_dictionary(d)
+        extracted = extract_statements(tr)
+        salted = dataclasses.replace(dictionary, strategy="salted")
+        a, b, c = (
+            sorted(tuple(r) for r in df.drop("ext_prop", "ext_id").collect())
+            for df in (
+                link_statements(extracted, dictionary),
+                link_statements(extracted, salted),
+                extract_and_link(tr, dcid_map_from_df(d)),
+            )
+        )
+        assert a == b == c
 
         res = run_pipeline(spark, tr, d)
         got = {(r.subj, r.pred, r.obj_type, r.obj) for r in res.triples.collect()}

@@ -103,17 +103,22 @@ def test_salted_join_rejects_unsupported_how(spark):
 def test_link_statements_salted_equals_broadcast(spark):
     """The link operator's scale strategy is output-identical to the
     broadcast strategy on the transcript extraction."""
+    import dataclasses
+
     from import_spark.operators.extract import extract_statements
-    from import_spark.operators.link import link_statements
+    from import_spark.operators.link import link_dictionary, link_statements
     from import_spark.sources.transcripts import dcid_dictionary, generate_transcripts
 
     tr = generate_transcripts(spark, 120)
     ext = extract_statements(tr).localCheckpoint()
-    d = dcid_dictionary(spark)
+    d = link_dictionary(dcid_dictionary(spark))
     bcast = link_statements(ext, d)
+    keys = ["ext_prop", "ext_id"]
+    hot = hot_join_keys(ext.filter(F.col("ext_prop").isNotNull()), keys, 20)
+    assert hot
     salted = link_statements(
-        ext, d, strategy="salted", n_salts=4, hot_min_count=20
+        ext, dataclasses.replace(d, strategy="salted"), hot=hot
     ).select(*bcast.columns)
     assert _sorted(salted) == _sorted(bcast)
     with pytest.raises(ValueError):
-        link_statements(ext, d, strategy="nope")
+        link_statements(ext, dataclasses.replace(d, strategy="nope"))

@@ -132,30 +132,6 @@ def test_overwrite_provenance_default_session_conf(spark, tmp_path):
             spark.conf.unset(key)
 
 
-def test_incremental_ingest(spark, tmp_path):
-    from import_spark.sources.transcripts import dcid_dictionary, generate_transcripts
-    from import_spark.streaming.incremental import ingest_available_now
-
-    tdir = str(tmp_path / "transcripts")
-    snap = str(tmp_path / "snap")
-    ckpt = str(tmp_path / "ckpt")
-    dd = dcid_dictionary(spark)
-
-    generate_transcripts(spark, 20).write.mode("append").parquet(tdir)
-    n1 = ingest_available_now(spark, tdir, snap, ckpt, dd)
-    c1 = spark.read.parquet(snap).count()
-    assert n1 >= 1 and c1 > 0
-
-    # nothing new → no reprocessing (offsets checkpointed)
-    ingest_available_now(spark, tdir, snap, ckpt, dd)
-    assert spark.read.parquet(snap).count() == c1
-
-    # new files land → only they are processed, rows appended
-    generate_transcripts(spark, 10, partitions=2).write.mode("append").parquet(tdir)
-    ingest_available_now(spark, tdir, snap, ckpt, dd)
-    assert spark.read.parquet(snap).count() > c1
-
-
 def test_write_jsonld_roundtrip_and_kinds(spark, tmp_path):
     """write_jsonld → read_jsonld roundtrips TEXT/ref statements and
     @type; NUMBER statements degrade to TEXT by design (values are
