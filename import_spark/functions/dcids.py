@@ -7,14 +7,13 @@ Re-expresses DcidGenerator.java (reference):
 - C5 place dcid from external id        (:213-229)
 - C6 facet id                           (TimeSeries.java:170-191)
 
-Plus vectorized pandas-UDF wrappers for use in DataFrame plans. The
-key-string construction (ordered ``prop=value`` concatenation) is the
-contract; the hash is FarmHash Fingerprint64, bit-validated vs Guava.
+Plus ``col_long_id``, the C1 id as a Column evaluated on the JVM
+(import_spark/jvm/LongId.java). The key-string construction (ordered
+``prop=value`` concatenation) is the contract; the hash is FarmHash
+Fingerprint64, bit-validated vs Guava.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from import_spark import vocabulary as V
 from import_spark.functions.complex_values import parse_complex_value
@@ -29,7 +28,7 @@ __all__ = [
     "facet_id",
     "long_id",
     "fingerprint64",
-    "pandas_long_id",
+    "col_long_id",
 ]
 
 
@@ -186,6 +185,13 @@ def legacy_pop_key_string(pvs: dict[str, str], constraints: set[str] | None = No
     return "".join(parts)
 
 
-def pandas_long_id(keys: pd.Series, namespace: str = "") -> pd.Series:
-    """Vectorized (Arrow-batched) farmhash base32 id for a key column."""
-    return keys.map(lambda k: (namespace + long_id(k)) if isinstance(k, str) else None)
+def col_long_id(c):
+    """C1 on the JVM: the FarmHash base32 long id of a string Column (null
+    stays null), bit-equal to :func:`long_id`. It calls the session
+    function ``jvm.LONG_ID``, so the plan's session must have run
+    ``jvm.register_long_id`` before the plan is analyzed."""
+    from pyspark.sql import functions as F
+
+    from import_spark.jvm import LONG_ID
+
+    return F.call_function(LONG_ID, c)

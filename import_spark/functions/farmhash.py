@@ -10,10 +10,11 @@ MIT license) — the ``farmhashna::Hash64`` / ``Fingerprint64`` variant —
 in pure Python, validated bit-for-bit against Guava on the Spark JVM
 (tests/test_farmhash.py).
 
-Used inside vectorized pandas UDFs (import_spark.functions.dcids); the
-hash itself is per-string Python, but it sits behind Arrow batching and
-is only applied to the (small) distinct key-string column, never the
-raw data.
+These functions are the spec. Plans that run on the JVM hash with
+Guava itself (``functions/dcids.col_long_id``, import_spark/jvm); the
+Python twins serve the oracle and fixtures, the driver-side code that
+already holds its keys in Python, and the Python-side stages of the
+genmcf plans (``long_id_batch`` below).
 """
 
 from __future__ import annotations
@@ -225,8 +226,8 @@ def facet_id(key_string: str) -> str:
 # Vectorized (NumPy) batch implementation
 # ---------------------------------------------------------------------------
 # The scalar functions above are the spec; these produce identical bits
-# for whole key columns at once (the extraction hot path hashes one key
-# per turn — per-row Python there costs ~half the stage CPU). Rows are
+# for whole key columns at once (the genmcf resolver's assign and the
+# StatVar collision check hash a key per node). Rows are
 # grouped by exact byte length so every fetch64 offset is fixed per
 # group and the whole group is one (n, L) uint8 matrix; uint64 numpy
 # arithmetic wraps mod 2^64 exactly like the scalar code. Strings

@@ -8,29 +8,6 @@ import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
 
-from import_spark.functions.farmhash import long_id as _long_id
-
-
-@pandas_udf("string")
-def farmhash_dcid(s: pd.Series) -> pd.Series:
-    """C1: farmhash64 → base32 content id with the ``dc/`` namespace
-    (DcidGenerator.java:354-375)."""
-    return s.map(lambda x: "dc/" + _long_id(x) if isinstance(x, str) else None)
-
-
-def _signed64(x):
-    from import_spark.functions.farmhash import fingerprint64
-
-    f = fingerprint64(x)
-    return f - (1 << 64) if f >= (1 << 63) else f
-
-
-@pandas_udf("long")
-def farmhash64(s: pd.Series) -> pd.Series:
-    """Raw FarmHash Fingerprint64 as a signed 64-bit (two's complement)."""
-    return s.map(lambda x: _signed64(x) if isinstance(x, str) else None)
-
-
 
 def distinct_key_join(df, key_col, out_col, mapper, drop_key=True):
     """Map a Python function over the DISTINCT values of a key column

@@ -62,6 +62,22 @@ def is_number(val: str) -> bool:
     return bool(_NUM_RE.match(val))
 
 
+# the padding Double.parseDouble trims (String.trim: every char <= U+0020)
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
+
+
+def parse_double(val: str) -> float:
+    """``Double.parseDouble`` of a string :func:`is_number` accepts: the
+    padding trimmed, a ``[fFdD]`` type suffix dropped, hex floats read as
+    hex. Python's ``float()`` alone takes strings outside that grammar
+    (``1_0``, ``١٠``, ``nan``) and rejects some inside it (``1f``,
+    ``0x1p3``)."""
+    s = val.strip(_JAVA_TRIM)
+    if s[-1] in "fFdD":
+        s = s[:-1]
+    return float.fromhex(s) if "x" in s or "X" in s else float(s)
+
+
 def is_bool(val: str) -> bool:
     """true/false/1/0, case-insensitive (StringUtil.java:112-115)."""
     return val.lower() in _BOOLS
@@ -299,16 +315,18 @@ _PY_WHITESPACE = (
 # Possessive quantifiers keep Java's matcher linear on failure.
 _SPLIT_UNIT = r'\\.|\\\z|"[^"\\]*+(?:\\.[^"\\]*+)*+"'
 _BALANCED_RE = r'(?s)\A(?:[^"\\]++|' + _SPLIT_UNIT + r")*+\z"
-_FIELD_RE = r'(?s)(?:[^,"\\]++|' + _SPLIT_UNIT + r")++"
 
 
-def col_split_and_strip(c):
-    """Column twin of P2 ``split_and_strip(c, strip_enclosing_quotes=False)``:
-    the stripped, non-empty comma-separated values, or null where the
-    spec returns None (a newline, or unbalanced quotes)."""
+def col_split_and_strip(c, delimiter: str = ","):
+    """Column twin of P2 ``split_and_strip(c, delimiter,
+    strip_enclosing_quotes=False)``: the stripped, non-empty values
+    between unquoted ``delimiter``s (one character, literal inside a
+    regex class: ``,`` or a space), or null where the spec returns None
+    (a newline, or unbalanced quotes)."""
     from pyspark.sql import functions as F
 
-    fields = F.regexp_extract_all(c, F.lit(_FIELD_RE), 0)
+    field_re = r'(?s)(?:[^' + delimiter + r'"\\]++|' + _SPLIT_UNIT + r")++"
+    fields = F.regexp_extract_all(c, F.lit(field_re), 0)
     stripped = F.transform(fields, lambda s: F.btrim(s, F.lit(_PY_WHITESPACE)))
     return F.when(
         ~c.contains("\n") & c.rlike(_BALANCED_RE), F.filter(stripped, lambda s: s != "")

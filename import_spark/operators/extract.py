@@ -6,17 +6,16 @@ grammar is the "template", and the emitted rows are long-form
 statements ``(subj, pred, obj_type, obj)`` (the flattening that
 GraphReader.java:107-155 / simple/kg_util/mcf_parser.py:169-240 do).
 
-One extractor, :func:`extract_statements`, in two parts:
-- ``_jvm_statements``: the base per-turn statements and the mention,
-  note, metric, define, see and sameAs anchors as ONE native
-  projection (``regexp_extract_all`` + array/explode inside whole-stage
-  codegen). Transcript node ids are xxhash64-hex, which Spark computes
-  natively; mention tokens and define targets are classified by
-  :func:`classify_token`.
-- ``_extract_batch_python``, the one Python (Arrow) stage: only the
-  complex-value (ComplexValueParser) and observe (FarmHash ``dc/o/``
-  ids, DcidGenerator.java:178-211) anchors, over the turns one rlike
-  pre-filter selects.
+One extractor, :func:`extract_statements`: the base per-turn statements
+and every anchor (mention, note, metric, complex value, define, see,
+observe, sameAs) as ONE native projection (``regexp_extract_all`` +
+array/explode inside whole-stage codegen), so the extraction starts no
+Python worker. Transcript node ids are xxhash64-hex, which Spark
+computes natively; mention tokens and define targets are classified by
+:func:`classify_token`; complex values are parsed by the Column twin
+``col_complex_value`` (ComplexValueParser); observation ids are the
+FarmHash ``dc/o/`` ids (DcidGenerator.java:178-211) of ``col_long_id``,
+a JVM UDF (import_spark/jvm).
 
 External-id tokens come out as ``EXT_ID`` rows carrying
 ``ext_prop``/``ext_id``; linking them to dcids is the next step
@@ -32,19 +31,15 @@ pattern, PipelineUtils.java:222-242):
 from __future__ import annotations
 
 import functools
-import re
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from import_spark.functions.complex_values import parse_complex_value
-from import_spark.functions.farmhash import long_id_batch
-from import_spark.functions.values import clean_numeric_string, is_number, is_valid_date
+from import_spark.functions.complex_values import col_complex_value
+from import_spark.functions.dcids import col_long_id
+from import_spark.functions.values import col_clean_numeric, col_is_number, col_is_valid_date
+from import_spark.jvm import register_long_id
 
 EXTRACT_SCHEMA = T.StructType(
     [
@@ -64,22 +59,21 @@ EXTRACT_SCHEMA = T.StructType(
 # plus U+001C..1F as separators) — see `_matches` for why
 _TOK = r"[^\s\x1c-\x1f]"
 
-# statement anchors (the "template"); the JVM ones run under (?U)
+# statement anchors (the "template"), run under (?U)
 _MENTION = rf"we looked at ({_TOK}+)"
 _NOTE = r'note "([^"]*)"'
 _METRIC = r"metric is (-?\d+(?:\.\d+)?)"
 _DEFINE = rf"define (l:E\d+) = ({_TOK}+)"
 _SEE = r"see (l:E\d+)"
 _SAMEAS = rf"sameAs ({_TOK}+) ({_TOK}+)"
-_RE_COMPLEX = re.compile(r"(?:range|at coords) (\[[^\]]*\])")
-_RE_COMPLEX_OPEN = re.compile(r"(?:range|at coords) \[[^\]]*$")
-_RE_OBSERVE = re.compile(r"observe (\S+) (\S+) (\S+) = (\S+)(?: unit (\S+))?")
+_COMPLEX = r"(?:range|at coords) (\[[^\]]*\])"
+# an unterminated complex value (McfParser.java:377-384)
+_COMPLEX_OPEN = r"(?:range|at coords) \[[^\]]*+\z"
+_OBSERVE = rf"observe ({_TOK}+) ({_TOK}+) ({_TOK}+) = ({_TOK}+)(?: unit ({_TOK}+))?"
 
-# superset guards: turns that can bear a narrow statement on the JVM
-# side (see / sameAs / define), and the turns the Python stage parses
-# (_RE_COMPLEX, _RE_COMPLEX_OPEN, _RE_OBSERVE)
-_NARROW_JVM = r"see l:E|sameAs |define l:E"
-_PY_NEEDED = r"range \[|at coords \[|observe "
+# superset guard: the turns that can bear a narrow statement — see /
+# sameAs / define, and the ERROR rows of the complex and observe anchors
+_NARROW = r"see l:E|sameAs |define l:E|range \[|at coords \[|observe "
 
 # external-id token prefixes → id property (Vocabulary.java:291-307 subset)
 EXT_PREFIXES = {
@@ -168,16 +162,17 @@ def statement_bearing(transcripts: DataFrame) -> DataFrame:
 
 @functools.lru_cache(maxsize=2)
 def _statement_array(narrow_only: bool) -> Column:
-    """Every anchor except complex/observe as one array of statement
-    structs per turn (nulls filtered). Built once per mode: the Column
-    tree costs thousands of py4j calls, and every later extraction
-    reuses it.
+    """Every anchor as one array of statement structs per turn (nulls
+    filtered). Built once per mode: the Column tree costs thousands of
+    py4j calls, and every later extraction reuses it.
 
-    ``narrow_only`` keeps just the narrow statement classes this part
-    produces (DEF records, defines/sees → UNRESOLVED_REF locals, sameAs
-    edges) — the cheap first pass that feeds the resolver/CC side
-    tables while the fat rows are recomputed by the big pass
-    (plans/kg_pipeline.py)."""
+    ``narrow_only`` keeps just the narrow statement classes (DEF
+    records, defines/sees → UNRESOLVED_REF locals, sameAs edges, ERROR
+    rows) — the cheap first pass that feeds the resolver/CC side tables
+    while the fat rows are recomputed by the big pass
+    (plans/kg_pipeline.py). Complex values and observations are still
+    PARSED in it (a malformed one is an ERROR row either way); their
+    result rows are skipped."""
     turn = turn_id_col(F.col("conv_id"), F.col("turn_idx"))
     cnode = conv_node_col(F.col("conv_id"))
     null = F.lit(None).cast("string")
@@ -196,6 +191,9 @@ def _statement_array(narrow_only: bool) -> Column:
             ext_id.alias("ext_id"),
         )
 
+    def error(counter, obj):
+        return s(turn, counter, "TEXT", obj, kind="ERROR")
+
     def mention(tok):
         obj_type, obj, prop, ext = classify_token(tok)
         return s(turn, "mentions", obj_type, obj, ext_prop=prop, ext_id=ext)
@@ -209,6 +207,87 @@ def _statement_array(narrow_only: bool) -> Column:
             s(turn, "defines", "UNRESOLVED_REF", local),
         )
 
+    # complex values (Quantity/QuantityRange/GeoCoordinates, P8): each
+    # parsed once, then its rows; a malformed or unterminated one is an
+    # MCF_MalformedComplexValue error
+    parsed_cvs = F.transform(
+        _matches(_COMPLEX, 1), lambda v: F.struct(v.alias("raw"), col_complex_value(v).alias("cv"))
+    )
+
+    def complex_value(p):
+        cv = p["cv"]
+        bad = error("MCF_MalformedComplexValue", p["raw"])
+        if narrow_only:
+            return F.array(F.when(cv.isNull(), bad))
+        pred = F.when(cv["type_of"] == "GeoCoordinates", F.lit("location")).otherwise("quantity")
+        rows = F.concat(
+            F.array(
+                s(turn, pred, "RESOLVED_REF", cv["dcid"]),
+                s(cv["dcid"], "typeOf", "RESOLVED_REF", cv["type_of"]),
+                s(cv["dcid"], "name", "TEXT", cv["name"]),
+            ),
+            F.transform(
+                cv["pvs"], lambda pv: s(cv["dcid"], pv["prop"], pv["value_type"], pv["value"])
+            ),
+        )
+        return F.when(cv.isNull(), F.array(bad)).otherwise(rows)
+
+    complexes = F.concat(
+        F.flatten(F.transform(parsed_cvs, complex_value)),
+        F.array(
+            F.when(
+                F.col("text").rlike("(?U)" + _COMPLEX_OPEN),
+                error("MCF_MalformedComplexValue", F.col("text")),
+            )
+        ),
+    )
+
+    # observations (SVObs, dcid per DcidGenerator.java:178-211): each
+    # match's groups parsed once, then its rows; an invalid date or a
+    # non-numeric value is an error row
+    def parse_observation(m):
+        place, var, date, raw, unit = (
+            F.regexp_extract(m, "(?U)" + _OBSERVE, k) for k in range(1, 6)
+        )
+        val = col_clean_numeric(raw)
+        fields = {"place": place, "var": var, "date": date, "val": val, "unit": unit,
+                  "date_ok": col_is_valid_date(date), "val_ok": col_is_number(val)}
+        if not narrow_only:
+            # the ordered SVObs key string; unit only where present
+            key = F.concat(
+                F.lit("observationAbout="), place,
+                F.lit("variableMeasured="), var,
+                F.lit("observationDate="), date,
+                F.lit("value="), val,
+                F.when(unit != "", F.concat(F.lit("unit="), unit)).otherwise(F.lit("")),
+            )
+            fields["obs"] = F.concat(F.lit("dc/o/"), col_long_id(key))
+        return F.struct(*[v.alias(k) for k, v in fields.items()])
+
+    def observation(o):
+        counter = F.when(o["val_ok"], F.lit("Sanity_InvalidObsDate")).otherwise(
+            "Sanity_NonDoubleObsValue"
+        )
+        bad = error(counter, F.concat(o["date"], F.lit("="), o["val"]))
+        ok = o["date_ok"] & o["val_ok"]
+        if narrow_only:
+            return F.array(F.when(~ok, bad))
+        obs = o["obs"]
+        rows = F.array(
+            s(obs, "typeOf", "RESOLVED_REF", "StatVarObservation"),
+            s(obs, "observationAbout", "RESOLVED_REF", o["place"]),
+            s(obs, "variableMeasured", "RESOLVED_REF", o["var"]),
+            s(obs, "observationDate", "TEXT", o["date"]),
+            s(obs, "value", "NUMBER", o["val"]),
+            F.when(o["unit"] != "", s(obs, "unit", "RESOLVED_REF", o["unit"])),
+            s(turn, "observes", "RESOLVED_REF", obs),
+        )
+        return F.when(ok, rows).otherwise(F.array(bad))
+
+    observations = F.flatten(
+        F.transform(F.transform(_matches(_OBSERVE, 0), parse_observation), observation)
+    )
+
     defines = F.flatten(F.zip_with(_matches(_DEFINE, 1), _matches(_DEFINE, 2), define))
     sees = F.transform(
         _matches(_SEE, 1), lambda v: s(turn, "references", "UNRESOLVED_REF", v)
@@ -219,7 +298,7 @@ def _statement_array(narrow_only: bool) -> Column:
         lambda a, b: s(a, "sameAs", "RESOLVED_REF", b),
     )
     if narrow_only:
-        arr = F.concat(defines, sees, sames)
+        arr = F.concat(complexes, defines, sees, observations, sames)
     else:
         base = F.array(
             s(turn, "typeOf", "RESOLVED_REF", TURN_TYPE),
@@ -235,182 +314,27 @@ def _statement_array(narrow_only: bool) -> Column:
         metrics = F.transform(
             _matches(_METRIC, 1), lambda v: s(turn, "value", "NUMBER", v)
         )
-        arr = F.concat(base, mentions, notes, metrics, defines, sees, sames)
+        arr = F.concat(base, mentions, notes, metrics, complexes, defines, sees, observations, sames)
     return F.filter(arr, lambda x: x.isNotNull())
-
-
-def _jvm_statements(transcripts: DataFrame, narrow_only: bool = False) -> DataFrame:
-    """The JVM part of the extraction: ONE native projection, the
-    statement array exploded — a single whole-stage-codegen scan, zero
-    Python."""
-    return transcripts.select(
-        "conv_id", "turn_idx", F.explode(_statement_array(narrow_only)).alias("b")
-    ).select("conv_id", "turn_idx", "b.*")
-
-
-def _extract_batch_python(pdf: pd.DataFrame, narrow_only: bool = False) -> pd.DataFrame:
-    """The complex-value and observe anchors for the pre-filtered turn
-    subset, as ``EXTRACT_SCHEMA`` rows minus the ext columns (these
-    anchors carry no external ids). ``turn_id`` arrives precomputed
-    (JVM).
-
-    ``narrow_only`` emits just the ERROR rows: the statements still get
-    PARSED (malformed complex values / invalid observations must be
-    classified either way) but the fat result rows — complex-value
-    child triples and the 6-row observation fan-out with its farmhash
-    dc/o/ ids — are skipped; the big pass recomputes those."""
-    conv = pdf["conv_id"]
-    tidx = pdf["turn_idx"]
-    text = pdf["text"]
-    turn_id = pdf["turn_id"]
-
-    frames: list[pd.DataFrame] = []
-
-    def _v(x):
-        return x.values if hasattr(x, "values") else x
-
-    def emit(idx, subj, pred, obj_type, obj, kind="TRIPLE") -> None:
-        frames.append(
-            pd.DataFrame(
-                {
-                    "conv_id": conv.loc[idx].values,
-                    "turn_idx": tidx.loc[idx].values,
-                    "kind": kind,
-                    "subj": _v(subj),
-                    "pred": _v(pred),
-                    "obj_type": _v(obj_type),
-                    "obj": _v(obj),
-                }
-            )
-        )
-
-    # --- complex values (Quantity/QuantityRange/GeoCoordinates, P8) ---
-    m = text.str.extractall(_RE_COMPLEX)
-    if len(m):
-        i = m.index.get_level_values(0)
-        vals = m[0].reset_index(drop=True)
-        lut = {v: parse_complex_value(v) for v in vals.unique()}
-        parsed = vals.map(lut)
-        ok = parsed.notna().values
-        if not narrow_only:
-            cv = parsed[ok]
-            iok = i[ok]
-            dcids = cv.map(lambda c: c.dcid)
-            pred = cv.map(lambda c: "location" if c.type_of == "GeoCoordinates" else "quantity")
-            emit(iok, turn_id.loc[iok], pred, "RESOLVED_REF", dcids)
-            # child node triples for each complex value
-            emit(iok, dcids, "typeOf", "RESOLVED_REF", cv.map(lambda c: c.type_of))
-            emit(iok, dcids, "name", "TEXT", cv.map(lambda c: c.name))
-            for k in range(3):  # complex pvs have ≤3 entries
-                mask = cv.map(lambda c, _k=k: len(c.pvs) > _k)
-                sub = cv[mask]
-                if not len(sub):
-                    continue
-                isub = iok[mask.values]
-                emit(
-                    isub,
-                    sub.map(lambda c: c.dcid),
-                    sub.map(lambda c, _k=k: c.pvs[_k][0]),
-                    sub.map(lambda c, _k=k: c.pvs[_k][1]),
-                    sub.map(lambda c, _k=k: c.pvs[_k][2]),
-                )
-        bad = ~ok
-        if bad.any():
-            ibad = i[bad]
-            emit(ibad, turn_id.loc[ibad], "MCF_MalformedComplexValue", "TEXT",
-                 vals[bad], kind="ERROR")
-    # unterminated complex value → error (MCF_MalformedComplexValue,
-    # McfParser.java:377-384)
-    open_bad = text.str.contains(_RE_COMPLEX_OPEN)
-    if open_bad.any():
-        ib = pdf.index[open_bad]
-        emit(ib, turn_id.loc[ib], "MCF_MalformedComplexValue", "TEXT",
-             text.loc[ib], kind="ERROR")
-
-    # --- observations (SVObs, dcid per DcidGenerator.java:178-211) ---
-    m = text.str.extractall(_RE_OBSERVE)
-    if len(m):
-        i = m.index.get_level_values(0)
-        place = m[0].reset_index(drop=True)
-        var = m[1].reset_index(drop=True)
-        date = m[2].reset_index(drop=True)
-        val = m[3].reset_index(drop=True).map(clean_numeric_string)
-        unit = m[4].reset_index(drop=True)
-        date_ok = date.map(is_valid_date)
-        val_ok = val.map(is_number)
-        good = (date_ok & val_ok).values
-        if (~good).any():
-            ibad = i[~good]
-            cnt = pd.Series("Sanity_InvalidObsDate", index=date.index[~good])
-            cnt[~val_ok[~good]] = "Sanity_NonDoubleObsValue"
-            emit(ibad, turn_id.loc[ibad], cnt, "TEXT", (date + "=" + val)[~good], kind="ERROR")
-        ig = i[good]
-        if len(ig) and not narrow_only:
-            pg, vg, dg, vvg, ug = (s[good].reset_index(drop=True) for s in (place, var, date, val, unit))
-            # ordered SVObs key string, vectorized: unit appended only
-            # where present
-            keys = (
-                "observationAbout=" + pg
-                + "variableMeasured=" + vg
-                + "observationDate=" + dg
-                + "value=" + vvg
-                + np.where(ug.fillna("") != "", "unit=" + ug.fillna(""), "")
-            )
-            obs_id = pd.Series("dc/o/" + long_id_batch(keys.values), index=pg.index)
-            emit(ig, obs_id, "typeOf", "RESOLVED_REF", "StatVarObservation")
-            emit(ig, obs_id, "observationAbout", "RESOLVED_REF", pg)
-            emit(ig, obs_id, "variableMeasured", "RESOLVED_REF", vg)
-            emit(ig, obs_id, "observationDate", "TEXT", dg)
-            emit(ig, obs_id, "value", "NUMBER", vvg)
-            has_u = ug.notna() & (ug != "")
-            if has_u.any():
-                iu = ig[has_u.values]
-                emit(iu, obs_id[has_u], "unit", "RESOLVED_REF", ug[has_u])
-            emit(ig, turn_id.loc[ig], "observes", "RESOLVED_REF", obs_id)
-
-    if not frames:
-        return pd.DataFrame(columns=EXTRACT_SCHEMA.fieldNames()[:-2])
-    out = pd.concat(frames, ignore_index=True)
-    out["turn_idx"] = out["turn_idx"].astype("int32")
-    return out
 
 
 def extract_statements(transcripts: DataFrame, narrow_only: bool = False) -> DataFrame:
     """transcripts → long-form candidate statements (``EXTRACT_SCHEMA``;
-    narrow, no shuffle). The JVM projection takes every turn; only the
-    complex/observe turn subset crosses Arrow, column-pruned (``ts``
-    and ``role``/``tool`` never cross).
+    narrow, no shuffle): ONE native projection, the statement array
+    exploded — a single whole-stage-codegen scan, zero Python.
 
     ``narrow_only=True`` returns exactly the narrow statement classes
     (DEF / ERROR / sameAs / UNRESOLVED_REF locals) — the same rows the
     full output yields for those classes, via the same code paths —
-    with the fat-row work elided and the JVM part pre-filtered to the
-    see/sameAs/define turn subset."""
+    with the fat-row work elided and the input pre-filtered to the turns
+    that can bear one."""
+    register_long_id(transcripts.sparkSession)
     transcripts = statement_bearing(transcripts)
-    src = (
-        transcripts.filter(F.col("text").rlike(_NARROW_JVM))
-        if narrow_only
-        else transcripts
-    )
-    jvm = _jvm_statements(src, narrow_only=narrow_only)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _extract_batch_python(pdf, narrow_only=narrow_only)
-
-    py_in = transcripts.filter(F.col("text").rlike(_PY_NEEDED)).select(
-        "conv_id",
-        "turn_idx",
-        turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("turn_id"),
-        "text",
-    )
-    # the Python stage emits no external ids: its rows get null ext
-    # columns JVM-side, so the optimizer prunes that branch from any
-    # plan that keeps only ext rows (the salted link's join side)
-    py = py_in.mapInPandas(gen, schema=T.StructType(EXTRACT_SCHEMA.fields[:-2]))
-    null = F.lit(None).cast("string")
-    return jvm.unionByName(py.withColumns({"ext_prop": null, "ext_id": null}))
+    if narrow_only:
+        transcripts = transcripts.filter(F.col("text").rlike(_NARROW))
+    return transcripts.select(
+        "conv_id", "turn_idx", F.explode(_statement_array(narrow_only)).alias("b")
+    ).select("conv_id", "turn_idx", "b.*")
 
 
 def extract_and_link(

@@ -408,9 +408,9 @@ def run_pipeline(
     din = text_digest(transcripts) if verify_text_invariant else 0
     m.add("scan", "text_digest", din)
 
-    # 2-3. extract + link: the JVM projection plus the Python stage
-    # for the complex/observe turn subset (operators/extract.py), then
-    # the dictionary join (operators/link.py). With a
+    # 2-3. extract + link: the one JVM projection
+    # (operators/extract.py), then the dictionary join
+    # (operators/link.py). With a
     # checkpoint_dir the full output is snapshotted once as a
     # class-partitioned parquet table (resumable across processes;
     # narrow scans touch only their tiny partitions). Without one,

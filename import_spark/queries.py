@@ -458,11 +458,10 @@ def q_p8_complex_values(spark, sf):
     from the events table — unit-first/unit-last quantity, closed/open
     ranges, numeric and N/S/E/W LatLong (E5 rounding), a dcs: namespace
     strip, and a malformed case → NULLs — parsed by the REAL operator
-    (functions/complex_values.py); the DuckDB twin re-derives every
-    output from the reference rules in SQL."""
-    import pandas as pd
-
-    from import_spark.functions.complex_values import parse_complex_value
+    (``col_complex_value``, the JVM twin of functions/complex_values.py);
+    the DuckDB twin re-derives every output from the reference rules in
+    SQL."""
+    from import_spark.functions.complex_values import col_complex_value
 
     e = _t(spark, sf, "events").select(
         "event_id",
@@ -489,22 +488,10 @@ def q_p8_complex_values(spark, sf):
         .otherwise(F.lit("[Years abc]"))
     )
 
-    def gen(batches):
-        for pdf in batches:
-            lut = {v: parse_complex_value(v) for v in pdf["cv"].unique()}
-            cs = pdf["cv"].map(lut)
-            yield pd.DataFrame(
-                {
-                    "event_id": pdf["event_id"],
-                    "cv": pdf["cv"],
-                    "dcid": cs.map(lambda c: c.dcid if c else None),
-                    "name": cs.map(lambda c: c.name if c else None),
-                    "type_of": cs.map(lambda c: c.type_of if c else None),
-                }
-            )
-
-    return e.select("event_id", cv.alias("cv")).mapInPandas(
-        gen, schema="event_id long, cv string, dcid string, name string, type_of string"
+    return (
+        e.select("event_id", cv.alias("cv"))
+        .withColumn("p", col_complex_value(F.col("cv")))
+        .select("event_id", "cv", "p.dcid", "p.name", "p.type_of")
     )
 
 
@@ -747,14 +734,17 @@ ORDER BY s.node_id
 
 
 def q_c1_farmhash_ids(spark, sf):
-    """C1: farmhash64→base32 dcid assignment as a vectorized pandas UDF
-    (DcidGenerator.java:354-375). DuckDB has no farmhash, so the oracle
+    """C1: farmhash64→base32 dcid assignment on the JVM (``col_long_id``,
+    DcidGenerator.java:354-375). DuckDB has no farmhash, so the oracle
     (SQL_C1) joins ids from a fixture lookup pre-computed by the
     pure-Python fingerprint64 twin — bit-parity-gated against JVM Guava
     in tests/test_farmhash.py (contract_fixtures.ensure_c1_fixture)."""
-    from import_spark.functions.udfs import farmhash_dcid
+    from import_spark.functions.dcids import col_long_id
+    from import_spark.jvm import register_long_id
 
-    return _t(spark, sf, "documents").select("doc_id", farmhash_dcid("text").alias("dcid"))
+    register_long_id(spark)
+    dcid = F.concat(F.lit("dc/"), col_long_id(F.col("text")))
+    return _t(spark, sf, "documents").select("doc_id", dcid.alias("dcid"))
 
 
 def q_kg_pipeline(spark, sf):

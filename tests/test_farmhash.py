@@ -3,8 +3,13 @@
 Vectors were produced by Guava 33.4.8 ``Hashing.farmHashFingerprint64``
 on the Spark JVM (the exact function DcidGenerator.java:371-375 uses)
 and cover every internal length class (0, 1-3, 4-7, 8-16, 17-32,
-33-64, >64) plus UTF-8 multibyte input.
+33-64, >64) plus UTF-8 multibyte input. The same vectors gate the JVM
+UDF ``col_long_id`` (import_spark/jvm/LongId.java).
 """
+
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from import_spark.functions.farmhash import (
     DCID_BASE32_ALPHABET,
@@ -102,3 +107,52 @@ def test_xxh64_spark_parity(spark):
     )
     for r in df.collect():
         assert hex_id(r["s"]) == r["hx"], r["s"]
+
+
+def _jvm_long_ids(spark, keys):
+    """``col_long_id`` over ``keys`` on the JVM, in input order."""
+    from pyspark.sql import functions as F
+
+    from import_spark.functions.dcids import col_long_id
+    from import_spark.jvm import register_long_id
+
+    register_long_id(spark)
+    df = spark.createDataFrame([(i, k) for i, k in enumerate(keys)], "i int, k string")
+    return [r.h for r in df.select("i", col_long_id(F.col("k")).alias("h")).orderBy("i").collect()]
+
+
+def test_col_long_id_golden(spark):
+    """The JVM UDF (Guava plus the DCID alphabet) reproduces the Guava
+    vectors' long ids; a null key stays null."""
+    keys = list(GOLDEN) + [None]
+    assert _jvm_long_ids(spark, keys) == [base32_long_id(GOLDEN[k]) for k in GOLDEN] + [None]
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(st.lists(st.text(max_size=200), min_size=1, max_size=60))
+def test_col_long_id_matches_long_id(spark, keys):
+    """``col_long_id`` equals the scalar spec on arbitrary unicode keys of
+    every length class."""
+    assert _jvm_long_ids(spark, keys) == [long_id(k) for k in keys]
+
+
+@pytest.mark.parametrize("missing", ["javac", "Guava"])
+def test_missing_build_tool_raises_with_its_name(monkeypatch, tmp_path, missing):
+    """With no cached jar, a missing ``javac`` or Guava jar raises an
+    error that names it; nothing falls back to Python."""
+    import shutil
+
+    from import_spark import jvm
+
+    monkeypatch.setattr(jvm, "CACHE_DIR", str(tmp_path / "cache"))
+    if missing == "javac":
+        monkeypatch.setattr(shutil, "which", lambda *a, **k: None)
+    else:
+        monkeypatch.setattr(jvm, "_spark_jars", lambda: str(tmp_path))
+    with pytest.raises(RuntimeError, match=missing):
+        jvm.build_jar()
+    assert not (tmp_path / "cache").exists()

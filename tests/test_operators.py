@@ -159,6 +159,78 @@ def test_malformed_complex_is_error_row(spark):
     assert len(errs) == 2
 
 
+# complex-value and observe anchors, well-formed and malformed: an
+# unterminated value, NaN / 1_0 / Arabic-Indic coordinates (float()
+# took the last two and raised on NaN), hex and suffixed coordinates
+# (Double.parseDouble takes them), bad dates and non-double values
+_COMPLEX_OBSERVE_TURNS = [
+    "range [Years 10",
+    "at coords [LatLong NaNS 10] and range [Years 10 20]",
+    "at coords [LatLong 10 nanE] at coords [LatLong 1_0 10] at coords [LatLong ١٠ 10]",
+    "at coords [LatLong 0x1p3N 1.5fW] then range [Years - -], range [dcs:Years - 5]",
+    "range [Years 10 at coords [LatLong 1 2] and range [10 Years]",
+    "observe geoId/06 Count_Person 2020-13 = 7",
+    "observe geoId/06 Count_Person 2020 = 7x unit USD and observe a b 2020-1-2 = 1,234% unit P",
+    "observe geoId/07 Count_Person 2021 = 5 then observe geoId/07 Count_Person 2021 = 5",
+]
+
+
+def _spec_error_rows(texts):
+    """ERROR rows of the complex/observe anchors by the Python spec
+    (``re``, parse_complex_value, is_number, is_valid_date)."""
+    import re
+
+    from import_spark.functions.complex_values import parse_complex_value
+    from import_spark.functions.values import clean_numeric_string, is_number, is_valid_date
+    from import_spark.functions.xxhash import hex_id
+
+    out = []
+    for i, text in enumerate(texts):
+        turn = "dc/t/" + hex_id(f"conv_id=c1turn_idx={i}")
+        for v in re.findall(r"(?:range|at coords) (\[[^\]]*\])", text):
+            if parse_complex_value(v) is None:
+                out.append((turn, "MCF_MalformedComplexValue", v))
+        if re.search(r"(?:range|at coords) \[[^\]]*$", text):
+            out.append((turn, "MCF_MalformedComplexValue", text))
+        for _, _, date, val, _ in re.findall(
+            r"observe (\S+) (\S+) (\S+) = (\S+)(?: unit (\S+))?", text
+        ):
+            val = clean_numeric_string(val)
+            if not is_number(val):
+                out.append((turn, "Sanity_NonDoubleObsValue", f"{date}={val}"))
+            elif not is_valid_date(date):
+                out.append((turn, "Sanity_InvalidObsDate", f"{date}={val}"))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("narrow_only", [False, True])
+def test_complex_observe_rows_match_oracle(spark, narrow_only):
+    """Both extract modes emit the spec's ERROR rows for malformed
+    complex values and observations (one per bad match, none for good
+    ones); the full mode's statements equal the oracle's triples, and
+    the narrow mode emits nothing else for these turns."""
+    import pandas as pd
+
+    from import_spark.oracle import expected_triples
+    from import_spark.sources.transcripts import build_dcid_dictionary
+
+    rows = [("c1", i, t) for i, t in enumerate(_COMPLEX_OBSERVE_TURNS)]
+    out = extract_statements(_turns(spark, rows), narrow_only=narrow_only).collect()
+    errs = sorted((r.subj, r.pred, r.obj) for r in out if r.kind == "ERROR")
+    assert errs == _spec_error_rows(_COMPLEX_OBSERVE_TURNS)
+    stmts = {(r.subj, r.pred, r.obj_type, r.obj) for r in out if r.kind != "ERROR"}
+    if narrow_only:
+        assert stmts == set()
+    else:
+        tr = pd.DataFrame(
+            [(c, i, "user", t, "", TS) for c, i, t in rows],
+            columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+        )
+        want, _ = expected_triples(tr, build_dcid_dictionary())
+        assert stmts == want
+        assert {p for _, p, _, _ in want} >= {"quantity", "location", "observes", "unit"}
+
+
 def test_format_dispatch(spark, tmp_path):
     """S6: path-based resolution (PipelineUtils.java:174-193) + read."""
     from import_spark.sources.dispatch import resolve_format, read_graph

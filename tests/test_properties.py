@@ -41,6 +41,29 @@ _component = st.text(
 ).filter(lambda s: s == s.strip() and s.strip('"') == s)
 
 
+# bracketed complex values built from tokens that sit on every branch of
+# parse_complex_value: units (namespaced, LatLong in any case), numbers
+# in and out of Double.parseDouble's grammar, dashes, hemisphere
+# suffixes (ŉ, ß and ſ upper-case to a suffix letter), non-ASCII digits
+_cv_token = st.sampled_from(
+    [
+        "Years", "dcs:Years", "a:b:c", "LatLong", "latLONG", "LatLong:", "-", "--",
+        "10", "-3", "1.5", "+.5", "5.", "1e5", "0x1p3", "1.5f", "2d", "1_0", "١٠", "²",
+        "NaN", "nan", "Infinity", "-Infinity", "1e400", "91", "-90", "180", "180.000001",
+        "37.3N", "122.3W", "12.345675S", "10s", "10n", "10ŉ", "10ß", "10ſ", "Ne", "E",
+        "0.000005", "-0.000005", '"a b"', '"', "\\", "\t", "\x01", "\xa0",
+    ]
+)
+_complex_value = st.one_of(
+    st.lists(_cv_token, min_size=0, max_size=4).map(lambda ts: "[" + " ".join(ts) + "]"),
+    st.lists(_cv_token, min_size=1, max_size=3).map(lambda ts: "[ " + "  ".join(ts) + "\t]"),
+    st.tuples(st.floats(-200, 200), st.floats(-200, 200)).map(
+        lambda ab: f"[LatLong {ab[0]!r} {ab[1]!r}]"
+    ),
+    st.text(max_size=20).map(lambda t: "[" + t + "]"),
+)
+
+
 # ---------------------------------------------------------------- pure python
 
 
@@ -219,6 +242,45 @@ class TestSparkTwins:
                 assert got == want, (prop, r["s"])
 
 
+    @_spark_settings
+    @given(st.lists(_complex_value, min_size=1, max_size=40))
+    def test_complex_value_twin_matches_python(self, spark, values):
+        """col_complex_value (the kg extract's complex-value parse on the
+        JVM) equals parse_complex_value field for field, None included:
+        unit position, namespace strip, ranges, hemisphere suffixes, the
+        coordinate grammar and the E5 rounding."""
+        from pyspark.sql import functions as F
+
+        from import_spark.functions.complex_values import col_complex_value, parse_complex_value
+
+        df = spark.createDataFrame([(v,) for v in values], "s string").select(
+            "s", col_complex_value(F.col("s")).alias("cv")
+        )
+        for r in df.collect():
+            cv = parse_complex_value(r["s"])
+            want = None if cv is None else (cv.dcid, cv.name, cv.type_of, cv.pvs)
+            got = r["cv"] and (
+                r["cv"]["dcid"], r["cv"]["name"], r["cv"]["type_of"],
+                [tuple(p) for p in r["cv"]["pvs"]],
+            )
+            assert got == want, r["s"]
+
+
+def test_hemisphere_suffixes_are_upper_endswith():
+    """HEMISPHERE_SUFFIXES lists exactly the characters c whose
+    c.upper() ends with each letter, over every code point."""
+    from import_spark.functions.complex_values import HEMISPHERE_SUFFIXES
+
+    found = {k: "" for k in HEMISPHERE_SUFFIXES}
+    for cp in range(0x110000):
+        last = chr(cp).upper()[-1:]
+        if last in found:
+            found[last] += chr(cp)
+    assert {k: sorted(v) for k, v in found.items()} == {
+        k: sorted(v) for k, v in HEMISPHERE_SUFFIXES.items()
+    }
+
+
 # ------------------------------------------------------- connected components
 
 
@@ -288,6 +350,8 @@ _frag = st.sampled_from(
         'note "x y" ',
         "define l:E2 = iso:US ",
         "observe geoId/06 Count 2020 = 7 ",
+        "range [Years 10 20] ",
+        "at coords [LatLong 1N 2W] ",
         "geoId/06 ",
         "iso:US",
         "wikidataId:Q99 ",

@@ -26,8 +26,10 @@ SPARK_SUBMIT = shutil.which("spark-submit")
 def test_spark_submit_py_files_end_to_end(tmp_path):
     zip_path = tmp_path / "import_spark.zip"
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for f in sorted((REPO / "import_spark").rglob("*.py")):
-            zf.write(f, f.relative_to(REPO))
+        # the package's Java sources ship with it: the driver compiles them
+        for f in sorted((REPO / "import_spark").rglob("*")):
+            if f.suffix in (".py", ".java"):
+                zf.write(f, f.relative_to(REPO))
     entry = tmp_path / "run_job.py"
     shutil.copyfile(REPO / "tools" / "run_job.py", entry)
 

@@ -111,3 +111,22 @@ def test_complex_latlong():
     assert cv.dcid == "latLong/3730000_-12230000"
     # out of range
     assert parse_complex_value("[LatLong 91 0]") is None
+
+
+def test_complex_latlong_coordinates_parse_like_java():
+    """A coordinate is accepted only in is_number's grammar (the language
+    of Double.parseDouble) and finite. ``float()`` alone raised on NaN at
+    the E5 rounding and took ``1_0`` and Arabic-Indic digits."""
+    for bad in (
+        "[LatLong NaNS 10]",
+        "[LatLong 10 nanE]",
+        "[LatLong NaN 10]",
+        "[LatLong 10 -Infinity]",
+        "[LatLong 1e400 10]",
+        "[LatLong 1_0 10]",
+        "[LatLong ١٠ 10]",
+    ):
+        assert parse_complex_value(bad) is None, bad
+    # hex floats and type suffixes parse as Java parses them
+    cv = parse_complex_value("[LatLong 0x1p3N 1.5fW]")
+    assert (cv.dcid, cv.name) == ("latLong/800000_-150000", "8.00000,-1.50000")
